@@ -1700,7 +1700,7 @@ object SparkEntry {
         "FROM orders_q142 WHERE o_orderstatus = 'P'")
       val newDirs = graft.ext.Versioned.liveDataDirs(s, tbl).filterNot(dirsBefore)
       assert(newDirs.nonEmpty &&
-        newDirs.forall(nd => graft.ext.Versioned.parquetSchemaDriver(s, Seq(nd))
+        newDirs.forall(nd => Tables.parquetSchemaDriver(s, Seq(nd))
           .fieldNames.contains("price")),
         "post-rename INSERT must stage the PHYSICAL column name")
       // manifest-stats skipping speaks the LOGICAL name: a selective
@@ -2200,7 +2200,7 @@ object SparkEntry {
           }
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
         q.awaitTermination(300000)
-        graft.ext.Versioned.readParquetNoInfer(s, Seq(outDir)).count()
+        Tables.readParquetNoInfer(s, Seq(outDir)).count()
       }
       val afterSnapshot = drain()
       // compaction mid-stream: a dataChange=false commit
@@ -2213,7 +2213,7 @@ object SparkEntry {
       Versioned.writeVersion(slice(4), tbl, SaveMode.Append)
       assert(drain() == afterSnapshot + slice(4).count(),
         "the post-compaction append must arrive, alone")
-      graft.ext.Versioned.readParquetNoInfer(s, Seq(outDir)).orderBy("o_orderkey")
+      Tables.readParquetNoInfer(s, Seq(outDir)).orderBy("o_orderkey")
     },
 
     // FSCK (Delta FSCK REPAIR TABLE's role): manifest refs to files
@@ -2521,7 +2521,7 @@ object SparkEntry {
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination(300000)
-      val feed = Versioned.readParquetNoInfer(s, Seq(outDir))
+      val feed = Tables.readParquetNoInfer(s, Seq(outDir))
       // the CDF metadata contract: _commit_timestamp is the RECORDED
       // in-commit clock of the one streamed commit, not a read-time
       // mtime — one distinct value, equal to the manifest's ts: line
@@ -2614,7 +2614,7 @@ object SparkEntry {
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination(300000)
-      val got = Versioned.readParquetNoInfer(s, Seq(outDir))
+      val got = Tables.readParquetNoInfer(s, Seq(outDir))
       // one batch per commit-dir, in commit order, sized exactly
       val perBatch = got.groupBy("batch").count()
         .orderBy("batch").collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -2887,7 +2887,7 @@ object SparkEntry {
         "FROM orders_q147 WHERE o_orderstatus = 'P'")
       val newDirs = graft.ext.Versioned.liveDataDirs(s, tbl).filterNot(dirsBefore)
       assert(newDirs.nonEmpty &&
-        newDirs.forall(nd => graft.ext.Versioned.parquetSchemaDriver(s, Seq(nd))
+        newDirs.forall(nd => Tables.parquetSchemaDriver(s, Seq(nd))
           .fieldNames.contains("price")),
         "post-rename partitioned INSERT must stage the PHYSICAL column name")
       // partition pruning still plans from manifest bytes: a one-
@@ -3456,7 +3456,7 @@ object SparkEntry {
       val path = scratchPath("compact", d)
       Tables.documents(s, d).repartition(20).write.mode("overwrite").parquet(path)
       val stats = graft.ext.Maintenance.compact(s, path)
-      graft.ext.Versioned.readParquetNoInfer(s, Seq(path)).agg(
+      Tables.readParquetNoInfer(s, Seq(path)).agg(
         lit(stats.filesBefore).as("files_before"),
         lit(stats.filesAfter).as("files_after"),
         count(lit(1)).as("n_rows"),
@@ -3650,7 +3650,7 @@ object SparkEntry {
         java.nio.file.Paths.get(s"$path/.staging-leftover"), "junk")
       Thread.sleep(25) // junk mtimes must fall behind the zero horizon
       val stats = graft.ext.Maintenance.vacuum(s, path, horizonMs = 0)
-      graft.ext.Versioned.readParquetNoInfer(s, Seq(path)).agg(
+      Tables.readParquetNoInfer(s, Seq(path)).agg(
         lit(stats.filesDeleted).as("files_deleted"),
         lit(stats.bytesReclaimed).as("bytes_reclaimed"),
         count(lit(1)).as("n_rows"),

@@ -206,7 +206,7 @@ object SwapStore extends TableStore {
     java.nio.file.Files.exists(java.nio.file.Paths.get(path))
 
   def readLive(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Tables.readParquetNoInfer(spark, Seq(path))
 
   def recover(spark: SparkSession, path: String): Unit =
     graft.gold.Upsert.recoverSwap(path)

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.hadoop.fs.Path
+import graft.Tables.{parquetSchemaDriver, readParquetNoInfer}
 
 /** Delta time travel's role for plain parquet: a versioned table whose
   * every write is a new immutable VERSION, readable forever (until
@@ -100,60 +101,6 @@ object Versioned {
   private[graft] val PdvDirSchema: StructType = StructType(Seq(
     StructField("_file", org.apache.spark.sql.types.StringType),
     StructField("_pos", org.apache.spark.sql.types.LongType)))
-
-  /** Spark schema of parquet dir(s), read DRIVER-SIDE from the first
-    * footer found — what `spark.read.parquet(dirs).schema` infers
-    * (mergeSchema=false: one representative footer), WITHOUT the
-    * footer-reading Spark job (and its serialized-hadoop-conf
-    * broadcast) that inference launches per call. The versioned
-    * layer needs a schema once per COMMIT (footer harvest of the
-    * just-written dir) and once per SIDECAR read (dv key sets,
-    * recorded change feeds); the per-call job overhead — measured
-    * 30–60 ms each at local[32] — dominated the multi-commit
-    * protocol meters (optimization guide §1.2: remove work, then
-    * tune). Spark-written files carry the exact Spark schema as
-    * footer key-value JSON, the same source inference prefers;
-    * foreign files fall back to MessageType conversion under the
-    * session's parquet semantics. */
-  private[graft] def parquetSchemaDriver(spark: SparkSession, dirs: Seq[String]): StructType = {
-    val conf = org.apache.spark.sql.GraftSqlShims.sessionHadoopConf(spark)
-    def firstFile(p: Path, fs: org.apache.hadoop.fs.FileSystem): Option[Path] = {
-      // hidden-path rule mirrors Spark's InMemoryFileIndex: never
-      // descend into _temporary/.staging leftovers or read an
-      // in-flight task file's footer
-      val st = fs.listStatus(p).sortBy(_.getPath.getName.toString)
-        .filterNot { s =>
-          val n = s.getPath.getName
-          n.startsWith("_") || n.startsWith(".")
-        }
-      st.collectFirst {
-        case s if !s.isDirectory && s.getPath.getName.endsWith(".parquet") => s.getPath
-      }.orElse(st.iterator.filter(_.isDirectory)
-        .flatMap(d => firstFile(d.getPath, fs)).nextOption())
-    }
-    val head = dirs.iterator.flatMap { d =>
-      val p = new Path(d)
-      firstFile(p, p.getFileSystem(conf))
-    }.nextOption().getOrElse(throw new IllegalArgumentException(
-      s"no parquet files under ${dirs.mkString(", ")}"))
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(head, conf))
-    try {
-      val fmd = reader.getFooter.getFileMetaData
-      Option(fmd.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-        .flatMap(j => scala.util.Try(
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[StructType]).toOption)
-        .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(conf).convert(fmd.getSchema))
-    } finally reader.close()
-  }
-
-  /** [[parquetSchemaDriver]] applied as an explicit read schema: the
-    * no-inference-job replacement for `spark.read.parquet(dirs…)` on
-    * engine-written dirs. */
-  private[graft] def readParquetNoInfer(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    spark.read.schema(parquetSchemaDriver(spark, dirs)).parquet(dirs: _*)
 
   private def manifestPath(dir: String, v: Int) =
     new Path(dir, f"$VDIR/$v%08d.manifest")

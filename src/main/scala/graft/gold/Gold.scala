@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *    acceptable; [[Surrogate.denseId]] offers the scale-safe variant.
   *  - Fact⋈dim joins broadcast the dim side (Catalyst auto-broadcasts
   *    under the threshold; AQE converts at runtime otherwise).
-  *  - dim_time is built once and cached by callers that reuse it
-  *    (the reference recomputes it per action — SURVEY.md §3.2 hazard).
+  *  - dim_time is built once and held by callers that reuse it (the
+  *    pipeline collects it into a driver-local relation; the reference
+  *    recomputes it per action — SURVEY.md §3.2 hazard).
   */
 object Gold {
 

@@ -1,9 +1,14 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CompletionException, Executors}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.schemas.YelpSchemas
 import graft.silver.Silver
 import graft.gold.{Gold, Upsert}
@@ -47,73 +52,91 @@ class Runner(spark: SparkSession, base: String) {
   private def writeMonthPartitioned(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("year", "month")
+      .partitionBy(Runner.MonthPartitions: _*)
       .parquet(path)
 
   /** Stage 1 (ref: bronze_to_silver_on_minio.py:138-190). Business and
-    * checkins are full loads; review/tip/user are month-scoped. */
+    * checkins are full loads; review/tip/user are month-scoped. The
+    * five writes share no input or output, so they run at once. */
   def bronzeToSilver(year: Int, month: Int): Unit = {
     val ym = Some((year, month))
-    Silver.processBusiness(bronze("business", None))
-      .write.mode(SaveMode.Overwrite).parquet(s"$base/silver/business")
-    writeMonthPartitioned(Silver.processCheckins(bronze("checkin", None)),
-      s"$base/silver/checkins")
-    writeMonthPartitioned(Silver.processReviewsAndTips(bronze("review", ym)),
-      s"$base/silver/reviews")
-    writeMonthPartitioned(Silver.processReviewsAndTips(bronze("tip", ym)),
-      s"$base/silver/tips")
-    Silver.processUsers(bronze("user", ym))
-      .write.mode(SaveMode.Overwrite).parquet(s"$base/silver/users")
+    Runner.concurrently(spark)(
+      () => Silver.processBusiness(bronze("business", None))
+        .write.mode(SaveMode.Overwrite).parquet(s"$base/silver/business"),
+      () => writeMonthPartitioned(Silver.processCheckins(bronze("checkin", None)),
+        s"$base/silver/checkins"),
+      () => writeMonthPartitioned(Silver.processReviewsAndTips(bronze("review", ym)),
+        s"$base/silver/reviews"),
+      () => writeMonthPartitioned(Silver.processReviewsAndTips(bronze("tip", ym)),
+        s"$base/silver/tips"),
+      () => Silver.processUsers(bronze("user", ym))
+        .write.mode(SaveMode.Overwrite).parquet(s"$base/silver/users"))
   }
+
+  // silver and gold dirs are engine-written: their schema is read from
+  // one footer on the driver, never by a schema-inference job
+  private def silver(table: String): DataFrame =
+    Tables.readParquetNoInfer(spark, Seq(s"$base/silver/$table"))
 
   private def goldIfExists(table: String): Option[DataFrame] =
     if (Files.exists(Paths.get(s"$base/gold/$table")))
-      Some(spark.read.parquet(s"$base/gold/$table"))
+      Some(Tables.readParquetNoInfer(spark, Seq(s"$base/gold/$table")))
     else None
 
-  /** Stage 2 (ref: silver_to_gold_on_minio.py:147-223).
+  /** Stage 2 (ref: silver_to_gold_on_minio.py:147-223), as four
+    * concurrent branches over disjoint outputs: dim_time and then the
+    * two facts that join it; dim_business; dim_user; the bridge.
     * Divergences from the reference, all deliberate (SURVEY.md §7.5 +
-    * the incremental fixes in the class doc): dim_time is cached (the
-    * reference recomputes it per consumer), the month-scoped reads
-    * prune on partition COLUMNS over the table root (a month with no
-    * data yields an empty frame instead of a missing-path failure),
-    * and `dim_user` (declared in its schema diagram, never built) is
-    * materialized. */
+    * the incremental fixes in the class doc): dim_time is built once
+    * and held on the driver (the reference recomputes it per
+    * consumer), the month-scoped reads prune on partition COLUMNS over
+    * the table root (a month with no data yields an empty frame
+    * instead of a missing-path failure), and `dim_user` (declared in
+    * its schema diagram, never built) is materialized. */
   def silverToGold(year: Int, month: Int): Unit = {
-    val business = spark.read.parquet(s"$base/silver/business")
-    val users = spark.read.parquet(s"$base/silver/users")
-    val reviews = spark.read.parquet(s"$base/silver/reviews")
-      .filter(col("year") === year && col("month") === month)
-    val checkins = spark.read.parquet(s"$base/silver/checkins")
-      .filter(col("year") === year && col("month") === month)
+    def thisMonth(table: String): DataFrame =
+      silver(table).filter(col("year") === year && col("month") === month)
 
-    // localCheckpoint (eager): materializes the dim AND truncates its
-    // plan, so the overwrite below doesn't see itself reading the same
-    // path it writes ("Cannot overwrite a path that is also being read
-    // from"), and the two fact builds reuse the materialized blocks
-    val dimTime = Gold.buildDimTimeStable(reviews, checkins,
-      goldIfExists("dim_time").map(_.select("date"))).localCheckpoint(true)
-    dimTime.write.mode(SaveMode.Overwrite).parquet(s"$base/gold/dim_time")
-
-    Upsert.upsertParquet(spark, s"$base/gold/dim_business",
-      Gold.buildDimBusiness(business), Seq("business_id"))
-    Upsert.upsertParquet(spark, s"$base/gold/dim_user",
-      Gold.buildDimUser(users), Seq("user_id"))
-    Upsert.upsertParquet(spark, s"$base/gold/bridge_business_category",
-      Gold.buildBridgeBusinessCategoryStable(business,
-        goldIfExists("bridge_business_category")),
-      Seq("business_id", "category_id"))
-
-    writeMonthPartitioned(Gold.buildFactReview(reviews, dimTime),
-      s"$base/gold/fact_review")
-    writeMonthPartitioned(Gold.buildFactCheckin(checkins, dimTime),
-      s"$base/gold/fact_checkin")
-    dimTime.unpersist()
+    Runner.concurrently(spark)(
+      () => {
+        val reviews = thisMonth("reviews")
+        val checkins = thisMonth("checkins")
+        val dimTime = writeDimTime(reviews, checkins)
+        writeMonthPartitioned(Gold.buildFactReview(reviews, dimTime),
+          s"$base/gold/fact_review")
+        writeMonthPartitioned(Gold.buildFactCheckin(checkins, dimTime),
+          s"$base/gold/fact_checkin")
+      },
+      () => Upsert.upsertParquet(spark, s"$base/gold/dim_business",
+        Gold.buildDimBusiness(silver("business")), Seq("business_id")),
+      () => Upsert.upsertParquet(spark, s"$base/gold/dim_user",
+        Gold.buildDimUser(silver("users")), Seq("user_id")),
+      () => Upsert.upsertParquet(spark, s"$base/gold/bridge_business_category",
+        Gold.buildBridgeBusinessCategoryStable(silver("business"),
+          goldIfExists("bridge_business_category")),
+        Seq("business_id", "category_id")))
 
     Seq("dim_time" -> false, "dim_business" -> false, "dim_user" -> false,
       "bridge_business_category" -> false,
       "fact_review" -> true, "fact_checkin" -> true)
       .foreach { case (t, partitioned) => registerGold(t, partitioned) }
+  }
+
+  /** Rebuild gold dim_time over this month's dates plus the ones it
+    * already holds, write it, and return it as a driver-local
+    * relation. The dim is a bounded calendar (one row per distinct
+    * date), so it is collected once: the overwrite then reads nothing
+    * from the path it replaces ("Cannot overwrite a path that is also
+    * being read from"), the facts broadcast it without recomputing it,
+    * and no persisted block outlives the stage. It is served as one
+    * partition, so one task writes it (one file, like the shuffle
+    * output it replaces) and one task feeds each broadcast. */
+  private def writeDimTime(reviews: DataFrame, checkins: DataFrame): DataFrame = {
+    val built = Gold.buildDimTimeStable(reviews, checkins,
+      goldIfExists("dim_time").map(_.select("date")))
+    val dimTime = spark.createDataFrame(built.collect().toSeq.asJava, built.schema).coalesce(1)
+    dimTime.write.mode(SaveMode.Overwrite).parquet(s"$base/gold/dim_time")
+    dimTime
   }
 
   /** Register a gold output in the catalog as an external parquet
@@ -125,14 +148,21 @@ class Runner(spark: SparkSession, base: String) {
     * gone on JVM exit); with [[Runner.hiveSession]] they persist in a
     * derby-backed Hive metastore and SURVIVE JVM restarts, matching
     * the reference's always-on metastore service. Re-registration per
-    * run keeps the inferred schema current; partitioned facts get
+    * run keeps the schema current: it is declared from the footer the
+    * way the pipeline reads it (no schema-inference job), with the
+    * month partition columns of partitioned facts, which then get
     * partition recovery so month directories are visible through the
     * catalog. */
   def registerGold(table: String, partitioned: Boolean): Unit = {
     val name = s"gold_$table"
+    val path = s"$base/gold/$table"
+    val schema = Tables.readParquetNoInfer(spark, Seq(path)).schema
+    val partitionedBy =
+      if (partitioned) Runner.MonthPartitions.mkString(" PARTITIONED BY (", ", ", ")") else ""
+    val location = path.replace("\\", "\\\\").replace("'", "\\'")
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.catalog.createTable(name, "parquet",
-      Map("path" -> s"$base/gold/$table"))
+    spark.sql(s"CREATE TABLE `$name` (${schema.toDDL}) USING parquet$partitionedBy " +
+      s"LOCATION '$location'")
     if (partitioned) spark.catalog.recoverPartitions(name)
   }
 
@@ -145,6 +175,39 @@ class Runner(spark: SparkSession, base: String) {
 }
 
 object Runner {
+
+  /** Partition columns of the month-scoped silver and gold tables. */
+  private val MonthPartitions = Seq("year", "month")
+
+  /** One pool for every stage branch: cached, so it grows to the
+    * widest stage and idles out after; daemon threads, so it never
+    * holds the JVM open. */
+  private lazy val branchPool = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-pipeline-branch")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Run one stage's independent branches at once and return when all
+    * have finished. Each branch goes through
+    * `SQLExecution.withThreadLocalCaptured`, so its jobs carry the
+    * caller's active session and local properties (job group,
+    * description, scheduler pool). A failing branch cancels nothing:
+    * every branch is joined first, then the first failure in branch
+    * order is rethrown with the others suppressed on it, so no branch
+    * is still running when this throws. */
+  private def concurrently(spark: SparkSession)(branches: (() => Unit)*): Unit = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val running = branches.map(b => SQLExecution.withThreadLocalCaptured(session, branchPool)(b()))
+    val failures = running.flatMap { f =>
+      try { f.join(); None }
+      catch { case e: CompletionException => Some(Option(e.getCause).getOrElse(e)) }
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+  }
 
   /** A SparkSession whose catalog PERSISTS across JVM restarts: Hive
     * support over an embedded derby metastore rooted under `base`

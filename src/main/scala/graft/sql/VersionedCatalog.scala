@@ -2499,7 +2499,7 @@ private[graft] class DvMaskedScan(val inner: Scan, requested: StructType,
             // single-column by construction (deleteByKeys writes exactly
             // the key column), so fall back to position when the name
             // is absent (localKeySet applies the same rule)
-            val raw = Versioned.readParquetNoInfer(spark, dirs)
+            val raw = graft.Tables.readParquetNoInfer(spark, dirs)
             val src = if (raw.columns.contains(k)) k else raw.columns.head
             val keyRows = raw
               .select(org.apache.spark.sql.functions.col(src)).distinct()

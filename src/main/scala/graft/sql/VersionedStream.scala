@@ -681,7 +681,7 @@ private[sql] class VersionedStreamSource(spark: SparkSession, dir: String,
     // must not read as a phantom DELETE here.
     def keySets(dv: Seq[(String, Seq[String])]): Map[String, Set[Any]] =
       dv.groupBy(_._1).map { case (k, es) =>
-        k -> graft.ext.Versioned.readParquetNoInfer(spark, es.flatMap(_._2))
+        k -> graft.Tables.readParquetNoInfer(spark, es.flatMap(_._2))
           .select(org.apache.spark.sql.functions.col(k)).na.drop()
           .distinct().collect().map(_.get(0)).toSet
       }.filter(_._2.nonEmpty) // an empty key set masks nothing

@@ -1,6 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
+import org.apache.spark.GraftTestShims
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Runner
 import graft.analytics.Dashboard
@@ -9,6 +13,37 @@ import graft.analytics.Dashboard
   * JSON (FIXTURES.md §A), including idempotent re-run. */
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  private val silverTables = Seq("business", "checkins", "reviews", "tips", "users")
+  private val goldTables = Seq("dim_time", "dim_business", "dim_user",
+    "bridge_business_category", "fact_review", "fact_checkin")
+
+  /** Job id → (job group, end time), as Spark's listener events report them. */
+  private final class JobLog extends SparkListener {
+    val groups = new ConcurrentHashMap[Int, String]()
+    val ends = new ConcurrentHashMap[Int, Long]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      groups.put(e.jobId, Option(e.properties).flatMap(p =>
+        Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>"))
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.time)
+  }
+
+  /** Run `body` with a [[JobLog]] registered; the log is complete
+    * (bus drained) when it is handed to `check`. */
+  private def withJobLog[T](body: => T)(check: (T, JobLog) => Unit): Unit = {
+    val sc = spark.sparkContext
+    GraftTestShims.drainListenerBus(sc)
+    val log = new JobLog
+    sc.addSparkListener(log)
+    val out = try body finally {
+      GraftTestShims.drainListenerBus(sc)
+      sc.removeSparkListener(log)
+    }
+    check(out, log)
+  }
+
+  private def goldRows(runner: Runner): Map[String, Seq[String]] =
+    goldTables.map(t => t -> runner.gold(t).collect().map(_.toString).toSeq.sorted).toMap
 
   private def writeFixtures(base: String): Unit = {
     def put(rel: String, lines: Seq[String]): Unit = {
@@ -157,6 +192,75 @@ class PipelineSpec extends AnyFunSuite {
 
     // dims accumulated across months
     assert(runner.gold("dim_user").count() == 3)
+  }
+
+  test("every silver and gold dir reads with its inferred schema; gold_* tables declare it") {
+    val base = Files.createTempDirectory("graft_e2e_schema").toString
+    writeFixtures(base)
+    new Runner(spark, base).runMonth(2018, 7)
+    for (dir <- silverTables.map(t => s"$base/silver/$t") ++ goldTables.map(t => s"$base/gold/$t")) {
+      // StructType equality covers names, types, order and nullability
+      assert(Tables.readParquetNoInfer(spark, Seq(dir)).schema == spark.read.parquet(dir).schema, dir)
+    }
+    for (t <- goldTables) {
+      val inferred = spark.read.parquet(s"$base/gold/$t").schema
+      assert(spark.table(s"gold_$t").schema == inferred, t)
+      val partitionCols = spark.catalog.listColumns(s"gold_$t").collect()
+        .filter(_.isPartition).map(_.name).toSeq
+      assert(partitionCols == (if (t.startsWith("fact_")) Seq("year", "month") else Nil), t)
+    }
+    // the registered facts see their month partitions
+    assert(spark.table("gold_fact_review").where("year = 2018 AND month = 7").count() == 2)
+  }
+
+  test("concurrent stage branches run in the caller's job group") {
+    val base = Files.createTempDirectory("graft_e2e_group").toString
+    writeFixtures(base)
+    val runner = new Runner(spark, base)
+    val sc = spark.sparkContext
+    withJobLog {
+      sc.setJobGroup("pipeline-month", "runMonth", interruptOnCancel = false)
+      try runner.runMonth(2018, 7) finally sc.clearJobGroup()
+    } { (_, log) =>
+      val groups = log.groups.asScala
+      assert(groups.nonEmpty)
+      assert(groups.values.forall(_ == "pipeline-month"), groups.filter(_._2 != "pipeline-month"))
+    }
+  }
+
+  test("a failing branch fails the stage only after its siblings finish; a re-run converges") {
+    val clean = Files.createTempDirectory("graft_e2e_clean").toString
+    writeFixtures(clean)
+    val expected = { val r = new Runner(spark, clean); r.runMonth(2018, 7); goldRows(r) }
+
+    val base = Files.createTempDirectory("graft_e2e_fail").toString
+    writeFixtures(base)
+    val runner = new Runner(spark, base)
+    runner.bronzeToSilver(2018, 7)
+    val users = Paths.get(base, "silver", "users")
+    val parked = Paths.get(base, "users_parked")
+    Files.move(users, parked)
+    withJobLog {
+      val err = intercept[java.io.FileNotFoundException](runner.silverToGold(2018, 7))
+      (err, System.currentTimeMillis())
+    } { case ((err, thrownAt), log) =>
+      // the dim_user branch's own error, not a wrapper
+      assert(err.getMessage.contains("silver/users"), err.getMessage)
+      // the sibling branches ran their jobs, and all had ended by the
+      // throw (Spark stamps and posts a job's end before its caller
+      // returns, so no job was still active when the stage threw)
+      assert(!log.groups.isEmpty)
+      for (id <- log.groups.keySet.asScala) {
+        assert(log.ends.containsKey(id), s"job $id never ended")
+        assert(log.ends.get(id) <= thrownAt, s"job $id ended after the stage threw")
+      }
+    }
+    assert(Files.exists(Paths.get(base, "gold", "fact_checkin")))
+    assert(!Files.exists(Paths.get(base, "gold", "dim_user")))
+
+    Files.move(parked, users)
+    runner.runMonth(2018, 7)
+    assert(goldRows(runner) == expected)
   }
 
   test("hive metastore: gold table registered in one JVM resolves by name after a restart") {
