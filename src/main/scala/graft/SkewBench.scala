@@ -83,17 +83,12 @@ object SkewBench {
     val parts = sys.env.getOrElse("SPARK_GRAFT_SKEW_PARTS", "1024").toInt
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      // AQE stays ON — the production config both shapes ship under.
-      // It can skew-split and broadcast-convert the NEW shapes' joins
-      // but can NOT split a window partition (they are atomic), which
-      // is precisely the hazard this bench demonstrates.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // AQE stays ON — the production config both shapes ship under.
+    // It can skew-split and broadcast-convert the NEW shapes' joins
+    // but can NOT split a window partition (they are atomic), which
+    // is precisely the hazard this bench demonstrates.
+    val spark = Tables.session(s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> parts.toString)
     spark.sparkContext.setLogLevel("WARN")
 
     // ── fixtures ──

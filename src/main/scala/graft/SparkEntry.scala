@@ -39,6 +39,17 @@ object SparkEntry {
       .limit(10)
   }
 
+  /** The named catalog queries (all of them when `names` is empty), in
+    * name order. Unknown names are rejected, all listed; the mains call
+    * this before building a session, so a typo fails the run at once
+    * instead of running nothing. */
+  def selectQueries(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    all.toSeq.sortBy(_._1).filter { case (n, _) => names.isEmpty || names.contains(n) }
+  }
+
   // ---- shared builders -------------------------------------------------
 
   /** Per-process scratch root for the lifecycle queries (q66/q73/q74/

@@ -4,10 +4,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Loaders for the driver testdata tables (`TESTDATA.md`).
+/** Loaders for the driver testdata tables (`TESTDATA.md`), and the one
+  * place graft sessions are built and configured.
   *
-  * All engine entry points funnel through here so session-level
-  * requirements are applied uniformly:
+  * Every entry point builds its session with [[Tables.session]], which
+  * applies the session-level requirements once, before any table load:
   *
   *   - `spark.sql.legacy.parquet.nanosAsLong=true`: `events.parquet`
   *     carries `TIMESTAMP(NANOS)` which Spark's Parquet reader rejects
@@ -17,7 +18,29 @@ import org.apache.spark.sql.types.StructType
   *     where malformed casts yield NULL instead of throwing.
   */
 object Tables {
-  /** Confs every graft session needs; safe to set at runtime. */
+  private val LocalMaster = """local\[(\d+)(?:,\d+)?\]""".r
+
+  /** Build (or return the running) graft session on `master`: shuffle
+    * partitions match the local thread count, the UI is off, then the
+    * caller's `conf` pairs apply (and win), and [[configure]] runs once.
+    * `-Dspark.*` system properties reach the same SparkConf, so an A/B
+    * of any conf that neither this nor [[configure]] sets needs no code
+    * change. */
+  def session(master: String, conf: (String, String)*): SparkSession = {
+    val cores = master match {
+      case LocalMaster(n) => n
+      case _ => Runtime.getRuntime.availableProcessors.toString
+    }
+    configure(SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.ui.enabled", "false")
+      .config(conf.toMap)
+      .getOrCreate())
+  }
+
+  /** Confs, functions and planner extensions every graft session needs;
+    * safe to apply to a running session, and idempotent. */
   def configure(spark: SparkSession): SparkSession = {
     graft.hadoop.FastLocalFs.install(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -55,18 +78,17 @@ object Tables {
     // delete) in exactly that path. The sort-based writer buffers in
     // memory and writes ONE data + index file per map task. Lowering
     // the threshold to 4 flips small-R shuffles to the sort writer
-    // (TimeMany A/B at 32 threads: q93 ×1.41, q101 ×1.36, q26 ×1.47,
+    // (subset A/B at 32 threads: q93 ×1.41, q101 ×1.36, q26 ×1.47,
     // q69 ×1.28, q48 ×1.20, none regressed). Scale-adaptive: at
     // production reducer counts (R > 200) bypass is already off, so
     // this only affects the small-R regime where per-file overhead
     // dominates. The threshold is STATIC SparkConf (read per shuffle
     // registration from the live conf), so it is applied to the
-    // running SparkEnv's conf; an explicitly configured value is
-    // respected.
+    // running SparkEnv's conf. An explicitly configured threshold is
+    // respected, which is also the opt-out: set
+    // spark.shuffle.sort.bypassMergeThreshold=200 for Spark's default.
     val env = org.apache.spark.SparkEnv.get
-    if (env != null &&
-        spark.conf.getOption("spark.graft.shuffle.sortWriter").forall(_.toBoolean) &&
-        !env.conf.contains("spark.shuffle.sort.bypassMergeThreshold"))
+    if (env != null && !env.conf.contains("spark.shuffle.sort.bypassMergeThreshold"))
       env.conf.set("spark.shuffle.sort.bypassMergeThreshold", "4")
     graft.functions.VectorFunctions.register(spark)
     graft.functions.TextFunctions.register(spark)
@@ -90,7 +112,6 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    configure(spark)
     val path = s"$sfDir/$table.parquet"
     // cache key carries (length, mtime) so a rewritten path in a
     // long-lived JVM re-infers instead of silently serving the stale

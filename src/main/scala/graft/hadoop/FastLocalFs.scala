@@ -30,9 +30,9 @@ import org.apache.spark.sql.SparkSession
   * local-mode-only tuning of distributed behavior: it removes a
   * local-FS environment artifact (the missing native lib).
   *
-  * Opt out with `spark.graft.localfs.fast=false` (read once, at the
-  * first [[install]] in the JVM). An explicitly configured
-  * `fs.file.impl` is always respected.
+  * An explicitly configured `fs.file.impl` is always respected, which
+  * is also the opt-out: `spark.hadoop.fs.file.impl=
+  * org.apache.hadoop.fs.LocalFileSystem` keeps Hadoop's stock local FS.
   */
 class NoChmodRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = ()
@@ -69,9 +69,8 @@ object FastLocalFs {
     if (installed) return
     synchronized {
       if (installed) return
-      val enabled = spark.conf.getOption("spark.graft.localfs.fast").forall(_.toBoolean)
       val hc = spark.sparkContext.hadoopConfiguration
-      if (enabled && hc.get("fs.file.impl") == null) {
+      if (hc.get("fs.file.impl") == null) {
         hc.setClass("fs.file.impl", classOf[FastLocalFileSystem],
           classOf[org.apache.hadoop.fs.FileSystem])
         if (hc.get("fs.AbstractFileSystem.file.impl") == null)

@@ -171,7 +171,8 @@ class Runner(spark: SparkSession, base: String) {
     silverToGold(year, month)
   }
 
-  def gold(table: String): DataFrame = spark.read.parquet(s"$base/gold/$table")
+  def gold(table: String): DataFrame =
+    Tables.readParquetNoInfer(spark, Seq(s"$base/gold/$table"))
 }
 
 object Runner {
@@ -220,18 +221,16 @@ object Runner {
     * Derby allows ONE live connection per metastore directory, which
     * matches the reference's single-metastore-service topology; a
     * multi-writer deployment swaps the ConnectionURL for a networked
-    * metastore db exactly as hive-site.xml would. */
+    * metastore db exactly as hive-site.xml would. Built by
+    * [[Tables.session]] like every graft session, so the pipeline run
+    * here has the same ANSI-off, UTC semantics. */
   def hiveSession(base: String, master: String = "local[4]"): SparkSession = {
     // keep derby's log inside the warehouse root, not the process cwd
     System.setProperty("derby.system.home", base)
-    SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("javax.jdo.option.ConnectionURL",
+    Tables.session(master,
+      "spark.sql.catalogImplementation" -> "hive",
+      "spark.sql.warehouse.dir" -> s"$base/warehouse",
+      "javax.jdo.option.ConnectionURL" ->
         s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
-      .enableHiveSupport()
-      .getOrCreate()
   }
 }

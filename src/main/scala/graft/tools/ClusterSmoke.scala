@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.SparkEnv
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 /** MULTI-EXECUTOR smoke for the versioned store — the one claim twelve
   * rounds of `local[32]` could never make: that nothing in the serving
@@ -35,12 +35,10 @@ object ClusterSmoke {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_cluster").toString)
-    val spark = SparkSession.builder()
-      .appName("graft-cluster-smoke")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", value = false)
-      .getOrCreate() // master/executor conf comes from the forked JVM's -D flags
+    // master/executor conf comes from the forked JVM's -D flags
+    val spark = graft.Tables.session(sys.props("spark.master"),
+      "spark.app.name" -> "graft-cluster-smoke",
+      "spark.sql.shuffle.partitions" -> "8")
     import spark.implicits._
     import graft.ext.Versioned
 

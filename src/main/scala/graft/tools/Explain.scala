@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected
   * catalog queries so scan pushdown (`PushedFilters`/`ReadSchema`),
   * join strategy (BroadcastHashJoin vs SortMergeJoin) and
@@ -18,27 +16,14 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val requested = if (args.length > 1) args.drop(1).toSeq
-      else graft.SparkEntry.queries.keys.toSeq.sorted.filterNot(driverIterative)
-    val unknown = requested.filterNot(graft.SparkEntry.queries.contains)
-    if (unknown.nonEmpty) {
-      System.err.println(s"unknown queries: ${unknown.mkString(", ")}; " +
-        s"available: ${graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-      sys.exit(1)
-    }
-    val names = requested
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val named = graft.SparkEntry.selectQueries(args.drop(1).toSeq)
+    val selected = if (args.length > 1) named
+      else named.filterNot { case (n, _) => driverIterative(n) }
+    val spark = graft.Tables.session("local[4]")
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
+    selected.foreach { case (n, fn) =>
       println(s"\n========== $n ==========")
-      graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

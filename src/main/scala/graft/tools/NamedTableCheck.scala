@@ -18,13 +18,9 @@ import org.apache.spark.sql.SparkSession
   */
 object NamedTableCheck {
   private def session(warehouse: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.named", "graft.sql.VersionedCatalog")
-      .config("spark.sql.catalog.named.warehouse", warehouse)
-      .getOrCreate()
+    val s = graft.Tables.session("local[4]",
+      "spark.sql.catalog.named" -> "graft.sql.VersionedCatalog",
+      "spark.sql.catalog.named.warehouse" -> warehouse)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-Spark-job profile of a single catalog query: records every job
   * launched during one warm execution (start offset, duration, stage
@@ -13,20 +12,12 @@ import org.apache.spark.sql.SparkSession
   */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val Seq((name, fn)) = graft.SparkEntry.selectQueries(Seq(args(0)))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Tables.session(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
     graft.Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
-    val fn = graft.SparkEntry.queries(name)
     // warm pass (build-once lifecycle + JIT), matching Bench methodology
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 

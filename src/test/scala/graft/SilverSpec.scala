@@ -8,15 +8,8 @@ import graft.silver.{Clean, Silver}
 
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .getOrCreate()
+    val s = Tables.session("local[4]",
+      "spark.sql.warehouse.dir" -> "/tmp/graft-test-warehouse")
     s.sparkContext.setLogLevel("WARN")
     s
   }
