@@ -2,6 +2,8 @@ package graft.ext
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.file.{Files, Paths, StandardCopyOption, Path => JPath}
+import java.util.Comparator
 
 /** The commit seam: every crash-safe publish in this library reduces
   * to ONE primitive — make a small control file (a manifest, a version
@@ -123,7 +125,6 @@ object PutIfAbsentCommit extends CommitProtocol {
   }
 
   private def putIfAbsentLocal(dst: Path, content: Array[Byte]): Boolean = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val target = Paths.get(dst.toUri.getPath)
     Files.createDirectories(target.getParent)
     val tmp = Files.createTempFile(target.getParent, s".put-${dst.getName}", ".tmp")
@@ -148,7 +149,7 @@ object PutIfAbsentCommit extends CommitProtocol {
   *
   *   - [[SwapStore]]: the table IS a directory; replace = sibling-tmp
   *     write + directory rename swap. Fast, zero indirection, crash
-  *     windows closed by [[graft.gold.Upsert.recoverSwap]] — but the
+  *     windows closed by [[SwapStore.recover]] — but the
   *     guarantee holds ONLY where directory rename is atomic
   *     (HDFS/POSIX). The default, matching every existing call site.
   *   - [[ManifestStore]]: the table is a POINTER — immutable
@@ -203,31 +204,52 @@ object SwapStore extends TableStore {
   val name = "swap"
 
   def exists(spark: SparkSession, path: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path))
+    Files.exists(Paths.get(path))
 
   def readLive(spark: SparkSession, path: String): DataFrame =
     graft.Tables.readParquetNoInfer(spark, Seq(path))
 
-  def recover(spark: SparkSession, path: String): Unit =
-    graft.gold.Upsert.recoverSwap(path)
+  def recover(spark: SparkSession, path: String): Unit = {
+    val (dir, old, tmp) = swapPaths(path)
+    if (!Files.exists(dir) && Files.exists(old))
+      Files.move(old, dir, StandardCopyOption.ATOMIC_MOVE)
+    if (Files.exists(old)) deleteRecursively(old)
+    if (Files.exists(tmp)) deleteRecursively(tmp)
+  }
 
   def liveFiles(spark: SparkSession, path: String): Seq[(String, Long)] =
     CommitFiles.parquetUnder(spark, Seq(path))
 
-  def rewrite(spark: SparkSession, path: String)(write: String => Unit): Unit =
-    if (!exists(spark, path)) {
-      // bootstrap all-or-nothing: stage to the swap tmp (recoverSwap
-      // clears any stale one) and move into place atomically, so a
-      // crashed bootstrap never leaves a partial dir a later call
-      // would read as the table
-      graft.gold.Upsert.recoverSwap(path)
-      val tmp = path.stripSuffix("/") + "__upsert_tmp"
-      write(tmp)
-      java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-        java.nio.file.Paths.get(path),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ()
-    } else graft.gold.Upsert.atomicRewrite(path)(write)
+  /** The crash-safe rewrite protocol, usable by any whole-table
+    * rewriter (upsert, [[Maintenance]] compaction, the IVF index
+    * swaps): `write` produces the replacement table at the tmp path
+    * it is handed, then live → `__old`, tmp → live, delete `__old`.
+    * A bootstrap (no live dir yet) stages to the same tmp and moves it
+    * into place, so a crashed bootstrap never leaves a partial dir a
+    * later call would read as the table. Every crash window is
+    * repaired by [[recover]], which runs first: a missing live dir
+    * with `__old` present is restored, leftover `__old`/tmp dirs
+    * beside a live dir are garbage-collected. */
+  def rewrite(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    recover(spark, path)
+    val (dir, old, tmp) = swapPaths(path)
+    write(tmp.toString)
+    if (Files.exists(dir)) {
+      Files.move(dir, old, StandardCopyOption.ATOMIC_MOVE)
+      Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+      deleteRecursively(old)
+    } else Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** (live, `__old`, `__upsert_tmp`) — the swap's sibling dirs. */
+  private def swapPaths(path: String): (JPath, JPath, JPath) = {
+    val base = path.stripSuffix("/")
+    (Paths.get(path), Paths.get(base + "__old"), Paths.get(base + "__upsert_tmp"))
+  }
+
+  private def deleteRecursively(p: JPath): Unit =
+    if (Files.exists(p))
+      Files.walk(p).sorted(Comparator.reverseOrder[JPath]()).forEach(f => Files.delete(f))
 }
 
 final class ManifestStore(val protocol: CommitProtocol) extends TableStore {

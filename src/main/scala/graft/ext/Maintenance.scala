@@ -222,9 +222,9 @@ object Maintenance {
     * leavings:
     *
     *   - sibling swap dirs (`__old`, `__upsert_tmp`) abandoned by a
-    *     crashed [[graft.gold.Upsert.atomicRewrite]] — but ONLY when
+    *     crashed [[SwapStore.rewrite]] — but ONLY when
     *     the live dir exists; a missing live dir means `__old` IS the
-    *     table and recovery ([[graft.gold.Upsert.recoverSwap]]) owns
+    *     table and recovery ([[SwapStore.recover]]) owns
     *     it, so vacuum refuses rather than racing it;
     *   - in-table hidden files/dirs (leading `_` or `.`): crashed-task
     *     `_temporary` trees, `.staging` files, checksum droppings —
@@ -295,7 +295,7 @@ object Maintenance {
     require(partitionCols.nonEmpty, "partitionCols must be non-empty")
     val before = parquetFiles(spark, path)
     val totalBytes = before.map(_._2).sum
-    graft.gold.Upsert.atomicRewrite(path) { tmp =>
+    SwapStore.rewrite(spark, path) { tmp =>
       spark.read.parquet(path)
         .repartition(partitionCols.map(col): _*)
         .write.partitionBy(partitionCols: _*).mode(SaveMode.Overwrite).parquet(tmp)

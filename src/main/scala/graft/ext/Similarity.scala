@@ -259,7 +259,7 @@ object Similarity {
     * (readers see old layout until the atomic rename; every crash
     * window recovers on the next call). */
   def ivfCompact(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    graft.gold.Upsert.atomicRewrite(path) { tmp =>
+    SwapStore.rewrite(spark, path) { tmp =>
       spark.read.parquet(path)
         .repartition(col("list_id"))
         .write.partitionBy("list_id").parquet(tmp)
@@ -270,7 +270,7 @@ object Similarity {
     * vectors sit in lists chosen by STALE centroids, so recall drifts
     * with the data distribution; this op retrains on the index's full
     * current contents and atomically replaces the partition layout via
-    * [[graft.gold.Upsert.atomicRewrite]] (readers see the old index
+    * [[SwapStore.rewrite]] (readers see the old index
     * until the swap, every crash window recovers on the next call).
     * Training reads the index itself — the original corpus need not be
     * kept. Returns the new centroids the serving layer must adopt
@@ -280,7 +280,7 @@ object Similarity {
                      idCol: String, vecCol: String,
                      nLists: Int = 16, iters: Int = 2): Seq[Array[Double]] = {
     var cents: Seq[Array[Double]] = Seq.empty
-    graft.gold.Upsert.atomicRewrite(path) { tmp =>
+    SwapStore.rewrite(spark, path) { tmp =>
       // reading the live dir inside the write callback is safe by the
       // swap contract: nothing has moved yet
       val current = spark.read.parquet(path).drop("list_id")

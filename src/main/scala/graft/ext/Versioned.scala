@@ -585,12 +585,8 @@ object Versioned {
     * Bounded by WEIGHT, not entry count: an entry's weight is its
     * recorded file-stats count (the dominant allocation — a
     * 10⁶-file manifest must not be multiplied by an entry-count
-    * bound). Eviction keeps at least the most recently used entry, so
-    * one huge hot manifest still caches. */
-  private val manifestCacheMaxWeight = 2L * 1000 * 1000 // total cached FileStats entries
-  private var manifestCacheWeight = 0L
-  private val manifestCache =
-    new java.util.LinkedHashMap[String, (Seq[Line], Long)](128, 0.75f, true)
+    * bound), 2M in total. */
+  private val manifestCache = new BoundedCache[String, Seq[Line]](2L * 1000 * 1000, lineWeight)
 
   private def lineWeight(ls: Seq[Line]): Long =
     ls.iterator.map {
@@ -882,24 +878,10 @@ object Versioned {
 
   private def lines(spark: SparkSession, dir: String, v: Int): Seq[Line] = {
     val key = cacheKey(spark, dir, v)
-    manifestCache.synchronized(Option(manifestCache.get(key))) match {
-      case Some((cached, _)) => cached
-      case None =>
-        val parsed = resolveManifest(spark, dir, v)
-        val w = lineWeight(parsed)
-        manifestCache.synchronized {
-          if (manifestCache.put(key, (parsed, w)) == null) manifestCacheWeight += w
-          val it = manifestCache.entrySet().iterator()
-          while (manifestCacheWeight > manifestCacheMaxWeight && manifestCache.size() > 1
-                 && it.hasNext) {
-            val eldest = it.next()
-            if (eldest.getKey != key) {
-              manifestCacheWeight -= eldest.getValue._2
-              it.remove()
-            }
-          }
-        }
-        parsed
+    manifestCache.get(key).getOrElse {
+      val parsed = resolveManifest(spark, dir, v)
+      manifestCache.put(key, parsed)
+      parsed
     }
   }
 
@@ -908,14 +890,14 @@ object Versioned {
     * resurrect a pruned version's file list. */
   private def evictManifestCache(spark: SparkSession, dir: String,
                                  vs: Iterable[Int]): Unit =
-    manifestCache.synchronized {
-      vs.foreach { v =>
-        val removed = manifestCache.remove(cacheKey(spark, dir, v))
-        if (removed != null) manifestCacheWeight -= removed._2
-      }
-    }
+    manifestCache.remove(vs.map(cacheKey(spark, dir, _)))
 
-  // ───────────── bloom sidecar files (manifest stays O(dirs)) ─────────────
+  // ───────────── sidecar files (manifest stays O(dirs)) ─────────────
+  // Heavy per-dir payloads — bloom blobs and per-file stats JSON —
+  // move out of the manifest into CONTENT-ADDRESSED sidecar files
+  // (`_versions/<kind>/<sha256-16>.<ext>`) and the manifest keeps a
+  // ref line. Written once, never rewritten (a trim writes a NEW
+  // sidecar), so their parse caches can never serve stale bytes.
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.ext.Versioned")
 
@@ -928,79 +910,122 @@ object Versioned {
     spark.conf.getOption("spark.graft.bloom.sidecarMinBytes")
       .map(_.toLong).getOrElse(256L * 1024)
 
+  /** Per-dir stats-JSON bytes at or above which [[externalizeStats]]
+    * moves the payload to a sidecar file. The default (256 KiB, a few
+    * hundred files' worth of JSON) keeps small tables zero-metadata-
+    * call while a large commit stops growing the manifest with file
+    * count. */
+  private def statsSidecarMinBytes(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.stats.sidecarMinBytes")
+      .map(_.toLong).getOrElse(256L * 1024)
+
   private def bloomsDirPath(root: Path) = new Path(root, s"$VDIR/blooms")
+  private def statsDirPath(root: Path) = new Path(root, s"$VDIR/stats")
 
-  /** Sidecar parse cache. Sound because sidecar files are IMMUTABLE —
-    * content-addressed names, written once, never rewritten (a trim
-    * writes a NEW sidecar). Bounded by blob bytes; one hot entry
-    * always stays. */
-  private val bloomSidecarCacheMaxBytes = 256L * 1024 * 1024
-  private var bloomSidecarCacheBytes = 0L
-  private val bloomSidecarCache =
-    new java.util.LinkedHashMap[String, (Map[String, Array[Byte]], Long)](64, 0.75f, true)
-
-  /** Read one sidecar (cached). A MISSING sidecar degrades to an empty
-    * map with a warning rather than bricking the table: blooms are
-    * one-sided skipping metadata — no bloom means every file is read,
-    * never a wrong row. The case is reachable only by external
-    * interference (the documented clone caveat: the SOURCE owns a
-    * cloned ref's file and its prune may reclaim it). The failure is
-    * NOT cached, so a restored file heals on the next parse. */
-  private def loadBloomSidecar(path: String): Map[String, Array[Byte]] = {
-    bloomSidecarCache.synchronized(Option(bloomSidecarCache.get(path))) match {
-      case Some((cached, _)) => cached
-      case None =>
-        val spark = SparkSession.active
-        val p = new Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val parsed: Option[Map[String, Array[Byte]]] =
-          try {
-            val in = fs.open(p)
-            try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-              .filter(_.nonEmpty).map { e =>
-                var k = e.length
-                while (k > 0 && e.charAt(k - 1) == '=') k -= 1
-                val j = e.lastIndexOf('=', k - 1)
-                require(j > 0, s"malformed bloom sidecar entry in $path: $e")
-                e.substring(0, j) -> Bloom.fromBase64(e.substring(j + 1))
-              }.toMap)
-            finally in.close()
-          } catch {
-            case _: java.io.FileNotFoundException =>
-              log.warn(s"bloom sidecar $path is missing — point-lookup skipping " +
-                "degrades to reading every file of its dir (results stay exact); " +
-                "was the clone SOURCE pruned?")
-              None
-          }
-        parsed match {
-          case None => Map.empty
-          case Some(m) =>
-            val w = m.valuesIterator.map(_.length.toLong).sum
-            bloomSidecarCache.synchronized {
-              if (bloomSidecarCache.put(path, (m, w)) == null) bloomSidecarCacheBytes += w
-              val it = bloomSidecarCache.entrySet().iterator()
-              while (bloomSidecarCacheBytes > bloomSidecarCacheMaxBytes &&
-                     bloomSidecarCache.size() > 1 && it.hasNext) {
-                val eldest = it.next()
-                if (eldest.getKey != path) {
-                  bloomSidecarCacheBytes -= eldest.getValue._2
-                  it.remove()
-                }
-              }
-            }
-            m
-        }
+  /** Write `body` as the sidecar `<kindDir>/<sha256-16>.<ext>` of the
+    * table at `dir` and return its qualified, scheme-free path. tmp +
+    * rename, so the content-addressed name only ever appears COMPLETE;
+    * an existing file is reused, and losing a same-name race is benign
+    * (same hash = same bytes). */
+  private def writeSidecar(spark: SparkSession, dir: String, kindDir: Path => Path,
+                           ext: String, body: String): String = {
+    val bytes = body.getBytes("UTF-8")
+    val hash = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(bytes).take(16).map("%02x".format(_)).mkString
+    val (fs, root) = fsFor(spark, dir)
+    val target = new Path(kindDir(root), s"$hash.$ext")
+    if (!fs.exists(target)) {
+      fs.mkdirs(target.getParent)
+      val tmp = new Path(target.getParent,
+        s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+      val out = fs.create(tmp, false)
+      try out.write(bytes) finally out.close()
+      if (!fs.rename(tmp, target)) {
+        // lost the race to an identical writer — their bytes serve
+        fs.delete(tmp, false)
+        require(fs.exists(target), s"$ext sidecar rename to $target failed")
+      }
     }
+    fs.makeQualified(target).toUri.getPath
   }
+
+  /** Read one sidecar through `cache`, parsing its text with `parse`
+    * on a miss. A MISSING file returns None and caches nothing, so a
+    * restored file serves on the next read; each kind decides what a
+    * missing sidecar means. */
+  private def readSidecar[V](cache: BoundedCache[String, V], path: String)
+                            (parse: String => V): Option[V] =
+    cache.get(path).orElse {
+      val p = new Path(path)
+      val fs = p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+      val body =
+        try {
+          val in = fs.open(p)
+          try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
+        } catch { case _: java.io.FileNotFoundException => None }
+      body.map { b =>
+        val parsed = parse(b)
+        cache.put(path, parsed)
+        parsed
+      }
+    }
+
+  /** Bloom sidecar parses, bounded by blob bytes. */
+  private val bloomSidecarCache = new BoundedCache[String, Map[String, Array[Byte]]](
+    256L * 1024 * 1024, _.valuesIterator.map(_.length.toLong).sum)
+
+  /** Read one bloom sidecar (cached). A MISSING sidecar degrades to an
+    * empty map with a warning rather than bricking the table: blooms
+    * are one-sided skipping metadata — no bloom means every file is
+    * read, never a wrong row. The case is reachable only by external
+    * interference (the documented clone caveat: the SOURCE owns a
+    * cloned ref's file and its prune may reclaim it). */
+  private def loadBloomSidecar(path: String): Map[String, Array[Byte]] =
+    readSidecar(bloomSidecarCache, path) { body =>
+      body.split('\n').iterator.filter(_.nonEmpty).map { e =>
+        var k = e.length
+        while (k > 0 && e.charAt(k - 1) == '=') k -= 1
+        val j = e.lastIndexOf('=', k - 1)
+        require(j > 0, s"malformed bloom sidecar entry in $path: $e")
+        e.substring(0, j) -> Bloom.fromBase64(e.substring(j + 1))
+      }.toMap
+    }.getOrElse {
+      log.warn(s"bloom sidecar $path is missing — point-lookup skipping " +
+        "degrades to reading every file of its dir (results stay exact); " +
+        "was the clone SOURCE pruned?")
+      Map.empty
+    }
+
+  /** Stats sidecar parses, weighted by recorded file count — the same
+    * unit and bound as the manifest cache. */
+  private val statsSidecarCache =
+    new BoundedCache[String, (Long, Map[String, ColStats], Seq[FileStats])](
+      2L * 1000 * 1000, 1L + _._3.length)
+
+  /** Read one stats sidecar (cached). A MISSING file REFUSES with the
+    * remedy named — unlike a bloom blob, the file list is what reads
+    * PLAN from, and a silent fallback to directory listing would serve
+    * rows a CoW rewrite already removed from a trimmed dir. */
+  private def loadStatsSidecar(path: String): (Long, Map[String, ColStats], Seq[FileStats]) =
+    readSidecar(statsSidecarCache, path)(body => StatsJson.parse(body.trim)).getOrElse(
+      throw new IllegalStateException(
+        s"stats sidecar $path is MISSING — the manifest's per-file lists " +
+          "live there and reads plan from them, so this table cannot be " +
+          "served exactly. Restore the file, or re-create the state it " +
+          "described (was a foreign table's prune pointed at this tree?)"))
+
+  /** Every metadata cache's counters, by name — for profiling tools
+    * and the cache tests. */
+  private[graft] def cacheStats: Seq[(String, BoundedCache.Stats)] = Seq(
+    "manifest" -> manifestCache.stats,
+    "bloom-sidecar" -> bloomSidecarCache.stats,
+    "stats-sidecar" -> statsSidecarCache.stats)
 
   /** Move heavy inline bloom entries to sidecar files — called at
     * every seam that CREATES blobs (per-commit build, backfill,
     * rewrite trim/replacement), before the entry renders into a
     * manifest. Entries already carrying a ref pass through (the file
-    * exists and is immutable); light entries stay inline. The write
-    * is tmp + rename so the content-addressed name only ever appears
-    * COMPLETE, and losing a same-name race is benign (same hash =
-    * same bytes). */
+    * exists and is immutable); light entries stay inline. */
   private def externalizeBlooms(spark: SparkSession, dir: String,
                                 entries: Seq[Line],
                                 force: Boolean = false): Seq[Line] = {
@@ -1011,95 +1036,10 @@ object Versioned {
           f.length + 2L + 4L * ((bits.length + 2) / 3)
         }.sum
         if (!force && payload < minBytes) b
-        else {
-          val body = (files.toSeq.sortBy(_._1)
-            .map { case (f, bb) => s"$f=${Bloom.toBase64(bb)}" }.mkString("\n") + "\n")
-            .getBytes("UTF-8")
-          val hash = java.security.MessageDigest.getInstance("SHA-256")
-            .digest(body).take(16).map("%02x".format(_)).mkString
-          val (fs, root) = fsFor(spark, dir)
-          val target = new Path(bloomsDirPath(root), s"$hash.bloom")
-          if (!fs.exists(target)) {
-            fs.mkdirs(target.getParent)
-            val tmp = new Path(target.getParent,
-              s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-            val out = fs.create(tmp, false)
-            try out.write(body) finally out.close()
-            if (!fs.rename(tmp, target)) {
-              // lost the race to an identical writer — their bytes serve
-              fs.delete(tmp, false)
-              require(fs.exists(target), s"bloom sidecar rename to $target failed")
-            }
-          }
-          b.copy(sidecar = Some(fs.makeQualified(target).toUri.getPath))
-        }
+        else b.copy(sidecar = Some(writeSidecar(spark, dir, bloomsDirPath, "bloom",
+          files.toSeq.sortBy(_._1)
+            .map { case (f, bb) => s"$f=${Bloom.toBase64(bb)}" }.mkString("\n") + "\n")))
       case other => other
-    }
-  }
-
-  // ───────────── stats sidecar files (manifest stays O(dirs)) ─────────────
-
-  /** Per-dir stats-JSON bytes at or above which [[externalizeStats]]
-    * moves the payload to a sidecar file. The default (256 KiB, a few
-    * hundred files' worth of JSON) keeps small tables zero-metadata-
-    * call while a large commit stops growing the manifest with file
-    * count. */
-  private def statsSidecarMinBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.stats.sidecarMinBytes")
-      .map(_.toLong).getOrElse(256L * 1024)
-
-  private def statsDirPath(root: Path) = new Path(root, s"$VDIR/stats")
-
-  /** Sidecar parse cache — sound because the files are IMMUTABLE
-    * (content-addressed, written once; a trim writes a NEW sidecar).
-    * Weighted by recorded file count, the same unit as the manifest
-    * cache; one hot entry always stays. */
-  private val statsSidecarCacheMaxFiles = 2L * 1000 * 1000
-  private var statsSidecarCacheFiles = 0L
-  private val statsSidecarCache =
-    new java.util.LinkedHashMap[String, ((Long, Map[String, ColStats], Seq[FileStats]), Long)](
-      64, 0.75f, true)
-
-  /** Read one stats sidecar (cached). A MISSING file REFUSES with the
-    * remedy named — unlike a bloom blob, the file list is what reads
-    * PLAN from, and a silent fallback to directory listing would serve
-    * rows a CoW rewrite already removed from a trimmed dir. */
-  private def loadStatsSidecar(path: String): (Long, Map[String, ColStats], Seq[FileStats]) = {
-    statsSidecarCache.synchronized(Option(statsSidecarCache.get(path))) match {
-      case Some((cached, _)) => cached
-      case None =>
-        val spark = SparkSession.active
-        val p = new Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val parsed =
-          try {
-            val in = fs.open(p)
-            try StatsJson.parse(
-              scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-            finally in.close()
-          } catch {
-            case _: java.io.FileNotFoundException =>
-              throw new IllegalStateException(
-                s"stats sidecar $path is MISSING — the manifest's per-file lists " +
-                  "live there and reads plan from them, so this table cannot be " +
-                  "served exactly. Restore the file, or re-create the state it " +
-                  "described (was a foreign table's prune pointed at this tree?)")
-          }
-        statsSidecarCache.synchronized {
-          val w = 1L + parsed._3.length
-          if (statsSidecarCache.put(path, (parsed, w)) == null)
-            statsSidecarCacheFiles += w
-          val it = statsSidecarCache.entrySet().iterator()
-          while (statsSidecarCacheFiles > statsSidecarCacheMaxFiles &&
-                 statsSidecarCache.size() > 1 && it.hasNext) {
-            val eldest = it.next()
-            if (eldest.getKey != path) {
-              statsSidecarCacheFiles -= eldest.getValue._2
-              it.remove()
-            }
-          }
-        }
-        parsed
     }
   }
 
@@ -1107,9 +1047,7 @@ object Versioned {
     * every seam that CREATES a stats line (commit harvest, CONVERT,
     * backfill, rewrite trim/replacement), before the entry renders
     * into a manifest. Entries already carrying a ref pass through
-    * (immutable file, exists); light entries stay inline. tmp+rename
-    * so the content-addressed name only ever appears COMPLETE; losing
-    * a same-name race is benign (same hash = same bytes). */
+    * (immutable file, exists); light entries stay inline. */
   private def externalizeStats(spark: SparkSession, dir: String,
                                entries: Seq[Line],
                                force: Boolean = false): Seq[Line] = {
@@ -1118,25 +1056,7 @@ object Versioned {
       case s @ StatsEntry(_, rows, cols, files, None) if files.nonEmpty =>
         val json = StatsJson.render(rows, cols, files)
         if (!force && json.length < minBytes) s
-        else {
-          val body = (json + "\n").getBytes("UTF-8")
-          val hash = java.security.MessageDigest.getInstance("SHA-256")
-            .digest(body).take(16).map("%02x".format(_)).mkString
-          val (fs, root) = fsFor(spark, dir)
-          val target = new Path(statsDirPath(root), s"$hash.stats")
-          if (!fs.exists(target)) {
-            fs.mkdirs(target.getParent)
-            val tmp = new Path(target.getParent,
-              s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-            val out = fs.create(tmp, false)
-            try out.write(body) finally out.close()
-            if (!fs.rename(tmp, target)) {
-              fs.delete(tmp, false)
-              require(fs.exists(target), s"stats sidecar rename to $target failed")
-            }
-          }
-          s.copy(sidecar = Some(fs.makeQualified(target).toUri.getPath))
-        }
+        else s.copy(sidecar = Some(writeSidecar(spark, dir, statsDirPath, "stats", json + "\n")))
       case other => other
     }
   }
@@ -3914,16 +3834,7 @@ object Versioned {
   private def evictManifestCacheDir(spark: SparkSession, dir: String): Unit = {
     val (fs, root) = fsFor(spark, dir)
     val prefix = fs.makeQualified(new Path(root, VDIR)).toString + "/"
-    manifestCache.synchronized {
-      val it = manifestCache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.startsWith(prefix)) {
-          manifestCacheWeight -= e.getValue._2
-          it.remove()
-        }
-      }
-    }
+    manifestCache.removeIf(_.startsWith(prefix))
   }
 
   /** Absolute paths of every dir the NEWEST version references — data
@@ -6586,51 +6497,31 @@ object Versioned {
       // publish are invisible to readers but never self-clean; both
       // protocols' staging prefixes are swept (`.tmp-` = RenameCommit,
       // `.put-` = PutIfAbsentCommit's local emulation)
-      // the sidecar dirs stage through the same tmp+rename discipline —
-      // their crashed leftovers sweep with the same age guard
-      (new Path(root, VDIR) +: Seq(bloomsDirPath(root), statsDirPath(root))
-          .filter(fs.exists(_)))
-        .flatMap(fs.listStatus(_))
+      fs.listStatus(new Path(root, VDIR))
         .filter { st =>
           val n = st.getPath.getName
           (n.startsWith(".tmp-") || n.startsWith(".put-")) &&
             now - st.getModificationTime >= orphanMinAgeMs
         }
         .foreach(st => fs.delete(st.getPath, false))
-      // bloom sidecars referenced by NO surviving manifest are dead
-      // (a trim/re-declare orphaned them, or their versions were just
-      // dropped). The age guard covers the one race: a concurrent
-      // commit writes its sidecar BEFORE claiming its manifest, so a
-      // young unreferenced sidecar may be a commit in flight. Only
-      // LOCAL files are candidates — a cloned ref points into the
-      // SOURCE's tree, which this listing never sees.
-      val bloomsDir = bloomsDirPath(root)
-      if (fs.exists(bloomsDir)) {
-        val referenced = keep.iterator.flatMap(v =>
-          lines(spark, dir, v).iterator.collect {
-            case BloomEntry(_, _, _, Some(ref)) => ref
-          }).toSet
-        fs.listStatus(bloomsDir)
-          .filter(st => !referenced.contains(
-            fs.makeQualified(st.getPath).toUri.getPath) &&
-            now - st.getModificationTime >= orphanMinAgeMs)
-          .foreach(st => fs.delete(st.getPath, false))
-      }
-      // stats sidecars reclaim identically: a trim or overwrite
-      // orphaned the old content-addressed file, or its versions were
-      // just dropped; the age guard covers the commit-in-flight race
-      val statsDir = statsDirPath(root)
-      if (fs.exists(statsDir)) {
-        val referenced = keep.iterator.flatMap(v =>
-          lines(spark, dir, v).iterator.collect {
-            case StatsEntry(_, _, _, _, Some(ref)) => ref
-          }).toSet
-        fs.listStatus(statsDir)
-          .filter(st => !referenced.contains(
-            fs.makeQualified(st.getPath).toUri.getPath) &&
-            now - st.getModificationTime >= orphanMinAgeMs)
-          .foreach(st => fs.delete(st.getPath, false))
-      }
+      // sidecars referenced by NO surviving manifest are dead (a
+      // trim, re-declare or overwrite orphaned them, or their versions
+      // were just dropped), and so are a crashed sidecar write's
+      // `.tmp-` leftovers. The age guard covers the one race: a
+      // concurrent commit writes its sidecar BEFORE claiming its
+      // manifest, so a young unreferenced sidecar may be a commit in
+      // flight. Only LOCAL files are candidates — a cloned bloom ref
+      // points into the SOURCE's tree, which this listing never sees.
+      val referenced = keep.iterator.flatMap(v => lines(spark, dir, v).iterator.collect {
+        case BloomEntry(_, _, _, Some(ref))    => ref
+        case StatsEntry(_, _, _, _, Some(ref)) => ref
+      }).toSet
+      Seq(bloomsDirPath(root), statsDirPath(root)).filter(fs.exists(_))
+        .flatMap(fs.listStatus(_))
+        .filter(st => !referenced.contains(
+          fs.makeQualified(st.getPath).toUri.getPath) &&
+          now - st.getModificationTime >= orphanMinAgeMs)
+        .foreach(st => fs.delete(st.getPath, false))
     }
     PruneStats(drop, dead.map(_.getPath.getName).toSeq,
       young.map(_.getPath.getName).toSeq)

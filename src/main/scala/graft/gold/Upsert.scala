@@ -1,8 +1,6 @@
 package graft.gold
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 
 /** MERGE-upsert emulation over plain Parquet.
   *
@@ -52,7 +50,7 @@ object Upsert {
   }
 
   /** Path-based [[mergeEvolve]]: the schema-evolving upsert through
-    * the same crash-safe [[atomicRewrite]] swap as [[upsertParquet]].
+    * the same crash-safe directory swap as [[upsertParquet]].
     * After the swap the live table carries the union schema. */
   def upsertParquetEvolve(spark: SparkSession, path: String, updates: DataFrame,
                           keys: Seq[String]): Unit =
@@ -65,18 +63,8 @@ object Upsert {
     * After the publish the live state carries the union schema either
     * way. */
   def upsertTableEvolve(spark: SparkSession, path: String, updates: DataFrame,
-                        keys: Seq[String], store: graft.ext.TableStore): Unit = {
-    store.recover(spark, path)
-    val deduped = dedupByKeys(updates, keys)
-    if (!store.exists(spark, path))
-      store.rewrite(spark, path)(tmp =>
-        deduped.write.mode(SaveMode.Overwrite).parquet(tmp))
-    else
-      store.rewrite(spark, path) { tmp =>
-        val target = store.readLive(spark, path)
-        mergeEvolve(target, deduped, keys).write.mode(SaveMode.Overwrite).parquet(tmp)
-      }
-  }
+                        keys: Seq[String], store: graft.ext.TableStore): Unit =
+    upsertWith(spark, path, updates, keys, store)(mergeEvolve)
 
   /** Delta Change Data Feed's role for [[merge]]: the row-level change
     * stream a MERGE produces, for downstream incremental consumers
@@ -169,20 +157,14 @@ object Upsert {
 
   /** Path-based form with bootstrap: if `path` doesn't exist yet, plain
     * overwrite (the reference's `DeltaTable.isDeltaTable` branch,
-    * ref: silver_to_gold_on_minio.py:131-144).
-    *
-    * Crash-safe swap protocol — holds under
-    * [[graft.ext.SwapStore]]'s substrate (HDFS/POSIX, where directory
-    * rename is atomic; for object stores use [[upsertTable]] with
-    * [[graft.ext.ManifestStore.conditionalPut]]): write merged →
-    * `__upsert_tmp`, move live → `__old`, move tmp → live, delete
-    * `__old`. Every crash window is recovered on the next call: a
-    * missing live dir with `__old` present is restored (the
-    * interrupted merge simply re-runs), a leftover `__old` beside a
-    * live dir is garbage-collected, and a stale tmp is cleared before
-    * writing. The previous delete-then-move protocol had a window
-    * where the table vanished and the next run's bootstrap branch
-    * silently re-created it from one month's rows. */
+    * ref: silver_to_gold_on_minio.py:131-144). Publishes through
+    * [[graft.ext.SwapStore.rewrite]]'s crash-safe directory swap,
+    * which holds where directory rename is atomic (HDFS/POSIX; for
+    * object stores use [[upsertTable]] with
+    * [[graft.ext.ManifestStore.conditionalPut]]). There is no window
+    * in which the table is missing, so the bootstrap branch can never
+    * re-create it from one month's rows; an interrupted merge is
+    * repaired and simply re-runs on the next call. */
   def upsertParquet(spark: SparkSession, path: String, updates: DataFrame, keys: Seq[String]): Unit =
     upsertTable(spark, path, updates, keys, graft.ext.SwapStore)
 
@@ -198,7 +180,14 @@ object Upsert {
     * crash-window guarantees to hold. Same merge semantics either
     * way; read the live state back with `store.readLive`. */
   def upsertTable(spark: SparkSession, path: String, updates: DataFrame,
-                  keys: Seq[String], store: graft.ext.TableStore): Unit = {
+                  keys: Seq[String], store: graft.ext.TableStore): Unit =
+    upsertWith(spark, path, updates, keys, store)(merge)
+
+  /** The shared upsert body: repair, dedup the updates, then bootstrap
+    * or publish `combine(live, updates, keys)` through `store`. */
+  private def upsertWith(spark: SparkSession, path: String, updates: DataFrame,
+                         keys: Seq[String], store: graft.ext.TableStore)
+                        (combine: (DataFrame, DataFrame, Seq[String]) => DataFrame): Unit = {
     store.recover(spark, path)
     val deduped = dedupByKeys(updates, keys)
     if (!store.exists(spark, path))
@@ -207,47 +196,7 @@ object Upsert {
     else
       store.rewrite(spark, path) { tmp =>
         val target = store.readLive(spark, path)
-        merge(target, deduped, keys).write.mode(SaveMode.Overwrite).parquet(tmp)
+        combine(target, deduped, keys).write.mode(SaveMode.Overwrite).parquet(tmp)
       }
   }
-
-  /** Recover from a previous interrupted [[atomicRewrite]]: a missing
-    * live dir with `__old` present is restored, leftover `__old`/tmp
-    * dirs beside a live dir are garbage-collected. Safe to call any
-    * time; [[atomicRewrite]] calls it itself. */
-  def recoverSwap(path: String): Unit = {
-    val dir = Paths.get(path)
-    val old = Paths.get(path.stripSuffix("/") + "__old")
-    val tmp = Paths.get(path.stripSuffix("/") + "__upsert_tmp")
-    if (!Files.exists(dir) && Files.exists(old))
-      Files.move(old, dir, StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(old)) deleteRecursively(old)
-    if (Files.exists(tmp)) deleteRecursively(tmp)
-  }
-
-  /** The crash-safe rewrite protocol, usable by any whole-table
-    * rewriter (upsert here, [[graft.ext.Maintenance]] compaction):
-    * `write` produces the replacement table at the tmp path it is
-    * handed — reading the CURRENT live dir is safe inside it, nothing
-    * has moved yet — then live → `__old`, tmp → live, delete `__old`.
-    * Every crash window is recovered by [[recoverSwap]] on the next
-    * call. Holds where directory rename is atomic (HDFS/POSIX — the
-    * [[graft.ext.SwapStore]] substrate); on object stores the same
-    * rewrite goes through [[graft.ext.ManifestStore]] +
-    * [[graft.ext.PutIfAbsentCommit]] instead, where no rename is on
-    * the commit path. */
-  def atomicRewrite(path: String)(write: String => Unit): Unit = {
-    recoverSwap(path)
-    val dir = Paths.get(path)
-    val old = Paths.get(path.stripSuffix("/") + "__old")
-    val tmp = Paths.get(path.stripSuffix("/") + "__upsert_tmp")
-    write(tmp.toString)
-    Files.move(dir, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
 }

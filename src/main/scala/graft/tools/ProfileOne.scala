@@ -6,7 +6,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * launched during one warm execution (start offset, duration, stage
   * count, total task count, description) so fixed per-job overhead —
   * the dominant cost of the multi-commit protocol meters — is visible
-  * per call site. Dev-only; the bench contract is untouched.
+  * per call site, plus each versioned-store metadata cache's hit, miss
+  * and eviction change over the run (a miss is a manifest or sidecar
+  * re-parse). Dev-only; the bench contract is untouched.
   *
   * Usage: runMain graft.tools.ProfileOne <queryName> [sfDir]
   */
@@ -42,6 +44,7 @@ object ProfileOne {
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    val cachesBefore = graft.ext.Versioned.cacheStats.toMap
     val t0 = System.nanoTime()
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     val wall = (System.nanoTime() - t0) / 1e9
@@ -59,6 +62,11 @@ object ProfileOne {
       println(f"  job ${j.id}%4d  +$off%7.3f  ${dur}%7.3f s  tasks=${j.nTasks}%4d  ${j.desc.take(140)}")
     }
     println(f"  jobs=${jobs.size()} job-covered=$covered%.3f s (gaps = driver-side work)")
+    graft.ext.Versioned.cacheStats.foreach { case (cache, now) =>
+      val d = now.since(cachesBefore(cache))
+      println(f"  cache $cache%-13s hits=${d.hits}%6d misses=${d.misses}%6d " +
+        f"evictions=${d.evictions}%6d (now ${d.size} entries, weight ${d.weight})")
+    }
     spark.stop()
   }
 }

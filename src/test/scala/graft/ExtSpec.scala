@@ -3035,21 +3035,49 @@ class ExtSpec extends AnyFunSuite {
   test("manifest parse cache: immutable manifests parse once; drop+recreate at the same path never serves the stale parse") {
     import graft.ext.Versioned
     val dir = java.nio.file.Files.createTempDirectory("graft_mcache").toString + "/t"
+    def manifestStats = Versioned.cacheStats.toMap.apply("manifest")
     Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir)
     // prime the cache through the ordinary read path
     assert(Versioned.readLatest(spark, dir).select("v").as[String].head() == "a")
+    // a second read of the same immutable version parses nothing
+    val primed = manifestStats
     assert(Versioned.readLatest(spark, dir).select("v").as[String].head() == "a")
+    val reread = manifestStats.since(primed)
+    assert(reread.hits > 0 && reread.misses == 0,
+      s"a re-read of a cached version must only hit: $reread")
     // drop, then re-create a DIFFERENT table at the SAME path: the
     // new v0 manifest lives at the identical key — a stale cache
     // entry would resurrect the old file list
     assert(Versioned.dropTableChain(spark, dir))
+    val dropped = manifestStats
     Versioned.writeVersion(Seq((2L, "b")).toDF("id", "v"), dir)
     assert(Versioned.readLatest(spark, dir).select("v").as[String].head() == "b")
+    assert(manifestStats.since(dropped).misses > 0,
+      "the re-created table's manifest must be parsed afresh, not served from cache")
     // prune evicts too: the pruned version's manifest is gone from
     // cache as well as disk
     Versioned.writeVersion(Seq((3L, "c")).toDF("id", "v"), dir)
     Versioned.pruneVersions(spark, dir, keepLast = 1)
     intercept[Exception] { Versioned.readVersion(spark, dir, 0).collect() }
+  }
+
+  test("prune reclaims a crashed sidecar write's aged tmp file and keeps live and young sidecar files") {
+    import graft.ext.Versioned
+    val dir = java.nio.file.Files.createTempDirectory("graft_sctmp").toString + "/t"
+    spark.conf.set("spark.graft.stats.sidecarMinBytes", "1")
+    try Versioned.writeVersion(spark.range(0, 100).toDF("id"), dir)
+    finally spark.conf.unset("spark.graft.stats.sidecarMinBytes")
+    val statsDir = new java.io.File(dir, "_versions/stats")
+    val live = statsDir.list().toSet
+    assert(live.nonEmpty && live.forall(_.endsWith(".stats")))
+    val crashed = new java.io.File(statsDir, ".tmp-deadbeef")
+    java.nio.file.Files.write(crashed.toPath, "junk".getBytes("UTF-8"))
+    // young: the age guard keeps it (it may be a write in flight)
+    Versioned.pruneVersions(spark, dir, keepLast = 1)
+    assert(crashed.exists())
+    Versioned.pruneVersions(spark, dir, keepLast = 1, orphanMinAgeMs = 0L)
+    assert(!crashed.exists() && statsDir.list().toSet == live)
+    assert(Versioned.readLatest(spark, dir).count() == 100)
   }
 
   test("SQL CALL procedures: compact_dv / zorder / restore / vacuum / maintain wrap the library maintenance verbatim") {
