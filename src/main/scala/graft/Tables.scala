@@ -40,8 +40,10 @@ object Tables {
   }
 
   /** Confs, functions and planner extensions every graft session needs;
-    * safe to apply to a running session, and idempotent. */
+    * safe on a running session and idempotent. Refuses a `spark.graft.*`
+    * key that [[Knobs]] lacks, and a value that does not parse. */
   def configure(spark: SparkSession): SparkSession = {
+    Knobs.validate(spark)
     graft.hadoop.FastLocalFs.install(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.ansi.enabled", "false")

@@ -304,9 +304,8 @@ object Dedup {
     * survive executor loss. */
   private def finalizeLevel(df: DataFrame): DataFrame = {
     val ss = df.sparkSession
-    val reliable = ss.conf.getOption("spark.graft.cc.reliableCheckpoint")
-      .exists(_.toBoolean)
-    if (reliable && ss.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    if (graft.Knobs.ccReliableCheckpoint(ss) && ss.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint()
     else df.localCheckpoint(true)
   }
 

@@ -86,10 +86,8 @@ private[graft] object Par {
 
   def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val enabled = spark.conf
-      .getOption("spark.graft.par.spread").forall(_.toBoolean)
     val n = spark.sparkContext.defaultParallelism
-    if (!enabled || n <= 1) return df
+    if (n <= 1) return df
     scanFiles(df.queryExecution.analyzed) match {
       // many files ⇒ at least as many row groups ⇒ already wide; only
       // few-file scans pay (cached) footer reads

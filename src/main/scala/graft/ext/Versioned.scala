@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.hadoop.fs.Path
+import graft.Knobs
 import graft.Tables.{parquetSchemaDriver, readParquetNoInfer}
 
 /** Delta time travel's role for plain parquet: a versioned table whose
@@ -123,6 +124,10 @@ object Versioned {
 
   def latestVersion(spark: SparkSession, dir: String): Option[Int] =
     versions(spark, dir).lastOption
+
+  /** [[latestVersion]], refusing a dir with no versions. */
+  private def requireLatest(spark: SparkSession, dir: String): Int =
+    latestVersion(spark, dir).getOrElse(throw new IllegalArgumentException(s"no versions at $dir"))
 
   private def readManifest(spark: SparkSession, dir: String, v: Int): Seq[String] = {
     val (fs, _) = fsFor(spark, dir)
@@ -264,7 +269,7 @@ object Versioned {
     *     contract;
     *   - SIDECAR (`bloomref:<dir>:<col>:<absolute sidecar path>`),
     *     `sidecar` Some — once a dir's blob payload crosses
-    *     `spark.graft.bloom.sidecarMinBytes` the blobs move to an
+    *     `spark.graft.sidecar.minBytes` the blobs move to an
     *     immutable content-addressed file under `_versions/blooms/`
     *     and the manifest carries ONE line. Without this a 10⁶-file
     *     chain at the default 32 KiB blob is a ~44 GB manifest that
@@ -376,7 +381,7 @@ object Versioned {
     *     keep the zero-metadata-call contract;
     *   - SIDECAR (`statsref:<dir>:<absolute path>`), `sidecar` Some —
     *     once a dir's stats JSON crosses
-    *     `spark.graft.stats.sidecarMinBytes` the payload moves to an
+    *     `spark.graft.sidecar.minBytes` the payload moves to an
     *     immutable content-addressed file under `_versions/stats/`
     *     and the manifest carries ONE line. This is the LAST O(files)
     *     metadata surface: at 10⁶ files the inline form is tens of MB
@@ -639,41 +644,28 @@ object Versioned {
   // version's checkpoint, then reclaims. Delta's `_delta_log` has the
   // same json-actions + parquet-checkpoint split.
 
-  /** A checkpoint sidecar lands every `interval` commits
-    * (`spark.graft.manifest.checkpointInterval`, default 10; ≤1 =
-    * every commit), bounding every resolution chain. Overwrite
-    * commits need none: their manifests are full state already. */
-  private def checkpointInterval(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.manifest.checkpointInterval")
-      .map(_.toInt).getOrElse(10)
-
+  /** A checkpoint sidecar lands every [[Knobs.checkpointInterval]]
+    * commits (≤1 = every commit), bounding every resolution chain.
+    * Overwrite commits need none: their manifests are full state
+    * already. */
   private def checkpointDue(spark: SparkSession, v: Int): Boolean = {
-    val i = checkpointInterval(spark)
+    val i = Knobs.checkpointInterval(spark)
     i <= 1 || (i > 0 && v % i == 0)
   }
 
   private def checkpointPath(dir: String, v: Int) =
     new Path(dir, f"$VDIR/$v%08d.checkpoint")
 
-  /** Bytes above which [[writeCheckpoint]] SPILLS heavy inline
-    * payloads into the content-addressed stats/bloom sidecars
-    * (`spark.graft.checkpoint.spillBytes`, default 4 MiB). The
-    * checkpoint is the one metadata blob re-written every
-    * checkpointInterval commits and re-parsed per JVM; per-dir
-    * sidecars are immutable and cached ACROSS checkpoints, so
-    * spilling bounds the recurring cost to O(dirs) lines + O(changed
-    * dirs) sidecar reads — Delta's json-log + parquet-checkpoint
-    * split, expressed in this store's sidecar idiom. */
-  private def checkpointSpillBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.checkpoint.spillBytes")
-      .map(_.toLong).getOrElse(4L * 1024 * 1024)
-
   /** Materialize a version's resolved state as its checkpoint sidecar.
     * Derived data, so losing the put-if-absent race just means another
     * writer checkpointed the same (immutable) content first.
     *
-    * A checkpoint over [[checkpointSpillBytes]] spills its LARGEST
-    * inline stats/bloom payloads to sidecar files until it fits —
+    * A checkpoint over [[Knobs.checkpointSpillBytes]] spills its LARGEST
+    * inline stats/bloom payloads to sidecar files until it fits. The
+    * checkpoint is the one metadata blob re-written every interval and
+    * re-parsed per JVM, while per-dir sidecars are immutable and cached
+    * ACROSS checkpoints, so spilling bounds the recurring cost to
+    * O(dirs) lines + O(changed dirs) sidecar reads. Spilling goes
     * largest-first, not wholesale, so a long tail of small dirs stays
     * inline instead of becoming thousands of tiny sidecar files. The
     * per-dir thresholds already externalize big single commits at
@@ -685,7 +677,7 @@ object Versioned {
     val (fs, _) = fsFor(spark, dir)
     def render(ls: Seq[Line]) =
       (ls.map(renderLine).mkString("\n") + "\n").getBytes("UTF-8")
-    val budget = checkpointSpillBytes(spark)
+    val budget = Knobs.checkpointSpillBytes(spark)
     var out = fullLines
     var bytes = render(out)
     if (bytes.length > budget) {
@@ -897,27 +889,12 @@ object Versioned {
   // move out of the manifest into CONTENT-ADDRESSED sidecar files
   // (`_versions/<kind>/<sha256-16>.<ext>`) and the manifest keeps a
   // ref line. Written once, never rewritten (a trim writes a NEW
-  // sidecar), so their parse caches can never serve stale bytes.
+  // sidecar), so their parse caches can never serve stale bytes. A
+  // payload moves once it reaches [[Knobs.sidecarMinBytes]]: small
+  // tables stay zero-metadata-call, large commits stop growing the
+  // manifest with file count.
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.ext.Versioned")
-
-  /** Per-dir blob payload (rendered bytes) at or above which
-    * [[externalizeBlooms]] moves the blobs to a sidecar file. The
-    * default keeps a dir's manifest share under ~256 KiB (~6 files at
-    * the default 32 KiB blob) — small tables stay zero-metadata-call,
-    * large commits stop growing the manifest with file count. */
-  private def bloomSidecarMinBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.bloom.sidecarMinBytes")
-      .map(_.toLong).getOrElse(256L * 1024)
-
-  /** Per-dir stats-JSON bytes at or above which [[externalizeStats]]
-    * moves the payload to a sidecar file. The default (256 KiB, a few
-    * hundred files' worth of JSON) keeps small tables zero-metadata-
-    * call while a large commit stops growing the manifest with file
-    * count. */
-  private def statsSidecarMinBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.stats.sidecarMinBytes")
-      .map(_.toLong).getOrElse(256L * 1024)
 
   private def bloomsDirPath(root: Path) = new Path(root, s"$VDIR/blooms")
   private def statsDirPath(root: Path) = new Path(root, s"$VDIR/stats")
@@ -1029,7 +1006,7 @@ object Versioned {
   private def externalizeBlooms(spark: SparkSession, dir: String,
                                 entries: Seq[Line],
                                 force: Boolean = false): Seq[Line] = {
-    lazy val minBytes = bloomSidecarMinBytes(spark)
+    lazy val minBytes = Knobs.sidecarMinBytes(spark)
     entries.map {
       case b @ BloomEntry(_, _, files, None) if files.nonEmpty =>
         val payload = files.iterator.map { case (f, bits) =>
@@ -1051,7 +1028,7 @@ object Versioned {
   private def externalizeStats(spark: SparkSession, dir: String,
                                entries: Seq[Line],
                                force: Boolean = false): Seq[Line] = {
-    lazy val minBytes = statsSidecarMinBytes(spark)
+    lazy val minBytes = Knobs.sidecarMinBytes(spark)
     entries.map {
       case s @ StatsEntry(_, rows, cols, files, None) if files.nonEmpty =>
         val json = StatsJson.render(rows, cols, files)
@@ -1326,8 +1303,7 @@ object Versioned {
                     renames: Seq[(String, String)],
                     protocol: CommitProtocol = PutIfAbsentCommit): Int = {
     require(renames.nonEmpty, "no columns to rename")
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     val ls = lines(spark, dir, prev)
     val physical = ls.collectFirst { case SchemaEntry(s) => s }.getOrElse(
       throw new IllegalArgumentException(
@@ -1434,8 +1410,8 @@ object Versioned {
     * a non-partition key).
     *
     * The backfill is CHUNKED: dirs group into batches of at most
-    * `spark.graft.bloom.backfillFilesPerCommit` recorded files
-    * (default 10 000), each batch one scan job + one commit — the
+    * [[Knobs.bloomBackfillFiles]] recorded files (by default derived
+    * from [[Knobs.bloomBackfillBytes]]), each batch one scan job + one commit — the
     * driver holds one batch of bitsets at a time (~312 MiB at the
     * default 32 KiB blob), never one per live file of a 10⁶-file
     * table. The DECLARATION rides the first commit, so every file is
@@ -1448,8 +1424,7 @@ object Versioned {
                          protocol: CommitProtocol = PutIfAbsentCommit): Int = {
     require(bits >= 64 && bits % 8 == 0,
       s"bloom bits must be a positive multiple of 8, got $bits")
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     val ls = lines(spark, dir, prev)
     val physical = ls.collectFirst { case SchemaEntry(s) => s }.getOrElse(
       throw new IllegalArgumentException(s"no recorded schema at $dir"))
@@ -1482,13 +1457,8 @@ object Versioned {
     // 320 MB at the default 32 KiB blob but 2.5 GB at 2²¹ bits). An
     // explicit backfillFilesPerCommit still wins; the 2¹⁶ file
     // ceiling bounds the name-list side when blobs are tiny.
-    val batchLimit = math.max(1,
-      spark.conf.getOption("spark.graft.bloom.backfillFilesPerCommit")
-        .map(_.toInt).getOrElse {
-          val bytesCap = spark.conf.getOption("spark.graft.bloom.backfillBytesPerCommit")
-            .map(_.toLong).getOrElse(256L * 1024 * 1024)
-          math.min(1L << 16, math.max(1L, bytesCap / (bits / 8))).toInt
-        })
+    val batchLimit = math.max(1, Knobs.bloomBackfillFiles(spark).getOrElse(
+      math.min(1L << 16, math.max(1L, Knobs.bloomBackfillBytes(spark) / (bits / 8))).toInt))
     def weight(n: String) = stats.get(n).map(_.files.length).getOrElse(batchLimit)
     val batches = liveDirs.foldLeft(Vector.empty[(Vector[String], Int)]) {
       case (acc, n) =>
@@ -1548,8 +1518,7 @@ object Versioned {
   def dropBloomColumn(spark: SparkSession, dir: String,
                       col: Option[String] = None,
                       protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     val ls = lines(spark, dir, prev)
     val phys = col.map { c =>
       val cmap = colMapOf(ls)
@@ -1804,52 +1773,39 @@ object Versioned {
     sidecarRefs.foreach(ref => copies += ((ref, sidecarMap(ref))))
     statsRefs.foreach(ref => copies += ((ref, statsMap(ref))))
 
-    // distributed copy: tasks stream each file; cross-namespace is
-    // fine (both ends resolve their own filesystem from the conf).
-    // RESUMABLE: the commit lands only after every byte, so a crashed
-    // 100 TB clone leaves files but no manifest — the re-run must not
-    // start from zero. Each task skips a destination that already
-    // exists with the SOURCE's length (source files are immutable and
-    // content moves whole-file, so equal length = completed copy; a
-    // crashed partial is shorter and re-copies with overwrite). The
-    // skip check is a per-file metadata call INSIDE the task —
-    // distributed, never a driver loop.
+    // distributed copy, a job whatever the file count: tasks stream
+    // each file; cross-namespace is fine (both ends resolve their own
+    // filesystem from the conf). RESUMABLE: the commit lands only
+    // after every byte, so a crashed 100 TB clone leaves files but no
+    // manifest — the re-run must not start from zero. Each task skips
+    // (returns None for) a destination that already exists with the
+    // SOURCE's length (source files are immutable and content moves
+    // whole-file, so equal length = completed copy; a crashed partial
+    // is shorter and re-copies with overwrite), a per-file metadata
+    // call INSIDE the task, never a driver loop.
     if (copies.nonEmpty) {
-      val sc = spark.sparkContext
-      val bc = sc.broadcast(new Skipping.SerConf(sc.hadoopConfiguration))
-      val copied = sc.longAccumulator("graft.deepClone.bytesCopied")
-      val skipped = sc.longAccumulator("graft.deepClone.filesSkipped")
-      val slices = math.max(1, math.min(copies.length, sc.defaultParallelism * 4))
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"graft: deep clone copy (${copies.length} files)")
-      try {
-        sc.parallelize(copies.toSeq, slices).foreach { case (s, d) =>
-          val conf = bc.value.value
-          val sp = new Path(s)
-          val dp = new Path(d)
-          val sfs = sp.getFileSystem(conf)
-          val dfs = dp.getFileSystem(conf)
-          val srcLen = sfs.getFileStatus(sp).getLen
-          val done =
-            try dfs.getFileStatus(dp).getLen == srcLen
-            catch { case _: java.io.FileNotFoundException => false }
-          if (done) skipped.add(1L)
-          else {
-            if (!org.apache.hadoop.fs.FileUtil.copy(sfs, sp, dfs, dp,
-                false, true, conf))
-              throw new java.io.IOException(s"deep clone copy failed: $s -> $d")
-            copied.add(srcLen)
-          }
-        }
-        if (skipped.value > 0)
-          log.info(s"deep clone $sourceDir -> $targetDir resumed: " +
-            s"${skipped.value} of ${copies.length} files were already complete; " +
-            s"${copied.value} bytes copied this run")
-        lastDeepCloneCounts = (copied.value, skipped.value)
-      } finally {
-        sc.setJobDescription(prev)
-        bc.destroy()
+      val results = Skipping.runAsJob(spark, copies.toSeq,
+          s"graft: deep clone copy (${copies.length} files)") { case (conf, (s, d)) =>
+        val sp = new Path(s)
+        val dp = new Path(d)
+        val sfs = sp.getFileSystem(conf)
+        val dfs = dp.getFileSystem(conf)
+        val srcLen = sfs.getFileStatus(sp).getLen
+        val done =
+          try dfs.getFileStatus(dp).getLen == srcLen
+          catch { case _: java.io.FileNotFoundException => false }
+        if (done) None
+        else if (org.apache.hadoop.fs.FileUtil.copy(sfs, sp, dfs, dp, false, true, conf))
+          Some(srcLen)
+        else throw new java.io.IOException(s"deep clone copy failed: $s -> $d")
       }
+      val copied = results.flatten.sum
+      val skipped = results.count(_.isEmpty).toLong
+      if (skipped > 0)
+        log.info(s"deep clone $sourceDir -> $targetDir resumed: " +
+          s"$skipped of ${copies.length} files were already complete; " +
+          s"$copied bytes copied this run")
+      lastDeepCloneCounts = (copied, skipped)
     }
 
     val cloned: Seq[Line] = ls.flatMap {
@@ -2104,8 +2060,7 @@ object Versioned {
                           protocol: CommitProtocol = PutIfAbsentCommit,
                           maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
-      val prev = latestVersion(spark, dir).getOrElse(
-        throw new IllegalArgumentException(s"no versions at $dir"))
+      val prev = requireLatest(spark, dir)
       val ls = lines(spark, dir, prev)
       if (!ls.exists(_.isInstanceOf[IngestEntry])) None
       else {
@@ -2137,13 +2092,6 @@ object Versioned {
     maintenanceTick(df.sparkSession, dir, protocol)
     v
   }
-
-  /** [[toPhysical]] against the chain's CURRENT mapping (no-op when
-    * the table was never renamed or does not exist yet). */
-  private def toPhysicalLatest(df: DataFrame, dir: String): DataFrame =
-    latestVersion(df.sparkSession, dir)
-      .map(v => toPhysical(df, colMapOf(lines(df.sparkSession, dir, v))))
-      .getOrElse(df)
 
   /** [[writeVersion]] with a caller-supplied data writer — the
     * [[ManifestStore]] rewrite hook: `write` receives the immutable
@@ -2363,8 +2311,7 @@ object Versioned {
     val removedNonEmpty = removed.filter(_._2.nonEmpty)
     if (removedNonEmpty.isEmpty && replacementDir.isEmpty && addPdv.isEmpty) return None
     val (fs, root) = fsFor(spark, dir)
-    val v0 = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val v0 = requireLatest(spark, dir)
     val schema = schemaOf(spark, dir, v0)
     // the sidecar's positions, from the just-written footers (metadata
     // only): empty → no mask line (the dir is deleted); over the size
@@ -2668,8 +2615,7 @@ object Versioned {
                                                      identityBasis: Option[Int] = None)
       : Option[Int] = {
     val (fs, root) = fsFor(spark, dir)
-    val v0 = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val v0 = requireLatest(spark, dir)
     val ls = lines(spark, dir, v0)
     val prevPart = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
     require(prevPart == partCols,
@@ -2842,7 +2788,7 @@ object Versioned {
     * its file count tracks the AQE advisory size instead of the
     * query's shuffle shape (a 200-task aggregate otherwise lands 200
     * files PER COMMIT, and a month of commits is a small-file fleet).
-    * Conf-gated, default off: `spark.graft.optimizeWrite.enabled=true`.
+    * Gated by [[Knobs.optimizeWrite]] (default off).
     * The implementation is the engine's own REBALANCE hint — AQE sizes
     * the output partitions to
     * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (the file-size
@@ -2855,11 +2801,7 @@ object Versioned {
   private def optimizeWriteShape(out: DataFrame, dir: String,
                                  partCols: Seq[String]): DataFrame = {
     val conf = out.sparkSession.conf
-    // session conf wins both ways; else the TABLE PROPERTY
-    // `graft.optimizeWrite.enabled` (Delta's autoOptimize layering)
-    if (!effectiveSetting(out.sparkSession, dir,
-        "spark.graft.optimizeWrite.enabled", "graft.optimizeWrite.enabled")
-        .exists(_.toBoolean)) out
+    if (!Knobs.optimizeWrite(out.sparkSession, liveProps(out.sparkSession, dir))) out
     // REBALANCE is an AQE feature; without AQE the hint plans a plain
     // shuffle to spark.sql.shuffle.partitions — MORE files, not fewer.
     // A streaming sink's cloned session is the case that matters
@@ -2889,8 +2831,7 @@ object Versioned {
     require(minDirs >= 2, "minDirs must be at least 2 — compacting one dir is a no-op")
     require(targetBytes > 0 && maxDirs >= minDirs,
       s"need targetBytes > 0 and maxDirs >= minDirs, got $targetBytes/$maxDirs/$minDirs")
-    val v0 = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val v0 = requireLatest(spark, dir)
     val ls0 = lines(spark, dir, v0)
     val physSchema = ls0.collectFirst { case SchemaEntry(s) => s }.getOrElse(
       throw new IllegalArgumentException(
@@ -2941,8 +2882,7 @@ object Versioned {
   private[ext] def rewriteAllAsRearrange(spark: SparkSession, dir: String,
                                          protocol: CommitProtocol)
                                         (shape: DataFrame => DataFrame): Option[Int] = {
-    val v0 = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val v0 = requireLatest(spark, dir)
     val ls0 = lines(spark, dir, v0)
     val physSchema = ls0.collectFirst { case SchemaEntry(s) => s }.getOrElse(return None)
     val partCols = ls0.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
@@ -2977,40 +2917,27 @@ object Versioned {
     * the repair makes the loss EXPLICIT, versioned, and
     * time-travel-auditable (the pre-repair version still names them).
     * Existence probes dispatch as a Spark job at or above
-    * `spark.graft.fsck.distributedMinFiles` (default 64) referenced
-    * files — never an O(table) driver loop. A dir emptied by the
+    * [[Knobs.distributedMinItems]] referenced files — never an
+    * O(table) driver loop. A dir emptied by the
     * repair drops from the manifest, and a downstream STREAM correctly
     * fails on it (data it may not have served vanished — that is a
     * data change, nothing like a rearrangement). Returns the missing
     * (dirName, fileName) pairs; empty = clean, and nothing commits. */
   def fsck(spark: SparkSession, dir: String, repair: Boolean = false,
            protocol: CommitProtocol = PutIfAbsentCommit): Seq[(String, String)] = {
-    val v0 = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val v0 = requireLatest(spark, dir)
     val ls = lines(spark, dir, v0)
     val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val (fs, root) = fsFor(spark, dir)
+    val root = new Path(dir)
     val expected = ls.collect { case DataEntry(n) => n }.flatMap { d =>
       stats.get(d).toSeq.flatMap(_.files.map(f =>
         (d, f.name, new Path(new Path(root, d), f.name).toString)))
     }
-    val minFiles = spark.conf.getOption("spark.graft.fsck.distributedMinFiles")
-      .map(_.toInt).getOrElse(64)
-    val missing: Seq[(String, String)] =
-      if (expected.length < math.max(1, minFiles))
-        expected.collect { case (d, n, p) if !fs.exists(new Path(p)) => (d, n) }
-      else {
-        val sc = spark.sparkContext
-        val bc = sc.broadcast(new Skipping.SerConf(sc.hadoopConfiguration))
-        val slices = math.max(1, math.min(expected.length, sc.defaultParallelism * 4))
-        val prev = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(s"graft: fsck existence probe (${expected.length} files)")
-        try sc.parallelize(expected, slices).filter { case (_, _, p) =>
-            val hp = new Path(p)
-            !hp.getFileSystem(bc.value.value).exists(hp)
-          }.map { case (d, n, _) => (d, n) }.collect().toSeq.sorted
-        finally { sc.setJobDescription(prev); bc.destroy() }
-      }
+    val missing = Skipping.onDriverOrJob(spark, expected,
+        s"graft: fsck existence probe (${expected.length} files)") { case (conf, (d, n, p)) =>
+      val hp = new Path(p)
+      if (hp.getFileSystem(conf).exists(hp)) None else Some((d, n))
+    }.flatten.sorted
     if (repair && missing.nonEmpty) {
       val removed = missing.groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).toSet }
       val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
@@ -3044,8 +2971,7 @@ object Versioned {
       require(!x.exists(c => c == '\n' || c == '\r'),
         s"property value for '$k' must be one line")
     }
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     val ls = lines(spark, dir, prev)
     val entries = props.toSeq.sortBy(_._1).map { case (k, x) => PropEntry(k, x) }
     val fullLines = ls.filterNot {
@@ -3063,8 +2989,7 @@ object Versioned {
   def unsetTableProperties(spark: SparkSession, dir: String, keys: Seq[String],
                            protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
     require(keys.nonEmpty, "UNSET TBLPROPERTIES needs at least one key")
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     val ls = lines(spark, dir, prev)
     val present = keys.filter(k => ls.exists {
       case e: PropEntry => e.key.equalsIgnoreCase(k); case _ => false })
@@ -3079,17 +3004,11 @@ object Versioned {
     Some(v)
   }
 
-  /** A tuning knob's EFFECTIVE value: the session conf when set (the
-    * operator's explicit override, both directions), else the table
-    * property, else None — Delta's conf-over-TBLPROPERTIES layering
-    * for its autoOptimize knobs. */
-  private def effectiveSetting(spark: SparkSession, dir: String,
-                               confKey: String, propKey: String): Option[String] =
-    spark.conf.getOption(confKey).orElse(
-      try latestVersion(spark, dir).flatMap(v =>
-        tableProperties(spark, dir, v).collectFirst {
-          case (k, x) if k.equalsIgnoreCase(propKey) => x })
-      catch { case scala.util.control.NonFatal(_) => None })
+  /** The latest version's table properties, which back the
+    * table-backed [[Knobs]]; a failed read counts as no properties. */
+  private def liveProps(spark: SparkSession, dir: String): Map[String, String] =
+    try latestVersion(spark, dir).fold(Map.empty[String, String])(tableProperties(spark, dir, _))
+    catch { case scala.util.control.NonFatal(_) => Map.empty }
 
   /** Was version `v` a content-preserving REARRANGEMENT (dataChange =
     * false: compaction, Z-order)? Streaming sources skip such versions
@@ -3173,7 +3092,7 @@ object Versioned {
     * `graft.autoCluster.columns`, a successful write probes the
     * UNCLUSTERED increment from manifest bytes — O(dirs) driver
     * arithmetic, no job — and once it passes
-    * `graft.autoCluster.minBytes` (default 256 MiB) Morton-clusters
+    * `graft.autoCluster.minBytes` Morton-clusters
     * exactly that increment via
     * [[Maintenance.zorderVersionedIncremental]]: an O(increment)
     * dataChange=false rearrange that streams skip and concurrent
@@ -3183,23 +3102,15 @@ object Versioned {
     * commitFileRewrite, which never ticks. */
   private def autoClusterTick(spark: SparkSession, dir: String,
                               protocol: CommitProtocol): Unit = {
-    val cols = effectiveSetting(spark, dir, "spark.graft.autoCluster.columns",
-        "graft.autoCluster.columns")
-      .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Seq.empty)
+    lazy val props = liveProps(spark, dir)
+    val cols = Knobs.autoClusterColumns(spark, props)
     if (cols.isEmpty) return
     try {
-      val minBytes = effectiveSetting(spark, dir,
-        "spark.graft.autoCluster.minBytes", "graft.autoCluster.minBytes")
-        .map(_.toLong).getOrElse(256L * 1024 * 1024)
-      val bits = effectiveSetting(spark, dir,
-        "spark.graft.autoCluster.bits", "graft.autoCluster.bits")
-        .map(_.toInt).getOrElse(16)
+      val minBytes = Knobs.autoClusterMinBytes(spark, props)
+      val bits = Knobs.autoClusterBits(spark, props)
       // target output file size (Delta's file-size tuning role):
       // the increment re-lands as ceil(bytes / targetBytes) files
-      val targetBytes = effectiveSetting(spark, dir,
-        "spark.graft.autoCluster.targetBytes", "graft.autoCluster.targetBytes")
-        .map(_.toLong).getOrElse(128L * 1024 * 1024)
+      val targetBytes = Knobs.autoClusterTargetBytes(spark, props)
       latestVersion(spark, dir).foreach { v =>
         val victims = unclusteredLiveFiles(spark, dir, v)
         val bytes =
@@ -3221,29 +3132,22 @@ object Versioned {
   }
 
   /** Post-commit AUTO COMPACT tick (Delta autoCompact's role): when
-    * `spark.graft.autoCompact.enabled=true`, a successful write probes
-    * the manifest and coalesces the smallest fragments via
-    * [[compactSmallDirs]] (knobs: `spark.graft.autoCompact.targetBytes`
-    * default 128 MiB, `.minDirs` default 8, `.maxDirs` default 64).
+    * [[Knobs.autoCompact]] is on, a successful write probes the
+    * manifest and coalesces the smallest fragments via
+    * [[compactSmallDirs]] (bounded by the `autoCompact.*` knobs).
     * The user's write has ALREADY committed when the tick runs, so a
     * tick failure — an OCC loss to a concurrent writer, a legacy
     * manifest — must not fail the write that triggered it: it drops,
     * and the next write re-probes. */
   private def autoCompactTick(spark: SparkSession, dir: String,
                               protocol: CommitProtocol): Unit = {
-    // session conf wins both ways; else the TABLE PROPERTY
-    // `graft.autoCompact.enabled` (Delta's autoOptimize layering)
-    if (!effectiveSetting(spark, dir, "spark.graft.autoCompact.enabled",
-        "graft.autoCompact.enabled").exists(_.toBoolean))
-      return
-    def num(k: String, d: Long) =
-      effectiveSetting(spark, dir, s"spark.graft.autoCompact.$k",
-        s"graft.autoCompact.$k").map(_.toLong).getOrElse(d)
+    lazy val props = liveProps(spark, dir)
+    if (!Knobs.autoCompact(spark, props)) return
     try {
       compactSmallDirs(spark, dir,
-        targetBytes = num("targetBytes", 128L * 1024 * 1024),
-        minDirs = num("minDirs", 8L).toInt,
-        maxDirs = num("maxDirs", 64L).toInt,
+        targetBytes = Knobs.autoCompactTargetBytes(spark, props),
+        minDirs = Knobs.autoCompactMinDirs(spark, props),
+        maxDirs = Knobs.autoCompactMaxDirs(spark, props),
         protocol = protocol)
       ()
     } catch {
@@ -3842,8 +3746,7 @@ object Versioned {
     * retention pass must not reclaim; older versions' dirs coexist on
     * disk until pruned). */
   def liveDataDirs(spark: SparkSession, dir: String): Seq[String] = {
-    val v = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val v = requireLatest(spark, dir)
     lines(spark, dir, v).collect {
       case DataEntry(n)  => new Path(new Path(dir), n).toString
       case DvEntry(_, n) => new Path(new Path(dir), n).toString
@@ -3879,9 +3782,8 @@ object Versioned {
     * that names the alternative: apply the delete physically via an
     * overwrite commit (`writeVersion(readLatest().join(keys,
     * "left_anti"), dir)` — one rewrite, no mask). Configurable per
-    * session via `spark.graft.dv.maxKeys`. */
-  def maxDvKeys(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.dv.maxKeys").map(_.toLong).getOrElse(10L * 1000 * 1000)
+    * session via [[Knobs.dvMaxKeys]]. */
+  def maxDvKeys(spark: SparkSession): Long = Knobs.dvMaxKeys(spark)
 
   def deleteByKeys(spark: SparkSession, dir: String, keys: DataFrame, keyCol: String,
                    protocol: CommitProtocol = PutIfAbsentCommit): Int =
@@ -3910,8 +3812,7 @@ object Versioned {
     require(keyCol0.matches("[A-Za-z0-9_]+"),
       s"keyCol must be word-shaped (it is embedded in the manifest), got '$keyCol0'")
     val (fs, root) = fsFor(spark, dir)
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     // the caller names the LOGICAL column; the dv line, the dv
     // parquet's column, and every mask join run PHYSICAL — one
     // translation here keeps deletes working across renames. The
@@ -3969,10 +3870,8 @@ object Versioned {
     * recorded `(file, pos)` pairs per delete — every positional mask
     * reader pulls the set to the driver and ships it with the task
     * binary (the [[maxDvKeys]] shape, sorted-long arrays instead of a
-    * key hash set). Session override `spark.graft.dv.maxPositions`. */
-  def maxDvPositions(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.dv.maxPositions").map(_.toLong)
-      .getOrElse(10L * 1000 * 1000)
+    * key hash set). Session override [[Knobs.dvMaxPositions]]. */
+  def maxDvPositions(spark: SparkSession): Long = Knobs.dvMaxPositions(spark)
 
   /** ANY-predicate DELETE as a POSITIONAL deletion vector — Delta's
     * row-index DV role, the one row-level operation the key-set masks
@@ -4044,8 +3943,7 @@ object Versioned {
                               protocol: CommitProtocol): Option[Int] = {
     import org.apache.spark.sql.functions.{col, expr, lit, when}
     val (fs, root) = fsFor(spark, dir)
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     val ls = lines(spark, dir, prev)
     val schema = ls.collectFirst { case SchemaEntry(s) => s }.getOrElse(
       throw new IllegalStateException(
@@ -4163,8 +4061,7 @@ object Versioned {
                        protocol: CommitProtocol = PutIfAbsentCommit,
                        maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
-      val prev = latestVersion(spark, dir).getOrElse(
-        throw new IllegalArgumentException(s"no versions at $dir"))
+      val prev = requireLatest(spark, dir)
       val ls = lines(spark, dir, prev)
       if (!ls.exists { case FeatureEntry(n, _) => n.equalsIgnoreCase(feature)
                        case _ => false }) return None
@@ -4213,8 +4110,7 @@ object Versioned {
                              maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
       val (fs, root) = fsFor(spark, dir)
-      val prev = latestVersion(spark, dir).getOrElse(
-        throw new IllegalArgumentException(s"no versions at $dir"))
+      val prev = requireLatest(spark, dir)
       val prevLines = lines(spark, dir, prev)
       val dvByKey = prevLines.collect { case e: DvEntry => e }
         .groupBy(_.keyCol).toSeq.sortBy(_._1)
@@ -4312,8 +4208,7 @@ object Versioned {
     * that predate the file-list format and for dv dirs (which carry
     * no stats line; their key sets are tiny). */
   private[ext] def liveFiles(spark: SparkSession, dir: String): Seq[(String, Long)] = {
-    val v = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val v = requireLatest(spark, dir)
     val ls = lines(spark, dir, v)
     val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
     def abs(name: String) = new Path(new Path(dir), name).toString
@@ -4389,8 +4284,7 @@ object Versioned {
                     maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
       val (_, root) = fsFor(spark, dir)
-      val prev = latestVersion(spark, dir).getOrElse(
-        throw new IllegalArgumentException(s"no versions at $dir"))
+      val prev = requireLatest(spark, dir)
       val ls = lines(spark, dir, prev)
       val stats = ls.collect { case s: StatsEntry => s.name -> s }.toMap
       // candidates: dirs with no stats line at all, a stats line from
@@ -5042,8 +4936,7 @@ object Versioned {
   }
 
   def readLatest(spark: SparkSession, dir: String): DataFrame = {
-    val v = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val v = requireLatest(spark, dir)
     readVersion(spark, dir, v)
   }
 
@@ -5128,8 +5021,7 @@ object Versioned {
                         protocol: CommitProtocol = PutIfAbsentCommit,
                         maxAttempts: Int = 16): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, monotonically_increasing_id, col => fcol}
-    val v0 = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val v0 = requireLatest(spark, dir)
     val ls0 = lines(spark, dir, v0)
     val schema0 = ls0.collectFirst { case SchemaEntry(s) => s }.getOrElse(
       throw new IllegalArgumentException(
@@ -5269,12 +5161,9 @@ object Versioned {
                                 masked: Option[(String, Map[String, Set[String]])],
                                 insertDir: Option[String]): Option[(Seq[String], String)] = {
     import org.apache.spark.sql.functions.{broadcast, col => fcol}
-    val explicit = effectiveSetting(spark, dir, "spark.graft.cdf.keys",
-        "graft.cdf.keys")
-      .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Seq.empty)
-    val enabled = effectiveSetting(spark, dir, "spark.graft.cdf.enabled",
-      "graft.cdf.enabled").exists(_.toBoolean)
-    if (explicit.isEmpty && !enabled) return None
+    lazy val props = liveProps(spark, dir)
+    val explicit = Knobs.cdfKeys(spark, props)
+    if (explicit.isEmpty && !Knobs.cdfEnabled(spark, props)) return None
     val ls = lines(spark, dir, v)
     val cmap = colMapOf(ls)
     val logicalSchema = ls.collectFirst { case SchemaEntry(s) =>
@@ -5566,8 +5455,7 @@ object Versioned {
   private def commitSchemaChange(spark: SparkSession, dir: String,
                                  protocol: CommitProtocol)
                                 (change: (StructType, Seq[Line]) => StructType): Int = {
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     val ls = lines(spark, dir, prev)
     // pre-schema manifests: derive the union once — the ALTER commit
     // then records it, upgrading the table in place like any commit
@@ -5742,8 +5630,7 @@ object Versioned {
     require(name.matches("[A-Za-z0-9_]+"),
       s"constraint name must be word-shaped (it is embedded in the manifest), got '$name'")
     requireOneLine(predicateSql, name)
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     val ls = lines(spark, dir, prev)
     require(!ls.exists { case ConstraintEntry(n, _) => n.equalsIgnoreCase(name); case _ => false },
       s"constraint '$name' already exists")
@@ -5764,8 +5651,7 @@ object Versioned {
     * (the caller decides whether that is an error — IF EXISTS). */
   def dropCheckConstraint(spark: SparkSession, dir: String, name: String,
                           protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     val ls = lines(spark, dir, prev)
     if (!ls.exists { case ConstraintEntry(n, _) => n.equalsIgnoreCase(name); case _ => false }) None
     else {
@@ -5841,8 +5727,7 @@ object Versioned {
   def alterTableAtomic(spark: SparkSession, dir: String, alter: AlterSpec,
                        protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
     if (alter.isEmpty) return None
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     val ls = lines(spark, dir, prev)
     val prior = ls.collectFirst { case SchemaEntry(s) => s }
       .getOrElse(schemaOf(spark, dir, prev))
@@ -6108,8 +5993,7 @@ object Versioned {
     * double stats. Deliberately a data job, priced like one. */
   def widenFloatToDoubleRewrite(spark: SparkSession, dir: String, col: String,
                                 protocol: CommitProtocol = PutIfAbsentCommit): Int = {
-    val prev = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $dir"))
+    val prev = requireLatest(spark, dir)
     val ls = lines(spark, dir, prev)
     val cmap = colMapOf(ls)
     val logical = ls.collectFirst { case SchemaEntry(s) => toLogicalSchema(s, cmap) }
@@ -6472,27 +6356,9 @@ object Versioned {
       // vacuum after a retention-policy change reclaims tens of
       // thousands of dirs, and a driver RPC loop over them is the
       // same wall the footer harvest already hit
-      val minDist = spark.conf
-        .getOption("spark.graft.vacuum.distributedDeleteMinDirs")
-        .map(_.toInt).getOrElse(64)
-      if (dead.length < math.max(1, minDist))
-        dead.foreach(st => fs.delete(st.getPath, true))
-      else {
-        val sc = spark.sparkContext
-        val bc = sc.broadcast(new Skipping.SerConf(sc.hadoopConfiguration))
-        val paths = dead.map(_.getPath.toString).toSeq
-        val slices = math.max(1, math.min(paths.length, sc.defaultParallelism * 4))
-        val prevDesc = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(s"graft: distributed vacuum reclaim (${paths.length} dirs)")
-        try sc.parallelize(paths, slices).foreach { p =>
-          val pp = new Path(p)
-          pp.getFileSystem(bc.value.value).delete(pp, true)
-          ()
-        } finally {
-          sc.setJobDescription(prevDesc)
-          bc.destroy()
-        }
-      }
+      Skipping.onDriverOrJob(spark, dead.map(_.getPath.toString).toSeq,
+          s"graft: distributed vacuum reclaim (${dead.length} dirs)") { (conf, p) =>
+        new Path(p).getFileSystem(conf).delete(new Path(p), true) }
       // staging files from commits that crashed between create and
       // publish are invisible to readers but never self-clean; both
       // protocols' staging prefixes are swept (`.tmp-` = RenameCommit,
@@ -6795,7 +6661,9 @@ private[ext] object Skipping {
   import org.apache.spark.sql.types._
   import org.apache.spark.sql.functions.{col, lit}
   import graft.ext.Versioned.{ColStats, FileStats}
+  import org.apache.hadoop.conf.Configuration
   import scala.jdk.CollectionConverters._
+  import scala.reflect.ClassTag
 
   // ───── partition-filter derivation from GENERATED columns ─────
   // Delta's optimization, re-derived for this store: when a PARTITION
@@ -6913,8 +6781,8 @@ private[ext] object Skipping {
                                        partVals: Seq[(String, Option[String])])
 
   /** Hadoop `Configuration` is not `Serializable`; this is the
-    * standard write()/readFields() envelope so harvest tasks see the
-    * driver's filesystem configuration. */
+    * standard write()/readFields() envelope so [[runAsJob]] tasks see
+    * the driver's filesystem configuration. */
   private[ext] final class SerConf(@transient var value: org.apache.hadoop.conf.Configuration)
       extends Serializable {
     private def writeObject(out: java.io.ObjectOutputStream): Unit = {
@@ -6928,9 +6796,9 @@ private[ext] object Skipping {
   }
 
   /** Read the footers of `specs`, sequentially on the driver below
-    * `spark.graft.stats.distributedHarvestMinFiles` (default 64 —
-    * per-commit O(delta) dirs stay a few in-process reads with no job
-    * overhead), as a SPARK JOB at or above it: CONVERT and
+    * [[Knobs.distributedMinItems]] (per-commit O(delta) dirs stay a
+    * few in-process reads with no job overhead), as a SPARK JOB at or
+    * above it: CONVERT and
     * backfillStats run this over a WHOLE table, and a 10⁶-footer
     * sweep is hours single-threaded on the driver but minutes as
     * tasks (Delta's CONVERT distributes exactly this step). Only the
@@ -6939,29 +6807,36 @@ private[ext] object Skipping {
   private def harvestFileStats(spark: SparkSession, schema: StructType,
                                specs: Seq[HarvestSpec]): Seq[FileStats] = {
     val sorted = specs.sortBy(_.name)
-    val minFiles = spark.conf.getOption("spark.graft.stats.distributedHarvestMinFiles")
-      .map(_.toInt).getOrElse(64)
-    if (sorted.length < math.max(1, minFiles)) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      sorted.map(sp => fileStats(conf, new Path(sp.path), sp.bytes, sp.name,
-        schema, sp.partVals))
-    } else {
-      val sc = spark.sparkContext
-      val bc = sc.broadcast(new SerConf(sc.hadoopConfiguration))
-      val slices = math.max(1, math.min(sorted.length, sc.defaultParallelism * 4))
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"graft: distributed footer harvest (${sorted.length} files)")
-      try {
-        sc.parallelize(sorted, slices).map { sp =>
-          fileStats(bc.value.value, new Path(sp.path), sp.bytes, sp.name,
-            schema, sp.partVals)
-        }.collect().toSeq.sortBy(_.name)
-      } finally {
-        sc.setJobDescription(prev)
-        bc.destroy()
-      }
+    onDriverOrJob(spark, sorted,
+        s"graft: distributed footer harvest (${sorted.length} files)") { (conf, sp) =>
+      fileStats(conf, new Path(sp.path), sp.bytes, sp.name, schema, sp.partVals)
     }
   }
+
+  /** Run `f` over `items` as ONE Spark job labeled `label`: the
+    * driver's hadoop conf ships once as a broadcast, the items split
+    * into at most 4 × defaultParallelism slices, and the caller's job
+    * description is restored afterwards. Results come back in item
+    * order. */
+  def runAsJob[A: ClassTag, B: ClassTag](spark: SparkSession, items: Seq[A], label: String)
+                                        (f: (Configuration, A) => B): Seq[B] = {
+    val sc = spark.sparkContext
+    val bc = sc.broadcast(new SerConf(sc.hadoopConfiguration))
+    val slices = math.max(1, math.min(items.length, sc.defaultParallelism * 4))
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try sc.parallelize(items, slices).map(a => f(bc.value.value, a)).collect().toSeq
+    finally { sc.setJobDescription(prev); bc.destroy() }
+  }
+
+  /** `f` over `items` on the driver, in order, below
+    * [[Knobs.distributedMinItems]] items (no job overhead for the
+    * common small case); as [[runAsJob]] at or above it. */
+  def onDriverOrJob[A: ClassTag, B: ClassTag](spark: SparkSession, items: Seq[A], label: String)
+                                             (f: (Configuration, A) => B): Seq[B] =
+    if (items.length < math.max(1, Knobs.distributedMinItems(spark)))
+      items.map(f(spark.sparkContext.hadoopConfiguration, _))
+    else runAsJob(spark, items, label)(f)
 
   /** (rows, per-column stats, per-file stats) of one just-written data
     * dir, from its parquet footers. A column of unsupported type, or

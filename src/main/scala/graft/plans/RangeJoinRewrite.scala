@@ -41,9 +41,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * extra pass over the — typically small — interval side is the cost
   * of never nested-looping an unbounded build.
   *
-  * Config: `spark.graft.rangeJoin.enabled` (default TRUE),
-  * `spark.graft.rangeJoin.bandWidth` (default 100.0),
-  * `spark.graft.rangeJoin.maxBands` (default 256). The narrow branch's
+  * Config: [[graft.Knobs.rangeJoinEnabled]] and
+  * [[graft.Knobs.rangeJoinMaxBands]]; bands are [[BandWidth]] wide. The narrow branch's
   * join condition contains an equality, so the rule never re-fires on
   * it; the wide branch is tagged with [[RangeJoinRewrite.SkipTag]] so
   * the rule's own fixpoint batch leaves it alone.
@@ -51,12 +50,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 case class RangeJoinRewrite(spark: org.apache.spark.sql.SparkSession)
   extends Rule[LogicalPlan] with PredicateHelper {
 
-  private def enabled: Boolean =
-    spark.conf.get("spark.graft.rangeJoin.enabled", "true").toBoolean
-  private def bandWidth: Double =
-    spark.conf.get("spark.graft.rangeJoin.bandWidth", "100.0").toDouble
-  private def maxBands: Long =
-    spark.conf.get("spark.graft.rangeJoin.maxBands", "256").toLong
+  private def maxBands: Long = graft.Knobs.rangeJoinMaxBands(spark)
 
   private def refsOnly(e: Expression, side: LogicalPlan): Boolean =
     e.references.nonEmpty && e.references.subsetOf(side.outputSet)
@@ -80,7 +74,7 @@ case class RangeJoinRewrite(spark: org.apache.spark.sql.SparkSession)
   }
 
   private def bandOf(e: Expression): Expression =
-    Floor(Divide(Cast(e, DoubleType), Literal(bandWidth)))
+    Floor(Divide(Cast(e, DoubleType), Literal(RangeJoinRewrite.BandWidth)))
 
   /** Structural re-entry guard backing up [[RangeJoinRewrite.SkipTag]]:
     * the wide-fallback branch carries a `span > maxBands` filter over
@@ -98,7 +92,7 @@ case class RangeJoinRewrite(spark: org.apache.spark.sql.SparkSession)
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+    if (!graft.Knobs.rangeJoinEnabled(spark)) return plan
     plan.transformUp {
       // cond.deterministic: a non-deterministic point/bound expression
       // (rand()) would otherwise be duplicated into the bands, the
@@ -154,6 +148,7 @@ case class RangeJoinRewrite(spark: org.apache.spark.sql.SparkSession)
 }
 
 object RangeJoinRewrite {
+  val BandWidth = 100.0 // of the banded equi-join, in the point column's units
   /** Marks the wide-interval fallback join this rule emits, so the
     * rule's own fixpoint batch never rewrites it again (its condition
     * still matches the point-in-interval shape by construction). */

@@ -45,12 +45,10 @@ import graft.ext.Versioned
   * positions physically, travel serves pre-change versions, OCC
   * refuses when a masked file was concurrently rewritten. */
 private[sql] object GraftDeltaOps {
-  /** `spark.graft.rowops.mode`: `delta` (default) routes UPDATE /
+  /** [[graft.Knobs.rowOpsMode]]: `delta` (default) routes UPDATE /
     * MERGE / untranslatable DELETE through position masks; `cow`
     * keeps the copy-on-write rewrite. */
-  def enabled(spark: SparkSession): Boolean =
-    !spark.conf.getOption("spark.graft.rowops.mode")
-      .map(_.trim.toLowerCase(java.util.Locale.ROOT)).contains("cow")
+  def enabled(spark: SparkSession): Boolean = graft.Knobs.rowOpsMode(spark) != "cow"
 }
 
 private[sql] class GraftDeltaOperation(spark: SparkSession, dir: String, v: Int,

@@ -3064,9 +3064,9 @@ class ExtSpec extends AnyFunSuite {
   test("prune reclaims a crashed sidecar write's aged tmp file and keeps live and young sidecar files") {
     import graft.ext.Versioned
     val dir = java.nio.file.Files.createTempDirectory("graft_sctmp").toString + "/t"
-    spark.conf.set("spark.graft.stats.sidecarMinBytes", "1")
+    spark.conf.set("spark.graft.sidecar.minBytes", "1")
     try Versioned.writeVersion(spark.range(0, 100).toDF("id"), dir)
-    finally spark.conf.unset("spark.graft.stats.sidecarMinBytes")
+    finally spark.conf.unset("spark.graft.sidecar.minBytes")
     val statsDir = new java.io.File(dir, "_versions/stats")
     val live = statsDir.list().toSet
     assert(live.nonEmpty && live.forall(_.endsWith(".stats")))
@@ -5976,7 +5976,7 @@ class ExtSpec extends AnyFunSuite {
       spark.range(lo, hi).toDF("id")
         .withColumn("payload", concat(lit("p"), $"id"))
         .repartitionByRange(parts, $"id") // disjoint per-file bounds → prunable
-    spark.conf.set("spark.graft.stats.sidecarMinBytes", "1")
+    spark.conf.set("spark.graft.sidecar.minBytes", "1")
     spark.conf.set("spark.graft.manifest.checkpointInterval", "1")
     try {
       // v0: 2 files; v1: a 16-file append — the manifest must carry one
@@ -6001,10 +6001,10 @@ class ExtSpec extends AnyFunSuite {
       // pruning through sidecars = pruning inline (twin keeps JSON in
       // the manifest): same dirs dropped, same files planned
       val twin = root + "/twin"
-      spark.conf.set("spark.graft.stats.sidecarMinBytes", Long.MaxValue.toString)
+      spark.conf.set("spark.graft.sidecar.minBytes", Long.MaxValue.toString)
       Versioned.writeVersion(batch(0, 1000, 2), twin)
       Versioned.writeVersion(batch(1000, 9000, 16), twin, SaveMode.Append)
-      spark.conf.set("spark.graft.stats.sidecarMinBytes", "1")
+      spark.conf.set("spark.graft.sidecar.minBytes", "1")
       assert(!manifestText(twin, 1).contains("statsref:"))
       for (f <- Seq(EqualTo("id", 7500L), GreaterThan("id", 995L), EqualTo("id", 3L))) {
         val a = Versioned.planDataFiles(spark, dir, 1, Seq(f)).map(_.split('/').last)
@@ -6063,7 +6063,7 @@ class ExtSpec extends AnyFunSuite {
       assert(causes(e).exists(m => m.contains("stats sidecar") && m.contains("MISSING")),
         causes(e).mkString(" | "))
     } finally {
-      spark.conf.unset("spark.graft.stats.sidecarMinBytes")
+      spark.conf.unset("spark.graft.sidecar.minBytes")
       spark.conf.unset("spark.graft.manifest.checkpointInterval")
     }
   }
@@ -6084,7 +6084,7 @@ class ExtSpec extends AnyFunSuite {
       if (!fs.exists(p)) Set.empty
       else fs.listStatus(p).map(_.getPath.getName).toSet
     }
-    spark.conf.set("spark.graft.bloom.sidecarMinBytes", "1")
+    spark.conf.set("spark.graft.sidecar.minBytes", "1")
     spark.conf.set("spark.graft.manifest.checkpointInterval", "1")
     try {
       Versioned.writeVersion(batch(0), dir)
@@ -6103,11 +6103,11 @@ class ExtSpec extends AnyFunSuite {
       // pruning through sidecars = pruning inline: twin table, same
       // data, blobs kept in the manifest
       val twin = root + "/twin"
-      spark.conf.set("spark.graft.bloom.sidecarMinBytes", Long.MaxValue.toString)
+      spark.conf.set("spark.graft.sidecar.minBytes", Long.MaxValue.toString)
       Versioned.writeVersion(batch(0), twin)
       Versioned.declareBloomColumn(spark, twin, "id")
       Versioned.writeVersion(batch(1), twin, SaveMode.Append)
-      spark.conf.set("spark.graft.bloom.sidecarMinBytes", "1")
+      spark.conf.set("spark.graft.sidecar.minBytes", "1")
       for (k <- Seq(0L, 5L, 1999L)) {
         val a = Versioned.planDataFiles(spark, dir, v,
           Seq(EqualTo("id", k))).map(_.split('/').last).sorted
@@ -6156,7 +6156,7 @@ class ExtSpec extends AnyFunSuite {
         Versioned.latestVersion(spark, t3).get, Seq(EqualTo("id", 4L)))
       assert(all3.length == 2, s"no bloom = no skipping, all files read: $all3")
     } finally {
-      spark.conf.unset("spark.graft.bloom.sidecarMinBytes")
+      spark.conf.unset("spark.graft.sidecar.minBytes")
       spark.conf.unset("spark.graft.manifest.checkpointInterval")
     }
   }
@@ -6672,10 +6672,10 @@ class ExtSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       // below threshold: the driver path, zero harvest jobs
-      spark.conf.set("spark.graft.stats.distributedHarvestMinFiles", "1000000")
+      spark.conf.set("spark.graft.distributed.minItems", "1000000")
       assert(Versioned.convertParquetDir(spark, seqDir) == 0)
       // over threshold: the harvest is a Spark job with real tasks
-      spark.conf.set("spark.graft.stats.distributedHarvestMinFiles", "1")
+      spark.conf.set("spark.graft.distributed.minItems", "1")
       assert(Versioned.convertParquetDir(spark, distDir) == 0)
       val deadline = System.currentTimeMillis() + 15000
       while (harvestTasks.get() == 0 && System.currentTimeMillis() < deadline)
@@ -6701,7 +6701,7 @@ class ExtSpec extends AnyFunSuite {
         Seq(org.apache.spark.sql.sources.EqualTo("id", 1L))).length <
         Versioned.planDataFiles(spark, distDir, 0, Seq.empty).length)
     } finally {
-      spark.conf.unset("spark.graft.stats.distributedHarvestMinFiles")
+      spark.conf.unset("spark.graft.distributed.minItems")
       spark.sparkContext.removeSparkListener(listener)
     }
   }
@@ -6933,14 +6933,14 @@ class ExtSpec extends AnyFunSuite {
     try {
       // below threshold: driver-direct, no reclaim job
       val small = build(3)
-      spark.conf.set("spark.graft.vacuum.distributedDeleteMinDirs", "1000000")
+      spark.conf.set("spark.graft.distributed.minItems", "1000000")
       val stSmall = Versioned.pruneVersions(spark, small, keepLast = 1,
         orphanMinAgeMs = 0L)
       assert(stSmall.dirsDeleted.size == 3 && reclaimTasks.get() == 0,
         s"below-threshold reclaim must stay on the driver (${stSmall.dirsDeleted})")
       // over threshold: the deletes run as executor tasks
       val big = build(8)
-      spark.conf.set("spark.graft.vacuum.distributedDeleteMinDirs", "2")
+      spark.conf.set("spark.graft.distributed.minItems", "2")
       val stBig = Versioned.pruneVersions(spark, big, keepLast = 1,
         orphanMinAgeMs = 0L)
       val deadline = System.currentTimeMillis() + 15000
@@ -6958,7 +6958,7 @@ class ExtSpec extends AnyFunSuite {
       assert(Versioned.readLatest(spark, big).count() == 1)
     } finally {
       spark.sparkContext.removeSparkListener(listener)
-      spark.conf.unset("spark.graft.vacuum.distributedDeleteMinDirs")
+      spark.conf.unset("spark.graft.distributed.minItems")
     }
   }
 
@@ -7096,9 +7096,9 @@ class ExtSpec extends AnyFunSuite {
     def mkI(ids: Seq[Long]) = ids.map(i => (i, s"p$i")).toDF("id", "v")
     Versioned.writeVersion(mkI(0L until 100L by 2).coalesce(1), sdir)
     Versioned.writeVersion(mkI(1L until 100L by 2).coalesce(1), sdir, SaveMode.Append)
-    spark.conf.set("spark.graft.bloom.sidecarMinBytes", "1")
+    spark.conf.set("spark.graft.sidecar.minBytes", "1")
     try Versioned.declareBloomColumn(spark, sdir, "id")
-    finally spark.conf.unset("spark.graft.bloom.sidecarMinBytes")
+    finally spark.conf.unset("spark.graft.sidecar.minBytes")
     val stgt = Files.createTempDirectory("graft_dclone_sct").toString + "/t"
     assert(Versioned.cloneTableDeep(spark, sdir, stgt) == 0)
     assert(Versioned.dropTableChain(spark, sdir))
@@ -7314,9 +7314,9 @@ class ExtSpec extends AnyFunSuite {
     // report-only: driver probe and the distributed probe agree
     val reported = Versioned.fsck(spark, dir)
     assert(reported.map(_._2) == Seq(victim.getName), reported.toString)
-    spark.conf.set("spark.graft.fsck.distributedMinFiles", "1")
+    spark.conf.set("spark.graft.distributed.minItems", "1")
     try assert(Versioned.fsck(spark, dir) == reported)
-    finally spark.conf.unset("spark.graft.fsck.distributedMinFiles")
+    finally spark.conf.unset("spark.graft.distributed.minItems")
     assert(Versioned.latestVersion(spark, dir).contains(vClean),
       "report-only must not commit")
     // repair: ONE commit drops exactly the dead refs; reads serve again

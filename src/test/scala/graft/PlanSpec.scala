@@ -413,24 +413,36 @@ class PlanSpec extends AnyFunSuite {
       .collect().toSet == (0L until 300L).filter(_ % 3 == 1).toSet)
   }
 
+  /** Hash shuffles Spark planned to meet an operator's distribution
+    * requirement (`ShuffleExchangeExec` with `HashPartitioning` and
+    * ENSURE_REQUIREMENTS origin), counted in the physical plan before
+    * execution. The sanctioned input spread (Par.spread's
+    * `repartition(n, xxhash64(…))`) has REPARTITION_BY_NUM origin and
+    * a presentation ORDER BY range-partitions, so neither counts. */
+  private def hashExchanges(df: DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan // the initial plan, exchanges inserted
+      case p => p
+    }
+    plan.collect {
+      case s: ShuffleExchangeExec if s.shuffleOrigin == ENSURE_REQUIREMENTS &&
+          s.outputPartitioning.isInstanceOf[HashPartitioning] => s
+    }.length
+  }
+
   test("curation-operator plans: chunking stays map-side, packing reuses its window shuffle") {
-    // q62 chunking: scan → project → generate, no exchange at all
-    // (formatted explain lists partitionings in the Arguments: lines).
-    // The sanctioned input spread (Par.spread — hash on xxhash64 of
-    // the scan projection, pinned N) is not a data shuffle the
-    // contract forbids; exclude it the same way the old round-robin
-    // spread never matched the hashpartitioning regex.
-    def hashExchanges(plan: String): Int =
-      "Arguments: hashpartitioning\\((?!xxhash64\\()".r.findAllIn(plan).length
-    val chunkPlan = planOf(SparkEntry.queries("q62_chunk_documents")(spark, d))
-    // the only exchange allowed is the final presentation ORDER BY
-    assert(hashExchanges(chunkPlan) == 0,
-      s"chunking must not shuffle data, got:\n$chunkPlan")
+    // q62 chunking: scan → project → generate, no data shuffle
+    val chunk = SparkEntry.queries("q62_chunk_documents")(spark, d)
+    assert(hashExchanges(chunk) == 0,
+      s"chunking must not shuffle data, got:\n${planOf(chunk)}")
     // q55 packing: ONE hash exchange (the shard window); the (shard,
     // bin) groupBy must reuse the shard partitioning, not re-shuffle
-    val packPlan = planOf(SparkEntry.queries("q55_pack_bins")(spark, d))
-    assert(hashExchanges(packPlan) == 1,
-      s"expected exactly one hash exchange in:\n$packPlan")
+    val pack = SparkEntry.queries("q55_pack_bins")(spark, d)
+    assert(hashExchanges(pack) == 1,
+      s"expected exactly one hash exchange in:\n${planOf(pack)}")
     // q53 split: only doc_id is read from the 5-column documents table
     val splitPlan = planOf(SparkEntry.queries("q53_hash_split")(spark, d))
     assert(splitPlan.contains("ReadSchema: struct<doc_id:bigint>"),
@@ -680,11 +692,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("BPE tokenization stays map-side: scan → project, no exchange before the sort (q72)") {
-    val plan = planOf(SparkEntry.queries("q72_bpe_tokens")(spark, d))
-    // exclude the sanctioned Par.spread input exchange (xxhash64 key)
-    val hashExchanges =
-      "Arguments: hashpartitioning\\((?!xxhash64\\()".r.findAllIn(plan).length
-    assert(hashExchanges == 0,
+    val bpe = SparkEntry.queries("q72_bpe_tokens")(spark, d)
+    val plan = planOf(bpe)
+    assert(hashExchanges(bpe) == 0,
       s"BPE tokenization must not shuffle data, got:\n$plan")
     // and it reads only the two columns it needs from documents
     assert(plan.contains("ReadSchema: struct<doc_id:bigint,text:string>"),

@@ -56,5 +56,8 @@ for name in sorted(os.listdir(out_dir)):
         print(f"{name}: ok values, DTYPE diff spark={dt_s} duck={dt_d}")
     else:
         print(f"{name}: OK ({len(s)} rows)")
+# a query that failed in Verify writes no dir: count it, never skip it
+for name in sorted(set(oracle) - set(os.listdir(out_dir))):
+    print(f"{name}: NO OUTPUT"); fail += 1
 print("FAILURES:", fail)
 sys.exit(1 if fail else 0)
