@@ -19,6 +19,9 @@ import org.apache.spark.sql.types.StructType
   */
 object Tables {
   private val LocalMaster = """local\[(\d+)(?:,\d+)?\]""".r
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.Tables")
+  private val CodegenCacheSize = "spark.sql.codegen.cache.maxEntries"
+  private val CodegenCacheEntries = "2048"
 
   /** Build (or return the running) graft session on `master`: shuffle
     * partitions match the local thread count, the UI is off, then the
@@ -41,7 +44,13 @@ object Tables {
 
   /** Confs, functions and planner extensions every graft session needs;
     * safe on a running session and idempotent. Refuses a `spark.graft.*`
-    * key that [[Knobs]] lacks, and a value that does not parse. */
+    * key that [[Knobs]] lacks, and a value that does not parse. Two
+    * static Spark confs get a default unless explicitly configured
+    * (setting one is the opt-out): `spark.shuffle.sort.bypassMergeThreshold`
+    * = 4 (Spark: 200) and `spark.sql.codegen.cache.maxEntries` = 2048
+    * (Spark: 100). The codegen cache is sized once per JVM, so the
+    * latter needs configure to run before the JVM's first compile; a
+    * later configure logs one WARN instead. */
   def configure(spark: SparkSession): SparkSession = {
     Knobs.validate(spark)
     graft.hadoop.FastLocalFs.install(spark)
@@ -92,6 +101,30 @@ object Tables {
     val env = org.apache.spark.SparkEnv.get
     if (env != null && !env.conf.contains("spark.shuffle.sort.bypassMergeThreshold"))
       env.conf.set("spark.shuffle.sort.bypassMergeThreshold", "4")
+    // Codegen cache size: Spark keeps compiled classes in an LRU of
+    // spark.sql.codegen.cache.maxEntries (default 100), but one
+    // perfbench pass generates ~190 (yelp_etl) to ~230 (serving_mix)
+    // distinct classes. A cyclic working set above an LRU's size
+    // evicts everything, so at 100 every re-run query recompiles every
+    // class (13-40 ms each). 2048 also holds a full catalog pass (an
+    // sf0.01 Bench pass then recompiles under 50). The conf is STATIC:
+    // the cache is built once per JVM, from SQLConf.get, when
+    // CodeGenerator is first used. So the value goes into this
+    // session's SQLConf (read by that first use) and the SparkContext's
+    // conf (inherited by later sessions and task confs); it takes
+    // effect only if no class was compiled before, and a late configure
+    // says so. An explicitly configured size is respected, which is
+    // also the opt-out: set spark.sql.codegen.cache.maxEntries=100 for
+    // Spark's default.
+    val sqlConf = org.apache.spark.sql.GraftSqlShims.sessionSqlConf(spark)
+    if (!sqlConf.contains(CodegenCacheSize)) {
+      if (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount > 0)
+        log.warn(s"classes were compiled before Tables.configure: Spark's codegen " +
+          s"cache keeps its size, and $CodegenCacheSize=$CodegenCacheEntries " +
+          "takes effect only in a JVM that compiles nothing before configure")
+      sqlConf.setConfString(CodegenCacheSize, CodegenCacheEntries)
+      if (env != null) env.conf.setIfMissing(CodegenCacheSize, CodegenCacheEntries)
+    }
     graft.functions.VectorFunctions.register(spark)
     graft.functions.TextFunctions.register(spark)
     graft.plans.GraftExtensions.install(spark)

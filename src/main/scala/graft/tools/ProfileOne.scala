@@ -1,6 +1,8 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-Spark-job profile of a single catalog query: records every job
   * launched during one warm execution (start offset, duration, stage
@@ -8,7 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * the dominant cost of the multi-commit protocol meters — is visible
   * per call site, plus each versioned-store metadata cache's hit, miss
   * and eviction change over the run (a miss is a manifest or sidecar
-  * re-parse). Dev-only; the bench contract is untouched.
+  * re-parse), and the classes Spark's codegen cache compiled during it
+  * (its misses). Dev-only; the bench contract is untouched.
   *
   * Usage: runMain graft.tools.ProfileOne <queryName> [sfDir]
   */
@@ -45,9 +48,13 @@ object ProfileOne {
     }
     spark.sparkContext.addSparkListener(listener)
     val cachesBefore = graft.ext.Versioned.cacheStats.toMap
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val t0 = System.nanoTime()
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     val wall = (System.nanoTime() - t0) / 1e9
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
     // let the async listener bus drain
     Thread.sleep(500)
     spark.sparkContext.removeSparkListener(listener)
@@ -67,6 +74,7 @@ object ProfileOne {
       println(f"  cache $cache%-13s hits=${d.hits}%6d misses=${d.misses}%6d " +
         f"evictions=${d.evictions}%6d (now ${d.size} entries, weight ${d.weight})")
     }
+    println(f"  codegen compiles=$compiles%6d (cache misses) compile=$compileMs%.1f ms")
     spark.stop()
   }
 }

@@ -19,4 +19,10 @@ object GraftSqlShims {
     * (binaryAsString, nanosAsLong, …). */
   def sessionHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
     spark.sessionState.newHadoopConf()
+
+  /** The session's own SQLConf (`sessionState` is `private[sql]`). A
+    * static SQL conf can only be given a default here:
+    * `spark.conf.set` refuses static keys. */
+  def sessionSqlConf(spark: SparkSession): internal.SQLConf =
+    spark.sessionState.conf
 }
