@@ -1652,7 +1652,7 @@ object SparkEntry {
       val vR = graft.ext.Versioned.latestVersion(s, tbl).get
       assert(graft.ext.Versioned.liveDataDirs(s, tbl).toSet == dirsBefore,
         "RENAME COLUMN must be metadata-only: no data dir may change")
-      assert(graft.ext.Versioned.columnMapping(s, tbl, vR) == Map("amount" -> "price"),
+      assert(graft.ext.Versioned.snapshot(s, tbl, vR).colMap == Map("amount" -> "price"),
         "the rename must land as a column-mapping line")
       // append THROUGH the new name: the staged files carry the
       // physical name, so the whole chain reads as one union
@@ -1840,7 +1840,7 @@ object SparkEntry {
       s.sql(s"CREATE TABLE graft_q165.`$tbl` (o_orderkey BIGINT, price DOUBLE) " +
         "TBLPROPERTIES('graft.autoCompact.enabled'='true', " +
         "'graft.autoCompact.minDirs'='4')")
-      assert(Versioned.tableProperties(s, tbl, 0)
+      assert(Versioned.snapshot(s, tbl, 0).properties
         .get("graft.autoCompact.enabled").contains("true"))
       Tables.orders(s, d)
         .selectExpr("o_orderkey", "ROUND(o_totalprice, 2) AS price")
@@ -1848,7 +1848,7 @@ object SparkEntry {
       (0 until 8).foreach(i => s.sql(
         s"INSERT INTO graft_q165.`$tbl` " +
           s"SELECT * FROM orders_q165 WHERE o_orderkey % 8 = $i"))
-      val dirs = Versioned.versionInfo(s, tbl,
+      val dirs = Versioned.snapshot(s, tbl,
         Versioned.latestVersion(s, tbl).get).dataDirs
       assert(dirs.length < 4,
         s"the TABLE PROPERTY alone must drive the tick, got $dirs")
@@ -2006,7 +2006,7 @@ object SparkEntry {
         s"the incremental run must rewrite exactly the increment: $nFiles/$bytes vs $appendedBytes")
       val after = Versioned.planDataFiles(s, tbl, vInc, Seq.empty).toSet
       assert(base.subsetOf(after), "the clustered base must carry verbatim by name")
-      assert(Versioned.isRearrange(s, tbl, vInc), "streams must see a rearrangement")
+      assert(Versioned.snapshot(s, tbl, vInc).isRearrange, "streams must see a rearrangement")
       assert(Maintenance.zorderVersionedIncremental(
         s, tbl, Seq("l_orderkey", "price")).isEmpty, "the cadence converges")
       s.read.format("graft").load(tbl)
@@ -2049,7 +2049,7 @@ object SparkEntry {
       if (Knobs.rowOpsMode(s) == "delta") { // cow rewrites files; the rows match either way
         assert(filesBefore.subsetOf(Versioned.planDataFiles(s, tbl, v2, Seq.empty).toSet),
           "delta-based row ops must not rewrite any pre-existing file")
-        assert(Versioned.versionInfo(s, tbl, v2).posDvs.nonEmpty,
+        assert(Versioned.snapshot(s, tbl, v2).posDvs.nonEmpty,
           "the commits must carry position masks")
       }
       assert(s.sql(s"SELECT count(*) FROM graft_q170.`$tbl` VERSION AS OF $v0")
@@ -2083,7 +2083,7 @@ object SparkEntry {
       Versioned.writeVersion(slice(1), tbl, SaveMode.Append)
       Versioned.writeVersion(slice(2), tbl, SaveMode.Append)
       val v = Versioned.latestVersion(s, tbl).get
-      assert(Versioned.isRearrange(s, tbl, v),
+      assert(Versioned.snapshot(s, tbl, v).isRearrange,
         "the post-commit tick must cluster the increment")
       assert(Versioned.unclusteredLiveFiles(s, tbl, v)
         .valuesIterator.forall(_.isEmpty), "everything live is clustered base")
@@ -2169,7 +2169,7 @@ object SparkEntry {
       // compaction mid-stream: a dataChange=false commit
       val cv = Versioned.compactSmallDirs(s, tbl, minDirs = 2)
       assert(cv.nonEmpty, "the maintenance compaction must fire")
-      assert(Versioned.isRearrange(s, tbl, cv.get))
+      assert(Versioned.snapshot(s, tbl, cv.get).isRearrange)
       assert(drain() == afterSnapshot,
         "a rearrangement must serve ZERO rows to a running stream")
       // appends after the compaction flow normally — exactly slice 4
@@ -2304,7 +2304,7 @@ object SparkEntry {
         s.conf.unset("spark.graft.autoCompact.enabled")
         s.conf.unset("spark.graft.autoCompact.minDirs")
       }
-      val dirs = Versioned.versionInfo(s, tbl,
+      val dirs = Versioned.snapshot(s, tbl,
         Versioned.latestVersion(s, tbl).get).dataDirs
       assert(dirs.length < 4,
         s"the post-commit tick must keep the fleet bounded, got $dirs")
@@ -2420,7 +2420,7 @@ object SparkEntry {
         SaveMode.Append)
       Versioned.declareBloomColumn(s, tbl, "o_orderkey")
       val v = Versioned.declareBloomColumn(s, tbl, "o_custkey")
-      assert(Versioned.bloomColumns(s, tbl, v).map(_._1)
+      assert(Versioned.snapshot(s, tbl, v).bloomColumns.map(_._1)
         == Seq("o_orderkey", "o_custkey"), "both declarations must be live")
       val pk = src.agg(org.apache.spark.sql.functions.max("o_orderkey"))
         .collect().head.getLong(0)
@@ -2490,7 +2490,7 @@ object SparkEntry {
       // mtime — one distinct value, equal to the manifest's ts: line
       val tsVals = feed.select(col("_commit_timestamp")).distinct().collect()
       assert(tsVals.length == 1 && tsVals(0).getTimestamp(0).getTime ==
-        Versioned.commitTimestamp(s, tbl, 1),
+        Versioned.snapshot(s, tbl, 1).commitTimestamp,
         "_commit_timestamp must serve the recorded in-commit clock of v1")
       feed
         .select(col("o_orderkey"), col("price"), col("_change_type"),
@@ -2718,7 +2718,7 @@ object SparkEntry {
       assert(widened("o_orderkey").dataType == org.apache.spark.sql.types.LongType &&
         widened("cust").dataType == org.apache.spark.sql.types.DoubleType,
         s"widened schema should serve BIGINT/DOUBLE, got $widened")
-      assert(graft.ext.Versioned.recordedSchema(s, tbl, 1).get("o_orderkey").dataType ==
+      assert(graft.ext.Versioned.snapshot(s, tbl, 1).schema.get("o_orderkey").dataType ==
         org.apache.spark.sql.types.IntegerType,
         "time travel to the pre-widening version must keep INT")
       // the post-widening INSERT lands long/double alongside the old
@@ -2744,7 +2744,7 @@ object SparkEntry {
         org.apache.spark.sql.types.DoubleType)
       assert(graft.ext.Versioned.liveDataDirs(s, tblF).toSet != fDirs,
         "FLOAT widening must REWRITE — metadata-only would break stats exactness")
-      assert(graft.ext.Versioned.recordedSchema(s, tblF, 1).get("price").dataType ==
+      assert(graft.ext.Versioned.snapshot(s, tblF, 1).schema.get("price").dataType ==
         org.apache.spark.sql.types.FloatType,
         "time travel to the pre-widening version must keep FLOAT")
       val vF = graft.ext.Versioned.latestVersion(s, tblF).get
@@ -2838,7 +2838,7 @@ object SparkEntry {
       val vR = graft.ext.Versioned.latestVersion(s, tbl).get
       assert(graft.ext.Versioned.liveDataDirs(s, tbl).toSet == dirsBefore,
         "partitioned RENAME COLUMN must be metadata-only: no data dir may change")
-      assert(graft.ext.Versioned.columnMapping(s, tbl, vR) == Map("amount" -> "price"),
+      assert(graft.ext.Versioned.snapshot(s, tbl, vR).colMap == Map("amount" -> "price"),
         "the rename must land as a column-mapping line")
       assert(refusesWith("PARTITION column") {
         s.sql(s"ALTER TABLE versioned.`$tbl` RENAME COLUMN status TO state")

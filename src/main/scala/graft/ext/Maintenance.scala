@@ -54,7 +54,7 @@ object Maintenance {
     store match {
       case ms: ManifestStore =>
       val partCols = Versioned.latestVersion(spark, path)
-        .map(v => Versioned.versionInfo(spark, path, v).partitionCols)
+        .map(v => Versioned.snapshot(spark, path, v).partitionCols)
         .getOrElse(Seq.empty)
       if (partCols.nonEmpty) {
         val before = Versioned.latestVersion(spark, path).map(v =>
@@ -393,7 +393,7 @@ object Maintenance {
     // downgrade the layout and lose the z-order to the hive writer's
     // partition sort
     val partCols = Versioned.latestVersion(spark, dir)
-      .map(v => Versioned.versionInfo(spark, dir, v).partitionCols)
+      .map(v => Versioned.snapshot(spark, dir, v).partitionCols)
       .getOrElse(Seq.empty)
     if (partCols.nonEmpty)
       return zorderPartitionShaped(spark, dir, None, zCols, nFiles, bits, protocol)
@@ -446,18 +446,14 @@ object Maintenance {
       : Option[(Int, Long, Int)] = {
     val v = Versioned.latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
-    val info = Versioned.versionInfo(spark, dir, v)
-    val partCols = info.partitionCols
+    val snap = Versioned.snapshot(spark, dir, v)
+    val partCols = snap.partitionCols
     val victims = Versioned.unclusteredLiveFiles(spark, dir, v)
     if (victims.valuesIterator.forall(_.isEmpty)) return None
     val selectedBytes = Versioned.fileBytesOf(spark, dir, v, victims)
     val nOut =
       if (nFiles > 0) nFiles
       else math.max(1, math.ceil(selectedBytes / (128.0 * 1024 * 1024)).toInt)
-    def nameOf(abs: String) = abs.substring(abs.lastIndexOf('/') + 1)
-    val dvSnapshot = info.dvDirs.flatMap { case (k, ds) => ds.map(d => (k, nameOf(d))) } ++
-      info.scopedDvs.map { case (k, d, _) => (k, nameOf(d)) } ++
-      info.posDvs.map(d => (Versioned.PdvSnapshotKey, nameOf(d)))
     val staged = Versioned.stageDataDir(spark, dir)
     val stagedPath = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(dir), staged)
@@ -473,12 +469,12 @@ object Maintenance {
         .repartitionByRange(nOut, keys: _*)
         .sortWithinPartitions(keys: _*)
         .drop("__zkey"),
-      Versioned.columnMapping(spark, dir, v))
+      snap.colMap)
     (if (partCols.isEmpty) shaped.write
      else shaped.write.partitionBy(partCols: _*))
       .mode(SaveMode.ErrorIfExists).parquet(stagedPath.toString)
     Versioned.commitFileRewrite(spark, dir, victims, Some(staged), partCols,
-      dvSnapshot, protocol, dataChange = false)
+      snap.dvSnapshot, protocol, dataChange = false)
       .map(cv => (victims.valuesIterator.map(_.size).sum, selectedBytes, cv))
   }
 
@@ -557,8 +553,8 @@ object Maintenance {
                                       => org.apache.spark.sql.DataFrame): Option[(Int, Long, Int)] = {
     val v = Versioned.latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
-    val info = Versioned.versionInfo(spark, dir, v)
-    val partCols = info.partitionCols
+    val snap = Versioned.snapshot(spark, dir, v)
+    val partCols = snap.partitionCols
     require(partCols.nonEmpty,
       s"partition-shaped rewrite needs a PARTITIONED chain at $dir")
     val files = where match {
@@ -567,12 +563,6 @@ object Maintenance {
     }
     if (files.valuesIterator.forall(_.isEmpty)) return None
     val selectedBytes = Versioned.fileBytesOf(spark, dir, v, files)
-    // the commit's conflict guard wants the dv set the rewrite's read
-    // applied, as (keyCol, dir NAME) pairs
-    def nameOf(abs: String) = abs.substring(abs.lastIndexOf('/') + 1)
-    val dvSnapshot = info.dvDirs.flatMap { case (k, ds) => ds.map(d => (k, nameOf(d))) } ++
-      info.scopedDvs.map { case (k, d, _) => (k, nameOf(d)) } ++
-      info.posDvs.map(d => (Versioned.PdvSnapshotKey, nameOf(d)))
     val staged = Versioned.stageDataDir(spark, dir)
     val stagedPath = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(dir), staged)
@@ -581,14 +571,15 @@ object Maintenance {
     // files and must carry PHYSICAL names like any partial rewrite
     Versioned.toPhysical(
         shape(Versioned.readVersionFiles(spark, dir, v, files), partCols, selectedBytes),
-        Versioned.columnMapping(spark, dir, v))
+        snap.colMap)
       .write.partitionBy(partCols: _*)
       .mode(SaveMode.ErrorIfExists).parquet(stagedPath.toString)
     // compaction and Z-order PRESERVE served content — the commit
     // carries the dataChange=false flag so downstream streams skip it
-    // instead of dying on the dropped dirs (Delta's OPTIMIZE contract)
+    // instead of dying on the dropped dirs (Delta's OPTIMIZE contract);
+    // its conflict guard pins the dv set the rewrite's read applied
     Versioned.commitFileRewrite(spark, dir, files, Some(staged), partCols,
-      dvSnapshot, protocol, dataChange = false)
+      snap.dvSnapshot, protocol, dataChange = false)
       .map(cv => (files.valuesIterator.map(_.size).sum, selectedBytes, cv))
   }
 }

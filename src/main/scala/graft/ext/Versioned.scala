@@ -23,7 +23,7 @@ import graft.Tables.{parquetSchemaDriver, readParquetNoInfer}
   *
   * A manifest file is either FULL STATE or an O(delta) INCREMENT
   * against its parent (`parent:<v>` + add/remove ops — see the delta
-  * section in the object body): appends write only what changed, a
+  * section of [[Snapshot]]): appends write only what changed, a
   * full checkpoint lands every `spark.graft.manifest.checkpointInterval`
   * commits (and on every overwrite), and readers resolve deltas by
   * folding over the parent's cached resolution — Delta's log/checkpoint
@@ -88,13 +88,7 @@ import graft.Tables.{parquetSchemaDriver, readParquetNoInfer}
   * state beyond the manifest read.
   */
 object Versioned {
-
-  private val VDIR = "_versions"
-
-  private def fsFor(spark: SparkSession, dir: String) = {
-    val p = new Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
+  import Snapshot._
 
   /** The parquet schema of a versioned sidecar: `(_file, _pos)` rows
     * of a positional deletion vector — known by construction, so its
@@ -102,9 +96,6 @@ object Versioned {
   private[graft] val PdvDirSchema: StructType = StructType(Seq(
     StructField("_file", org.apache.spark.sql.types.StringType),
     StructField("_pos", org.apache.spark.sql.types.LongType)))
-
-  private def manifestPath(dir: String, v: Int) =
-    new Path(dir, f"$VDIR/$v%08d.manifest")
 
   private val ManifestName = """(\d{1,10})\.manifest""".r
 
@@ -115,9 +106,10 @@ object Versioned {
     * a committed version. */
   def versions(spark: SparkSession, dir: String): Seq[Int] = {
     val (fs, root) = fsFor(spark, dir)
-    val vdir = new Path(root, VDIR)
-    if (!fs.exists(vdir)) Seq.empty
-    else fs.listStatus(vdir).map(_.getPath.getName)
+    val listed =
+      try fs.listStatus(new Path(root, VDIR))
+      catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] }
+    listed.map(_.getPath.getName)
       .collect { case ManifestName(digits) => digits.toInt }
       .sorted.toSeq
   }
@@ -129,520 +121,10 @@ object Versioned {
   private def requireLatest(spark: SparkSession, dir: String): Int =
     latestVersion(spark, dir).getOrElse(throw new IllegalArgumentException(s"no versions at $dir"))
 
-  private def readManifest(spark: SparkSession, dir: String, v: Int): Seq[String] = {
-    val (fs, _) = fsFor(spark, dir)
-    val mp = manifestPath(dir, v)
-    require(fs.exists(mp), s"no version $v at $dir")
-    val in = fs.open(mp)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  /** One manifest line. Data and dv lines carry directory names; the
-    * schema line carries the version's union schema; a stats line
-    * carries one data dir's column statistics. */
-  private[ext] sealed trait Line
-  private final case class DataEntry(name: String) extends Line
-  private final case class DvEntry(keyCol: String, name: String) extends Line
-  /** A deletion vector SCOPED to the data dirs present when the
-    * delete committed (`dvs:<keyCol>:<dvDir>:<d1,d2,…>`) — SQL DELETE
-    * semantics: the statement removes the rows that exist NOW, so a
-    * later INSERT of a masked key is visible (dirs committed after
-    * the delete are outside the scope). The unscoped [[DvEntry]] keeps
-    * the library's key-level erasure contract (GDPR: a re-appended
-    * key STAYS masked); [[graft.sql.VersionedCatalog]]'s DELETE
-    * routes here so SQL users get SQL semantics. */
-  private final case class ScopedDvEntry(keyCol: String, name: String,
-                                         scope: Seq[String]) extends Line
-  /** A POSITIONAL deletion vector (`pdv:<dirName>`) — Delta's
-    * row-index deletion-vector role. The dir holds parquet rows
-    * `(_file STRING, _pos BIGINT)`: `_file` in the manifest's own
-    * file spelling (`<dataDirName>/<fileSubpath>`, or the absolute
-    * path for adopted/cloned refs — exactly [[planDataFiles]]'
-    * output), `_pos` the row's 0-based index within that parquet
-    * file. Any filter-expressible DELETE — range, multi-column,
-    * string predicates — commits as ONE such sidecar plus one
-    * manifest line: NO data file is rewritten (the key-set
-    * [[DvEntry]]/[[ScopedDvEntry]] forms cover only one-column
-    * equality/IN). Positions are inherently file-scoped, so SQL
-    * DELETE's "rows that exist now" semantics need no scope list: a
-    * file committed later is untouched by construction, and a
-    * removed file's entries are inert. Reads subtract by
-    * `(file, row_index)` using Spark's own parquet row-index
-    * generation (correct under row-group pruning, so predicate
-    * pushdown survives — the property the whole design rests on);
-    * rewrites/compaction apply the mask physically and retire the
-    * line. Size contract: `spark.graft.dv.maxPositions`. */
-  private final case class PdvEntry(name: String) extends Line
-  private final case class SchemaEntry(schema: StructType) extends Line
-  /** Delta `SetTransaction`'s role: the highest streaming batch id a
-    * given writer (appId) has committed. Written by
-    * [[writeVersionStreamBatch]], carried forward by appends, and the
-    * idempotence check a restarted streaming query's replayed epoch
-    * fails against — exactly-once without any sink-side state file.
-    * Format `txn:<batchId>:<appId>` (batch first: appIds may contain
-    * colons — they default to checkpoint paths). */
-  private final case class TxnEntry(batchId: Long, appId: String) extends Line
-  /** One SOURCE FILE already loaded by COPY INTO (`ingest:<absPath>`)
-    * — the per-file idempotence ledger (Delta COPY INTO's role): a
-    * re-run skips every path recorded here. Carried by appends inside
-    * prevLines and by data overwrites explicitly (like txn watermarks
-    * — maintenance must never re-open the exactly-once window);
-    * REPLACE TABLE resets it with the rest of the definition. */
-  private final case class IngestEntry(path: String) extends Line
-  /** The table's partition columns, in order (`partition:<c1,c2>`).
-    * A partitioned version's data dirs hold hive-layout subtrees
-    * (`dataDir/col=value/part-*.parquet`); the recorded union schema
-    * carries the partition columns LAST (Spark's read order), the
-    * per-file stats record each file's partition values as min=max
-    * bounds derived from its subpath, and reads serve through the
-    * partition-aware [[ManifestFileIndex]] so `PartitionFilters`
-    * prune at plan time — the reference's own partition-pruning idiom
-    * (ref: mnt/spark/apps/bronze_to_silver.py:143-151) composed with
-    * time travel. */
-  private final case class PartitionEntry(cols: Seq[String]) extends Line
-  /** A change feed RECORDED at write time (Delta CDF's `_change_data`
-    * role): `dirName` holds the classified diff from `vFrom` to `vTo`
-    * over `keys`, written by [[writeVersionWithChangeFeed]] in the
-    * same commit as the new state. [[changesBetween]] serves it
-    * instead of re-deriving (O(feed) instead of O(both versions) for
-    * every repeated CDC consumer); manifests without a matching line
-    * fall back to the derive path. Format
-    * `changes:<vFrom>:<vTo>:<k1,k2>:<dirName>`. */
-  private final case class ChangesEntry(vFrom: Int, vTo: Int, keys: Seq[String],
-                                        name: String) extends Line
-  /** An enforced CHECK constraint (Delta CHECK-constraint role):
-    * `constraint:<name>:<predicateSql>`. SQL semantics — a row
-    * violates only when the predicate evaluates FALSE (NULL passes).
-    * Constraints ride every commit (append AND overwrite: they are
-    * table definition, not data), every WRITE validates its new dir
-    * against them before the manifest commit, and Spark's own
-    * analyzer additionally enforces them plan-side on SQL writes
-    * (the table reports them via DSv2 `Table.constraints()`). */
-  private final case class ConstraintEntry(name: String, predicateSql: String) extends Line
-  /** An enforced NOT NULL column constraint (`notnull:<col>`): every
-    * write validates the new dir holds no null for the column — from
-    * the footer harvest's null counts in the passing case, so
-    * enforcement usually costs zero extra IO — and a write whose
-    * files LACK the column refuses too (the union-schema read would
-    * null-backfill it). The SQL catalog additionally reports the
-    * column non-nullable through the table schema, so Spark's ANSI
-    * store assignment injects the plan-side runtime check on SQL
-    * writes. Like CHECK constraints, NOT NULL is table definition:
-    * carried by appends and data overwrites, dropped by REPLACE
-    * TABLE, versioned like everything else (time travel to a
-    * pre-constraint version serves a nullable column). */
-  private final case class NotNullEntry(col: String) extends Line
-
-  /** COLUMN MAPPING (Delta column-mapping 'name' mode's role, top-level
-    * columns): `colmap:<logical>=<physical>,…` — the singleton line
-    * mapping each RENAMED column's logical (user-facing) name to the
-    * physical name its bytes carry in every parquet file of the chain.
-    * A rename is then a METADATA-ONLY commit: the files, their footer
-    * stats, the deletion-vector key columns, and the NOT NULL lines
-    * all keep the PHYSICAL name — the whole internal pipeline stays
-    * physical — and exactly two boundaries translate: reads rename
-    * physical→logical as their final projection (predicate pushdown
-    * and column pruning translate back automatically through the
-    * alias), and DataFrame writes rename logical→physical before any
-    * byte lands ([[toPhysical]]). Identity entries are never stored;
-    * an OVERWRITE starts the physical layout fresh from its own files
-    * and drops the line. */
-  private final case class ColMapEntry(entries: Seq[(String, String)]) extends Line
-
-  /** BLOOM-INDEX DECLARATION (`bloomcol:<physCol>:<bits>`): the table's
-    * one declared point-lookup column — every commit from then on
-    * builds a [[Bloom]] filter per new file (one column-pruned scan of
-    * the new dir, O(delta)) and stores it in the manifest, so an
-    * EqualTo/In on the column prunes FILES whose min/max ranges all
-    * overlap the key — the interleaved-key layout bounds cannot touch.
-    * Table definition: carried by appends and data overwrites, dropped
-    * by REPLACE TABLE. */
-  private final case class BloomColEntry(col: String, bits: Int) extends Line
-
-  /** One data dir's per-file blooms for the declared column. Two
-    * serializations, one in-memory shape:
-    *
-    *   - INLINE (`bloom:<dir>:<col>:<file>=<base64>,…`), `sidecar`
-    *     None — small dirs keep the store's zero-metadata-call plan
-    *     contract;
-    *   - SIDECAR (`bloomref:<dir>:<col>:<absolute sidecar path>`),
-    *     `sidecar` Some — once a dir's blob payload crosses
-    *     `spark.graft.sidecar.minBytes` the blobs move to an
-    *     immutable content-addressed file under `_versions/blooms/`
-    *     and the manifest carries ONE line. Without this a 10⁶-file
-    *     chain at the default 32 KiB blob is a ~44 GB manifest that
-    *     every checkpoint re-writes; with it the manifest stays
-    *     O(dirs) and each sidecar is read once per JVM (cached — the
-    *     file is immutable, its name is its content hash).
-    *
-    * Replaced wholesale when a file rewrite trims the dir (the trim
-    * drops the ref: content changed ⇒ new sidecar or back inline);
-    * dropped with the dir. [[pruneVersions]] reclaims local sidecars
-    * no surviving manifest references. */
-  private final case class BloomEntry(dir: String, col: String,
-                                      files: Map[String, Array[Byte]],
-                                      sidecar: Option[String] = None) extends Line
-
-  /** IDENTITY high-water mark (`hwm:<physCol>:<next>`): the NEXT
-    * value a `GENERATED … AS IDENTITY` assignment may use. Advanced
-    * in the SAME atomic commit as the data it covers (the claim IS
-    * the OCC), monotone in the step's direction, initialized to the
-    * declared start at CREATE. Identity values may have GAPS (the
-    * distributed assignment trades density for zero extra jobs,
-    * Delta's documented contract); they never repeat. */
-  private final case class HwmEntry(col: String, next: Long) extends Line
-
-  /** The FORMAT-VERSION gate (`protocol:<n>`) — Delta's protocol
-    * action's role. The manifest format has accreted ~20 line types
-    * across rounds; without a recorded version the first line type a
-    * FUTURE writer adds would hit an older reader's fallthrough and
-    * parse as garbage instead of a clean refusal. Every commit stamps
-    * the writer's protocol (at the same single seam as `ts:`); a
-    * reader meeting a HIGHER number — or any unknown `<word>:` line
-    * type, the belt to this suspender — refuses with "upgrade
-    * required" rather than misread committed state. Bump
-    * [[SupportedProtocol]] exactly when a change would make an older
-    * reader WRONG (new line type, changed line semantics) — never for
-    * additive metadata an old reader can safely ignore. */
-  private final case class ProtocolEntry(n: Int) extends Line
-
-  /** The highest manifest protocol this build reads and the one it
-    * writes. History: 1 = every format through round 15 (the strict
-    * parser and the stamp itself landed together — all earlier
-    * manifests are protocol-1 shaped and read unchanged). */
-  private[ext] val SupportedProtocol = 1
-
-  /** A PROTOCOL FEATURE declaration (`feature:<name>:required|optional`)
-    * — Delta's reader/writer table-feature role: independent format
-    * features gate independently instead of forcing a linear protocol
-    * bump. A reader meeting a REQUIRED feature it does not support
-    * refuses NAMING it (misreading committed state is never an
-    * option); an unsupported OPTIONAL feature is carried verbatim and
-    * ignored (it declares something a reader may exploit, never
-    * something it must understand). Features are stamped by the first
-    * commit that uses them (positional deletion vectors stamp `pdv`),
-    * ride appends and file rewrites with the lines they gate, and
-    * retire through the explicit [[dropTableFeature]] — which refuses
-    * while the feature is still in use. An OVERWRITE resets them
-    * together with the gated lines themselves: manifests here are
-    * FULL self-describing state, so unlike Delta's shared log a
-    * post-overwrite manifest genuinely contains nothing the feature
-    * gates, while time travel to gated versions re-reads their own
-    * declarations. Readers from builds predating this line type
-    * refuse it through the strict unknown-line gate, so the clean
-    * upgrade-required message still reaches them. */
-  private[ext] final case class FeatureEntry(name: String,
-                                             required: Boolean) extends Line
-
-  /** The protocol features this build understands. */
-  private[ext] val SupportedFeatures: Set[String] = Set("pdv", "ingest")
-
-  /** The IN-COMMIT timestamp (`ts:<epochMillis>`) — Delta's
-    * inCommitTimestamps role. `TIMESTAMP AS OF` resolved by file
-    * MODIFICATION time breaks the moment the log leaves one
-    * filesystem's custody: object-store copies, backup restores, and
-    * clones all reset mtime, and multi-writer clock skew can make it
-    * non-monotone. The commit seam stamps every manifest with a
-    * RECORDED clock instead, forced monotone against the parent
-    * (`max(now, parent+1)`); readers fall back to mtime only for
-    * manifests that predate the line. */
-  private final case class TsEntry(millis: Long) extends Line
-
-  /** One TABLE PROPERTY (`prop:<key>:<value>`) — Delta's
-    * TBLPROPERTIES role. Keys are dotted-word-shaped (they embed in
-    * the manifest), values one-line; properties REPLACE by key, drop
-    * with `-prop:<key>`, survive data overwrites like constraints
-    * (table definition, not data) and reset on REPLACE TABLE. The
-    * engine itself consults `graft.autoCompact.*` and
-    * `graft.optimizeWrite.enabled` here when the session conf doesn't
-    * override — Delta's delta.autoOptimize.* idiom. */
-  private[ext] final case class PropEntry(key: String, value: String) extends Line
-
-  /** The DATA-CHANGE=FALSE marker (`rearrange:1`) — Delta's
-    * `dataChange=false` file-action role, version-scoped. Present in
-    * version v's resolved lines ⟺ v's commit REARRANGED bytes without
-    * changing served content (small-dir compaction, partition-scoped
-    * compaction/Z-order): files moved, rows didn't. Streaming sources
-    * skip such versions instead of failing the appends-only premise,
-    * and change feeds emit nothing for them. The flag never inherits:
-    * delta resolution strips the parent's before folding ops, full
-    * manifests drop it at the commit seam (clone/restore render old
-    * state), and checkpoints carry it only for the flagged version
-    * itself. */
-  private final case class RearrangeEntry() extends Line
-
-  /** One data dir's statistics — dir-aggregate rows/col bounds plus
-    * the per-FILE list reads plan from. Two serializations, one
-    * in-memory shape (the [[BloomEntry]] sidecar pattern):
-    *
-    *   - INLINE (`stats:<dir>:<json>`), `sidecar` None — small dirs
-    *     keep the zero-metadata-call contract;
-    *   - SIDECAR (`statsref:<dir>:<absolute path>`), `sidecar` Some —
-    *     once a dir's stats JSON crosses
-    *     `spark.graft.sidecar.minBytes` the payload moves to an
-    *     immutable content-addressed file under `_versions/stats/`
-    *     and the manifest carries ONE line. This is the LAST O(files)
-    *     metadata surface: at 10⁶ files the inline form is tens of MB
-    *     of JSON re-written every checkpoint and parsed per JVM
-    *     (Delta's answer is the parquet checkpoint + v2 sidecars).
-    *
-    * Unlike a bloom blob, the file list is LOAD-BEARING (reads plan
-    * from it; a trimmed dir's physical files include REMOVED ones), so
-    * a missing sidecar REFUSES the parse rather than degrade — the
-    * Delta-honest posture for required metadata. Shallow AND deep
-    * clones copy stats sidecars into the target (they are small), so
-    * only external interference can orphan one. */
-  private[ext] final case class StatsEntry(name: String, rows: Long,
-                                           cols: Map[String, ColStats],
-                                           files: Seq[FileStats],
-                                           sidecar: Option[String] = None) extends Line
-
-  /** Footer-aggregated statistics of one column over one data dir.
-    * `min`/`max` are canonical strings in the column's comparison
-    * domain ([[Skipping.canonicalOf]]); None when the dir holds no
-    * non-null value for the column. `nulls` is None when any footer
-    * lacked a null count (statistics unusable → never skip on it). */
-  private[ext] final case class ColStats(min: Option[String], max: Option[String],
-                                         nulls: Option[Long])
-
-  /** One parquet file of a data dir, as the manifest records it:
-    * name + size (so reads plan with zero filesystem metadata calls)
-    * plus the file's OWN row count and column bounds — Delta's
-    * per-add-file stats role. Dir-granular min/max cannot prune
-    * inside a single large commit (at 100 TB one append is thousands
-    * of files spanning the full key range); per-file bounds let
-    * [[ManifestFileIndex.listFiles]] drop individual files of a
-    * surviving dir. `rows` is None for entries recorded before the
-    * per-file-stats format — such files are always read. */
-  private[ext] final case class FileStats(name: String, bytes: Long,
-                                          rows: Option[Long],
-                                          cols: Map[String, ColStats])
-
-  private def parseLine(line: String): Line =
-    if (line.startsWith("schema:"))
-      SchemaEntry(org.apache.spark.sql.types.DataType
-        .fromJson(line.drop(7)).asInstanceOf[StructType])
-    else if (line.startsWith("stats:")) {
-      val rest = line.drop(6)
-      val i = rest.indexOf(':')
-      require(i > 0, s"malformed stats manifest line: $line")
-      val (rows, cols, files) = StatsJson.parse(rest.substring(i + 1))
-      StatsEntry(rest.substring(0, i), rows, cols, files)
-    } else if (line.startsWith("statsref:")) {
-      // dir names are ':'-free (commit-time guards); the TAIL is the
-      // sidecar's absolute scheme-free path, taken whole
-      val rest = line.drop(9)
-      val i = rest.indexOf(':')
-      require(i > 0 && i < rest.length - 1,
-        s"malformed stats-sidecar manifest line: $line")
-      val (rows, cols, files) = loadStatsSidecar(rest.substring(i + 1))
-      StatsEntry(rest.substring(0, i), rows, cols, files,
-        Some(rest.substring(i + 1)))
-    } else if (line.startsWith("changes:")) {
-      val parts = line.drop(8).split(":", 4)
-      require(parts.length == 4, s"malformed change-feed manifest line: $line")
-      ChangesEntry(parts(0).toInt, parts(1).toInt,
-        parts(2).split(',').map(_.trim).filter(_.nonEmpty).toSeq, parts(3))
-    } else if (line.startsWith("constraint:")) {
-      val rest = line.drop(11)
-      val i = rest.indexOf(':')
-      require(i > 0 && i < rest.length - 1,
-        s"malformed constraint manifest line: $line")
-      ConstraintEntry(rest.substring(0, i), rest.substring(i + 1))
-    } else if (line.startsWith("partition:")) {
-      PartitionEntry(line.drop(10).split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    } else if (line.startsWith("txn:")) {
-      val rest = line.drop(4)
-      val i = rest.indexOf(':')
-      require(i > 0 && i < rest.length - 1,
-        s"malformed transaction manifest line: $line")
-      TxnEntry(rest.substring(0, i).toLong, rest.substring(i + 1))
-    } else if (line.startsWith("notnull:")) {
-      val c = line.drop(8)
-      require(c.nonEmpty, s"malformed not-null manifest line: $line")
-      NotNullEntry(c)
-    } else if (line.startsWith("hwm:")) {
-      val rest = line.drop(4)
-      val i = rest.lastIndexOf(':')
-      require(i > 0 && i < rest.length - 1,
-        s"malformed identity high-water-mark manifest line: $line")
-      HwmEntry(rest.substring(0, i), rest.substring(i + 1).toLong)
-    } else if (line.startsWith("ts:")) {
-      TsEntry(line.drop(3).trim.toLong)
-    } else if (line.startsWith("prop:")) {
-      val rest = line.drop(5)
-      val i = rest.indexOf(':')
-      require(i > 0, s"malformed table-property manifest line: $line")
-      PropEntry(rest.substring(0, i), rest.substring(i + 1))
-    } else if (line.startsWith("rearrange:")) {
-      RearrangeEntry()
-    } else if (line.startsWith("protocol:")) {
-      val n = line.drop(9).trim.toInt
-      if (n > SupportedProtocol) throw new IllegalStateException(
-        s"this table was written with graft manifest protocol $n; this reader " +
-          s"supports protocol $SupportedProtocol — upgrade the engine before " +
-          "reading (refusing is the contract: misparsing a newer format risks " +
-          "silently wrong state)")
-      ProtocolEntry(n)
-    } else if (line.startsWith("bloomcol:")) {
-      val rest = line.drop(9)
-      val i = rest.lastIndexOf(':')
-      require(i > 0 && i < rest.length - 1,
-        s"malformed bloom-column manifest line: $line")
-      BloomColEntry(rest.substring(0, i), rest.substring(i + 1).toInt)
-    } else if (line.startsWith("bloom:")) {
-      val parts = line.drop(6).split(":", 3)
-      // the FILE-LIST tail may be empty — a dir that is all-null in
-      // the declared column has no per-file bloom (nothing to hash),
-      // renders as `bloom:<dir>:<col>:`, and the one-sided skipping
-      // contract already treats a bloom-less file as "keep". Refusing
-      // the empty tail here made such a committed manifest unreadable.
-      require(parts.length == 3 && parts(0).nonEmpty && parts(1).nonEmpty,
-        s"malformed bloom manifest line: $line")
-      BloomEntry(parts(0), parts(1),
-        parts(2).split(',').iterator.filter(_.nonEmpty).map { e =>
-          // the separator is the LAST '=' before the blob: a hive
-          // subpath file name legally contains '=' ("bucket=0/part-…"),
-          // while a base64 BODY never does ('=' is only trailing
-          // padding, stripped before the search)
-          var k = e.length
-          while (k > 0 && e.charAt(k - 1) == '=') k -= 1
-          val j = e.lastIndexOf('=', k - 1)
-          require(j > 0, s"malformed bloom file entry: $e")
-          e.substring(0, j) -> Bloom.fromBase64(e.substring(j + 1))
-        }.toMap)
-    } else if (line.startsWith("bloomref:")) {
-      // dir and col are ':'-free (commit-time guards); the TAIL is the
-      // sidecar's absolute path, taken whole (split limit 3)
-      val parts = line.drop(9).split(":", 3)
-      require(parts.length == 3 && parts.forall(_.nonEmpty),
-        s"malformed bloom-sidecar manifest line: $line")
-      BloomEntry(parts(0), parts(1), loadBloomSidecar(parts(2)), Some(parts(2)))
-    } else if (line.startsWith("colmap:")) {
-      ColMapEntry(line.drop(7).split(',').map(_.trim).filter(_.nonEmpty).toSeq.map { e =>
-        val i = e.indexOf('=')
-        require(i > 0 && i < e.length - 1, s"malformed column-mapping manifest line: $line")
-        (e.substring(0, i), e.substring(i + 1))
-      })
-    } else if (line.startsWith("dvs:")) {
-      val parts = line.drop(4).split(":", 3)
-      require(parts.length == 3 && parts.forall(_.nonEmpty),
-        s"malformed scoped deletion-vector manifest line: $line")
-      ScopedDvEntry(parts(0), parts(1),
-        parts(2).split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    } else if (line.startsWith("dv:")) {
-      val rest = line.drop(3)
-      val i = rest.indexOf(':')
-      require(i > 0 && i < rest.length - 1,
-        s"malformed deletion-vector manifest line: $line")
-      DvEntry(rest.substring(0, i), rest.substring(i + 1))
-    } else if (line.startsWith("pdv:")) {
-      val n = line.drop(4)
-      require(n.nonEmpty, s"malformed positional deletion-vector manifest line: $line")
-      PdvEntry(n)
-    } else if (line.startsWith("ingest:")) {
-      val p = line.drop(7)
-      require(p.nonEmpty, s"malformed ingest-ledger manifest line: $line")
-      IngestEntry(p)
-    } else if (line.startsWith("feature:")) {
-      val parts = line.drop(8).split(":", 2)
-      require(parts.length == 2 && parts(0).nonEmpty &&
-        (parts(1) == "required" || parts(1) == "optional"),
-        s"malformed protocol-feature manifest line: $line")
-      val required = parts(1) == "required"
-      if (required && !SupportedFeatures.contains(parts(0)))
-        throw new IllegalStateException(
-          s"this table requires the manifest protocol feature '${parts(0)}', which " +
-            s"this reader does not support (has: ${SupportedFeatures.toSeq.sorted.mkString(", ")}) " +
-            "— upgrade the engine before reading (refusing is the contract: " +
-            "misparsing state written under an unknown required feature risks " +
-            "silently wrong results)")
-      FeatureEntry(parts(0), required)
-    } else if (line.matches("[A-Za-z][A-Za-z0-9_.-]*:.*")) {
-      // STRICT fallthrough: a word-shaped `<kind>:` prefix this reader
-      // does not know is a FUTURE line type, never a data dir — data
-      // entries are machine-named `v%08d_<kind>_<nonce>` or colon-free
-      // absolute paths (commit-time guards), so they can never match.
-      // Treating the line as a phantom DataEntry (the old fallthrough)
-      // would at best fail the read on a missing dir and at worst
-      // serve a WRONG dir set.
-      throw new IllegalStateException(
-        s"unknown manifest entry type '${line.takeWhile(_ != ':')}:' — written " +
-          s"by a newer graft (this reader supports manifest protocol " +
-          s"$SupportedProtocol); upgrade the engine before reading this table")
-    } else DataEntry(line)
-
-  /** Parsed-manifest LRU cache. Sound because a committed manifest is
-    * IMMUTABLE: the put-if-absent claim is its only writer, restore
-    * commits a NEW version, and only prune/drop ever delete one (both
-    * evict — within THIS JVM; a foreign driver dropping and
-    * re-creating a table at the same path is the one staleness
-    * window, the same one Delta's snapshot cache accepts, and it
-    * surfaces as a read error on the vanished dirs, never as silent
-    * wrong rows). The cost this removes is real at scale — one SQL
-    * read consults the manifest several times (load → versionInfo →
-    * serving index), and with per-file stats at 10⁶ files a manifest
-    * is tens of MB whose parse should happen once per JVM, not once
-    * per plan step.
-    *
-    * Bounded by WEIGHT, not entry count: an entry's weight is its
-    * recorded file-stats count (the dominant allocation — a
-    * 10⁶-file manifest must not be multiplied by an entry-count
-    * bound), 2M in total. */
-  private val manifestCache = new BoundedCache[String, Seq[Line]](2L * 1000 * 1000, lineWeight)
-
-  private def lineWeight(ls: Seq[Line]): Long =
-    ls.iterator.map {
-      case s: StatsEntry => 1L + s.files.length
-      // a bloom blob is ~hundreds of FileStats-equivalents of memory
-      case b: BloomEntry => 1L + b.files.valuesIterator.map(_.length.toLong).sum / 64
-      case _ => 1L
-    }.sum
-
-  /** Cache keys are the FILESYSTEM-QUALIFIED manifest path: the same
-    * table addressed through equivalent-but-different spellings
-    * (scheme-qualified vs plain, trailing slash) must fill and evict
-    * under ONE key, or a prune/drop through one spelling would leave
-    * the other spelling serving a deleted version's cached parse. */
-  private def cacheKey(spark: SparkSession, dir: String, v: Int): String = {
-    val (fs, _) = fsFor(spark, dir)
-    fs.makeQualified(manifestPath(dir, v)).toString
-  }
-
-  // ───────────── O(delta) manifests: incremental commits ─────────────
-  // A manifest file is either FULL STATE (the original format: every
-  // line a fact) or a DELTA against its parent — first line
-  // `parent:<v>`, then ops. At 10⁶ files with per-file stats a full
-  // manifest is tens of MB; re-serializing it on EVERY append made
-  // each commit's metadata write O(table). A delta commit writes only
-  // what changed (Delta Lake's log is O(delta) JSON actions for the
-  // same reason), and every Nth commit — plus every overwrite, which
-  // starts the state fresh anyway — is a FULL checkpoint bounding the
-  // resolution chain. Readers are untouched above the parser: [[lines]]
-  // resolves a delta by folding its ops over the parent's RESOLVED
-  // lines (cached, so the fold happens once per JVM per version).
-  //
-  // Delta ops:
-  //   `+<rendered line>`   add, with replace-by-key semantics per kind
-  //                        (schema/partition replace the singleton;
-  //                        txn replaces the same appId; stats replaces
-  //                        the same dir; constraint replaces the same
-  //                        name; a data dir adds if absent)
-  //   `-data:<dir>`        drop a data dir AND its stats entry
-  //   `-dv:<dir>`          drop a deletion-vector entry by dir name
-  //   `-txn:<appId>`       drop a writer's txn watermark
-  //   `-constraint:<name>` drop a CHECK constraint
-  //
-  // Checkpoints are SIDECARS (`<v>.checkpoint` beside `<v>.manifest`),
-  // not alternate manifest contents: the manifest that claimed a
-  // version is immutable, while a checkpoint is DERIVED state that can
-  // be (re)created any time from the chain — which is what lets
-  // [[pruneVersions]] keep its exact keepLast contract: before
-  // dropping a kept delta's parents it materializes the boundary
-  // version's checkpoint, then reclaims. Delta's `_delta_log` has the
-  // same json-actions + parquet-checkpoint split.
+  /** Version `v` of the table at `dir`, resolved once per JVM into an
+    * immutable [[Snapshot]] (refuses a version that does not exist). */
+  private[graft] def snapshot(spark: SparkSession, dir: String, v: Int): Snapshot =
+    Snapshot.resolve(spark, dir, v)
 
   /** A checkpoint sidecar lands every [[Knobs.checkpointInterval]]
     * commits (≤1 = every commit), bounding every resolution chain.
@@ -652,9 +134,6 @@ object Versioned {
     val i = Knobs.checkpointInterval(spark)
     i <= 1 || (i > 0 && v % i == 0)
   }
-
-  private def checkpointPath(dir: String, v: Int) =
-    new Path(dir, f"$VDIR/$v%08d.checkpoint")
 
   /** Materialize a version's resolved state as its checkpoint sidecar.
     * Derived data, so losing the put-if-absent race just means another
@@ -724,120 +203,6 @@ object Versioned {
     } finally in.close()
   }
 
-  /** Fold one delta manifest's ops over the parent's resolved lines.
-    * The parent's rearrange flag strips FIRST — it describes the
-    * parent's own commit, never this one's; a rearrange commit
-    * re-adds it through its `+rearrange:1` op. */
-  private def applyOps(base: Seq[Line], ops: Seq[String]): Seq[Line] =
-    ops.foldLeft(base.filterNot(_.isInstanceOf[RearrangeEntry])) { (acc, op) =>
-      if (op.startsWith("+")) parseLine(op.drop(1)) match {
-        case s: SchemaEntry    => s +: acc.filterNot(_.isInstanceOf[SchemaEntry])
-        case p: PartitionEntry => p +: acc.filterNot(_.isInstanceOf[PartitionEntry])
-        case t: TxnEntry       => acc.filterNot {
-          case TxnEntry(_, a) => a == t.appId; case _ => false } :+ t
-        case s: StatsEntry     => acc.filterNot {
-          case e: StatsEntry => e.name == s.name; case _ => false } :+ s
-        case c: ConstraintEntry => acc.filterNot {
-          case e: ConstraintEntry => e.name.equalsIgnoreCase(c.name); case _ => false } :+ c
-        case nn: NotNullEntry  => acc.filterNot {
-          case e: NotNullEntry => e.col.equalsIgnoreCase(nn.col); case _ => false } :+ nn
-        case h: HwmEntry       => acc.filterNot {
-          case e: HwmEntry => e.col.equalsIgnoreCase(h.col); case _ => false } :+ h
-        case t: TsEntry        => t +: acc.filterNot(_.isInstanceOf[TsEntry])
-        case p: PropEntry      => acc.filterNot {
-          case e: PropEntry => e.key.equalsIgnoreCase(p.key); case _ => false } :+ p
-        case p: ProtocolEntry  => p +: acc.filterNot(_.isInstanceOf[ProtocolEntry])
-        case f: FeatureEntry   => acc.filterNot {
-          case e: FeatureEntry => e.name.equalsIgnoreCase(f.name); case _ => false } :+ f
-        case cm: ColMapEntry   => acc.filterNot(_.isInstanceOf[ColMapEntry]) :+ cm
-        case bc: BloomColEntry => acc.filterNot {
-          case e: BloomColEntry => e.col.equalsIgnoreCase(bc.col); case _ => false } :+ bc
-        case b: BloomEntry     => acc.filterNot {
-          case e: BloomEntry => e.dir == b.dir && e.col.equalsIgnoreCase(b.col)
-          case _ => false } :+ b
-        case d: DataEntry      => if (acc.contains(d)) acc else acc :+ d
-        case i: IngestEntry    => if (acc.contains(i)) acc else acc :+ i
-        case other             => acc :+ other // dv, changes: plain adds
-      } else if (op.startsWith("-data:")) {
-        val n = op.drop(6)
-        acc.filterNot {
-          case DataEntry(e)       => e == n
-          case s: StatsEntry      => s.name == n
-          case b: BloomEntry      => b.dir == n
-          case _ => false
-        }
-      } else if (op.startsWith("-bloomcol:")) {
-        // undeclare ONE column: its declaration and its blobs drop;
-        // other declared columns' blooms stay live
-        val c = op.drop(10)
-        acc.filterNot {
-          case e: BloomColEntry => e.col.equalsIgnoreCase(c)
-          case e: BloomEntry    => e.col.equalsIgnoreCase(c)
-          case _ => false
-        }
-      } else if (op.startsWith("-bloomcol")) {
-        // undeclaring (all columns) drops every (now-stale) blob with it
-        acc.filterNot(l => l.isInstanceOf[BloomColEntry] || l.isInstanceOf[BloomEntry])
-      } else if (op.startsWith("-bloom:")) {
-        val n = op.drop(7)
-        acc.filterNot { case b: BloomEntry => b.dir == n; case _ => false }
-      } else if (op.startsWith("-dv:")) {
-        val n = op.drop(4)
-        acc.filterNot {
-          case DvEntry(_, e) => e == n
-          case ScopedDvEntry(_, e, _) => e == n
-          case PdvEntry(e) => e == n
-          case _ => false
-        }
-      } else if (op.startsWith("-txn:")) {
-        val a = op.drop(5)
-        acc.filterNot { case TxnEntry(_, e) => e == a; case _ => false }
-      } else if (op == "-ingest") {
-        // forget the WHOLE COPY INTO ledger (retention reset): the
-        // next copyInto re-considers every source file
-        acc.filterNot(_.isInstanceOf[IngestEntry])
-      } else if (op.startsWith("-constraint:")) {
-        val n = op.drop(12)
-        acc.filterNot { case ConstraintEntry(e, _) => e.equalsIgnoreCase(n); case _ => false }
-      } else if (op.startsWith("-prop:")) {
-        val k = op.drop(6)
-        acc.filterNot { case PropEntry(e, _) => e.equalsIgnoreCase(k); case _ => false }
-      } else if (op.startsWith("-feature:")) {
-        val n = op.drop(9)
-        acc.filterNot { case FeatureEntry(e, _) => e.equalsIgnoreCase(n); case _ => false }
-      } else if (op.startsWith("-notnull:")) {
-        val c = op.drop(9)
-        acc.filterNot { case NotNullEntry(e) => e.equalsIgnoreCase(c); case _ => false }
-      } else if (op.startsWith("-hwm:")) {
-        val c = op.drop(5) // the identity column was dropped
-        acc.filterNot { case HwmEntry(e, _) => e.equalsIgnoreCase(c); case _ => false }
-      } else if (op == "-colmap") {
-        acc.filterNot(_.isInstanceOf[ColMapEntry]) // rename chain folded back to identity
-      } else throw new IllegalStateException(s"malformed delta-manifest op: $op")
-    }
-
-  /** Resolve one version to its full line set: a checkpoint sidecar
-    * parses directly; so does a full manifest; a delta folds over the
-    * parent's (cached) resolution. */
-  private def resolveManifest(spark: SparkSession, dir: String, v: Int): Seq[Line] = {
-    val (fs, _) = fsFor(spark, dir)
-    val cp = checkpointPath(dir, v)
-    if (fs.exists(cp)) {
-      val in = fs.open(cp)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).map(parseLine).toList
-      finally in.close()
-    } else {
-      val raw = readManifest(spark, dir, v)
-      raw.headOption.filter(_.startsWith("parent:")) match {
-        case None => raw.map(parseLine)
-        case Some(head) =>
-          val parent = head.drop(7).trim.toInt
-          applyOps(lines(spark, dir, parent), raw.tail)
-      }
-    }
-  }
-
   /** Commit a non-overwrite child version as a DELTA manifest (parent
     * + ops), and land the periodic checkpoint sidecar when due. The
     * manifest commit is the atomic claim; a crash before the sidecar
@@ -867,22 +232,6 @@ object Versioned {
   }
 
   private def addOp(l: Line): String = "+" + renderLine(l)
-
-  private def lines(spark: SparkSession, dir: String, v: Int): Seq[Line] = {
-    val key = cacheKey(spark, dir, v)
-    manifestCache.get(key).getOrElse {
-      val parsed = resolveManifest(spark, dir, v)
-      manifestCache.put(key, parsed)
-      parsed
-    }
-  }
-
-  /** Drop cached parses for versions that no longer exist ([[pruneVersions]],
-    * [[dropTableChain]]) — serving a deleted manifest from cache would
-    * resurrect a pruned version's file list. */
-  private def evictManifestCache(spark: SparkSession, dir: String,
-                                 vs: Iterable[Int]): Unit =
-    manifestCache.remove(vs.map(cacheKey(spark, dir, _)))
 
   // ───────────── sidecar files (manifest stays O(dirs)) ─────────────
   // Heavy per-dir payloads — bloom blobs and per-file stats JSON —
@@ -925,71 +274,6 @@ object Versioned {
     }
     fs.makeQualified(target).toUri.getPath
   }
-
-  /** Read one sidecar through `cache`, parsing its text with `parse`
-    * on a miss. A MISSING file returns None and caches nothing, so a
-    * restored file serves on the next read; each kind decides what a
-    * missing sidecar means. */
-  private def readSidecar[V](cache: BoundedCache[String, V], path: String)
-                            (parse: String => V): Option[V] =
-    cache.get(path).orElse {
-      val p = new Path(path)
-      val fs = p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-      val body =
-        try {
-          val in = fs.open(p)
-          try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
-        } catch { case _: java.io.FileNotFoundException => None }
-      body.map { b =>
-        val parsed = parse(b)
-        cache.put(path, parsed)
-        parsed
-      }
-    }
-
-  /** Bloom sidecar parses, bounded by blob bytes. */
-  private val bloomSidecarCache = new BoundedCache[String, Map[String, Array[Byte]]](
-    256L * 1024 * 1024, _.valuesIterator.map(_.length.toLong).sum)
-
-  /** Read one bloom sidecar (cached). A MISSING sidecar degrades to an
-    * empty map with a warning rather than bricking the table: blooms
-    * are one-sided skipping metadata — no bloom means every file is
-    * read, never a wrong row. The case is reachable only by external
-    * interference (the documented clone caveat: the SOURCE owns a
-    * cloned ref's file and its prune may reclaim it). */
-  private def loadBloomSidecar(path: String): Map[String, Array[Byte]] =
-    readSidecar(bloomSidecarCache, path) { body =>
-      body.split('\n').iterator.filter(_.nonEmpty).map { e =>
-        var k = e.length
-        while (k > 0 && e.charAt(k - 1) == '=') k -= 1
-        val j = e.lastIndexOf('=', k - 1)
-        require(j > 0, s"malformed bloom sidecar entry in $path: $e")
-        e.substring(0, j) -> Bloom.fromBase64(e.substring(j + 1))
-      }.toMap
-    }.getOrElse {
-      log.warn(s"bloom sidecar $path is missing — point-lookup skipping " +
-        "degrades to reading every file of its dir (results stay exact); " +
-        "was the clone SOURCE pruned?")
-      Map.empty
-    }
-
-  /** Stats sidecar parses, weighted by recorded file count — the same
-    * unit and bound as the manifest cache. */
-  private val statsSidecarCache =
-    new BoundedCache[String, (Long, Map[String, ColStats], Seq[FileStats])](
-      2L * 1000 * 1000, 1L + _._3.length)
-
-  /** Read one stats sidecar (cached). A MISSING file REFUSES with the
-    * remedy named — unlike a bloom blob, the file list is what reads
-    * PLAN from, and a silent fallback to directory listing would serve
-    * rows a CoW rewrite already removed from a trimmed dir. */
-  private def loadStatsSidecar(path: String): (Long, Map[String, ColStats], Seq[FileStats]) =
-    readSidecar(statsSidecarCache, path)(body => StatsJson.parse(body.trim)).getOrElse(
-      throw new IllegalStateException(
-        s"stats sidecar $path is MISSING — the manifest's per-file lists " +
-          "live there and reads plan from them, so this table cannot be " +
-          "served exactly. Restore the file, or re-create the state it " +
-          "described (was a foreign table's prune pointed at this tree?)"))
 
   /** Every metadata cache's counters, by name — for profiling tools
     * and the cache tests. */
@@ -1036,59 +320,6 @@ object Versioned {
         else s.copy(sidecar = Some(writeSidecar(spark, dir, statsDirPath, "stats", json + "\n")))
       case other => other
     }
-  }
-
-  private def renderLine(l: Line): String = l match {
-    case DataEntry(n)      => n
-    case DvEntry(k, n)     => s"dv:$k:$n"
-    case ScopedDvEntry(k, n, sc) => s"dvs:$k:$n:${sc.mkString(",")}"
-    case PdvEntry(n)       => s"pdv:$n"
-    case FeatureEntry(n, req) => s"feature:$n:${if (req) "required" else "optional"}"
-    case SchemaEntry(s)    => s"schema:${s.json}"
-    case TxnEntry(b, a)    => s"txn:$b:$a"
-    case IngestEntry(p)    => s"ingest:$p"
-    case PartitionEntry(cs) => s"partition:${cs.mkString(",")}"
-    case ConstraintEntry(n, sql) => s"constraint:$n:$sql"
-    case NotNullEntry(c)   => s"notnull:$c"
-    case HwmEntry(c, n)    => s"hwm:$c:$n"
-    case TsEntry(ms)       => s"ts:$ms"
-    case PropEntry(k, v)   => s"prop:$k:$v"
-    case RearrangeEntry()  => "rearrange:1"
-    case ProtocolEntry(n)  => s"protocol:$n"
-    case ColMapEntry(es)   => s"colmap:${es.map { case (l, p) => s"$l=$p" }.mkString(",")}"
-    case BloomColEntry(c, bits) => s"bloomcol:$c:$bits"
-    case BloomEntry(d, c, _, Some(ref)) => s"bloomref:$d:$c:$ref"
-    case BloomEntry(d, c, fs, None) => s"bloom:$d:$c:" +
-      fs.toSeq.sortBy(_._1).map { case (f, b) => s"$f=${Bloom.toBase64(b)}" }.mkString(",")
-    case ChangesEntry(f, t, ks, n) => s"changes:$f:$t:${ks.mkString(",")}:$n"
-    case StatsEntry(n, _, _, _, Some(ref)) => s"statsref:$n:$ref"
-    case StatsEntry(n, r, c, f, None) => s"stats:$n:${StatsJson.render(r, c, f)}"
-  }
-
-  /** The recorded union schema of a version, if its manifest carries
-    * one (every manifest committed by this code does; manifests from
-    * the pre-schema format fall back to mergeSchema on read). */
-  def recordedSchema(spark: SparkSession, dir: String, v: Int): Option[StructType] =
-    lines(spark, dir, v).collectFirst { case SchemaEntry(s) => s }
-
-  // ───────────── column mapping (rename without rewrite) ─────────────
-
-  private def colMapOf(ls: Seq[Line]): Map[String, String] =
-    ls.collectFirst { case ColMapEntry(es) => es.toMap }.getOrElse(Map.empty)
-
-  /** The column mapping of a version: LOGICAL (user-facing) name →
-    * PHYSICAL (in-file) name, renamed columns only. Empty for a table
-    * that was never renamed (or whose last overwrite reset the
-    * physical layout). */
-  def columnMapping(spark: SparkSession, dir: String, v: Int): Map[String, String] =
-    colMapOf(lines(spark, dir, v))
-
-  /** The version's schema under its LOGICAL column names — what a
-    * user of the table sees. [[recordedSchema]] stays the PHYSICAL
-    * truth (it must keep matching the files and the footer stats). */
-  def logicalSchema(spark: SparkSession, dir: String, v: Int): Option[StructType] = {
-    val ls = lines(spark, dir, v)
-    ls.collectFirst { case SchemaEntry(s) => toLogicalSchema(s, colMapOf(ls)) }
   }
 
   private[graft] def toLogicalSchema(s: StructType, m: Map[String, String]): StructType =
@@ -1195,9 +426,9 @@ object Versioned {
   private def prepareWrite(df: DataFrame, dir: String,
                            translate: Boolean): (DataFrame, Option[Int]) =
     latestVersion(df.sparkSession, dir).fold((df, Option.empty[Int])) { v =>
-      val ls = lines(df.sparkSession, dir, v)
-      val cmap = colMapOf(ls)
-      val logical = ls.collectFirst { case SchemaEntry(s) => toLogicalSchema(s, cmap) }
+      val snap = snapshot(df.sparkSession, dir, v)
+      val cmap = snap.colMap
+      val logical = snap.logicalSchema
       val filled = logical.fold(df) { s =>
         generatedColumnsOf(s)
           .filterNot { case (n, _) => df.columns.exists(_.equalsIgnoreCase(n)) }
@@ -1229,10 +460,7 @@ object Versioned {
         identityColumnsOf(s).foldLeft(filled) { (d, spec) =>
           import org.apache.spark.sql.functions.{coalesce, concat, lit,
             monotonically_increasing_id, raise_error, when, col => fcol}
-          val phys = cmap.getOrElse(spec.col, spec.col)
-          val base = ls.collectFirst {
-            case HwmEntry(c, n) if c.equalsIgnoreCase(phys) => n
-          }.getOrElse(spec.start)
+          val base = snap.hwm(cmap.getOrElse(spec.col, spec.col)).getOrElse(spec.start)
           val dt = s(spec.col).dataType
           val assignedRaw = lit(base) + lit(spec.step) * monotonically_increasing_id()
           // BIGINT casts are the identity (declarations refuse anything
@@ -1304,23 +532,20 @@ object Versioned {
                     protocol: CommitProtocol = PutIfAbsentCommit): Int = {
     require(renames.nonEmpty, "no columns to rename")
     val prev = requireLatest(spark, dir)
-    val ls = lines(spark, dir, prev)
-    val physical = ls.collectFirst { case SchemaEntry(s) => s }.getOrElse(
+    val snap = snapshot(spark, dir, prev)
+    val ls = snap.lines
+    val physical = snap.schema.getOrElse(
       throw new IllegalArgumentException(
         s"cannot rename columns of a pre-schema manifest at $dir — commit once to record the schema"))
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val dataDirs = ls.collect { case DataEntry(n) => n }
-    require(dataDirs.forall(n => stats.get(n).exists(_.files.nonEmpty)),
+    val partCols = snap.partitionCols
+    require(snap.fileListed,
       s"cannot rename columns at $dir: manifest lacks per-dir file lists — " +
         "run backfillStats (CALL system.backfill_stats) to upgrade the chain first")
-    val prior = colMapOf(ls)
-    val logical = toLogicalSchema(physical, prior)
-    var m = prior
+    var m = snap.colMap
     // CHECK constraints and GENERATION expressions FOLLOW the rename
     // (Delta's behavior): their stored SQL is LOGICAL text, rewritten
     // through the mapping in the same metadata-only commit
-    var constraints = ls.collect { case c: ConstraintEntry => c }
+    var constraints = snap.constraints.map(ConstraintEntry.tupled)
     val rewrittenConstraints = scala.collection.mutable.LinkedHashSet.empty[String]
     var physSchema = physical
     var genRewritten = false
@@ -1425,17 +650,16 @@ object Versioned {
     require(bits >= 64 && bits % 8 == 0,
       s"bloom bits must be a positive multiple of 8, got $bits")
     val prev = requireLatest(spark, dir)
-    val ls = lines(spark, dir, prev)
-    val physical = ls.collectFirst { case SchemaEntry(s) => s }.getOrElse(
+    val snap = snapshot(spark, dir, prev)
+    val physical = snap.schema.getOrElse(
       throw new IllegalArgumentException(s"no recorded schema at $dir"))
-    val cmap = colMapOf(ls)
+    val cmap = snap.colMap
     val logical = toLogicalSchema(physical, cmap)
     val resolved = logical.fieldNames.find(_.equalsIgnoreCase(col)).getOrElse(
       throw new IllegalArgumentException(
         s"no column '$col' in ${logical.fieldNames.mkString(",")}"))
     val phys = cmap.getOrElse(resolved, resolved)
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-    require(!partCols.exists(_.equalsIgnoreCase(phys)),
+    require(!snap.partitionCols.exists(_.equalsIgnoreCase(phys)),
       s"'$resolved' is a PARTITION column — its values prune from manifest bytes " +
         "already; declare the bloom on a data column")
     require(Bloom.supportedType(physical(phys).dataType),
@@ -1449,8 +673,6 @@ object Versioned {
         "declaration (it is embedded in the line-based manifest); rewrite the " +
         "column (REPLACE TABLE … AS SELECT) to a plain name first")
     val decl = BloomColEntry(phys, bits)
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val liveDirs = ls.collect { case DataEntry(n) => n }
     // the per-commit cap bounds the DRIVER-transient bitset pull, so
     // its default derives from BYTES, not a file count — a bare file
     // cap would silently scale the pull with `bits` (10⁴ files is
@@ -1459,8 +681,8 @@ object Versioned {
     // ceiling bounds the name-list side when blobs are tiny.
     val batchLimit = math.max(1, Knobs.bloomBackfillFiles(spark).getOrElse(
       math.min(1L << 16, math.max(1L, Knobs.bloomBackfillBytes(spark) / (bits / 8))).toInt))
-    def weight(n: String) = stats.get(n).map(_.files.length).getOrElse(batchLimit)
-    val batches = liveDirs.foldLeft(Vector.empty[(Vector[String], Int)]) {
+    def weight(n: String) = snap.stats.get(n).map(_.files.length).getOrElse(batchLimit)
+    val batches = snap.dataDirNames.foldLeft(Vector.empty[(Vector[String], Int)]) {
       case (acc, n) =>
         val w = weight(n)
         acc.lastOption match {
@@ -1491,7 +713,7 @@ object Versioned {
     }
     var v = prev + 1
     commitChild(spark, dir, v, prev,
-      ls.filter(notThisCol) ++ first,
+      snap.lines.filter(notThisCol) ++ first,
       s"-bloomcol:$phys" +: first.map(addOp), protocol)
     // remaining batches: one bounded build + commit each; each commit
     // is a child of the CURRENT latest, so a concurrent append between
@@ -1499,7 +721,7 @@ object Versioned {
     batches.drop(1).foreach { batch =>
       val entries = buildEntries(batch)
       val base = latestVersion(spark, dir).get
-      val cur = lines(spark, dir, base)
+      val cur = snapshot(spark, dir, base).lines
       val names = batch.toSet
       commitChild(spark, dir, base + 1, base,
         cur.filterNot { case b: BloomEntry =>
@@ -1519,9 +741,9 @@ object Versioned {
                       col: Option[String] = None,
                       protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
     val prev = requireLatest(spark, dir)
-    val ls = lines(spark, dir, prev)
+    val snap = snapshot(spark, dir, prev)
     val phys = col.map { c =>
-      val cmap = colMapOf(ls)
+      val cmap = snap.colMap
       cmap.getOrElse(
         cmap.keys.find(_.equalsIgnoreCase(c)).getOrElse(c), c)
     }
@@ -1533,27 +755,14 @@ object Versioned {
         case _ => false
       }
     }
-    if (!ls.exists { case e: BloomColEntry => victim(e); case _ => false }) None
+    if (!snap.bloomDecls.exists(victim)) None
     else {
       val v = prev + 1
       commitChild(spark, dir, v, prev,
-        ls.filterNot(victim),
+        snap.lines.filterNot(victim),
         Seq(phys.fold("-bloomcol")(p => s"-bloomcol:$p")), protocol)
       Some(v)
     }
-  }
-
-  /** The FIRST declared bloom column (LOGICAL name) and its per-file
-    * bits — kept for single-index observers; see [[bloomColumns]]. */
-  def bloomColumn(spark: SparkSession, dir: String, v: Int): Option[(String, Int)] =
-    bloomColumns(spark, dir, v).headOption
-
-  /** Every declared bloom column (LOGICAL names) with its per-file
-    * bits, in manifest order. */
-  def bloomColumns(spark: SparkSession, dir: String, v: Int): Seq[(String, Int)] = {
-    val ls = lines(spark, dir, v)
-    val inv = colMapOf(ls).map(_.swap)
-    ls.collect { case BloomColEntry(c, bits) => (inv.getOrElse(c, c), bits) }
   }
 
   // ───────────── shallow CLONE (zero-copy table fork) ─────────────
@@ -1603,11 +812,11 @@ object Versioned {
     require(!rootAbs.contains(":") && !rootAbs.contains(","),
       s"clone sources are addressed by colon/comma-free absolute paths within one " +
         s"filesystem namespace; got '$rootAbs'")
-    val ls = lines(spark, sourceDir, srcV)
-    require(!ls.exists(_.isInstanceOf[ScopedDvEntry]),
+    val src = snapshot(spark, sourceDir, srcV)
+    require(src.scopedDvEntries.isEmpty,
       s"$sourceDir@v$srcV carries SQL-DELETE scoped masks, which group by local dir " +
         "name — apply them physically (INSERT OVERWRITE the read, or compact) first")
-    require(!ls.exists(_.isInstanceOf[PdvEntry]),
+    require(src.posDvs.isEmpty,
       s"$sourceDir@v$srcV carries positional deletion vectors, whose file refs are " +
         "root-relative — apply them physically (INSERT OVERWRITE the read, or " +
         "compact) first, or deep clone")
@@ -1633,7 +842,7 @@ object Versioned {
         s.copy(name = abs(s.name),
           sidecar = Some(tgtFs2.makeQualified(target).toUri.getPath))
     }
-    val cloned: Seq[Line] = ls.flatMap {
+    val cloned: Seq[Line] = src.lines.flatMap {
       case DataEntry(n)      => Some(DataEntry(abs(n)))
       case s: StatsEntry     => Some(localizeStats(s))
       case DvEntry(k, n)     => Some(DvEntry(k, abs(n)))
@@ -1692,7 +901,7 @@ object Versioned {
     val (tgtFs, tgtRoot) = fsFor(spark, targetDir)
     val rootAbs = srcFs.makeQualified(srcRoot).toString
     val tgtAbs = tgtFs.makeQualified(tgtRoot).toString
-    val ls = lines(spark, sourceDir, srcV)
+    val src = snapshot(spark, sourceDir, srcV)
     def abs(n: String) =
       if (n.startsWith("/")) srcFs.makeQualified(new Path(n)).toString
       else s"${rootAbs.stripSuffix("/")}/$n"
@@ -1700,17 +909,13 @@ object Versioned {
     // every referenced dir localizes: local names keep themselves
     // (scoped-dv scopes reference them), absolute refs get a
     // deterministic content-addressed local name
-    val dirRefs = (ls.collect { case DataEntry(n) => n } ++
-      ls.collect { case DvEntry(_, n) => n } ++
-      ls.collect { case ScopedDvEntry(_, n, _) => n } ++
-      ls.collect { case PdvEntry(n) => n }).distinct
+    val dirRefs = src.liveDirNames.distinct
     // a positional dv's `_file` refs survive the deep clone only
     // because LOCAL dir names map to themselves; an adopted/absolute
     // data ref renames, which would orphan any position pointing into
     // it — refuse that (rare) combination with the same remedy as the
     // shallow clone
-    require(!ls.exists(_.isInstanceOf[PdvEntry]) ||
-        ls.collect { case DataEntry(n) => n }.forall(!_.startsWith("/")),
+    require(src.posDvs.isEmpty || src.dataDirNames.forall(!_.startsWith("/")),
       s"$sourceDir@v$srcV carries positional deletion vectors over adopted " +
         "(absolute-ref) data dirs, which the deep clone renames — apply the masks " +
         "physically (INSERT OVERWRITE the read, or compact) first")
@@ -1732,7 +937,7 @@ object Versioned {
     val tgtPathAbs = tgtFs.makeQualified(tgtRoot).toUri.getPath
     val sidecarRefs =
       if (!refsRoundTrip) Seq.empty
-      else ls.collect { case BloomEntry(_, _, _, Some(ref)) => ref }.distinct
+      else src.bloomEntries.flatMap(_.sidecar).distinct
     val sidecarMap: Map[String, String] = sidecarRefs.map { ref =>
       ref -> s"${tgtPathAbs.stripSuffix("/")}/$VDIR/blooms/${new Path(ref).getName}"
     }.toMap
@@ -1742,7 +947,7 @@ object Versioned {
     // stay refs into the source's tree on a deep clone
     val statsRefs =
       if (!refsRoundTrip) Seq.empty
-      else ls.collect { case StatsEntry(_, _, _, _, Some(ref)) => ref }.distinct
+      else src.stats.values.flatMap(_.sidecar).toSeq.distinct
     val statsMap: Map[String, String] = statsRefs.map { ref =>
       ref -> s"${tgtPathAbs.stripSuffix("/")}/$VDIR/stats/${new Path(ref).getName}"
     }.toMap
@@ -1750,12 +955,11 @@ object Versioned {
     // the copy list: (src file, dst file) — manifest-served for
     // stats-listed data dirs (zero listing), driver-listed for dv
     // dirs and pre-file-list dirs (small / legacy)
-    val stats = ls.collect { case s: StatsEntry => s.name -> s }.toMap
     val copies = scala.collection.mutable.ArrayBuffer[(String, String)]()
     dirRefs.foreach { ref =>
       val srcDir = abs(ref)
       val dstDir = s"${tgtAbs.stripSuffix("/")}/${nameMap(ref)}"
-      stats.get(ref).filter(_.files.nonEmpty) match {
+      src.stats.get(ref).filter(_.files.nonEmpty) match {
         case Some(st) =>
           st.files.foreach(f => copies += ((s"$srcDir/${f.name}", s"$dstDir/${f.name}")))
         case None =>
@@ -1808,7 +1012,7 @@ object Versioned {
       lastDeepCloneCounts = (copied, skipped)
     }
 
-    val cloned: Seq[Line] = ls.flatMap {
+    val cloned: Seq[Line] = src.lines.flatMap {
       case DataEntry(n)       => Some(DataEntry(nameMap(n)))
       case s: StatsEntry      =>
         val renamed = s.copy(name = nameMap.getOrElse(s.name, s.name))
@@ -1989,17 +1193,13 @@ object Versioned {
         throw new IllegalArgumentException(
           s"COPY INTO needs an existing table at $dir — CREATE it first " +
             "(the target schema governs the alignment)"))
-      val ls = lines(spark, dir, prev)
-      val loaded = ls.collect { case IngestEntry(p) => p }.toSet
-      val fresh = found.toSeq.filterNot(loaded).sorted
+      val snap = snapshot(spark, dir, prev)
+      val fresh = found.toSeq.filterNot(snap.ingested).sorted
       if (fresh.isEmpty) None
       else {
-        val cmap = colMapOf(ls)
-        val logical = ls.collectFirst { case SchemaEntry(s) =>
-          toLogicalSchema(s, cmap) }.getOrElse(throw new IllegalArgumentException(
-            s"COPY INTO at $dir needs a recorded schema — commit once to record it"))
-        val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }
-          .getOrElse(Seq.empty)
+        val logical = snap.logicalSchema.getOrElse(throw new IllegalArgumentException(
+          s"COPY INTO at $dir needs a recorded schema — commit once to record it"))
+        val partCols = snap.partitionCols
         var reader = spark.read.format(fmt).options(options)
         schema.foreach(s => reader = reader.schema(s))
         val raw = reader.load(fresh: _*)
@@ -2021,8 +1221,7 @@ object Versioned {
             .cast(f.dataType).as(f.name)
         }: _*)
         val feat: Seq[Line] =
-          if (ls.exists { case FeatureEntry(n, _) => n.equalsIgnoreCase("ingest")
-                          case _ => false }) Seq.empty
+          if (snap.hasFeature("ingest")) Seq.empty
           else Seq(FeatureEntry("ingest", required = false))
         val extra = feat ++ fresh.map(IngestEntry)
         val (out, idFilled) = prepareWrite(aligned, dir, translate = true)
@@ -2043,8 +1242,8 @@ object Versioned {
         maintenanceTick(spark, dir, protocol)
         val added = addedDataDirs(spark, dir, v)
           .map(a => a.substring(a.lastIndexOf('/') + 1)).toSet
-        val rows = lines(spark, dir, v).collect {
-          case s: StatsEntry if added.contains(s.name) => s.rows }.sum
+        val rows = snapshot(spark, dir, v).stats.valuesIterator
+          .filter(s => added.contains(s.name)).map(_.rows).sum
         Some((fresh.length, rows, v))
       }
     }
@@ -2061,12 +1260,12 @@ object Versioned {
                           maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
       val prev = requireLatest(spark, dir)
-      val ls = lines(spark, dir, prev)
-      if (!ls.exists(_.isInstanceOf[IngestEntry])) None
+      val snap = snapshot(spark, dir, prev)
+      if (snap.ingested.isEmpty) None
       else {
         val v = prev + 1
         commitChild(spark, dir, v, prev,
-          ls.filterNot(_.isInstanceOf[IngestEntry]), Seq("-ingest"), protocol)
+          snap.lines.filterNot(_.isInstanceOf[IngestEntry]), Seq("-ingest"), protocol)
         Some(v)
       }
     }
@@ -2191,18 +1390,16 @@ object Versioned {
                                            schema: StructType, partCols: Seq[String],
                                            protocol: CommitProtocol): Option[Int] = {
     val prev = latestVersion(spark, dir)
-    val replay = prev.exists(p => lines(spark, dir, p).collectFirst {
-      case TxnEntry(b, a) if a == appId => b }.exists(batchId <= _))
-    if (replay) return None
+    val prevSnap = prev.map(snapshot(spark, dir, _))
+    if (prevSnap.exists(_.txns.get(appId).exists(batchId <= _))) return None
     val ordered = StructType(
       schema.fields.filterNot(f => partCols.contains(f.name)) ++
         partCols.map(c => schema(c)))
-    val carried = prev.toSeq.flatMap(p =>
-      lines(spark, dir, p).collect {
-        case c: ConstraintEntry => c
-        // other writers' replay guards ride through this overwrite too
-        case t: TxnEntry if t.appId != appId => t
-      })
+    val carried = prevSnap.toSeq.flatMap(_.lines.collect {
+      case c: ConstraintEntry => c
+      // other writers' replay guards ride through this overwrite too
+      case t: TxnEntry if t.appId != appId => t
+    })
     val v = prev.map(_ + 1).getOrElse(0)
     commitManifest(spark, dir, v,
       (SchemaEntry(asNullable(ordered)) +:
@@ -2311,8 +1508,8 @@ object Versioned {
     val removedNonEmpty = removed.filter(_._2.nonEmpty)
     if (removedNonEmpty.isEmpty && replacementDir.isEmpty && addPdv.isEmpty) return None
     val (fs, root) = fsFor(spark, dir)
-    val v0 = requireLatest(spark, dir)
-    val schema = schemaOf(spark, dir, v0)
+    val base0 = snapshot(spark, dir, requireLatest(spark, dir))
+    val schema = schemaOf(spark, base0)
     // the sidecar's positions, from the just-written footers (metadata
     // only): empty → no mask line (the dir is deleted); over the size
     // contract → refuse whole (the reader ships the set with the task
@@ -2358,8 +1555,7 @@ object Versioned {
       else {
         // a bloom-indexed table's replacement dir gets its own blobs,
         // one per DECLARED column (same O(delta) scans as any commit)
-        val bloom = externalizeBlooms(spark, dir, lines(spark, dir, v0)
-          .collect { case b: BloomColEntry => b }.map { b =>
+        val bloom = externalizeBlooms(spark, dir, base0.bloomDecls.map { b =>
             BloomEntry(nd, b.col,
               Bloom.buildDirBlooms(spark, p.toString, schema, b.col, b.bits))
           })
@@ -2368,15 +1564,14 @@ object Versioned {
       }
     }
     if (removedNonEmpty.isEmpty && newEntries.isEmpty && pdvEntry.isEmpty) return None
-    val validatedConstraints =
-      lines(spark, dir, v0).collect { case c: ConstraintEntry => c }
+    val validatedConstraints = base0.constraints.map(ConstraintEntry.tupled)
     val rewriteGenCols = generatedColumnsOf(schema)
     if ((validatedConstraints.nonEmpty || rewriteGenCols.nonEmpty) && newEntries.nonEmpty) {
       import org.apache.spark.sql.functions.{coalesce, expr, lit, not, col => fcol}
       // constraint/generation SQL is LOGICAL text (it follows
       // renames); the staged files carry PHYSICAL names — evaluate
       // under logical, the same boundary writeVersionCore applies
-      val cmapHere = colMapOf(lines(spark, dir, v0))
+      val cmapHere = base0.colMap
       val invHere = cmapHere.map(_.swap)
       val staged = toLogicalDf(
         spark.read.schema(schema)
@@ -2406,19 +1601,19 @@ object Versioned {
     // NOT NULL columns: the replacement's footer harvest already holds
     // the null counts — same zero-IO check as writeVersionCore's
     newEntries.collectFirst { case s: StatsEntry => s }.foreach { st =>
-      lines(spark, dir, v0).collect { case n: NotNullEntry => n }.foreach { nn =>
-        val violated = st.rows > 0 && (st.cols.get(nn.col) match {
+      base0.notNull.foreach { nn =>
+        val violated = st.rows > 0 && (st.cols.get(nn) match {
           case None     => true
           case Some(cs) => cs.nulls match {
             case Some(n) => n > 0
             case None =>
               !spark.read.schema(schema)
                 .parquet(new Path(root, replacementDir.get).toString)
-                .filter(org.apache.spark.sql.functions.col(nn.col).isNull).isEmpty
+                .filter(org.apache.spark.sql.functions.col(nn).isNull).isEmpty
           }
         })
         require(!violated,
-          s"rewrite of $dir violates NOT NULL constraint on '${nn.col}'; " +
+          s"rewrite of $dir violates NOT NULL constraint on '$nn'; " +
             "nothing was committed")
       }
     }
@@ -2426,8 +1621,9 @@ object Versioned {
       s"file rewrite at $dir $msg — the rewrite's snapshot is stale; re-run the statement")
     withCommitRetry(maxAttempts) { () =>
       val prev = latestVersion(spark, dir).get
-      val ls = lines(spark, dir, prev)
-      val stats = ls.collect { case s: StatsEntry => s.name -> s }.toMap
+      val snap = snapshot(spark, dir, prev)
+      val ls = snap.lines
+      val stats = snap.stats
       // every file being replaced must still be live, byte-identical
       removedNonEmpty.foreach { case (d, files) =>
         val have = stats.get(d).map(_.files.map(_.name).toSet).getOrElse(Set.empty)
@@ -2448,29 +1644,21 @@ object Versioned {
       }
       // names normalize to their LAST segment: a cloned chain's dv
       // refs are absolute, the snapshot's were taken through the same
-      // last-segment view (versionInfo serves absolute dirs either way)
+      // last-segment view (the snapshot serves absolute dirs either way)
       def seg(n: String) = n.substring(n.lastIndexOf('/') + 1)
-      val dvNow = ls.collect {
-        case DvEntry(k, n) => (k, seg(n))
-        case ScopedDvEntry(k, n, _) => (k, seg(n))
-        case PdvEntry(n) => (PdvSnapshotKey, seg(n))
-      }
-      if (dvNow.toSet != dvSnapshot.map { case (k, n) => (k, seg(n)) }.toSet)
+      def segs(dvs: Seq[(String, String)]) = dvs.map { case (k, n) => (k, seg(n)) }.toSet
+      if (segs(snap.dvSnapshot) != segs(dvSnapshot))
         conflict("saw the deletion-vector set change under it")
-      if (ls.collect { case c: ConstraintEntry => c }.toSet != validatedConstraints.toSet)
+      if (snap.constraints.toSet != base0.constraints.toSet)
         conflict("saw the CHECK constraints change under it")
-      if (ls.collect { case n: NotNullEntry => n }.toSet !=
-          lines(spark, dir, v0).collect { case n: NotNullEntry => n }.toSet)
+      if (snap.notNull.toSet != base0.notNull.toSet)
         conflict("saw the NOT NULL constraints change under it")
-      val prevPart = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-      if (prevPart != partCols)
-        conflict(s"saw the partition spec change to ${prevPart.mkString(",")}")
+      if (snap.partitionCols != partCols)
+        conflict(s"saw the partition spec change to ${snap.partitionCols.mkString(",")}")
       replaceConflict.foreach { case (basis, filters, predSql) =>
-        val cmapNow = colMapOf(ls)
-        val logicalNow = toLogicalSchema(
-          ls.collectFirst { case SchemaEntry(s) => s }.getOrElse(schema), cmapNow)
-        val newcomers = ls.collect {
-          case s: StatsEntry if !basis.contains(s.name) => s }
+        val cmapNow = snap.colMap
+        val logicalNow = toLogicalSchema(snap.schema.getOrElse(schema), cmapNow)
+        val newcomers = stats.values.filterNot(s => basis.contains(s.name))
         // a newcomer survives only when some pushed conjunct PROVES it
         // holds no matching row; an untranslatable predicate (no
         // conjuncts) keeps every newcomer — conservative, like Delta
@@ -2478,23 +1666,23 @@ object Versioned {
           filters.exists(f => Skipping.excludes(st.rows,
             rekeyToLogical(st.cols, cmapNow), logicalNow, f)))
         if (overlapping.nonEmpty) conflict(
-          s"saw ${overlapping.length} concurrently-committed dir(s) whose rows may " +
+          s"saw ${overlapping.size} concurrently-committed dir(s) whose rows may " +
             s"match the replace predicate ($predSql) — a REPLACE WHERE must not " +
             "commit past concurrent writes it would have replaced")
       }
       if (exclusivePartitions.nonEmpty) {
-        val foreign = ls.collect { case s: StatsEntry => s }.flatMap { st =>
+        val foreign = stats.values.flatMap { st =>
           val mine = removedNonEmpty.getOrElse(st.name, Set.empty)
           st.files.filterNot(f => mine.contains(f.name)).filter(f =>
             exclusivePartitions.contains(partCols.map(c => f.cols.get(c).flatMap(_.min))))
         }
         if (foreign.nonEmpty)
-          conflict(s"saw ${foreign.length} file(s) land concurrently in a partition " +
+          conflict(s"saw ${foreign.size} file(s) land concurrently in a partition " +
             "this statement overwrites")
       }
       val v = prev + 1
       val ops = Seq.newBuilder[String]
-      val bloomByDir = ls.collect { case b: BloomEntry => b }.groupBy(_.dir)
+      val bloomByDir = snap.bloomEntries.groupBy(_.dir)
       val replacedStats = removedNonEmpty.flatMap { case (d, files) =>
         val st = stats(d)
         val remaining = st.files.filterNot(f => files.contains(f.name))
@@ -2539,9 +1727,7 @@ object Versioned {
           s"filled identity values against version $b but the table is at $prev")
       }
       val hwmRw: Seq[Line] = identityColumnsOf(schema).flatMap { spec =>
-        val base = ls.collectFirst {
-          case HwmEntry(c, n) if c.equalsIgnoreCase(spec.col) => n
-        }.getOrElse(spec.start)
+        val base = snap.hwm(spec.col).getOrElse(spec.start)
         val bounds = newEntries.collectFirst { case s: StatsEntry => s }
           .flatMap(_.cols.get(spec.col)).filter(_.min.nonEmpty)
           .map(cs => (cs.min.get.toLong, cs.max.get.toLong))
@@ -2561,20 +1747,14 @@ object Versioned {
       // the first positional mask on a chain STAMPS the protocol
       // feature, exactly like deleteWhere's sidecar commit
       val featRw: Seq[Line] =
-        if (pdvEntry.isEmpty || ls.exists {
-              case FeatureEntry(n, _) => n.equalsIgnoreCase("pdv"); case _ => false })
-          Seq.empty
+        if (pdvEntry.isEmpty || snap.hasFeature("pdv")) Seq.empty
         else Seq(FeatureEntry("pdv", required = true))
       featRw.foreach(l => ops += addOp(l))
       pdvEntry.foreach(l => ops += addOp(l))
       if (!dataChange) ops += addOp(RearrangeEntry())
       val droppedDvNames: Set[String] =
         if (!dropDvs) Set.empty
-        else ls.collect {
-          case DvEntry(_, n)          => n
-          case ScopedDvEntry(_, n, _) => n
-          case PdvEntry(n)            => n
-        }.toSet
+        else snap.dvSnapshot.map(_._2).toSet
       droppedDvNames.foreach(n => ops += s"-dv:$n")
       val emptied = removedNonEmpty.keySet -- replacedStats.keySet
       val fullLines = ls.flatMap {
@@ -2615,13 +1795,11 @@ object Versioned {
                                                      identityBasis: Option[Int] = None)
       : Option[Int] = {
     val (fs, root) = fsFor(spark, dir)
-    val v0 = requireLatest(spark, dir)
-    val ls = lines(spark, dir, v0)
-    val prevPart = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-    require(prevPart == partCols,
+    val snap = snapshot(spark, dir, requireLatest(spark, dir))
+    require(snap.partitionCols == partCols,
       s"dynamic overwrite partitioning ${partCols.mkString(",")} does not match " +
-        s"the table's ${prevPart.mkString(",")}")
-    val schema = schemaOf(spark, dir, v0)
+        s"the table's ${snap.partitionCols.mkString(",")}")
+    val schema = schemaOf(spark, snap)
     val partSchema = StructType(partCols.map(c => schema(c)))
     val stagedPath = new Path(root, stagedHive)
     val harvested =
@@ -2630,19 +1808,12 @@ object Versioned {
     if (rows == 0L) { fs.delete(stagedPath, true); return None }
     def tupleOf(f: FileStats) = partCols.map(c => f.cols.get(c).flatMap(_.min))
     val touched = stagedFiles.map(tupleOf).toSet
-    val stats = ls.collect { case s: StatsEntry => s.name -> s }.toMap
-    val dataDirs = ls.collect { case DataEntry(n) => n }
-    require(dataDirs.forall(n => stats.get(n).exists(_.files.nonEmpty)),
+    require(snap.fileListed,
       s"dynamic partition overwrite at $dir needs manifest file lists — run backfillStats")
-    val victims = dataDirs.map { d =>
-      d -> stats(d).files.filter(f => touched.contains(tupleOf(f))).map(_.name).toSet
+    val victims = snap.dataDirNames.map { d =>
+      d -> snap.stats(d).files.filter(f => touched.contains(tupleOf(f))).map(_.name).toSet
     }.filter(_._2.nonEmpty).toMap
-    val dvSnapshot = ls.collect {
-      case DvEntry(k, n) => (k, n)
-      case ScopedDvEntry(k, n, _) => (k, n)
-      case PdvEntry(n) => (PdvSnapshotKey, n)
-    }
-    commitFileRewrite(spark, dir, victims, Some(stagedHive), partCols, dvSnapshot,
+    commitFileRewrite(spark, dir, victims, Some(stagedHive), partCols, snap.dvSnapshot,
       protocol, exclusivePartitions = touched, preHarvested = Some(harvested),
       identityBasis = identityBasis)
   }
@@ -2718,14 +1889,14 @@ object Versioned {
       // the empty state records the LOGICAL schema and no mapping
       // (there are no files left to name), so carried NOT NULL lines
       // (physical-keyed) rename to logical with it
-      val prevInv = colMapOf(lines(spark, dir, prev)).map(_.swap)
-      val carried = lines(spark, dir, prev).collect { case t: TxnEntry => t } ++
-        (if (replaceDefinition) Seq.empty[Line]
-         else lines(spark, dir, prev).collect {
-           case c: ConstraintEntry => c
-           case n: NotNullEntry => NotNullEntry(prevInv.getOrElse(n.col, n.col))
-           case p: PropEntry => p
-         })
+      val prevSnap = snapshot(spark, dir, prev)
+      val prevInv = prevSnap.colMap.map(_.swap)
+      val carried = prevSnap.lines.collect {
+        case t: TxnEntry => t
+        case c: ConstraintEntry if !replaceDefinition => c
+        case n: NotNullEntry if !replaceDefinition => NotNullEntry(prevInv.getOrElse(n.col, n.col))
+        case p: PropEntry if !replaceDefinition => p
+      }
       val ordered =
         if (partCols.isEmpty) declared
         else StructType(declared.fields.filterNot(f => partCols.contains(f.name)) ++
@@ -2742,8 +1913,7 @@ object Versioned {
   /** The newest batch id `appId` has committed to `dir`, from manifest
     * bytes (None for a writer the table has never seen). */
   def lastCommittedBatch(spark: SparkSession, dir: String, appId: String): Option[Long] =
-    latestVersion(spark, dir).flatMap(v =>
-      lines(spark, dir, v).collectFirst { case TxnEntry(b, a) if a == appId => b })
+    latestVersion(spark, dir).flatMap(v => snapshot(spark, dir, v).txns.get(appId))
 
   /** [[writeVersion]] with PARTITION COLUMNS: rows land hive-laid-out
     * (`dataDir/col=value/part-*.parquet`) inside the commit's single
@@ -2831,37 +2001,28 @@ object Versioned {
     require(minDirs >= 2, "minDirs must be at least 2 — compacting one dir is a no-op")
     require(targetBytes > 0 && maxDirs >= minDirs,
       s"need targetBytes > 0 and maxDirs >= minDirs, got $targetBytes/$maxDirs/$minDirs")
-    val v0 = requireLatest(spark, dir)
-    val ls0 = lines(spark, dir, v0)
-    val physSchema = ls0.collectFirst { case SchemaEntry(s) => s }.getOrElse(
+    val snap = snapshot(spark, dir, requireLatest(spark, dir))
+    val physSchema = snap.schema.getOrElse(
       throw new IllegalArgumentException(
         s"compactSmallDirs at $dir needs a recorded schema — run backfillStats"))
-    val partCols = ls0.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-    val stats = ls0.collect { case e: StatsEntry => e.name -> e }.toMap
-    val weighed = ls0.collect { case DataEntry(n) => n }
-      .flatMap(n => stats.get(n).filter(_.files.nonEmpty)
+    val partCols = snap.partitionCols
+    val weighed = snap.dataDirNames
+      .flatMap(n => snap.stats.get(n).filter(_.files.nonEmpty)
         .map(s => (n, s.files.map(_.bytes).sum)))
     val small = weighed.filter(_._2 < targetBytes).sortBy(_._2).take(maxDirs)
     if (small.length < minDirs) return None
     val (fs, root) = fsFor(spark, dir)
-    val removed = small.map { case (n, _) => n -> stats(n).files.map(_.name).toSet }.toMap
-    val candPaths = small.map { case (n, _) => new Path(root, n).toString }.toSet
-    val cmap = colMapOf(ls0)
+    val removed = small.map { case (n, _) => n -> snap.fileNames(n) }.toMap
+    val candNames = small.map(_._1).toSet
     val nOut = math.max(1, math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
-    val payload = toPhysical(
-        readVersionDirs(spark, dir, v0, candPaths, applyDv = true), cmap)
+    val payload = toPhysical(readVersionFrom(spark, snap, candNames), snap.colMap)
       .select(physSchema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
       .coalesce(nOut)
     val staged = stageDataDir(spark, dir)
     val stagedPath = new Path(root, staged)
     val w = payload.write.mode(SaveMode.ErrorIfExists)
     (if (partCols.isEmpty) w else w.partitionBy(partCols: _*)).parquet(stagedPath.toString)
-    val dvSnapshot = ls0.collect {
-      case DvEntry(k, n)          => (k, n)
-      case ScopedDvEntry(k, n, _) => (k, n)
-      case PdvEntry(n)            => (PdvSnapshotKey, n)
-    }
-    try commitFileRewrite(spark, dir, removed, Some(staged), partCols, dvSnapshot,
+    try commitFileRewrite(spark, dir, removed, Some(staged), partCols, snap.dvSnapshot,
       protocol, dataChange = false)
     catch { case t: Throwable => fs.delete(stagedPath, true); throw t }
   }
@@ -2883,28 +2044,21 @@ object Versioned {
                                          protocol: CommitProtocol)
                                         (shape: DataFrame => DataFrame): Option[Int] = {
     val v0 = requireLatest(spark, dir)
-    val ls0 = lines(spark, dir, v0)
-    val physSchema = ls0.collectFirst { case SchemaEntry(s) => s }.getOrElse(return None)
-    val partCols = ls0.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-    require(partCols.isEmpty,
+    val snap = snapshot(spark, dir, v0)
+    val physSchema = snap.schema.getOrElse(return None)
+    require(snap.partitionCols.isEmpty,
       s"$dir is partitioned — rewrite through the partition-shaped path")
     val removed =
       try allLiveFilesMap(spark, dir, v0)
       catch { case _: IllegalArgumentException => return None }
     if (removed.valuesIterator.forall(_.isEmpty)) return None
     val (fs, root) = fsFor(spark, dir)
-    val cmap = colMapOf(ls0)
-    val payload = toPhysical(shape(readVersion(spark, dir, v0)), cmap)
+    val payload = toPhysical(shape(readVersion(spark, dir, v0)), snap.colMap)
       .select(physSchema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
     val staged = stageDataDir(spark, dir)
     val stagedPath = new Path(root, staged)
     payload.write.mode(SaveMode.ErrorIfExists).parquet(stagedPath.toString)
-    val dvSnapshot = ls0.collect {
-      case DvEntry(k, n)          => (k, n)
-      case ScopedDvEntry(k, n, _) => (k, n)
-      case PdvEntry(n)            => (PdvSnapshotKey, n)
-    }
-    try commitFileRewrite(spark, dir, removed, Some(staged), Seq.empty, dvSnapshot,
+    try commitFileRewrite(spark, dir, removed, Some(staged), Seq.empty, snap.dvSnapshot,
       protocol, dataChange = false, dropDvs = true)
     catch { case t: Throwable => fs.delete(stagedPath, true); throw t }
   }
@@ -2925,12 +2079,10 @@ object Versioned {
     * (dirName, fileName) pairs; empty = clean, and nothing commits. */
   def fsck(spark: SparkSession, dir: String, repair: Boolean = false,
            protocol: CommitProtocol = PutIfAbsentCommit): Seq[(String, String)] = {
-    val v0 = requireLatest(spark, dir)
-    val ls = lines(spark, dir, v0)
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
+    val snap = snapshot(spark, dir, requireLatest(spark, dir))
     val root = new Path(dir)
-    val expected = ls.collect { case DataEntry(n) => n }.flatMap { d =>
-      stats.get(d).toSeq.flatMap(_.files.map(f =>
+    val expected = snap.dataDirNames.flatMap { d =>
+      snap.stats.get(d).toSeq.flatMap(_.files.map(f =>
         (d, f.name, new Path(new Path(root, d), f.name).toString)))
     }
     val missing = Skipping.onDriverOrJob(spark, expected,
@@ -2940,22 +2092,11 @@ object Versioned {
     }.flatten.sorted
     if (repair && missing.nonEmpty) {
       val removed = missing.groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).toSet }
-      val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-      val dvSnapshot = ls.collect {
-        case DvEntry(k, n)          => (k, n)
-        case ScopedDvEntry(k, n, _) => (k, n)
-        case PdvEntry(n)            => (PdvSnapshotKey, n)
-      }
-      commitFileRewrite(spark, dir, removed, None, partCols, dvSnapshot, protocol)
+      commitFileRewrite(spark, dir, removed, None, snap.partitionCols, snap.dvSnapshot,
+        protocol)
     }
     missing
   }
-
-  /** The TABLE PROPERTIES of version `v` — Delta's TBLPROPERTIES.
-    * Versioned like everything else: travel to an old version and its
-    * recorded properties serve. */
-  def tableProperties(spark: SparkSession, dir: String, v: Int): Map[String, String] =
-    lines(spark, dir, v).collect { case PropEntry(k, x) => k -> x }.toMap
 
   /** `ALTER TABLE … SET TBLPROPERTIES`: one metadata commit replacing
     * the named keys (case-insensitively), everything else verbatim.
@@ -2972,9 +2113,8 @@ object Versioned {
         s"property value for '$k' must be one line")
     }
     val prev = requireLatest(spark, dir)
-    val ls = lines(spark, dir, prev)
     val entries = props.toSeq.sortBy(_._1).map { case (k, x) => PropEntry(k, x) }
-    val fullLines = ls.filterNot {
+    val fullLines = snapshot(spark, dir, prev).lines.filterNot {
       case e: PropEntry => props.keys.exists(_.equalsIgnoreCase(e.key))
       case _ => false
     } ++ entries
@@ -2990,11 +2130,10 @@ object Versioned {
                            protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
     require(keys.nonEmpty, "UNSET TBLPROPERTIES needs at least one key")
     val prev = requireLatest(spark, dir)
-    val ls = lines(spark, dir, prev)
-    val present = keys.filter(k => ls.exists {
-      case e: PropEntry => e.key.equalsIgnoreCase(k); case _ => false })
+    val snap = snapshot(spark, dir, prev)
+    val present = keys.filter(k => snap.properties.keys.exists(_.equalsIgnoreCase(k)))
     if (present.isEmpty) return None
-    val fullLines = ls.filterNot {
+    val fullLines = snap.lines.filterNot {
       case e: PropEntry => present.exists(_.equalsIgnoreCase(e.key))
       case _ => false
     }
@@ -3007,15 +2146,8 @@ object Versioned {
   /** The latest version's table properties, which back the
     * table-backed [[Knobs]]; a failed read counts as no properties. */
   private def liveProps(spark: SparkSession, dir: String): Map[String, String] =
-    try latestVersion(spark, dir).fold(Map.empty[String, String])(tableProperties(spark, dir, _))
+    try latestVersion(spark, dir).fold(Map.empty[String, String])(snapshot(spark, dir, _).properties)
     catch { case scala.util.control.NonFatal(_) => Map.empty }
-
-  /** Was version `v` a content-preserving REARRANGEMENT (dataChange =
-    * false: compaction, Z-order)? Streaming sources skip such versions
-    * instead of failing the appends-only premise; change feeds emit
-    * nothing for them. */
-  private[graft] def isRearrange(spark: SparkSession, dir: String, v: Int): Boolean =
-    lines(spark, dir, v).exists(_.isInstanceOf[RearrangeEntry])
 
   /** The data dirs version `v` ADDED over `v-1` (absolute paths, in
     * v's list order) — the streaming source's serving unit: offsets
@@ -3026,13 +2158,12 @@ object Versioned {
   private[graft] def addedDataDirs(spark: SparkSession, dir: String, v: Int)
       : Seq[String] = {
     if (v < 0) return Seq.empty
-    if (isRearrange(spark, dir, v)) return Seq.empty
-    def abs(n: String) = new Path(new Path(dir), n).toString
-    val cur = lines(spark, dir, v).collect { case DataEntry(n) => n }
-    if (v == 0) cur.map(abs)
+    val cur = snapshot(spark, dir, v)
+    if (cur.isRearrange) Seq.empty
+    else if (v == 0) cur.dataDirs
     else {
-      val prev = lines(spark, dir, v - 1).collect { case DataEntry(n) => n }.toSet
-      cur.filterNot(prev).map(abs)
+      val prev = snapshot(spark, dir, v - 1).dataDirNames.toSet
+      cur.dataDirNames.zip(cur.dataDirs).collect { case (n, a) if !prev(n) => a }
     }
   }
 
@@ -3050,21 +2181,18 @@ object Versioned {
     * whole table is clustered base. */
   private[graft] def unclusteredLiveFiles(spark: SparkSession, dir: String, v: Int)
       : Map[String, Set[String]] = {
-    val ls = lines(spark, dir, v)
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val liveDirs = ls.collect { case DataEntry(n) => n }
-    require(liveDirs.forall(n => stats.get(n).exists(_.files.nonEmpty)),
+    val snap = snapshot(spark, dir, v)
+    require(snap.fileListed,
       s"incremental OPTIMIZE at $dir needs manifest file lists for every data dir — " +
         "run backfillStats to upgrade pre-file-list manifests")
     val avail = versions(spark, dir).filter(_ <= v).toSet
     val clustered = avail.iterator
-      .filter(w => w > 0 && avail.contains(w - 1) && isRearrange(spark, dir, w))
+      .filter(w => w > 0 && avail.contains(w - 1) && snapshot(spark, dir, w).isRearrange)
       .flatMap { w =>
-        val prev = lines(spark, dir, w - 1).collect { case DataEntry(n) => n }.toSet
-        lines(spark, dir, w).collect { case DataEntry(n) => n }.filterNot(prev)
+        val prev = snapshot(spark, dir, w - 1).dataDirNames.toSet
+        snapshot(spark, dir, w).dataDirNames.filterNot(prev)
       }.toSet
-    liveDirs.filterNot(clustered)
-      .map(d => d -> stats(d).files.map(_.name).toSet).toMap
+    snap.dataDirNames.filterNot(clustered).map(d => d -> snap.fileNames(d)).toMap
   }
 
   /** [[dirAdmission]] restricted to version `v`'s ADDED dirs — the
@@ -3172,6 +2300,7 @@ object Versioned {
       s"versioned writes are Overwrite or Append, got $mode")
     val (fs, root) = fsFor(spark, dir)
     val prev = latestVersion(spark, dir)
+    val prevSnap = prev.map(snapshot(spark, dir, _))
     // an atomic-CREATE commit (staged CTAS): the table must still not
     // exist. This check is advisory; the real guard is the manifest
     // claim below — v is 0 here, so a racing creator's v0 makes the
@@ -3199,8 +2328,7 @@ object Versioned {
     // committed (batchId ≤ recorded) is an exact re-delivery after a
     // checkpoint restore — skipping it IS the exactly-once contract
     val replay = txn.exists { case (appId, batchId) =>
-      prev.exists(p => lines(spark, dir, p).collectFirst {
-        case TxnEntry(b, a) if a == appId => b }.exists(batchId <= _))
+      prevSnap.exists(_.txns.get(appId).exists(batchId <= _))
     }
     if (replay) return None
     // the nonce makes the data dir unique PER ATTEMPT (Delta writes
@@ -3213,8 +2341,7 @@ object Versioned {
     // clearing for the retry, which gets a fresh nonce.
     // a partitioned chain stays partitioned the same way: appends with
     // a different (or no) spec would mix layouts one read can't serve
-    val prevPart = prev.flatMap(p =>
-      lines(spark, dir, p).collectFirst { case PartitionEntry(cs) => cs })
+    val prevPart = prevSnap.map(_.partitionCols).filter(_.nonEmpty)
     if (mode == SaveMode.Append && prev.nonEmpty) {
       val want = partitionBy.map(_.fieldNames.toSeq)
       require(prevPart == want,
@@ -3251,7 +2378,7 @@ object Versioned {
     // writeVersionWith callback that wrote a mapped LOGICAL name is
     // refused here (the union merge would otherwise record it as a
     // NEW column and its values would vanish from the logical view)
-    val chainMap = prev.map(p => colMapOf(lines(spark, dir, p))).getOrElse(Map.empty)
+    val chainMap = prevSnap.map(_.colMap).getOrElse(Map.empty)
     if (mode == SaveMode.Append && chainMap.nonEmpty) {
       dirSchema.fieldNames.find(n => chainMap.get(n).exists(_ != n)).foreach { n =>
         if (preWritten.isEmpty) fs.delete(dataPath, true)
@@ -3274,8 +2401,8 @@ object Versioned {
         .withMetadata(f.metadata).remove(GenerationKey)
         .remove(IdStartKey).remove(IdStepKey).remove(IdAllowKey).build())
     })
-    val newSchema0 = (mode, prev) match {
-      case (SaveMode.Append, Some(p)) => unionSchema(schemaOf(spark, dir, p), dirSchemaClean)
+    val newSchema0 = (mode, prevSnap) match {
+      case (SaveMode.Append, Some(p)) => unionSchema(schemaOf(spark, p), dirSchemaClean)
       case _                          => dirSchemaClean
     }
     // do the STAGED files carry the chain's physical names? Appends do
@@ -3292,9 +2419,9 @@ object Versioned {
     // prior fields (metadata included); a DATA overwrite re-attaches
     // them to its footer-derived fields here — only REPLACE TABLE
     // (replaceDefinition) starts without them
-    val newSchema = (mode, prev) match {
+    val newSchema = (mode, prevSnap) match {
       case (SaveMode.Overwrite, Some(p)) if !replaceDefinition =>
-        val priorMd = schemaOf(spark, dir, p).fields.map { f =>
+        val priorMd = schemaOf(spark, p).fields.map { f =>
           (if (stagedPhysical) f.name else invChain.getOrElse(f.name, f.name)) -> f.metadata
         }.toMap
         StructType(newSchema0.fields.map { f =>
@@ -3354,8 +2481,7 @@ object Versioned {
     // validating and carrying them.
     val activeConstraints =
       if (replaceDefinition) Seq.empty
-      else prev.toSeq.flatMap(p =>
-        lines(spark, dir, p).collect { case c: ConstraintEntry => c })
+      else prevSnap.toSeq.flatMap(_.constraints.map(ConstraintEntry.tupled))
     if (activeConstraints.nonEmpty) {
       import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
       def violates(c: ConstraintEntry) =
@@ -3408,8 +2534,7 @@ object Versioned {
     // untrusted footer (no null count) pays a scan of the new dir.
     val activeNotNull =
       if (replaceDefinition) Seq.empty
-      else prev.toSeq.flatMap(p =>
-        lines(spark, dir, p).collect { case n: NotNullEntry => n })
+      else prevSnap.toSeq.flatMap(_.notNull.map(NotNullEntry))
     if (activeNotNull.nonEmpty && rows > 0) {
       activeNotNull.foreach { nn =>
         // notnull lines are keyed PHYSICAL; a fresh overwrite's staged
@@ -3446,9 +2571,9 @@ object Versioned {
     }
     // table PROPERTIES are definition too: a data overwrite keeps
     // them, REPLACE TABLE resets them, appends carry inside prevLines
-    val carriedProps: Seq[Line] = (mode, prev) match {
+    val carriedProps: Seq[Line] = (mode, prevSnap) match {
       case (SaveMode.Overwrite, Some(p)) if !replaceDefinition =>
-        lines(spark, dir, p).collect { case pr: PropEntry => pr }
+        p.lines.filter(_.isInstanceOf[PropEntry])
       case _ => Seq.empty
     }
     // the mapping itself: appends carry it inside prevLines; a STAGED
@@ -3469,28 +2594,25 @@ object Versioned {
     // re-commit an already-committed epoch and duplicate rows — the
     // reason Delta retains SetTransaction app versions across commits.
     // Only the committing writer's own watermark is replaced (below).
-    val carriedTxns = (mode, prev) match {
+    val carriedTxns = (mode, prevSnap) match {
       case (SaveMode.Overwrite, Some(p)) =>
-        lines(spark, dir, p).collect {
-          case t: TxnEntry if !txn.exists(_._1 == t.appId) => t
-        }
+        p.lines.collect { case t: TxnEntry if !txn.exists(_._1 == t.appId) => t }
       case _ => Seq.empty
     }
     // the COPY INTO ledger is writer bookkeeping like txn watermarks:
     // a data overwrite keeps it (or a maintenance rewrite would
     // re-open the per-file exactly-once window); REPLACE TABLE resets
     // it with the definition; appends carry it inside prevLines
-    val carriedIngests: Seq[Line] = (mode, prev) match {
+    val carriedIngests: Seq[Line] = (mode, prevSnap) match {
       case (SaveMode.Overwrite, Some(p)) if !replaceDefinition =>
-        lines(spark, dir, p).collect { case i: IngestEntry => i }
+        p.lines.filter(_.isInstanceOf[IngestEntry])
       case _ => Seq.empty
     }
     // … and its protocol stamp rides with it (a feature flag carries
     // through a data overwrite exactly when its subject lines do)
-    val carriedFeatures: Seq[Line] = (mode, prev) match {
+    val carriedFeatures: Seq[Line] = (mode, prevSnap) match {
       case (SaveMode.Overwrite, Some(p)) if carriedIngests.nonEmpty =>
-        lines(spark, dir, p).collect {
-          case f: FeatureEntry if f.name.equalsIgnoreCase("ingest") => f }
+        p.features.filter(_._1.equalsIgnoreCase("ingest")).map(FeatureEntry.tupled)
       case _ => Seq.empty
     }
     // IDENTITY high-water marks: advance in the SAME atomic claim as
@@ -3506,9 +2628,8 @@ object Versioned {
     // legacy chains that declared INT before the refusal keep working
     // through prepareWrite's in-pass range guard
     idSpecsCore.foreach { spec =>
-      val preDeclared = (if (replaceDefinition) None else prev).exists(p =>
-        lines(spark, dir, p).exists {
-          case HwmEntry(c, _) => c.equalsIgnoreCase(spec.col); case _ => false })
+      val preDeclared =
+        (if (replaceDefinition) None else prevSnap).exists(_.hwm(spec.col).nonEmpty)
       require(preDeclared ||
           newSchema(spec.col).dataType == org.apache.spark.sql.types.LongType,
         s"identity column '${spec.col}' must be BIGINT, got " +
@@ -3516,10 +2637,8 @@ object Versioned {
           "distributed assignment's partition offsets mod 2³² into duplicate ids")
     }
     val hwmLines: Seq[Line] = idSpecsCore.map { spec =>
-      val base = (if (replaceDefinition) None else prev).flatMap(p =>
-        lines(spark, dir, p).collectFirst {
-          case HwmEntry(c, n) if c.equalsIgnoreCase(spec.col) => n
-        }).getOrElse(spec.start)
+      val base = (if (replaceDefinition) None else prevSnap).flatMap(_.hwm(spec.col))
+        .getOrElse(spec.start)
       val bounds: Option[(Long, Long)] =
         if (rows == 0) None
         else colStats.get(spec.col) match {
@@ -3539,8 +2658,8 @@ object Versioned {
       }
       HwmEntry(spec.col, next)
     }
-    val prevLines = (mode, prev) match {
-      case (SaveMode.Append, Some(p)) => lines(spark, dir, p).filterNot {
+    val prevLines = (mode, prevSnap) match {
+      case (SaveMode.Append, Some(p)) => p.lines.filterNot {
         case _: SchemaEntry => true
         case _: PartitionEntry => true // re-added fresh below
         // this writer's txn watermark is being replaced; other
@@ -3560,9 +2679,7 @@ object Versioned {
     // O(delta), only when the table opted in. A fresh overwrite
     // re-keys each declaration to the logical name like the NOT NULL
     // lines (the mapping drops).
-    val prevBloomDecls = prev.toSeq.flatMap(p =>
-        lines(spark, dir, p).collect { case b: BloomColEntry => b })
-      .filter(_ => !replaceDefinition)
+    val prevBloomDecls = prevSnap.toSeq.flatMap(_.bloomDecls).filter(_ => !replaceDefinition)
     val bloomDecls = prevBloomDecls.map { b =>
       if (stagedPhysical) b else BloomColEntry(invChain.getOrElse(b.col, b.col), b.bits)
     }.filter(b => newSchema.fieldNames.contains(b.col))
@@ -3596,7 +2713,7 @@ object Versioned {
     (mode, prev) match {
       case (SaveMode.Append, Some(p)) =>
         val ops = Seq.newBuilder[String]
-        if (!recordedSchema(spark, dir, p).contains(newSchema))
+        if (!prevSnap.get.schema.contains(newSchema))
           ops += addOp(SchemaEntry(newSchema))
         txn.foreach { case (a, b) => ops += addOp(TxnEntry(b, a)) }
         extraLines.foreach(l => ops += addOp(l))
@@ -3614,12 +2731,9 @@ object Versioned {
   /** A version's schema: the recorded one where present, else derived
     * ONCE from the data dirs via mergeSchema (legacy manifests — the
     * next commit records the union, upgrading the table in place). */
-  private def schemaOf(spark: SparkSession, dir: String, v: Int): StructType =
-    recordedSchema(spark, dir, v).getOrElse {
-      val dataDirs = lines(spark, dir, v).collect {
-        case DataEntry(n) => new Path(new Path(dir), n).toString }
-      asNullable(spark.read.option("mergeSchema", "true").parquet(dataDirs: _*).schema)
-    }
+  private def schemaOf(spark: SparkSession, snap: Snapshot): StructType =
+    snap.schema.getOrElse(asNullable(
+      spark.read.option("mergeSchema", "true").parquet(snap.dataDirs: _*).schema))
 
   /** Fully-nullable normalization, RECURSIVE: append chains null-
     * backfill at every nesting level, and the same logical type can
@@ -3710,7 +2824,7 @@ object Versioned {
       l.startsWith("rearrange:"))
     val parentTs =
       if (v == 0) None
-      else try lines(spark, dir, v - 1).collectFirst { case TsEntry(m) => m }
+      else try snapshot(spark, dir, v - 1).recordedTimestamp
       catch { case _: Exception => None }
     val ts = math.max(System.currentTimeMillis(), parentTs.fold(Long.MinValue)(_ + 1L))
     val stamped = body.headOption.filter(_.startsWith("parent:")) match {
@@ -3728,17 +2842,9 @@ object Versioned {
     // resurrect the old chain's file list. A v0 claim means the WHOLE
     // prior chain is gone — its higher versions may be cached too,
     // and a time-travel read would serve them without touching disk
-    if (v == 0) evictManifestCacheDir(spark, dir)
-    else evictManifestCache(spark, dir, Seq(v))
+    if (v == 0) Snapshot.evictDir(spark, dir)
+    else Snapshot.evict(spark, dir, Seq(v))
     ts
-  }
-
-  /** Drop every cached parse of any manifest under `dir` — the
-    * fresh-chain (v0) claim path. */
-  private def evictManifestCacheDir(spark: SparkSession, dir: String): Unit = {
-    val (fs, root) = fsFor(spark, dir)
-    val prefix = fs.makeQualified(new Path(root, VDIR)).toString + "/"
-    manifestCache.removeIf(_.startsWith(prefix))
   }
 
   /** Absolute paths of every dir the NEWEST version references — data
@@ -3746,13 +2852,8 @@ object Versioned {
     * retention pass must not reclaim; older versions' dirs coexist on
     * disk until pruned). */
   def liveDataDirs(spark: SparkSession, dir: String): Seq[String] = {
-    val v = requireLatest(spark, dir)
-    lines(spark, dir, v).collect {
-      case DataEntry(n)  => new Path(new Path(dir), n).toString
-      case DvEntry(_, n) => new Path(new Path(dir), n).toString
-      case ScopedDvEntry(_, n, _) => new Path(new Path(dir), n).toString
-      case PdvEntry(n)   => new Path(new Path(dir), n).toString
-    }
+    snapshot(spark, dir, requireLatest(spark, dir)).liveDirNames
+      .map(n => new Path(new Path(dir), n).toString)
   }
 
   /** Delta deletion vectors' role (public design: DELETE marks rows
@@ -3819,14 +2920,15 @@ object Versioned {
     // TRANSLATED name is re-validated: it is the one embedded in the
     // colon-delimited dv line (a physical name with ':' would parse
     // back as a different key + dir — refuse, never corrupt)
-    val keyCol = colMapOf(lines(spark, dir, prev)).getOrElse(keyCol0, keyCol0)
+    val snap = snapshot(spark, dir, prev)
+    val keyCol = snap.colMap.getOrElse(keyCol0, keyCol0)
     require(keyCol.matches("[A-Za-z0-9_]+"),
       s"the physical storage name '$keyCol' of '$keyCol0' is not word-shaped — " +
         "deletion vectors embed it in the line-based manifest; rewrite the column " +
         "(REPLACE TABLE AS SELECT) to a plain name first")
     // a scoped delete against a table with no data dirs masks nothing
     // (there are no "current rows"): nothing to commit
-    if (scoped && !lines(spark, dir, prev).exists(_.isInstanceOf[DataEntry]))
+    if (scoped && snap.dataDirNames.isEmpty)
       return prev
     val v = prev + 1
     // unique per attempt for the same racing-writer reason as
@@ -3858,11 +2960,9 @@ object Versioned {
     // snapshots the CURRENT data dirs: that is its statement-time
     // "rows that exist now".
     val dv: Line =
-      if (scoped) ScopedDvEntry(keyCol, dvDir,
-        lines(spark, dir, prev).collect { case DataEntry(n) => n })
+      if (scoped) ScopedDvEntry(keyCol, dvDir, snap.dataDirNames)
       else DvEntry(keyCol, dvDir)
-    commitChild(spark, dir, v, prev,
-      lines(spark, dir, prev) :+ dv, Seq(addOp(dv)), protocol)
+    commitChild(spark, dir, v, prev, snap.lines :+ dv, Seq(addOp(dv)), protocol)
     v
   }
 
@@ -3944,20 +3044,17 @@ object Versioned {
     import org.apache.spark.sql.functions.{col, expr, lit, when}
     val (fs, root) = fsFor(spark, dir)
     val prev = requireLatest(spark, dir)
-    val ls = lines(spark, dir, prev)
-    val schema = ls.collectFirst { case SchemaEntry(s) => s }.getOrElse(
+    val snap = snapshot(spark, dir, prev)
+    val schema = snap.schema.getOrElse(
       throw new IllegalStateException(
         s"positional DELETE at $dir needs a recorded schema — this manifest " +
           "predates the schema line; rewrite the table (INSERT OVERWRITE) to upgrade"))
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val dataDirs = ls.collect { case DataEntry(n) => n }
-    if (dataDirs.isEmpty) return None // no current rows: nothing to delete
-    require(dataDirs.forall(n => stats.get(n).exists(_.files.nonEmpty)),
+    if (snap.dataDirNames.isEmpty) return None // no current rows: nothing to delete
+    require(snap.fileListed,
       s"positional DELETE at $dir needs manifest file lists for every data dir — " +
         "run backfillStats to upgrade pre-file-list manifests")
     require(!schema.fieldNames.contains(PdvFileCol) && !schema.fieldNames.contains(PdvPosCol),
       s"positional DELETE reserves the column names $PdvFileCol/$PdvPosCol")
-    val cmap = colMapOf(ls)
     // the predicate in both forms: a Column for the row filter
     // (LOGICAL space — the scan renames physical→logical first) and
     // LOGICAL V1 conjuncts for the stats-based candidate-file prune
@@ -3986,11 +3083,11 @@ object Versioned {
     // candidate FILES from per-file stats (one-sided: a kept file may
     // still match nothing); no translatable conjunct → every file
     val cand: Map[String, Set[String]] =
-      rowLevelCandidateFiles(spark, dir, prev, logFilters).getOrElse(
-        dataDirs.map(d => d -> stats(d).files.map(_.name).toSet).toMap)
+      rowLevelCandidateFiles(spark, snap, logFilters).getOrElse(
+        snap.dataDirNames.map(d => d -> snap.fileNames(d)).toMap)
     if (cand.forall(_._2.isEmpty)) return None // stats exclude every file
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-    val subsetIndex = manifestPartitioningIndexSubset(spark, dir, prev, cand)
+    val partCols = snap.partitionCols
+    val subsetIndex = manifestPartitioningIndexSubset(spark, snap, cand)
     val dataSchema = StructType(schema.fields.filterNot(f => partCols.contains(f.name)))
     val raw = spark.baseRelationToDataFrame(
       org.apache.spark.sql.execution.datasources.HadoopFsRelation(
@@ -4005,7 +3102,7 @@ object Versioned {
       uriPathOfCol(col("_metadata.file_path")).as(PdvFileCol),
       col("_metadata.row_index").as(PdvPosCol))
     val fileCol = col(PdvFileCol)
-    val positions = toLogicalDf(withMeta, cmap)
+    val positions = toLogicalDf(withMeta, snap.colMap)
       .filter(predCol)
       .select(
         when(fileCol.startsWith(rootUri + "/"),
@@ -4037,17 +3134,12 @@ object Versioned {
     // feature — readers without pdv support then refuse by NAME
     // instead of by raw unknown-line fallthrough
     val feat: Seq[Line] =
-      if (ls.exists { case FeatureEntry(n, _) => n.equalsIgnoreCase("pdv")
-                      case _ => false }) Seq.empty
+      if (snap.hasFeature("pdv")) Seq.empty
       else Seq(FeatureEntry("pdv", required = true))
-    commitChild(spark, dir, v, prev, (ls ++ feat) :+ pdv,
+    commitChild(spark, dir, v, prev, (snap.lines ++ feat) :+ pdv,
       feat.map(addOp) :+ addOp(pdv), protocol)
     Some(v)
   }
-
-  /** The protocol features version `v` declares, as (name, required). */
-  def tableFeatures(spark: SparkSession, dir: String, v: Int): Seq[(String, Boolean)] =
-    lines(spark, dir, v).collect { case FeatureEntry(n, r) => (n, r) }
 
   /** Delta `ALTER TABLE … DROP FEATURE`'s role: retire a protocol
     * feature declaration so pre-feature readers can serve the table
@@ -4062,23 +3154,22 @@ object Versioned {
                        maxAttempts: Int = 16): Option[Int] =
     withCommitRetry(maxAttempts) { () =>
       val prev = requireLatest(spark, dir)
-      val ls = lines(spark, dir, prev)
-      if (!ls.exists { case FeatureEntry(n, _) => n.equalsIgnoreCase(feature)
-                       case _ => false }) return None
+      val snap = snapshot(spark, dir, prev)
+      if (!snap.hasFeature(feature)) return None
       if (feature.equalsIgnoreCase("pdv"))
-        require(!ls.exists(_.isInstanceOf[PdvEntry]),
+        require(snap.posDvs.isEmpty,
           s"cannot drop feature 'pdv' at $dir: positional deletion vectors are " +
             "still live — apply them physically first (compact, or INSERT " +
             "OVERWRITE the masked read), then drop the feature")
       if (feature.equalsIgnoreCase("ingest"))
-        require(!ls.exists(_.isInstanceOf[IngestEntry]),
+        require(snap.ingested.isEmpty,
           s"cannot drop feature 'ingest' at $dir: the COPY INTO ledger is " +
             "still live — forgetIngestHistory first (re-runs would then " +
             "re-load every source file), then drop the feature")
       val v = prev + 1
       commitChild(spark, dir, v, prev,
-        ls.filterNot { case FeatureEntry(n, _) => n.equalsIgnoreCase(feature)
-                       case _ => false },
+        snap.lines.filterNot { case FeatureEntry(n, _) => n.equalsIgnoreCase(feature)
+                               case _ => false },
         Seq(s"-feature:$feature"), protocol)
       Some(v)
     }
@@ -4111,11 +3202,12 @@ object Versioned {
     withCommitRetry(maxAttempts) { () =>
       val (fs, root) = fsFor(spark, dir)
       val prev = requireLatest(spark, dir)
-      val prevLines = lines(spark, dir, prev)
+      val snap = snapshot(spark, dir, prev)
+      val prevLines = snap.lines
       val dvByKey = prevLines.collect { case e: DvEntry => e }
         .groupBy(_.keyCol).toSeq.sortBy(_._1)
-      val liveDirs = prevLines.collect { case DataEntry(n) => n }
-      val scopedAll = prevLines.collect { case e: ScopedDvEntry => e }
+      val liveDirs = snap.dataDirNames
+      val scopedAll = snap.scopedDvEntries
       // one group per (key column, distinct coverage): every live dir
       // in the group is masked by exactly the same scoped dvs, so one
       // merged dv with keys = their union and scope = the group's dirs
@@ -4208,17 +3300,13 @@ object Versioned {
     * that predate the file-list format and for dv dirs (which carry
     * no stats line; their key sets are tiny). */
   private[ext] def liveFiles(spark: SparkSession, dir: String): Seq[(String, Long)] = {
-    val v = requireLatest(spark, dir)
-    val ls = lines(spark, dir, v)
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
+    val snap = snapshot(spark, dir, requireLatest(spark, dir))
     def abs(name: String) = new Path(new Path(dir), name).toString
-    val (listed, toList) = ls.collect {
-      case DataEntry(n)  => (n, true)
-      case DvEntry(_, n) => (n, false)
-    }.partition { case (n, isData) => isData && stats.get(n).exists(_.files.nonEmpty) }
-    listed.flatMap { case (n, _) =>
-      stats(n).files.map(f => (new Path(new Path(abs(n)), f.name).toString, f.bytes))
-    } ++ CommitFiles.parquetUnder(spark, toList.map { case (n, _) => abs(n) })
+    val (listed, unlisted) =
+      snap.dataDirNames.partition(n => snap.stats.get(n).exists(_.files.nonEmpty))
+    listed.flatMap { n =>
+      snap.stats(n).files.map(f => (new Path(new Path(abs(n)), f.name).toString, f.bytes))
+    } ++ CommitFiles.parquetUnder(spark, unlisted.map(abs) ++ snap.dvDirs.flatMap(_._2))
   }
 
   /** Delta `DESCRIBE HISTORY`'s role: one row per committed version,
@@ -4236,38 +3324,23 @@ object Versioned {
     val (fs, _) = fsFor(spark, dir)
     import spark.implicits._
     versions(spark, dir).map { v =>
-      val ls = lines(spark, dir, v)
-      val dataDirs = ls.collect { case DataEntry(n) => n }
-      val stats = ls.collect { case s: StatsEntry => s.name -> s.rows }.toMap
-      val rows = if (dataDirs.forall(stats.contains)) Some(dataDirs.map(stats).sum)
-        else None
+      val snap = snapshot(spark, dir, v)
       (v,
-        new java.sql.Timestamp(commitTimestamp(spark, dir, v)),
-        dataDirs.length,
-        ls.count(l => l.isInstanceOf[DvEntry] || l.isInstanceOf[ScopedDvEntry] ||
-          l.isInstanceOf[PdvEntry]),
-        ls.collectFirst { case SchemaEntry(s) => s.fields.length },
-        rows,
-        ls.exists(_.isInstanceOf[RearrangeEntry]))
+        new java.sql.Timestamp(snap.commitTimestamp),
+        snap.dataDirNames.length,
+        snap.dvSnapshot.length,
+        snap.schema.map(_.fields.length),
+        snap.sizeStats.map(_._1),
+        snap.isRearrange)
     }.toDF("version", "committed_at", "n_data_dirs", "n_dv_dirs", "n_columns",
       "n_rows", "rearranged")
   }
 
-  /** One version's commit clock: the RECORDED in-commit timestamp
-    * (`ts:` line — survives object-store copies, restores, clones,
-    * and is monotone by construction), falling back to the manifest
-    * file's modification time only for manifests that predate the
-    * line. */
-  def commitTimestamp(spark: SparkSession, dir: String, v: Int): Long =
-    lines(spark, dir, v).collectFirst { case TsEntry(m) => m }.getOrElse {
-      val (fs, _) = fsFor(spark, dir)
-      fs.getFileStatus(manifestPath(dir, v)).getModificationTime
-    }
-
-  /** The newest version whose commit clock is at or before `tsMillis`
-    * — `TIMESTAMP AS OF` resolution over [[commitTimestamp]]. */
+  /** The newest version whose commit clock
+    * ([[Snapshot.commitTimestamp]]) is at or before `tsMillis` —
+    * `TIMESTAMP AS OF` resolution. */
   def versionAsOfTimestamp(spark: SparkSession, dir: String, tsMillis: Long): Option[Int] =
-    versions(spark, dir).filter(v => commitTimestamp(spark, dir, v) <= tsMillis)
+    versions(spark, dir).filter(v => snapshot(spark, dir, v).commitTimestamp <= tsMillis)
       .lastOption
 
   /** Upgrade a pre-round-8 table to the full skipping/schema read path
@@ -4285,31 +3358,28 @@ object Versioned {
     withCommitRetry(maxAttempts) { () =>
       val (_, root) = fsFor(spark, dir)
       val prev = requireLatest(spark, dir)
-      val ls = lines(spark, dir, prev)
-      val stats = ls.collect { case s: StatsEntry => s.name -> s }.toMap
+      val snap = snapshot(spark, dir, prev)
+      val stats = snap.stats
       // candidates: dirs with no stats line at all, a stats line from
       // before the file-list format (empty files), or file lists from
       // before the per-FILE-stats format (entries without row counts)
       // — each re-harvests so the newest read path can engage
-      val candidates = ls.collect {
-        case DataEntry(n) if stats.get(n).forall(st =>
-          st.files.isEmpty || st.files.exists(_.rows.isEmpty)) => n }
-      val hasSchema = ls.exists(_.isInstanceOf[SchemaEntry])
+      val candidates = snap.dataDirNames.filter(n => stats.get(n).forall(st =>
+        st.files.isEmpty || st.files.exists(_.rows.isEmpty)))
       // a partitioned chain harvests recursively with its partition
       // spec — the flat harvest would record an empty file list and
       // DOWNGRADE the entry (partitioned reads require file lists)
-      val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }
       val harvested = candidates.map { n =>
         val p = new Path(root, n)
-        val (rows, cols, dirFiles) = partCols match {
-          case Some(cs) =>
-            val full = schemaOf(spark, dir, prev)
+        val (rows, cols, dirFiles) =
+          if (snap.partitionCols.nonEmpty) {
+            val full = schemaOf(spark, snap)
             Skipping.collectDirStatsPartitioned(spark, p, full,
-              StructType(cs.map(c => full(c))))
-          case None =>
+              StructType(snap.partitionCols.map(c => full(c))))
+          } else {
             val dirSchema = asNullable(spark.read.parquet(p.toString).schema)
             Skipping.collectDirStats(spark, p, dirSchema)
-        }
+          }
         StatsEntry(n, rows, cols, dirFiles)
       }
       // idempotence: a nested-layout dir (no top-level files) harvests
@@ -4318,13 +3388,13 @@ object Versioned {
       // stats themselves, not the serialization)
       val changed = harvested.exists(h => !stats.get(h.name)
         .exists(p => (p.rows, p.cols, p.files) == (h.rows, h.cols, h.files)))
-      if (!changed && hasSchema) None
+      if (!changed && snap.schema.nonEmpty) None
       else {
         val v = prev + 1
-        val schema = schemaOf(spark, dir, prev) // derives once when absent
+        val schema = schemaOf(spark, snap) // derives once when absent
         val externalized = externalizeStats(spark, dir, harvested)
         val replaced = harvested.map(_.name).toSet
-        val kept = ls.filterNot {
+        val kept = snap.lines.filterNot {
           case _: SchemaEntry => true
           case st: StatsEntry => replaced.contains(st.name)
           case _              => false
@@ -4348,7 +3418,7 @@ object Versioned {
     * with the old plan-time cost, until their next commit records the
     * union. */
   def readVersion(spark: SparkSession, dir: String, v: Int): DataFrame =
-    readVersionFrom(spark, dir, lines(spark, dir, v), dataFilter = _ => true)
+    readVersionFrom(spark, snapshot(spark, dir, v), _ => true)
 
   /** [[readVersion]] with manifest-level data skipping: dirs whose
     * recorded min/max/null stats PROVE no row can satisfy `filters`
@@ -4361,22 +3431,19 @@ object Versioned {
     * (legacy) are always read. */
   def readVersionSkipping(spark: SparkSession, dir: String, v: Int,
                           filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
-    val ls = lines(spark, dir, v)
+    val snap = snapshot(spark, dir, v)
     // filters arrive in LOGICAL names; the stats are keyed physical —
     // rekey the stats once instead of rewriting every filter tree
-    val cmap = colMapOf(ls)
-    val schema = ls.collectFirst { case SchemaEntry(s) => toLogicalSchema(s, cmap) }
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val keep: String => Boolean = name => stats.get(name) match {
-      case Some(st) if schema.nonEmpty =>
-        !filters.exists(f =>
-          Skipping.excludes(st.rows, rekeyToLogical(st.cols, cmap), schema.get, f))
+    val keep: String => Boolean = name => snap.stats.get(name) match {
+      case Some(st) if snap.schema.nonEmpty =>
+        !filters.exists(f => Skipping.excludes(st.rows,
+          rekeyToLogical(st.cols, snap.colMap), snap.logicalSchema.get, f))
       case _ => true
     }
     val pred = filters.map(Skipping.toColumn)
       .reduceOption(_ && _)
-    pred.fold(readVersionFrom(spark, dir, ls, keep))(p =>
-      readVersionFrom(spark, dir, ls, keep).filter(p))
+    pred.fold(readVersionFrom(spark, snap, keep))(p =>
+      readVersionFrom(spark, snap, keep).filter(p))
   }
 
   /** The dirs a skipping read of version `v` would plan — exposed so
@@ -4384,20 +3451,17 @@ object Versioned {
     * prune without running the query. */
   private[graft] def planDataDirs(spark: SparkSession, dir: String, v: Int,
                                   filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
-    val ls = lines(spark, dir, v)
-    val cmap = colMapOf(ls)
-    val schema = ls.collectFirst { case SchemaEntry(s) => toLogicalSchema(s, cmap) }
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
+    val snap = snapshot(spark, dir, v)
+    val schema = snap.logicalSchema
     // a predicate on the SOURCE of a generated partition column
     // derives a partition predicate — skipping-only, never re-applied
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
     val all = filters ++ schema.toSeq.flatMap(s =>
-      Skipping.derivePartitionFilters(spark, s, partCols, filters))
-    ls.collect { case DataEntry(n) => n }.filter { name =>
-      stats.get(name) match {
+      Skipping.derivePartitionFilters(spark, s, snap.partitionCols, filters))
+    snap.dataDirNames.filter { name =>
+      snap.stats.get(name) match {
         case Some(st) if schema.nonEmpty =>
           !all.exists(f =>
-            Skipping.excludes(st.rows, rekeyToLogical(st.cols, cmap), schema.get, f))
+            Skipping.excludes(st.rows, rekeyToLogical(st.cols, snap.colMap), schema.get, f))
         case _ => true
       }
     }
@@ -4410,29 +3474,25 @@ object Versioned {
     * a surviving dir. Returns `dirName/fileName` relative paths. */
   private[graft] def planDataFiles(spark: SparkSession, dir: String, v: Int,
                                    filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
-    val ls = lines(spark, dir, v)
-    val cmap = colMapOf(ls)
-    val inv = cmap.map(_.swap)
-    val schema = ls.collectFirst { case SchemaEntry(s) => toLogicalSchema(s, cmap) }
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
+    val snap = snapshot(spark, dir, v)
+    val cmap = snap.colMap
+    val schema = snap.logicalSchema
     // declared bloom columns (LOGICAL names for matching the filters)
     // + the per-(col, dir) blobs: the point-lookup prune bounds
     // cannot do — every declared column gets its own consultation
-    val bloomColsHere = ls.collect { case BloomColEntry(c, _) => inv.getOrElse(c, c) -> c }
-    val blooms = ls.collect { case b: BloomEntry => (b.col, b.dir) -> b.files }.toMap
+    val bloomColsHere = snap.bloomColumns.map(_._1).zip(snap.bloomDecls.map(_.col))
     def bloomKeeps(dirName: String, fileName: String): Boolean =
       bloomColsHere.forall { case (logicalC, physC) =>
-        blooms.get((physC, dirName)).flatMap(_.get(fileName)).forall(bits =>
+        snap.blooms.get((physC, dirName)).flatMap(_.get(fileName)).forall(bits =>
           !filters.exists(flt => Bloom.excludes(flt, logicalC, bits)))
       }
     // derived generated-partition filters prune FILES too (each file
     // carries its partition values as point stats)
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
     val all = filters ++ schema.toSeq.flatMap(s =>
-      Skipping.derivePartitionFilters(spark, s, partCols, filters))
+      Skipping.derivePartitionFilters(spark, s, snap.partitionCols, filters))
     val keptDirs = planDataDirs(spark, dir, v, filters)
     keptDirs.flatMap { name =>
-      stats.get(name) match {
+      snap.stats.get(name) match {
         case Some(st) if schema.nonEmpty && st.files.nonEmpty =>
           st.files.filter(f => (f.rows.isEmpty ||
               !all.exists(flt => Skipping.excludes(f.rows.get,
@@ -4452,35 +3512,35 @@ object Versioned {
     * union. Dirs committed after a scoped delete are in no scope —
     * the SQL DELETE semantics the scope exists for. Typical shape:
     * one scoped delete → two groups → two manifest-planned scans. */
-  private def readVersionFrom(spark: SparkSession, dir: String, ls: Seq[Line],
-                              dataFilter: String => Boolean): DataFrame = {
-    val scoped = ls.collect { case s: ScopedDvEntry => s }
-    if (scoped.isEmpty) return readVersionPlain(spark, dir, ls, dataFilter)
-    val plain = ls.filterNot(_.isInstanceOf[ScopedDvEntry])
-    val dataEntries = plain.collect { case DataEntry(n) if dataFilter(n) => n }
-    val groups = dataEntries
+  private def readVersionFrom(spark: SparkSession, snap: Snapshot,
+                              keep: String => Boolean): DataFrame = {
+    val dataNames = snap.dataDirNames.filter(keep)
+    val scoped = snap.scopedDvEntries
+    if (scoped.isEmpty) return readVersionPlain(spark, snap, dataNames, snap.dvDirs)
+    val groups = dataNames
       .groupBy(n => scoped.filter(_.scope.contains(n)))
       .toSeq.sortBy(_._1.map(_.name).mkString(","))
-    if (groups.isEmpty) return readVersionPlain(spark, dir, plain, _ => false)
+    if (groups.isEmpty) return readVersionPlain(spark, snap, Seq.empty, snap.dvDirs)
+    // a scoped dv inside its scope masks exactly like a plain one
+    val plainMasks = snap.dvDirs.flatMap { case (k, ds) => ds.map(k -> _) }
     groups.map { case (applicable, dirs) =>
-      val dirSet = dirs.toSet
-      val subLs = plain.filter {
-        case DataEntry(n) => dirSet.contains(n)
-        case _ => true
-      } ++ applicable.map(s => DvEntry(s.keyCol, s.name))
-      readVersionPlain(spark, dir, subLs, _ => true)
+      val masks = (plainMasks ++ applicable.map(s =>
+          (s.keyCol, new Path(new Path(snap.dir), s.name).toString)))
+        .groupBy(_._1).toSeq.sortBy(_._1).map { case (k, xs) => (k, xs.map(_._2)) }
+      readVersionPlain(spark, snap, dirs, masks)
     }.reduce(_.unionByName(_))
   }
 
-  private def readVersionPlain(spark: SparkSession, dir: String, ls: Seq[Line],
-                               dataFilter: String => Boolean): DataFrame = {
+  /** One manifest-planned scan of `dataEntries` (dir names of `snap`),
+    * minus the key-set masks `keyMasks` (key column → absolute dv
+    * dirs) and the version's positional masks. */
+  private def readVersionPlain(spark: SparkSession, snap: Snapshot, dataEntries: Seq[String],
+                               keyMasks: Seq[(String, Seq[String])]): DataFrame = {
+    val dir = snap.dir
     def abs(name: String) = new Path(new Path(dir), name).toString
-    val recorded = ls.collectFirst { case SchemaEntry(s) => s }
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }
-    val dataEntries = ls.collect { case DataEntry(n) if dataFilter(n) => n }
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val fileListed = dataEntries.flatMap(n => stats.get(n).filter(_.files.nonEmpty))
-    val base = recorded match {
+    val partCols = snap.partitionCols
+    val fileListed = dataEntries.flatMap(n => snap.stats.get(n).filter(_.files.nonEmpty))
+    val base = snap.schema match {
       case Some(s) if dataEntries.isEmpty =>
         // every dir provably excluded: the empty relation, schema intact
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
@@ -4491,17 +3551,15 @@ object Versioned {
         // which regroups files by their recorded partition values and
         // lets Spark's reader re-attach them — plus PartitionFilters
         // pruning at plan time, from manifest bytes
-        val names = partCols.get
         require(fileListed.length == dataEntries.length,
           s"partitioned versioned read at $dir needs manifest file lists for every " +
             "data dir — run backfillStats to upgrade pre-file-list manifests")
-        val partSchema = StructType(names.map(n => s(n)))
-        val dataSchema = StructType(s.fields.filterNot(f => names.contains(f.name)))
+        val partSchema = StructType(partCols.map(n => s(n)))
+        val dataSchema = StructType(s.fields.filterNot(f => partCols.contains(f.name)))
         spark.baseRelationToDataFrame(
           org.apache.spark.sql.execution.datasources.HadoopFsRelation(
             new ManifestFileIndex(new Path(dir), s, fileListed, partSchema,
-              bloomCols = ls.collect { case BloomColEntry(c, _) => c },
-              blooms = ls.collect { case b: BloomEntry => (b.col, b.dir) -> b.files }.toMap),
+              bloomCols = snap.bloomDecls.map(_.col), blooms = snap.blooms),
             partSchema, dataSchema, None,
             new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
             Map.empty)(spark))
@@ -4515,8 +3573,7 @@ object Versioned {
         spark.baseRelationToDataFrame(
           org.apache.spark.sql.execution.datasources.HadoopFsRelation(
             new ManifestFileIndex(new Path(dir), s, fileListed,
-              bloomCols = ls.collect { case BloomColEntry(c, _) => c },
-              blooms = ls.collect { case b: BloomEntry => (b.col, b.dir) -> b.files }.toMap),
+              bloomCols = snap.bloomDecls.map(_.col), blooms = snap.blooms),
             org.apache.spark.sql.types.StructType(Nil), s, None,
             new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
             Map.empty)(spark))
@@ -4529,21 +3586,18 @@ object Versioned {
     // mask. The metadata columns attach at the RELATION (they do not
     // resolve past arbitrary plans), the subtraction is one left-anti
     // join against the small (file, pos) set, broadcast by size.
-    val pdvDirs = ls.collect { case PdvEntry(n) => abs(n) }
+    val pdvDirs = snap.posDvs
     val base1 =
       if (pdvDirs.isEmpty || dataEntries.isEmpty) base
       else base.select(org.apache.spark.sql.functions.col("*"),
         uriPathOfCol(org.apache.spark.sql.functions.col("_metadata.file_path"))
           .as(PdvFileCol),
         org.apache.spark.sql.functions.col("_metadata.row_index").as(PdvPosCol))
-    val masked = ls.collect { case DvEntry(k, n) => (k, abs(n)) }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .foldLeft(base1) { case (df, (k, dvs)) =>
-        df.join(
-          readParquetNoInfer(spark, dvs.map(_._2))
-            .select(org.apache.spark.sql.functions.col(k)).distinct(),
-          Seq(k), "left_anti")
-      }
+    val masked = keyMasks.foldLeft(base1) { case (df, (k, dvs)) =>
+      df.join(
+        readParquetNoInfer(spark, dvs).select(org.apache.spark.sql.functions.col(k)).distinct(),
+        Seq(k), "left_anti")
+    }
     val posMasked =
       if (pdvDirs.isEmpty || dataEntries.isEmpty) masked
       else {
@@ -4561,7 +3615,7 @@ object Versioned {
     // file index, stats, dv keys) ran in physical name space; the
     // final aliasing Project serves the logical names, and pushdown
     // through it translates user predicates back to physical for free
-    toLogicalDf(posMasked, colMapOf(ls))
+    toLogicalDf(posMasked, snap.colMap)
   }
 
   /** Temp column names the positional-mask join attaches; refused as
@@ -4615,41 +3669,6 @@ object Versioned {
     when(c.startsWith("/"), c).otherwise(concat(lit(rootUri + "/"), c))
   }
 
-  /** Everything the SQL catalog needs to plan one version: the
-    * recorded schema (None for pre-schema manifests → mergeSchema
-    * fallback), the absolute data dirs, and the deletion vectors
-    * grouped by key column. */
-  private[graft] final case class VersionInfo(schema: Option[StructType],
-                                              dataDirs: Seq[String],
-                                              dvDirs: Seq[(String, Seq[String])],
-                                              partitionCols: Seq[String] = Seq.empty,
-                                              // (keyCol, absolute dv dir, scoped data-dir NAMES)
-                                              scopedDvs: Seq[(String, String, Set[String])] =
-                                                Seq.empty,
-                                              // absolute POSITIONAL dv dirs ((_file,_pos) parquet)
-                                              posDvs: Seq[String] = Seq.empty,
-                                              notNull: Seq[String] = Seq.empty,
-                                              // logical→physical; EVERYTHING else in
-                                              // this struct is raw PHYSICAL names —
-                                              // the consumer translates where it
-                                              // serves users (the SQL catalog's load)
-                                              colMap: Map[String, String] = Map.empty)
-
-  private[graft] def versionInfo(spark: SparkSession, dir: String, v: Int): VersionInfo = {
-    val ls = lines(spark, dir, v)
-    def abs(n: String) = new Path(new Path(dir), n).toString
-    VersionInfo(
-      ls.collectFirst { case SchemaEntry(s) => s },
-      ls.collect { case DataEntry(n) => abs(n) },
-      ls.collect { case DvEntry(k, n) => (k, abs(n)) }.groupBy(_._1).toSeq
-        .sortBy(_._1).map { case (k, xs) => (k, xs.map(_._2)) },
-      ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty),
-      ls.collect { case ScopedDvEntry(k, n, sc) => (k, abs(n), sc.toSet) },
-      ls.collect { case PdvEntry(n) => abs(n) },
-      ls.collect { case NotNullEntry(c) => c },
-      colMapOf(ls))
-  }
-
   /** One data dir's weight for streaming admission control. */
   private[graft] final case class DirAdmission(absDir: String, files: Long, bytes: Long)
 
@@ -4664,23 +3683,13 @@ object Versioned {
     * (the atomicity unit), so it is also the admission unit. */
   private[graft] def dirAdmission(spark: SparkSession, dir: String, v: Int)
       : IndexedSeq[DirAdmission] = {
-    val ls = lines(spark, dir, v)
-    def abs(n: String) = new Path(new Path(dir), n).toString
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    ls.collect { case DataEntry(n) =>
-      val (f, b) = stats.get(n).filter(_.files.nonEmpty)
+    val snap = snapshot(spark, dir, v)
+    snap.dataDirNames.zip(snap.dataDirs).map { case (n, a) =>
+      val (f, b) = snap.stats.get(n).filter(_.files.nonEmpty)
         .map(e => (e.files.size.toLong, e.files.map(_.bytes).sum))
         .getOrElse((1L, 0L))
-      DirAdmission(abs(n), f, b)
+      DirAdmission(a, f, b)
     }.toIndexedSeq
-  }
-
-  /** The enforced NOT NULL columns of a version, in manifest order,
-    * under their LOGICAL names (the lines store the physical ones). */
-  def notNullColumns(spark: SparkSession, dir: String, v: Int): Seq[String] = {
-    val ls = lines(spark, dir, v)
-    val inv = colMapOf(ls).map(_.swap)
-    ls.collect { case NotNullEntry(c) => inv.getOrElse(c, c) }
   }
 
   /** A SUBSET of version `v`'s data dirs (absolute paths), read
@@ -4694,11 +3703,8 @@ object Versioned {
   private[graft] def readVersionDirs(spark: SparkSession, dir: String, v: Int,
                                      keepAbs: Set[String],
                                      applyDv: Boolean): DataFrame = {
-    val ls0 = lines(spark, dir, v)
-    val ls = if (applyDv) ls0
-      else ls0.filterNot(l => l.isInstanceOf[DvEntry] || l.isInstanceOf[ScopedDvEntry] ||
-        l.isInstanceOf[PdvEntry])
-    readVersionFrom(spark, dir, ls,
+    val snap = snapshot(spark, dir, v)
+    readVersionFrom(spark, if (applyDv) snap else snap.withoutMasks,
       n => keepAbs.contains(new Path(new Path(dir), n).toString))
   }
 
@@ -4710,22 +3716,17 @@ object Versioned {
     * file-list format (caller falls back to the listing tier until
     * `backfillStats` upgrades the table); partitioned manifests always
     * carry file lists, so a missing list there is an error. */
-  private[graft] def manifestPartitioningIndex(spark: SparkSession, dir: String, v: Int)
+  private[graft] def manifestPartitioningIndex(spark: SparkSession, snap: Snapshot)
       : Option[org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex] = {
-    val ls = lines(spark, dir, v)
-    val schema = ls.collectFirst { case SchemaEntry(s) => s }.getOrElse(
-      throw new IllegalStateException(s"no recorded schema at $dir v$v"))
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val dataDirs = ls.collect { case DataEntry(n) => n }
-    if (!dataDirs.forall(n => stats.get(n).exists(_.files.nonEmpty))) {
-      if (partCols.nonEmpty) throw new IllegalStateException(
-        s"partitioned read at $dir needs manifest file lists — run backfillStats")
+    val schema = snap.schema.getOrElse(
+      throw new IllegalStateException(s"no recorded schema at ${snap.dir} v${snap.version}"))
+    if (!snap.fileListed) {
+      if (snap.partitionCols.nonEmpty) throw new IllegalStateException(
+        s"partitioned read at ${snap.dir} needs manifest file lists — run backfillStats")
       None
-    } else Some(new ManifestPartitioningIndex(spark, new Path(dir), schema,
-      StructType(partCols.map(c => schema(c))), dataDirs.map(stats),
-      bloomCols = ls.collect { case BloomColEntry(c, _) => c },
-      blooms = ls.collect { case b: BloomEntry => (b.col, b.dir) -> b.files }.toMap))
+    } else Some(new ManifestPartitioningIndex(spark, new Path(snap.dir), schema,
+      StructType(snap.partitionCols.map(c => schema(c))), snap.dataDirNames.map(snap.stats),
+      bloomCols = snap.bloomDecls.map(_.col), blooms = snap.blooms))
   }
 
   /** The files of version `v` a row-level rewrite of `filters` must
@@ -4734,18 +3735,14 @@ object Versioned {
     * is included), as dirName → file names. None when any data dir
     * lacks a manifest file list (legacy tier — the caller falls back
     * to the whole-table group) or when no filter was pushed at all. */
-  private[graft] def rowLevelCandidateFiles(spark: SparkSession, dir: String, v: Int,
+  private[graft] def rowLevelCandidateFiles(spark: SparkSession, snap: Snapshot,
                                             filters: Seq[org.apache.spark.sql.sources.Filter])
       : Option[Map[String, Set[String]]] = {
-    if (filters.isEmpty) return None
-    val ls = lines(spark, dir, v)
-    if (ls.collectFirst { case SchemaEntry(s) => s }.isEmpty) return None
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val dataDirs = ls.collect { case DataEntry(n) => n }
     // files recorded without per-file bounds are still sound: the
     // prune keeps them as candidates (one-sided), they just rewrite
-    if (!dataDirs.forall(n => stats.get(n).exists(_.files.nonEmpty))) return None
-    val kept = planDataFiles(spark, dir, v, filters)
+    if (filters.isEmpty || snap.schema.isEmpty || !snap.fileListed) return None
+    val dataDirs = snap.dataDirNames
+    val kept = planDataFiles(spark, snap.dir, snap.version, filters)
     // split each `dirName/fileName` at the DIR-NAME boundary, not the
     // first '/': cloned refs are absolute (slashes inside the name)
     // and hive file entries carry subpaths (slashes inside the file)
@@ -4767,12 +3764,12 @@ object Versioned {
     * Returns dirName → file names; empty when nothing matches. */
   private[graft] def partitionScopedFiles(spark: SparkSession, dir: String, v: Int,
                                           predicateSql: String): Map[String, Set[String]] = {
-    val ls = lines(spark, dir, v)
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
+    val snap = snapshot(spark, dir, v)
+    val partCols = snap.partitionCols
     require(partCols.nonEmpty,
       s"partition-scoped file selection needs a PARTITIONED chain; $dir has no " +
         "partition spec — the unscoped maintenance call rewrites the whole table")
-    val schema = ls.collectFirst { case SchemaEntry(s) => s }.getOrElse(
+    val schema = snap.schema.getOrElse(
       throw new IllegalStateException(s"no recorded schema at $dir v$v"))
     val parsed = spark.sessionState.sqlParser.parseExpression(predicateSql)
     val refs = parsed.collect {
@@ -4783,16 +3780,14 @@ object Versioned {
       s"partition-scoped maintenance takes a predicate over the partition columns " +
         s"(${partCols.mkString(", ")}) only; got '$predicateSql' referencing " +
         s"${refs.mkString(", ")}")
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val dataDirs = ls.collect { case DataEntry(n) => n }
-    require(dataDirs.forall(n => stats.get(n).exists(_.files.nonEmpty)),
+    require(snap.fileListed,
       s"partition-scoped selection at $dir needs manifest file lists for every " +
         "data dir — run backfillStats to upgrade pre-file-list manifests")
     val partSchema = StructType(partCols.map(c => schema(c)))
     def keyOf(f: FileStats): Seq[Option[String]] =
       partCols.map(c => f.cols.get(c).flatMap(_.min))
     val byKey: Seq[(Seq[Option[String]], Seq[(String, String)])] =
-      dataDirs.flatMap(d => stats(d).files.map(f => (keyOf(f), (d, f.name))))
+      snap.dataDirNames.flatMap(d => snap.stats(d).files.map(f => (keyOf(f), (d, f.name))))
         .groupBy(_._1).toSeq.map { case (k, xs) => (k, xs.map(_._2)) }
     // canonical stats string → the EXTERNAL value the local relation
     // row wants (null partition value stays null → predicate NULL →
@@ -4831,13 +3826,11 @@ object Versioned {
     * manifest file lists (backfillStats upgrades legacy chains). */
   private[graft] def allLiveFilesMap(spark: SparkSession, dir: String,
                                      v: Int): Map[String, Set[String]] = {
-    val ls = lines(spark, dir, v)
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val dataDirs = ls.collect { case DataEntry(n) => n }
-    require(dataDirs.forall(n => stats.get(n).exists(_.files.nonEmpty)),
+    val snap = snapshot(spark, dir, v)
+    require(snap.fileListed,
       s"whole-table file selection at $dir needs manifest file lists for every " +
         "data dir — run backfillStats to upgrade pre-file-list manifests")
-    dataDirs.map(d => d -> stats(d).files.map(_.name).toSet).toMap
+    snap.dataDirNames.map(d => d -> snap.fileNames(d)).toMap
   }
 
   /** SHOW PARTITIONS from manifest bytes: one entry per live
@@ -4846,14 +3839,12 @@ object Versioned {
     * Driver-sized: one row per partition, never per file. */
   private[graft] def partitionSummary(spark: SparkSession, dir: String, v: Int)
       : Seq[(String, Int, Long, Long)] = {
-    val ls = lines(spark, dir, v)
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
+    val snap = snapshot(spark, dir, v)
+    val partCols = snap.partitionCols
     require(partCols.nonEmpty, s"$dir is not partitioned — use detail for table totals")
-    val schema = ls.collectFirst { case SchemaEntry(s) => s }.getOrElse(
+    val schema = snap.schema.getOrElse(
       throw new IllegalStateException(s"no recorded schema at $dir v$v"))
-    val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-    val dataDirs = ls.collect { case DataEntry(n) => n }
-    require(dataDirs.forall(n => stats.get(n).exists(_.files.nonEmpty)),
+    require(snap.fileListed,
       s"partition summary at $dir needs manifest file lists — run backfillStats")
     def render(tuple: Seq[Option[String]]): String =
       partCols.zip(tuple).map {
@@ -4867,7 +3858,7 @@ object Versioned {
           s"$c=$shown"
         case (c, None) => s"$c=__HIVE_DEFAULT_PARTITION__"
       }.mkString("/")
-    dataDirs.flatMap(d => stats(d).files)
+    snap.dataDirNames.flatMap(d => snap.stats(d).files)
       .groupBy(f => partCols.map(c => f.cols.get(c).flatMap(_.min)))
       .toSeq
       .map { case (tuple, files) =>
@@ -4879,7 +3870,7 @@ object Versioned {
   /** Total bytes of a file selection, from manifest stats alone. */
   private[graft] def fileBytesOf(spark: SparkSession, dir: String, v: Int,
                                  keep: Map[String, Set[String]]): Long = {
-    val stats = lines(spark, dir, v).collect { case e: StatsEntry => e.name -> e }.toMap
+    val stats = snapshot(spark, dir, v).stats
     keep.iterator.flatMap { case (d, names) =>
       stats.get(d).toSeq.flatMap(_.files.filter(f => names.contains(f.name)).map(_.bytes))
     }.sum
@@ -4892,47 +3883,20 @@ object Versioned {
     * rewrite-side read of a partition-scoped OPTIMIZE. */
   private[graft] def readVersionFiles(spark: SparkSession, dir: String, v: Int,
                                       keep: Map[String, Set[String]]): DataFrame = {
-    val subset = lines(spark, dir, v).flatMap {
-      case DataEntry(n) if !keep.get(n).exists(_.nonEmpty) => None
-      case s: StatsEntry if keep.get(s.name).exists(_.nonEmpty) =>
-        Some(s.copy(files = s.files.filter(f => keep(s.name).contains(f.name))))
-      case _: StatsEntry => None
-      case other => Some(other)
-    }
-    readVersionFrom(spark, dir, subset, _ => true)
+    readVersionFrom(spark, snapshot(spark, dir, v).restrictedToFiles(keep), _ => true)
   }
 
   /** [[manifestPartitioningIndex]] restricted to a file subset — the
     * serving index of a row-level rewrite's candidate-file scan. */
-  private[graft] def manifestPartitioningIndexSubset(spark: SparkSession, dir: String,
-                                                     v: Int, keep: Map[String, Set[String]])
+  private[graft] def manifestPartitioningIndexSubset(spark: SparkSession, snap: Snapshot,
+                                                     keep: Map[String, Set[String]])
       : org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex = {
-    val ls = lines(spark, dir, v)
-    val schema = ls.collectFirst { case SchemaEntry(s) => s }.getOrElse(
-      throw new IllegalStateException(s"no recorded schema at $dir v$v"))
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-    val subset = ls.collect {
-      case e: StatsEntry if keep.get(e.name).exists(_.nonEmpty) =>
-        val names = keep(e.name)
-        e.copy(files = e.files.filter(f => names.contains(f.name)))
-    }
-    new ManifestPartitioningIndex(spark, new Path(dir), schema,
-      StructType(partCols.map(c => schema(c))), subset)
-  }
-
-  /** Exact (rows, bytes) of version `v` from manifest stats alone —
-    * None when any data dir lacks the recorded numbers (legacy). The
-    * SQL tier serves these through DSv2 `SupportsReportStatistics` so
-    * a join against a small versioned table plans its broadcast UP
-    * FRONT instead of waiting for AQE's runtime detour. */
-  private[graft] def manifestSizeOf(spark: SparkSession, dir: String,
-                                    v: Int): Option[(Long, Long)] = {
-    val ls = lines(spark, dir, v)
-    val stats = ls.collect { case s: StatsEntry => s.name -> s }.toMap
-    val dataDirs = ls.collect { case DataEntry(n) => n }
-    if (!dataDirs.forall(stats.contains)) None
-    else Some((dataDirs.map(stats(_).rows).sum,
-      dataDirs.flatMap(stats(_).files).map(_.bytes).sum))
+    val subset = snap.restrictedToFiles(keep)
+    val schema = subset.schema.getOrElse(
+      throw new IllegalStateException(s"no recorded schema at ${snap.dir} v${snap.version}"))
+    new ManifestPartitioningIndex(spark, new Path(snap.dir), schema,
+      StructType(subset.partitionCols.map(c => schema(c))),
+      subset.dataDirNames.flatMap(subset.stats.get))
   }
 
   def readLatest(spark: SparkSession, dir: String): DataFrame = {
@@ -4974,9 +3938,8 @@ object Versioned {
     val effKeys =
       if (keys.nonEmpty) keys
       else {
-        def tracked(v: Int) =
-          lines(spark, dir, v).collectFirst { case SchemaEntry(s) => s }
-            .exists(s => identityColumnsOf(s).exists(_.col.equalsIgnoreCase(RowIdCol)))
+        def tracked(v: Int) = snapshot(spark, dir, v).schema
+          .exists(s => identityColumnsOf(s).exists(_.col.equalsIgnoreCase(RowIdCol)))
         require(tracked(vFrom) && tracked(vTo),
           s"keyless changesBetween needs ROW TRACKING on both endpoints of the " +
             s"span (v$vFrom, v$vTo) at $dir — enableRowTracking first, or pass " +
@@ -4985,7 +3948,8 @@ object Versioned {
       }
     // a feed RECORDED at vTo's commit for exactly this span and key
     // set serves directly — O(feed) instead of O(both versions)
-    recordedChanges(spark, dir, vFrom, vTo, effKeys)
+    recordedFeed(spark, dir, vFrom, vTo, effKeys)
+      .map(n => readParquetNoInfer(spark, Seq(new Path(new Path(dir), n).toString)))
       .getOrElse(diffFeedFrames(
         readVersion(spark, dir, vFrom), readVersion(spark, dir, vTo), effKeys))
   }
@@ -5021,9 +3985,7 @@ object Versioned {
                         protocol: CommitProtocol = PutIfAbsentCommit,
                         maxAttempts: Int = 16): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, monotonically_increasing_id, col => fcol}
-    val v0 = requireLatest(spark, dir)
-    val ls0 = lines(spark, dir, v0)
-    val schema0 = ls0.collectFirst { case SchemaEntry(s) => s }.getOrElse(
+    val schema0 = snapshot(spark, dir, requireLatest(spark, dir)).schema.getOrElse(
       throw new IllegalArgumentException(
         s"row tracking at $dir needs a recorded schema — commit once to record it"))
     require(!schema0.fieldNames.exists(_.equalsIgnoreCase(RowIdCol)),
@@ -5040,25 +4002,19 @@ object Versioned {
       val victims = allLiveFilesMap(spark, dir, v)
       if (victims.valuesIterator.forall(_.isEmpty)) v // empty table: declared is enabled
       else {
-        val info = versionInfo(spark, dir, v)
-        def nameOf(abs: String) = abs.substring(abs.lastIndexOf('/') + 1)
-        val dvSnapshot =
-          info.dvDirs.flatMap { case (k, ds) => ds.map(d => (k, nameOf(d))) } ++
-            info.scopedDvs.map { case (k, d, _) => (k, nameOf(d)) } ++
-            info.posDvs.map(d => (PdvSnapshotKey, nameOf(d)))
-        val base = lines(spark, dir, v).collectFirst {
-          case HwmEntry(c, n) if c.equalsIgnoreCase(RowIdCol) => n }.getOrElse(0L)
+        val snap = snapshot(spark, dir, v)
+        val base = snap.hwm(RowIdCol).getOrElse(0L)
         val staged = stageDataDir(spark, dir)
         val stagedPath = new Path(new Path(dir), staged)
         // a partitioned chain's backfill re-lands the whole hive tree
         // ONCE (adoption price, like Delta's backfill); the commit
         // stays the rearrange every stream skips
-        val partCols = info.partitionCols
+        val partCols = snap.partitionCols
         val filled = toPhysical(
           readVersionFiles(spark, dir, v, victims)
             .withColumn(RowIdCol, coalesce(fcol(RowIdCol),
               lit(base) + monotonically_increasing_id())),
-          columnMapping(spark, dir, v))
+          snap.colMap)
         (if (partCols.isEmpty) filled.write
          else filled.write.partitionBy(partCols: _*))
           .mode(SaveMode.ErrorIfExists).parquet(stagedPath.toString)
@@ -5066,28 +4022,23 @@ object Versioned {
         // the staged footers' bounds — the same atomic-claim contract
         // as every identity write
         commitFileRewrite(spark, dir, victims, Some(staged), partCols,
-          dvSnapshot, protocol, dataChange = false).getOrElse(v)
+          snap.dvSnapshot, protocol, dataChange = false).getOrElse(v)
       }
     }
   }
 
-  /** The recorded feed for (vFrom → vTo] over `keys`, if vTo's
-    * manifest carries one. */
-  private def recordedChanges(spark: SparkSession, dir: String, vFrom: Int,
-                              vTo: Int, keys: Seq[String]): Option[DataFrame] =
-    lines(spark, dir, vTo).collectFirst {
-      case ChangesEntry(f, t, ks, n) if f == vFrom && t == vTo && ks == keys =>
-        readParquetNoInfer(spark, Seq(new Path(new Path(dir), n).toString))
-    }
+  /** The dir name of the feed recorded for (vFrom → vTo] over `keys`,
+    * if vTo's manifest carries one. */
+  private def recordedFeed(spark: SparkSession, dir: String, vFrom: Int,
+                           vTo: Int, keys: Seq[String]): Option[String] =
+    snapshot(spark, dir, vTo).changes
+      .find(c => c.vFrom == vFrom && c.vTo == vTo && c.keys == keys).map(_.name)
 
   /** True iff [[changesBetween]] over this span would serve a
     * RECORDED feed — exposed so tests pin the serve path. */
   private[graft] def hasRecordedChanges(spark: SparkSession, dir: String,
                                         vFrom: Int, vTo: Int, keys: Seq[String]): Boolean =
-    lines(spark, dir, vTo).exists {
-      case ChangesEntry(f, t, ks, _) => f == vFrom && t == vTo && ks == keys
-      case _ => false
-    }
+    recordedFeed(spark, dir, vFrom, vTo, keys).nonEmpty
 
   /** Delta CDF's `table_changes(tab, vFrom, vTo)` MULTI-COMMIT form:
     * one feed row set per commit in (vFrom, vTo], each tagged with its
@@ -5099,15 +4050,22 @@ object Versioned {
   def changeFeed(spark: SparkSession, dir: String, vFrom: Int, vTo: Int,
                  keys: Seq[String]): DataFrame = {
     require(vFrom < vTo, s"need at least one commit in the span, got ($vFrom, $vTo]")
-    // the CDF metadata contract (batch and stream alike): a LONG
-    // `_commit_version` plus `_commit_timestamp` from the recorded
-    // in-commit clock (mtime fallback for pre-ts manifests)
     (vFrom + 1 to vTo).map(v =>
-      changesBetween(spark, dir, v - 1, v, keys)
-        .withColumn("_commit_version", org.apache.spark.sql.functions.lit(v.toLong))
-        .withColumn("_commit_timestamp", org.apache.spark.sql.functions.lit(
-          new java.sql.Timestamp(commitTimestamp(spark, dir, v)))))
+      withCommitMetadata(changesBetween(spark, dir, v - 1, v, keys), snapshot(spark, dir, v)))
       .reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** The CDF metadata contract (batch and stream alike): a LONG
+    * `_commit_version` plus `_commit_timestamp` from the snapshot's
+    * commit clock. Both ride as DATA (a nullary UDF holds them), not
+    * as literals: Catalyst inlines a long literal into generated code,
+    * so every version's feed would otherwise compile its own classes. */
+  private[graft] def withCommitMetadata(df: DataFrame, snap: Snapshot): DataFrame = {
+    import org.apache.spark.sql.functions.udf
+    val v = snap.version.toLong
+    val ts = new java.sql.Timestamp(snap.commitTimestamp)
+    df.withColumn("_commit_version", udf(() => v).asNonNullable()())
+      .withColumn("_commit_timestamp", udf(() => ts).asNonNullable()())
   }
 
   /** Commit `df` as the next version AND record the classified change
@@ -5164,10 +4122,9 @@ object Versioned {
     lazy val props = liveProps(spark, dir)
     val explicit = Knobs.cdfKeys(spark, props)
     if (explicit.isEmpty && !Knobs.cdfEnabled(spark, props)) return None
-    val ls = lines(spark, dir, v)
-    val cmap = colMapOf(ls)
-    val logicalSchema = ls.collectFirst { case SchemaEntry(s) =>
-      toLogicalSchema(s, cmap) }.getOrElse(return None)
+    val snap = snapshot(spark, dir, v)
+    val cmap = snap.colMap
+    val logicalSchema = snap.logicalSchema.getOrElse(return None)
     val keys =
       if (explicit.nonEmpty) explicit
       else if (identityColumnsOf(logicalSchema)
@@ -5191,10 +4148,9 @@ object Versioned {
     // construction — a just-matched row cannot have been pre-masked)
     val pre = masked match {
       case Some((sidecarDir, byDir)) =>
-        val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }
-          .getOrElse(Seq.empty)
-        val physSchema = ls.collectFirst { case SchemaEntry(s) => s }.get
-        val subsetIndex = manifestPartitioningIndexSubset(spark, dir, v, byDir)
+        val partCols = snap.partitionCols
+        val physSchema = snap.schema.get
+        val subsetIndex = manifestPartitioningIndexSubset(spark, snap, byDir)
         val dataSchema = StructType(
           physSchema.fields.filterNot(f => partCols.contains(f.name)))
         val raw = spark.baseRelationToDataFrame(
@@ -5347,9 +4303,9 @@ object Versioned {
     // RESOLVED state, written FULL: a restored delta would otherwise
     // depend on a parent chain that retention may later reclaim, and
     // the restore's content is v's state, not a delta against latest
-    val resolved = lines(spark, dir, v) // validates v exists
+    val resolved = snapshot(spark, dir, v) // validates v exists
     val next = latestVersion(spark, dir).get + 1
-    commitManifest(spark, dir, next, resolved.map(renderLine), protocol)
+    commitManifest(spark, dir, next, resolved.lines.map(renderLine), protocol)
     next
   }
 
@@ -5442,7 +4398,7 @@ object Versioned {
   def dropTableChain(spark: SparkSession, dir: String): Boolean = {
     val (fs, root) = fsFor(spark, dir)
     val vs = versions(spark, dir)
-    evictManifestCache(spark, dir, vs) // a re-created table must not serve the old parse
+    Snapshot.evict(spark, dir, vs) // a re-created table must not serve the old parse
     vs.nonEmpty && fs.delete(root, true)
   }
 
@@ -5454,25 +4410,24 @@ object Versioned {
     * pre-ALTER schema. */
   private def commitSchemaChange(spark: SparkSession, dir: String,
                                  protocol: CommitProtocol)
-                                (change: (StructType, Seq[Line]) => StructType): Int = {
+                                (change: (StructType, Snapshot) => StructType): Int = {
     val prev = requireLatest(spark, dir)
-    val ls = lines(spark, dir, prev)
+    val snap = snapshot(spark, dir, prev)
     // pre-schema manifests: derive the union once — the ALTER commit
     // then records it, upgrading the table in place like any commit
-    val prior = ls.collectFirst { case SchemaEntry(s) => s }
-      .getOrElse(schemaOf(spark, dir, prev))
-    val next = asNullable(change(prior, ls))
+    val prior = schemaOf(spark, snap)
+    val next = asNullable(change(prior, snap))
     // a dropped column takes its mapping entry with it (the physical
     // field is gone from the recorded schema; a stale entry would
     // keep its old name reserved forever)
-    val priorMap = colMapOf(ls)
+    val priorMap = snap.colMap
     val keptMap = priorMap.filter { case (_, p) => next.fieldNames.contains(p) }
     val mapOps: Seq[String] =
       if (keptMap == priorMap) Seq.empty
       else if (keptMap.isEmpty) Seq("-colmap")
       else Seq(addOp(ColMapEntry(keptMap.toSeq.sortBy(_._1))))
     val newLines = SchemaEntry(next) +: {
-      val rest = ls.filterNot(_.isInstanceOf[SchemaEntry])
+      val rest = snap.lines.filterNot(_.isInstanceOf[SchemaEntry])
       if (keptMap == priorMap) rest
       else rest.filterNot(_.isInstanceOf[ColMapEntry]) ++
         (if (keptMap.isEmpty) Seq.empty else Seq(ColMapEntry(keptMap.toSeq.sortBy(_._1))))
@@ -5500,8 +4455,8 @@ object Versioned {
   def addColumns(spark: SparkSession, dir: String, cols: Seq[StructField],
                  protocol: CommitProtocol = PutIfAbsentCommit): Int = {
     require(cols.nonEmpty, "no columns to add")
-    commitSchemaChange(spark, dir, protocol) { (prior, ls) =>
-      val cmap = colMapOf(ls)
+    commitSchemaChange(spark, dir, protocol) { (prior, snap) =>
+      val cmap = snap.colMap
       val logicalLower = toLogicalSchema(prior, cmap)
         .fieldNames.map(_.toLowerCase).toSet
       cols.foreach { f =>
@@ -5516,8 +4471,7 @@ object Versioned {
       }
       require(cols.map(_.name.toLowerCase).distinct.length == cols.length,
         s"duplicate names in ${cols.map(_.name).mkString(",")}")
-      val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-      val (dataF, partF) = prior.fields.partition(f => !partCols.contains(f.name))
+      val (dataF, partF) = prior.fields.partition(f => !snap.partitionCols.contains(f.name))
       StructType(dataF ++ cols ++ partF)
     }
   }
@@ -5534,8 +4488,8 @@ object Versioned {
   def dropColumns(spark: SparkSession, dir: String, names: Seq[String],
                   protocol: CommitProtocol = PutIfAbsentCommit): Int = {
     require(names.nonEmpty, "no columns to drop")
-    commitSchemaChange(spark, dir, protocol) { (prior, ls) =>
-      val cmap = colMapOf(ls)
+    commitSchemaChange(spark, dir, protocol) { (prior, snap) =>
+      val cmap = snap.colMap
       val logical = toLogicalSchema(prior, cmap)
       // callers name LOGICAL columns; the schema line and every guard
       // below speak physical
@@ -5545,18 +4499,12 @@ object Versioned {
             s"no column '$n' in ${logical.fieldNames.mkString(",")}"))
         (l, cmap.getOrElse(l, l))
       }
-      val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-      val dvKeys = ls.collect {
-        case DvEntry(k, _) => k
-        case ScopedDvEntry(k, _, _) => k
-      }.toSet
+      val partCols = snap.partitionCols
+      val dvKeys = (snap.dvDirs.map(_._1) ++ snap.scopedDvs.map(_._1)).toSet
       // columns a CHECK constraint reads are load-bearing too: the
       // write-time validation could no longer evaluate the predicate
-      val constraintRefs = ls.collect { case ConstraintEntry(cn, sql) =>
-        cn -> spark.sessionState.sqlParser.parseExpression(sql).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            a.nameParts.head.toLowerCase
-        }.toSet
+      val constraintRefs = snap.constraints.map { case (cn, sql) =>
+        cn -> constraintRefCols(spark, sql)
       }
       resolved.foreach { case (l, n) =>
         require(!partCols.contains(n), s"cannot drop partition column '$n'")
@@ -5584,10 +4532,10 @@ object Versioned {
         }
         // this single-purpose commit cannot remove the constraint line
         // with the column; the atomic ALTER can (and does)
-        require(!ls.exists { case NotNullEntry(c) => c.equalsIgnoreCase(n); case _ => false },
+        require(!snap.notNull.exists(_.equalsIgnoreCase(n)),
           s"cannot drop '$l': it carries NOT NULL — use alterTableAtomic " +
             "(SQL ALTER TABLE), which drops the constraint with the column")
-        require(!ls.exists { case BloomColEntry(c, _) => c.equalsIgnoreCase(n); case _ => false },
+        require(!snap.bloomDecls.exists(_.col.equalsIgnoreCase(n)),
           s"cannot drop '$l': it is the bloom-indexed column — drop_bloom first, " +
             "or use alterTableAtomic (SQL ALTER TABLE), which retires the index " +
             "with the column")
@@ -5598,11 +4546,6 @@ object Versioned {
       StructType(kept)
     }
   }
-
-  /** The enforced CHECK constraints of a version, as (name,
-    * predicateSql) in manifest order. */
-  def checkConstraints(spark: SparkSession, dir: String, v: Int): Seq[(String, String)] =
-    lines(spark, dir, v).collect { case ConstraintEntry(n, s) => (n, s) }
 
   /** `ALTER TABLE … ADD CONSTRAINT name CHECK (expr)`'s role (Delta
     * CHECK constraints): validate that EVERY existing row satisfies
@@ -5631,8 +4574,8 @@ object Versioned {
       s"constraint name must be word-shaped (it is embedded in the manifest), got '$name'")
     requireOneLine(predicateSql, name)
     val prev = requireLatest(spark, dir)
-    val ls = lines(spark, dir, prev)
-    require(!ls.exists { case ConstraintEntry(n, _) => n.equalsIgnoreCase(name); case _ => false },
+    val snap = snapshot(spark, dir, prev)
+    require(!snap.constraints.exists(_._1.equalsIgnoreCase(name)),
       s"constraint '$name' already exists")
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     val violating = readVersion(spark, dir, prev)
@@ -5642,7 +4585,7 @@ object Versioned {
         s"— e.g. ${violating.head()}")
     val v = prev + 1
     val c = ConstraintEntry(name, predicateSql)
-    commitChild(spark, dir, v, prev, ls :+ c, Seq(addOp(c)), protocol)
+    commitChild(spark, dir, v, prev, snap.lines :+ c, Seq(addOp(c)), protocol)
     v
   }
 
@@ -5652,12 +4595,12 @@ object Versioned {
   def dropCheckConstraint(spark: SparkSession, dir: String, name: String,
                           protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
     val prev = requireLatest(spark, dir)
-    val ls = lines(spark, dir, prev)
-    if (!ls.exists { case ConstraintEntry(n, _) => n.equalsIgnoreCase(name); case _ => false }) None
+    val snap = snapshot(spark, dir, prev)
+    if (!snap.constraints.exists(_._1.equalsIgnoreCase(name))) None
     else {
       val v = prev + 1
       commitChild(spark, dir, v, prev,
-        ls.filterNot {
+        snap.lines.filterNot {
           case ConstraintEntry(n, _) => n.equalsIgnoreCase(name)
           case _ => false
         },
@@ -5728,15 +4671,12 @@ object Versioned {
                        protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
     if (alter.isEmpty) return None
     val prev = requireLatest(spark, dir)
-    val ls = lines(spark, dir, prev)
-    val prior = ls.collectFirst { case SchemaEntry(s) => s }
-      .getOrElse(schemaOf(spark, dir, prev))
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
-    val dvKeys = ls.collect {
-        case DvEntry(k, _) => k
-        case ScopedDvEntry(k, _, _) => k
-      }.toSet
-    val existingChecks = ls.collect { case c: ConstraintEntry => c }
+    val snap = snapshot(spark, dir, prev)
+    val ls = snap.lines
+    val prior = schemaOf(spark, snap)
+    val partCols = snap.partitionCols
+    val dvKeys = (snap.dvDirs.map(_._1) ++ snap.scopedDvs.map(_._1)).toSet
+    val existingChecks = snap.constraints.map(ConstraintEntry.tupled)
     // ── validate EVERYTHING first; commit once at the end ──
     // constraint drops: strict names must exist
     val dropCheckNames = alter.dropChecks.flatMap { case (n, ifExists) =>
@@ -5760,7 +4700,7 @@ object Versioned {
       s"duplicate constraint names in ${alter.addChecks.map(_._1).mkString(",")}")
     // the column mapping: user-facing names in this spec are LOGICAL;
     // the schema line, stats, dv keys and notnull lines are PHYSICAL
-    val cmap = colMapOf(ls)
+    val cmap = snap.colMap
     val priorLogical = toLogicalSchema(prior, cmap)
     // column adds: no collisions with the prior schema, the physical
     // image (the resurrect guard — see addColumns), or each other
@@ -5831,8 +4771,8 @@ object Versioned {
             "overwrite to apply the mask physically first")
         // integral widenings keep the blooms valid (values hash as
         // longs either way); a double is no longer hashable
-        require(to != org.apache.spark.sql.types.DoubleType || !ls.exists {
-            case BloomColEntry(c, _) => c.equalsIgnoreCase(phys); case _ => false },
+        require(to != org.apache.spark.sql.types.DoubleType ||
+            !snap.bloomDecls.exists(_.col.equalsIgnoreCase(phys)),
           s"cannot widen bloom-indexed '$l' to double — drop_bloom first")
         phys -> to
       }.toMap
@@ -5895,7 +4835,7 @@ object Versioned {
     // statement passes only on an empty table (existing rows would
     // null-backfill it). DROP NOT NULL on a nullable column is a
     // no-op, like Delta's.
-    val existingNotNull = ls.collect { case n: NotNullEntry => n }
+    val existingNotNull = snap.notNull.map(NotNullEntry)
     // (logical, physical) pairs: the lines and the stats lookup speak
     // physical; the validation scan (readVersion) serves logical
     val resolvedSet = alter.setNotNull.map { n =>
@@ -5912,10 +4852,8 @@ object Versioned {
     require(resolvedSet.map(_._2).toSet.intersect(resolvedDropNn.toSet).isEmpty,
       "a column cannot be both SET and DROP NOT NULL in one statement")
     if (resolvedSet.nonEmpty) {
-      val stats = ls.collect { case e: StatsEntry => e.name -> e }.toMap
-      val dataDirs = ls.collect { case DataEntry(n) => n }
-      def provablyNoNulls(c: String) = dataDirs.forall(d =>
-        stats.get(d).exists(st =>
+      def provablyNoNulls(c: String) = snap.dataDirNames.forall(d =>
+        snap.stats.get(d).exists(st =>
           st.rows == 0 || st.cols.get(c).exists(_.nulls.contains(0L))))
       val unproven = resolvedSet.filterNot { case (_, p) => provablyNoNulls(p) }
       if (unproven.nonEmpty) {
@@ -5940,9 +4878,7 @@ object Versioned {
     // (like a NOT NULL line): an orphaned declaration would make every
     // later write try to bloom a column its files no longer carry.
     // Other declared columns' indexes stay live.
-    val droppedBloomCols = ls.collect {
-      case BloomColEntry(c, _) if dropSet.exists(_.equalsIgnoreCase(c)) => c
-    }
+    val droppedBloomCols = snap.bloomDecls.map(_.col).filter(c => dropSet.exists(_.equalsIgnoreCase(c)))
     // a dropped identity column takes its high-water mark with it (a
     // stale mark would collide with a later column of the same name)
     val droppedHwm = ls.collect {
@@ -5994,9 +4930,8 @@ object Versioned {
   def widenFloatToDoubleRewrite(spark: SparkSession, dir: String, col: String,
                                 protocol: CommitProtocol = PutIfAbsentCommit): Int = {
     val prev = requireLatest(spark, dir)
-    val ls = lines(spark, dir, prev)
-    val cmap = colMapOf(ls)
-    val logical = ls.collectFirst { case SchemaEntry(s) => toLogicalSchema(s, cmap) }
+    val snap = snapshot(spark, dir, prev)
+    val logical = snap.logicalSchema
       .getOrElse(throw new IllegalArgumentException(s"no recorded schema at $dir"))
     val l = logical.fieldNames.find(_.equalsIgnoreCase(col)).getOrElse(
       throw new IllegalArgumentException(
@@ -6004,7 +4939,7 @@ object Versioned {
     require(logical(l).dataType == org.apache.spark.sql.types.FloatType,
       s"'$l' is ${logical(l).dataType}, not FLOAT — the metadata-only widenings " +
         "go through ALTER COLUMN … TYPE / alterTableAtomic")
-    val partCols = ls.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
+    val partCols = snap.partitionCols
     val df = readVersion(spark, dir, prev)
       .withColumn(l, org.apache.spark.sql.functions.col(l).cast("double"))
     if (partCols.isEmpty) writeVersion(df, dir, SaveMode.Overwrite, protocol)
@@ -6065,13 +5000,13 @@ object Versioned {
     val v0 = latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(
         s"replaceWhere needs an existing table at $dir — write version 0 first"))
-    val ls0 = lines(spark, dir, v0)
-    val cmap = colMapOf(ls0)
-    val physSchema = ls0.collectFirst { case SchemaEntry(s) => s }.getOrElse(
+    val snap = snapshot(spark, dir, v0)
+    val cmap = snap.colMap
+    val physSchema = snap.schema.getOrElse(
       throw new IllegalArgumentException(
         s"replaceWhere at $dir needs a recorded schema (pre-schema manifest)"))
     val logicalSchema = toLogicalSchema(physSchema, cmap)
-    val partCols = ls0.collectFirst { case PartitionEntry(cs) => cs }.getOrElse(Seq.empty)
+    val partCols = snap.partitionCols
     val (fs, root) = fsFor(spark, dir)
 
     // resolve the predicate against the table's LOGICAL schema once —
@@ -6105,15 +5040,13 @@ object Versioned {
         (partitionScopedFiles(spark, dir, v0, predicateSql), None)
       else {
         val candNames = planDataDirs(spark, dir, v0, pushed)
-        val stats = ls0.collect { case e: StatsEntry => e.name -> e }.toMap
-        require(candNames.forall(n => stats.get(n).exists(_.files.nonEmpty)),
+        require(candNames.forall(n => snap.stats.get(n).exists(_.files.nonEmpty)),
           s"replaceWhere at $dir needs manifest file lists for every candidate " +
             "dir — run backfillStats to upgrade pre-file-list manifests")
-        val rm = candNames.map(n => n -> stats(n).files.map(_.name).toSet).toMap
+        val rm = candNames.map(n => n -> snap.fileNames(n)).toMap
         val surv =
           if (candNames.isEmpty) None
-          else Some(readVersionDirs(spark, dir, v0,
-              candNames.map(n => new Path(root, n).toString).toSet, applyDv = true)
+          else Some(readVersionFrom(spark, snap, candNames.toSet)
             .filter(not(coalesce(expr(predicateSql), lit(false)))))
         (rm, surv)
       }
@@ -6180,15 +5113,9 @@ object Versioned {
       Some((keys, chDir))
     }
 
-    val dvSnapshot = ls0.collect {
-      case DvEntry(k, n)          => (k, n)
-      case ScopedDvEntry(k, n, _) => (k, n)
-      case PdvEntry(n)            => (PdvSnapshotKey, n)
-    }
     try commitFileRewrite(spark, dir, removed, Some(staged), partCols,
-      dvSnapshot, protocol, maxAttempts, identityBasis = idBasis,
-      replaceConflict = Some((ls0.collect { case DataEntry(n) => n }.toSet,
-        pushed, predicateSql)),
+      snap.dvSnapshot, protocol, maxAttempts, identityBasis = idBasis,
+      replaceConflict = Some((snap.dataDirNames.toSet, pushed, predicateSql)),
       changeFeed = feedDir)
     catch { case t: Throwable =>
       fs.delete(stagedPath, true)
@@ -6315,17 +5242,14 @@ object Versioned {
     if (!dryRun && drop.nonEmpty) keep.headOption.foreach { b =>
       if (manifestParent(spark, dir, b).nonEmpty &&
           !fs.exists(checkpointPath(dir, b)))
-        writeCheckpoint(spark, dir, b, lines(spark, dir, b), PutIfAbsentCommit)
+        writeCheckpoint(spark, dir, b, snapshot(spark, dir, b).lines, PutIfAbsentCommit)
     }
     // live names span BOTH dir kinds: a deletion-vector dir referenced
     // by a surviving manifest is load-bearing (reclaiming it would
     // resurrect deleted rows)
-    def dirNames(v: Int) = lines(spark, dir, v).collect {
-      case DataEntry(n) => n
-      case DvEntry(_, n) => n
-      case ScopedDvEntry(_, n, _) => n
-      case PdvEntry(n) => n
-      case ChangesEntry(_, _, _, n) => n // a recorded feed is live state too
+    def dirNames(v: Int) = {
+      val s = snapshot(spark, dir, v)
+      s.liveDirNames ++ s.changes.map(_.name) // a recorded feed is live state too
     }
     val live = keep.flatMap(dirNames).toSet
     // names committed history once referenced — captured BEFORE the
@@ -6339,7 +5263,7 @@ object Versioned {
         fs.delete(manifestPath(dir, v), false)
         fs.delete(checkpointPath(dir, v), false)
       }
-      evictManifestCache(spark, dir, drop)
+      Snapshot.evict(spark, dir, drop)
     }
     val now = System.currentTimeMillis()
     val candidates = fs.listStatus(root)
@@ -6378,10 +5302,10 @@ object Versioned {
       // manifest, so a young unreferenced sidecar may be a commit in
       // flight. Only LOCAL files are candidates — a cloned bloom ref
       // points into the SOURCE's tree, which this listing never sees.
-      val referenced = keep.iterator.flatMap(v => lines(spark, dir, v).iterator.collect {
-        case BloomEntry(_, _, _, Some(ref))    => ref
-        case StatsEntry(_, _, _, _, Some(ref)) => ref
-      }).toSet
+      val referenced = keep.iterator.flatMap { v =>
+        val s = snapshot(spark, dir, v)
+        s.bloomEntries.flatMap(_.sidecar) ++ s.stats.valuesIterator.flatMap(_.sidecar)
+      }.toSet
       Seq(bloomsDirPath(root), statsDirPath(root)).filter(fs.exists(_))
         .flatMap(fs.listStatus(_))
         .filter(st => !referenced.contains(
@@ -6413,7 +5337,7 @@ object Versioned {
   * File mtimes are reported as 0 (the manifest does not record them;
   * nothing on the scan path consumes them). */
 private[ext] class ManifestFileIndex(tableDir: Path, schema: StructType,
-                                     dirs: Seq[Versioned.StatsEntry],
+                                     dirs: Seq[Snapshot.StatsEntry],
                                      override val partitionSchema: StructType =
                                        StructType(Nil),
                                      // declared bloom columns (PHYSICAL — the pushed
@@ -6425,7 +5349,7 @@ private[ext] class ManifestFileIndex(tableDir: Path, schema: StructType,
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, PartitionDirectory}
 
-  private val perDir: Seq[(Versioned.StatsEntry, Seq[(Versioned.FileStats, FileStatusWithMetadata)])] =
+  private val perDir: Seq[(Snapshot.StatsEntry, Seq[(Snapshot.FileStats, FileStatusWithMetadata)])] =
     dirs.map { st =>
       val dirPath = new Path(tableDir, st.name)
       (st, st.files.map { f =>
@@ -6445,7 +5369,7 @@ private[ext] class ManifestFileIndex(tableDir: Path, schema: StructType,
     * exact bound; all-null stats = the hive null partition). The key
     * form groups files; the row form is what Spark's reader appends
     * to every row of the group. */
-  private def partKey(f: Versioned.FileStats): Seq[Option[String]] =
+  private def partKey(f: Snapshot.FileStats): Seq[Option[String]] =
     partitionSchema.fields.map(pf => f.cols.get(pf.name).flatMap(_.min)).toSeq
 
   private def partRow(key: Seq[Option[String]]): InternalRow =
@@ -6532,7 +5456,7 @@ private[ext] class ManifestFileIndex(tableDir: Path, schema: StructType,
 private[graft] class ManifestPartitioningIndex(spark: SparkSession, tableDir: Path,
                                                fullSchema: StructType,
                                                partSchema: StructType,
-                                               dirs: Seq[Versioned.StatsEntry],
+                                               dirs: Seq[Snapshot.StatsEntry],
                                                bloomCols: Seq[String] = Seq.empty,
                                                blooms: Map[(String, String), Map[String, Array[Byte]]] =
                                                  Map.empty)
@@ -6543,7 +5467,7 @@ private[graft] class ManifestPartitioningIndex(spark: SparkSession, tableDir: Pa
   import org.apache.spark.sql.execution.datasources.{PartitionDirectory, PartitionPath, PartitionSpec}
 
   // (absolute file path, status, per-file stats) from the manifest
-  private val fileEntries: Seq[(Path, org.apache.hadoop.fs.FileStatus, Versioned.FileStats)] =
+  private val fileEntries: Seq[(Path, org.apache.hadoop.fs.FileStatus, Snapshot.FileStats)] =
     dirs.flatMap { st =>
       val dirPath = new Path(tableDir, st.name)
       st.files.map { f =>
@@ -6553,7 +5477,7 @@ private[graft] class ManifestPartitioningIndex(spark: SparkSession, tableDir: Pa
       }
     }
 
-  private val statsByPath: Map[Path, Versioned.FileStats] =
+  private val statsByPath: Map[Path, Snapshot.FileStats] =
     fileEntries.map(e => e._1 -> e._3).toMap
 
   // blooms keyed by RESOLVED path (the manifest spelling of a cloned
@@ -6571,7 +5495,7 @@ private[graft] class ManifestPartitioningIndex(spark: SparkSession, tableDir: Pa
       }
     }.toMap
 
-  private def partRow(f: Versioned.FileStats): InternalRow =
+  private def partRow(f: Snapshot.FileStats): InternalRow =
     InternalRow.fromSeq(partSchema.fields.map { pf =>
       f.cols.get(pf.name).flatMap(_.min) match {
         case Some(canon) => Skipping.canonicalToCatalyst(canon, pf.dataType)
@@ -6660,7 +5584,7 @@ private[ext] object Skipping {
   import org.apache.spark.sql.sources._
   import org.apache.spark.sql.types._
   import org.apache.spark.sql.functions.{col, lit}
-  import graft.ext.Versioned.{ColStats, FileStats}
+  import graft.ext.Snapshot.{ColStats, FileStats}
   import org.apache.hadoop.conf.Configuration
   import scala.jdk.CollectionConverters._
   import scala.reflect.ClassTag
@@ -7241,7 +6165,7 @@ private[ext] object Skipping {
 private[ext] object StatsJson {
   import com.fasterxml.jackson.databind.ObjectMapper
   import com.fasterxml.jackson.databind.node.ObjectNode
-  import graft.ext.Versioned.{ColStats, FileStats}
+  import graft.ext.Snapshot.{ColStats, FileStats}
   private val mapper = new ObjectMapper()
 
   private def renderCols(parent: ObjectNode, key: String,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.ext.Versioned
+import graft.ext.{Snapshot, Versioned}
 
 /** The SQL serving surface over [[graft.ext.Versioned]]'s manifest
   * store — the role the reference's users get from Trino-over-Delta
@@ -497,7 +497,7 @@ class VersionedCatalog extends TableCatalog with StagingTableCatalog
           ut.newDataType() == org.apache.spark.sql.types.DoubleType => ut
     }.filter { ut =>
       Versioned.latestVersion(spark, dir).flatMap(v =>
-        Versioned.logicalSchema(spark, dir, v)).exists(sc =>
+        Versioned.snapshot(spark, dir, v).logicalSchema).exists(sc =>
         sc.fieldNames.find(_.equalsIgnoreCase(ut.fieldNames.head))
           .exists(n => sc(n).dataType == org.apache.spark.sql.types.FloatType))
     }
@@ -570,7 +570,7 @@ class VersionedCatalog extends TableCatalog with StagingTableCatalog
       case d: TableChange.DeleteColumn => d }
       .partition(d => d.ifExists != null && d.ifExists.booleanValue())
     val dropNames = delStrict.map(_.fieldNames.head) ++ {
-      val have = Versioned.versionInfo(spark, dir,
+      val have = Versioned.snapshot(spark, dir,
         Versioned.latestVersion(spark, dir).getOrElse(
           throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
             (ident.namespace() :+ ident.name()).toSeq))).schema
@@ -769,35 +769,24 @@ private[sql] object VersionedTableLoader {
       require(vs.contains(n), s"no version $n at $dir (have ${vs.mkString(",")})")
       n
     }.getOrElse(vs.last)
-    val info0 = Versioned.versionInfo(spark, dir, v)
+    val snap = Versioned.snapshot(spark, dir, v)
     // enforced NOT NULL columns serve as non-nullable SCHEMA — Spark's
     // ANSI store assignment then injects the plan-side runtime null
     // check into every SQL write (the commit-time footer check stays
     // the uniform backstop), and readers see the real contract.
-    // Everything in info0 is PHYSICAL names — nullability marks first
-    // (notNull is physical too), THEN the schema renames to logical.
-    val cmap = info0.colMap // logical → physical
-    val inv = cmap.map(_.swap)
-    val info = info0.schema match {
-      case Some(s) =>
-        val marked =
-          if (info0.notNull.isEmpty) s
-          else StructType(s.fields.map(f =>
-            if (info0.notNull.exists(_.equalsIgnoreCase(f.name))) f.copy(nullable = false)
-            else f))
-        info0.copy(schema = Some(Versioned.toLogicalSchema(marked, cmap)))
-      case _ => info0
+    // Everything in the snapshot is PHYSICAL names — nullability marks
+    // first (notNull is physical too), THEN the schema renames to logical.
+    val logicalSchema = snap.schema.map { s =>
+      val marked =
+        if (snap.notNull.isEmpty) s
+        else StructType(s.fields.map(f =>
+          if (snap.notNull.exists(_.equalsIgnoreCase(f.name))) f.copy(nullable = false)
+          else f))
+      Versioned.toLogicalSchema(marked, snap.colMap)
     }
-    // dv key columns translate to logical for the SCAN-side mask (it
-    // evaluates against the logical read schema); the RAW physical
-    // pairs stay on the rewrite seams (candidate scans, dv snapshots)
-    def dvLogical(xs: Seq[(String, Seq[String])]) =
-      xs.map { case (k, ds) => (inv.getOrElse(k, k), ds) }
-    def scopedLogical(xs: Seq[(String, String, Set[String])]) =
-      xs.map { case (k, d, sc) => (inv.getOrElse(k, k), d, sc) }
     val tableName = s"$display.$dir@v$v"
-    val base: Table with SupportsRead = info.schema match {
-      case Some(schema) if info.partitionCols.nonEmpty =>
+    val base: Table with SupportsRead = logicalSchema match {
+      case Some(schema) if snap.partitionCols.nonEmpty =>
         // PARTITIONED chain: the files hold only data columns — the
         // partition values live in the per-commit hive subtrees and
         // the manifest. Spark's own discovery refuses this layout
@@ -810,10 +799,9 @@ private[sql] object VersionedTableLoader {
         // RENAMED chain's mapping rides the same seam as the flat
         // tier (partition columns themselves never rename, so the
         // hive layout and PartitionFilters stay name-stable).
-        new PartitionedVersionedTable(tableName, spark, dir, v, schema,
-          info.partitionCols, cmap)
+        new PartitionedVersionedTable(tableName, spark, dir, snap, schema)
       case Some(schema) =>
-        new SkippingTable(tableName, spark, dir, v, info.dataDirs, schema, cmap)
+        new SkippingTable(tableName, spark, dir, snap, schema)
       case None =>
         // pre-schema manifest: mergeSchema fallback, exactly like the
         // library read path — correct, with the legacy plan-time cost.
@@ -825,12 +813,10 @@ private[sql] object VersionedTableLoader {
         // writes through the manifest commit like every other tier.
         new LegacyVersionedTable(VersionedSqlUtil.parquetTable(tableName, spark,
           new CaseInsensitiveStringMap(java.util.Map.of("mergeSchema", "true")),
-          info.dataDirs, None), spark, dir, v)
+          snap.dataDirs, None), spark, dir, snap)
     }
-    if (info.dvDirs.isEmpty && info.scopedDvs.isEmpty && info.posDvs.isEmpty) base
-    else new DvMaskedTable(base, base.schema(), dvLogical(info.dvDirs), spark, dir, v,
-      info.partitionCols, scopedLogical(info.scopedDvs), cmap,
-      info.dvDirs, info.scopedDvs, info.posDvs)
+    if (snap.dvDirs.isEmpty && snap.scopedDvs.isEmpty && snap.posDvs.isEmpty) base
+    else new DvMaskedTable(base, base.schema(), spark, dir, snap)
   }
 }
 
@@ -952,7 +938,7 @@ private[sql] trait VersionedDeletes extends org.apache.spark.sql.connector.catal
         // flat), the CHECK constraints (a truncate is a DATA change,
         // not a definition change), and other writers' txn watermarks.
         val partCols = Versioned.latestVersion(vdSpark, vdDir)
-          .map(v => Versioned.versionInfo(vdSpark, vdDir, v).partitionCols)
+          .map(v => Versioned.snapshot(vdSpark, vdDir, v).partitionCols)
           .getOrElse(Seq.empty)
         Versioned.commitStagedTable(vdSpark, vdDir,
           Versioned.stageDataDir(vdSpark, vdDir), // never written: routes to the empty commit
@@ -1045,21 +1031,21 @@ private[sql] trait GraftV1StreamFallback
   * injects plan-side enforcement into every SQL write against the
   * table (a violating INSERT fails in the write job, before the
   * store's commit-time backstop even runs). Constraints are read from
-  * the loaded version's manifest: what you travel to is what was
+  * the loaded version's snapshot: what you travel to is what was
   * contractually true then. */
 private[sql] trait ReportsCheckConstraints extends Table { this: VersionedDeletes =>
-  protected def vcVersion: Int
+  /** The snapshot the table was planned from. */
+  protected def vcSnapshot: Snapshot
   /** TBLPROPERTIES serve from the version's manifest — SHOW
     * TBLPROPERTIES / DESCRIBE EXTENDED read them here, versioned like
     * everything else (travel to an old version, see its properties). */
   override def properties(): java.util.Map[String, String] = {
     val m = new java.util.HashMap[String, String]()
-    Versioned.tableProperties(vdSpark, vdDir, vcVersion)
-      .foreach { case (k, x) => m.put(k, x) }
+    vcSnapshot.properties.foreach { case (k, x) => m.put(k, x) }
     m
   }
   override def constraints(): Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    Versioned.checkConstraints(vdSpark, vdDir, vcVersion).map { case (n, sql) =>
+    vcSnapshot.constraints.map { case (n, sql) =>
       org.apache.spark.sql.connector.catalog.constraints.Constraint.check(n)
         .predicateSql(sql)
         .enforced(true)
@@ -1161,7 +1147,7 @@ private[sql] trait VersionedRowOps
   protected def vroPartCols: Seq[String] = Seq.empty
 
   /** The loaded version (the snapshot the rewrite scans). */
-  protected def vcVersion: Int
+  protected def vcSnapshot: Snapshot
 
   /** Deletion vectors the table's scan applies — the rewrite captures
     * them as its snapshot so the commit can detect a concurrent
@@ -1193,9 +1179,9 @@ private[sql] trait VersionedRowOps
       val deltaOk = GraftDeltaOps.enabled(vdSpark) &&
         !RowIds.conflicts(vdSchema) &&
         !RowIds.conflicts(ColumnMapped.toPhysicalSchema(vdSchema, vroColMap)) &&
-        Versioned.manifestPartitioningIndex(vdSpark, vdDir, vcVersion).isDefined
+        Versioned.manifestPartitioningIndex(vdSpark, vcSnapshot).isDefined
       if (deltaOk)
-        new GraftDeltaOperation(vdSpark, vdDir, vcVersion, vdSchema, vroPartCols,
+        new GraftDeltaOperation(vdSpark, vdDir, vcSnapshot, vdSchema, vroPartCols,
           vroDvDirs, vroScopedDvs, vroPosDvs, vroColMap, info)
       else groupBasedOperation(info)
     }
@@ -1227,8 +1213,7 @@ private[sql] trait VersionedRowOps
               : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
             val translated = filters.flatMap(f =>
               org.apache.spark.sql.execution.datasources.GraftFilterShim.translate(f))
-            candidates = Versioned.rowLevelCandidateFiles(vdSpark, vdDir, vcVersion,
-              translated)
+            candidates = Versioned.rowLevelCandidateFiles(vdSpark, vcSnapshot, translated)
             filters
           }
           override def pushedFilters()
@@ -1245,7 +1230,7 @@ private[sql] trait VersionedRowOps
               // the read schema renames back to logical for the plan.
               val physSchema = ColumnMapped.toPhysicalSchema(vdSchema, vroColMap)
               val subsetIndex = Versioned.manifestPartitioningIndexSubset(
-                vdSpark, vdDir, vcVersion, files)
+                vdSpark, vcSnapshot, files)
               val dataSchema = StructType(physSchema.fields.filterNot(f =>
                 vroPartCols.contains(f.name)))
               val parquetBuilder =
@@ -1438,10 +1423,8 @@ private[sql] class ReplaceVersionWriteBuilder(spark: SparkSession, dir: String,
   * hive-laid-out ([[ReplaceVersionWriteBuilder]]'s partitioned
   * commit) — a rewrite never downgrades the layout. */
 private[sql] class PartitionedVersionedTable(tableName: String, spark: SparkSession,
-                                             dir: String, v: Int,
-                                             fullSchema: StructType,
-                                             partCols: Seq[String],
-                                             colMap: Map[String, String] = Map.empty)
+                                             dir: String, snap: Snapshot,
+                                             fullSchema: StructType)
   extends Table with SupportsRead with SupportsWrite with VersionedDeletes
     with VersionedRowOps with ReportsCheckConstraints
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
@@ -1450,7 +1433,9 @@ private[sql] class PartitionedVersionedTable(tableName: String, spark: SparkSess
   override protected def vdSpark: SparkSession = spark
   override protected def vdDir: String = dir
   override protected def vdSchema: StructType = fullSchema
-  override protected def vcVersion: Int = v
+  override protected def vcSnapshot: Snapshot = snap
+  private def partCols = snap.partitionCols
+  private def colMap = snap.colMap
   override protected def vroPartCols: Seq[String] = partCols
   override protected def vroColMap: Map[String, String] = colMap
 
@@ -1478,10 +1463,10 @@ private[sql] class PartitionedVersionedTable(tableName: String, spark: SparkSess
     val physSchema = ColumnMapped.toPhysicalSchema(fullSchema, colMap)
     val inner = new ManifestStatsScanBuilder(
       org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder(
-        spark, Versioned.manifestPartitioningIndex(spark, dir, v).get, physSchema,
+        spark, Versioned.manifestPartitioningIndex(spark, snap).get, physSchema,
         StructType(physSchema.fields.filterNot(f => partCols.contains(f.name))),
         options),
-      Versioned.manifestSizeOf(spark, dir, v), dir)
+      snap.sizeStats, dir)
     if (colMap.isEmpty) inner
     else new ColumnMappedScanBuilder(inner, colMap)
   }
@@ -1592,9 +1577,8 @@ private[graft] class ManifestStatsScan(val inner: Scan, rows: Long, bytes: Long)
 /** Tier-1 serving: Spark's native parquet v2 table, gated by manifest
   * data skipping — see [[SkippingScanBuilder]]. */
 private[sql] class SkippingTable(tableName: String, spark: SparkSession,
-                                 dir: String, v: Int, dataDirs: Seq[String],
-                                 fullSchema: StructType,
-                                 colMap: Map[String, String] = Map.empty)
+                                 dir: String, snap: Snapshot,
+                                 fullSchema: StructType)
   extends Table with SupportsRead with SupportsWrite with VersionedDeletes
     with VersionedRowOps with ReportsCheckConstraints
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
@@ -1603,7 +1587,8 @@ private[sql] class SkippingTable(tableName: String, spark: SparkSession,
   override protected def vdSpark: SparkSession = spark
   override protected def vdDir: String = dir
   override protected def vdSchema: StructType = fullSchema
-  override protected def vcVersion: Int = v
+  override protected def vcSnapshot: Snapshot = snap
+  private def colMap = snap.colMap
   override protected def vroColMap: Map[String, String] = colMap
 
   override def name(): String = tableName
@@ -1617,7 +1602,7 @@ private[sql] class SkippingTable(tableName: String, spark: SparkSession,
   override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     if (RowIds.conflicts(fullSchema) ||
         RowIds.conflicts(ColumnMapped.toPhysicalSchema(fullSchema, colMap)) ||
-        Versioned.manifestPartitioningIndex(spark, dir, v).isEmpty)
+        Versioned.manifestPartitioningIndex(spark, snap).isEmpty)
       Array.empty
     else RowIds.metadataColumns
 
@@ -1638,17 +1623,18 @@ private[sql] class SkippingTable(tableName: String, spark: SparkSession,
   // per-row work is added. (renameColumns refuses pre-file-list
   // chains, so the fallback tier never sees a mapping.)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    Versioned.manifestPartitioningIndex(spark, dir, v) match {
+    Versioned.manifestPartitioningIndex(spark, snap) match {
       case Some(index) =>
         val physSchema = ColumnMapped.toPhysicalSchema(fullSchema, colMap)
         val inner = new ManifestStatsScanBuilder(
           org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder(
             spark, index, physSchema, physSchema, options),
-          Versioned.manifestSizeOf(spark, dir, v), dir)
+          snap.sizeStats, dir)
         if (colMap.isEmpty) inner
         else new ColumnMappedScanBuilder(inner, colMap)
       case None =>
-        new SkippingScanBuilder(spark, tableName, options, dir, v, dataDirs, fullSchema)
+        new SkippingScanBuilder(spark, tableName, options, dir, snap.version, snap.dataDirs,
+          fullSchema)
     }
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -2000,7 +1986,7 @@ private[sql] class VersionedWriteBuilder(spark: SparkSession, dir: String,
   * parquet table; writes route through the manifest commit (see the
   * catalog's load() for why the raw ParquetTable must not leak). */
 private[sql] class LegacyVersionedTable(inner: Table with SupportsRead,
-                                        spark: SparkSession, dir: String, v: Int)
+                                        spark: SparkSession, dir: String, snap: Snapshot)
   extends Table with SupportsRead with SupportsWrite with VersionedDeletes
     with VersionedRowOps with ReportsCheckConstraints
     with GraftV1StreamFallback {
@@ -2008,7 +1994,7 @@ private[sql] class LegacyVersionedTable(inner: Table with SupportsRead,
   override protected def vdSpark: SparkSession = spark
   override protected def vdDir: String = dir
   override protected def vdSchema: StructType = inner.schema()
-  override protected def vcVersion: Int = v
+  override protected def vcSnapshot: Snapshot = snap
 
   override def name(): String = inner.name()
   override def schema(): StructType = inner.schema()
@@ -2141,21 +2127,7 @@ private[graft] object RowIds {
 
 private[sql] class DvMaskedTable(inner: Table with SupportsRead,
                                  fullSchema: StructType,
-                                 dvDirs: Seq[(String, Seq[String])],
-                                 spark: SparkSession, dir: String, v: Int,
-                                 partCols: Seq[String] = Seq.empty,
-                                 scopedDvs: Seq[(String, String, Set[String])] = Seq.empty,
-                                 colMap: Map[String, String] = Map.empty,
-                                 // PHYSICAL-keyed twins of dvDirs/scopedDvs for the
-                                 // rewrite seams (candidate scan runs physical; the
-                                 // commit's dv snapshot compares against manifest
-                                 // lines). Identical to the mask params when the
-                                 // table was never renamed.
-                                 dvDirsPhysical: Seq[(String, Seq[String])] = Seq.empty,
-                                 scopedDvsPhysical: Seq[(String, String, Set[String])] = Seq.empty,
-                                 // absolute POSITIONAL dv dirs — name-free masks,
-                                 // identical in logical and physical space
-                                 posDvs: Seq[String] = Seq.empty)
+                                 spark: SparkSession, dir: String, snap: Snapshot)
   extends Table with SupportsRead with SupportsWrite with VersionedDeletes
     with VersionedRowOps with ReportsCheckConstraints
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
@@ -2164,7 +2136,16 @@ private[sql] class DvMaskedTable(inner: Table with SupportsRead,
   override protected def vdSpark: SparkSession = spark
   override protected def vdDir: String = dir
   override protected def vdSchema: StructType = fullSchema
-  override protected def vcVersion: Int = v
+  override protected def vcSnapshot: Snapshot = snap
+  private def partCols = snap.partitionCols
+  private def colMap = snap.colMap
+  // dv key columns translate to logical for the SCAN-side mask (it
+  // evaluates against the logical read schema); the snapshot's
+  // PHYSICAL pairs stay on the rewrite seams (candidate scans, dv
+  // snapshots). Positional masks are name-free.
+  private val inv = colMap.map(_.swap)
+  private val dvDirs = snap.dvDirs.map { case (k, ds) => (inv.getOrElse(k, k), ds) }
+  private val scopedDvs = snap.scopedDvs.map { case (k, d, sc) => (inv.getOrElse(k, k), d, sc) }
   // a dv mask over a PARTITIONED chain must keep carrying the spec:
   // without it a row-level rewrite would re-land the replacement
   // unpartitioned (silent layout downgrade) and an INSERT INTO would
@@ -2172,11 +2153,9 @@ private[sql] class DvMaskedTable(inner: Table with SupportsRead,
   override protected def vroPartCols: Seq[String] = partCols
   // the rewrite's candidate-file scan applies the same mask the
   // table's own scan does, and its commit snapshots the dv set
-  override protected def vroDvDirs: Seq[(String, Seq[String])] =
-    if (dvDirsPhysical.nonEmpty) dvDirsPhysical else dvDirs
-  override protected def vroScopedDvs: Seq[(String, String, Set[String])] =
-    if (scopedDvsPhysical.nonEmpty) scopedDvsPhysical else scopedDvs
-  override protected def vroPosDvs: Seq[String] = posDvs
+  override protected def vroDvDirs: Seq[(String, Seq[String])] = snap.dvDirs
+  override protected def vroScopedDvs: Seq[(String, String, Set[String])] = snap.scopedDvs
+  override protected def vroPosDvs: Seq[String] = snap.posDvs
   override protected def vroColMap: Map[String, String] = colMap
   override def partitioning(): Array[Transform] =
     partCols.map(c =>
@@ -2193,13 +2172,13 @@ private[sql] class DvMaskedTable(inner: Table with SupportsRead,
   override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     if (RowIds.conflicts(fullSchema) ||
         RowIds.conflicts(ColumnMapped.toPhysicalSchema(fullSchema, colMap)) ||
-        Versioned.manifestPartitioningIndex(spark, dir, v).isEmpty)
+        Versioned.manifestPartitioningIndex(spark, snap).isEmpty)
       Array.empty
     else RowIds.metadataColumns
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new DvScanBuilder(inner.newScanBuilder(options), fullSchema, dvDirs, scopedDvs, dir,
-      posDvs)
+      snap.posDvs)
 
   // appends to a delete-bearing table are routine; the KEY-level mask
   // keeps deleted keys masked through them (the erasure contract)

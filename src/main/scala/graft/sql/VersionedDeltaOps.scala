@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.ext.Versioned
+import graft.ext.{Snapshot, Versioned}
 
 /** DELTA-BASED row-level operations (Spark's `SupportsDelta` seam —
   * the Iceberg merge-on-read pattern; cf. reference role: Delta's
@@ -51,7 +51,7 @@ private[sql] object GraftDeltaOps {
   def enabled(spark: SparkSession): Boolean = graft.Knobs.rowOpsMode(spark) != "cow"
 }
 
-private[sql] class GraftDeltaOperation(spark: SparkSession, dir: String, v: Int,
+private[sql] class GraftDeltaOperation(spark: SparkSession, dir: String, snap: Snapshot,
                                        fullSchema: StructType,
                                        partCols: Seq[String],
                                        dvDirsPhys: Seq[(String, Seq[String])],
@@ -76,7 +76,7 @@ private[sql] class GraftDeltaOperation(spark: SparkSession, dir: String, v: Int,
   override def description(): String = s"VersionedDelta[$dir]"
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new DeltaCandidateScanBuilder(spark, dir, v, fullSchema, partCols,
+    new DeltaCandidateScanBuilder(spark, dir, snap, fullSchema, partCols,
       dvDirsPhys, scopedPhys, posDvs, colMap, options)
 
   override def newWriteBuilder(winfo: LogicalWriteInfo): DeltaWriteBuilder = {
@@ -84,7 +84,7 @@ private[sql] class GraftDeltaOperation(spark: SparkSession, dir: String, v: Int,
     val snapshot = dvDirsPhys.flatMap { case (k, ds) => ds.map(d => (k, seg(d))) } ++
       scopedPhys.map { case (k, d, _) => (k, seg(d)) } ++
       posDvs.map(d => (Versioned.PdvSnapshotKey, seg(d)))
-    new GraftDeltaWriteBuilder(spark, dir, v, winfo, partCols, snapshot, colMap)
+    new GraftDeltaWriteBuilder(spark, dir, snap.version, winfo, partCols, snapshot, colMap)
   }
 }
 
@@ -95,7 +95,7 @@ private[sql] class GraftDeltaOperation(spark: SparkSession, dir: String, v: Int,
   * masked, row-id-capable tier as any read ([[DvScanBuilder]]) so
   * position-deleted rows can never resurrect into the rewrite and
   * every row carries its `_file`/`_pos` address. */
-private[sql] class DeltaCandidateScanBuilder(spark: SparkSession, dir: String, v: Int,
+private[sql] class DeltaCandidateScanBuilder(spark: SparkSession, dir: String, snap: Snapshot,
                                              fullSchema: StructType,
                                              partCols: Seq[String],
                                              dvDirsPhys: Seq[(String, Seq[String])],
@@ -117,7 +117,7 @@ private[sql] class DeltaCandidateScanBuilder(spark: SparkSession, dir: String, v
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
     val translated = filters.flatMap(f =>
       org.apache.spark.sql.execution.datasources.GraftFilterShim.translate(f))
-    candidates = Versioned.rowLevelCandidateFiles(spark, dir, v, translated)
+    candidates = Versioned.rowLevelCandidateFiles(spark, snap, translated)
     filters
   }
 
@@ -128,8 +128,8 @@ private[sql] class DeltaCandidateScanBuilder(spark: SparkSession, dir: String, v
     // no pushable condition (e.g. a MERGE whose ON references only the
     // source side): every live file is a candidate — still positions
     // plus appends, never a rewrite
-    val files = candidates.getOrElse(Versioned.allLiveFilesMap(spark, dir, v))
-    val subsetIndex = Versioned.manifestPartitioningIndexSubset(spark, dir, v, files)
+    val files = candidates.getOrElse(Versioned.allLiveFilesMap(spark, dir, snap.version))
+    val subsetIndex = Versioned.manifestPartitioningIndexSubset(spark, snap, files)
     val dataSchema = StructType(physSchema.fields.filterNot(f =>
       partCols.contains(f.name)))
     val pb = org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder(

@@ -104,24 +104,21 @@ private[sql] object VersionedProcedures {
         val vs = Versioned.versions(spark, dir)
         require(vs.nonEmpty, s"no versions at $dir")
         val v = vs.last
-        val info = Versioned.versionInfo(spark, dir, v)
-        val sz = Versioned.manifestSizeOf(spark, dir, v)
+        val snap = Versioned.snapshot(spark, dir, v)
+        val sz = snap.sizeStats
         val nFiles =
           try Versioned.allLiveFilesMap(spark, dir, v).valuesIterator.map(_.size).sum
           catch { case _: IllegalArgumentException => -1 } // pre-file-list manifest
-        val inv = info.colMap.map(_.swap)
         Seq(row("parquet/versioned-manifest",
           Int.box(v), Int.box(vs.length), Int.box(nFiles),
           sz.map(x => Long.box(x._2)).orNull,
           sz.map(x => Long.box(x._1)).orNull,
-          info.partitionCols.mkString(","),
-          info.notNull.map(c => inv.getOrElse(c, c)).mkString(","),
-          Int.box(Versioned.checkConstraints(spark, dir, v).length),
-          Int.box(info.dvDirs.map(_._2.length).sum + info.scopedDvs.length +
-            info.posDvs.length),
-          info.colMap.toSeq.sorted.map { case (l, p) => s"$l->$p" }.mkString(","),
-          Some(Versioned.bloomColumns(spark, dir, v).map(_._1).mkString(","))
-            .filter(_.nonEmpty).orNull))
+          snap.partitionCols.mkString(","),
+          snap.logicalNotNull.mkString(","),
+          Int.box(snap.constraints.length),
+          Int.box(snap.dvSnapshot.length),
+          snap.colMap.toSeq.sorted.map { case (l, p) => s"$l->$p" }.mkString(","),
+          Some(snap.bloomColumns.map(_._1).mkString(",")).filter(_.nonEmpty).orNull))
       }),
 
     proc("partitions",

@@ -143,7 +143,7 @@ class VersionedStreamProvider extends StreamSourceProvider with StreamSinkProvid
     val v = Versioned.latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(
         s"no versions at $dir — commit one before streaming from it"))
-    Versioned.versionInfo(spark, dir, v).schema
+    Versioned.snapshot(spark, dir, v).schema
       .getOrElse(Versioned.readVersion(spark, dir, v).schema)
   }
 
@@ -312,7 +312,7 @@ private[sql] class VersionedStreamSource(spark: SparkSession, dir: String,
   }
 
   private def dirCount(v: Long): Int =
-    if (v < 0) 0 else Versioned.versionInfo(spark, dir, v.toInt).dataDirs.size
+    if (v < 0) 0 else Versioned.snapshot(spark, dir, v.toInt).dataDirNames.size
 
   /** A position's index into the (shared, append-ordered) dir list. */
   private def globalIdx(o: VersionOffset): Long =
@@ -513,21 +513,13 @@ private[sql] class VersionedStreamSource(spark: SparkSession, dir: String,
         // a flagged REARRANGEMENT (dataChange=false: compaction,
         // Z-order) changes no served row — skip it outright instead
         // of paying the O(both versions) derive to learn that
-        if (v > 0 && Versioned.isRearrange(spark, dir, v)) None
-        else {
-          // _commit_version serves as LONG and _commit_timestamp from
-          // the recorded in-commit clock (mtime fallback for manifests
-          // predating the ts: line) — the Delta CDF column contract
-          val commitTs = new java.sql.Timestamp(
-            Versioned.commitTimestamp(spark, dir, v))
-          val base =
-            if (v == 0)
-              Versioned.readVersion(spark, dir, 0)
-                .withColumn("_change_type", lit("insert"))
-            else Versioned.changeFeed(spark, dir, v - 1, v, cdfKeys)
-          Some(base.withColumn("_commit_version", lit(v.toLong))
-            .withColumn("_commit_timestamp", lit(commitTs)))
-        }
+        if (v > 0 && Versioned.snapshot(spark, dir, v).isRearrange) None
+        // changeFeed carries the CDF commit columns; version 0 serves
+        // its state as inserts and adds them the same way
+        else if (v == 0)
+          Some(Versioned.withCommitMetadata(Versioned.readVersion(spark, dir, 0)
+            .withColumn("_change_type", lit("insert")), Versioned.snapshot(spark, dir, 0)))
+        else Some(Versioned.changeFeed(spark, dir, v - 1, v, cdfKeys))
       }
       val all =
         if (parts.isEmpty)
@@ -546,8 +538,7 @@ private[sql] class VersionedStreamSource(spark: SparkSession, dir: String,
         all.select(frozenSchema.fieldNames.map(col).toSeq: _*), frozenSchema)
     }
 
-    val endInfo = Versioned.versionInfo(spark, dir, endV)
-    val endDirs = endInfo.dataDirs
+    val endDirs = Versioned.snapshot(spark, dir, endV).dataDirs
 
     // base position: an explicit start offset, else the pinned
     // startingVersion base, else zero (initial snapshot from the top)
@@ -580,7 +571,7 @@ private[sql] class VersionedStreamSource(spark: SparkSession, dir: String,
         }
         var w = math.max(sv, -1) + 1
         while (w <= endV) {
-          val isRearr = Versioned.isRearrange(spark, dir, w)
+          val isRearr = Versioned.snapshot(spark, dir, w).isRearrange
           // integrity per crossed version: a commit that DROPPED dirs
           // is fatal — overwrite or restore broke the appends-only
           // premise — UNLESS it declared itself a content-preserving
@@ -591,24 +582,24 @@ private[sql] class VersionedStreamSource(spark: SparkSession, dir: String,
           // PHYSICALLY to the rewritten files and retired — nothing
           // served changed.
           if (!isRearr && w > 0) {
-            val prevInfo = Versioned.versionInfo(spark, dir, w - 1)
-            val curInfo = Versioned.versionInfo(spark, dir, w)
-            val dropped = prevInfo.dataDirs.toSet -- curInfo.dataDirs.toSet
+            val prevSnap = Versioned.snapshot(spark, dir, w - 1)
+            val curSnap = Versioned.snapshot(spark, dir, w)
+            val dropped = prevSnap.dataDirs.toSet -- curSnap.dataDirs.toSet
             if (dropped.nonEmpty) throw new IllegalStateException(
               s"versioned stream at $dir hit a non-append commit at v$w " +
                 s"(${dropped.size} data dir(s) dropped — overwrite or restore). " +
                 "Streaming serves appends only; restart the stream from the new state.")
             if (!ignoreDeletes &&
-                ((prevInfo.dvDirs != curInfo.dvDirs &&
-                  !sameDvContent(prevInfo.dvDirs, curInfo.dvDirs)) ||
-                 prevInfo.scopedDvs != curInfo.scopedDvs ||
+                ((prevSnap.dvDirs != curSnap.dvDirs &&
+                  !sameDvContent(prevSnap.dvDirs, curSnap.dvDirs)) ||
+                 prevSnap.scopedDvs != curSnap.scopedDvs ||
                  // POSITIONAL deletes are deletes too: a pdv commit
                  // masks rows already served. Content-compared, like
                  // the key masks — dv compaction merges pdv dirs
                  // WITHOUT changing the (file, pos) set and must not
                  // read as a phantom DELETE
-                 (prevInfo.posDvs != curInfo.posDvs &&
-                  !samePdvContent(prevInfo.posDvs, curInfo.posDvs))))
+                 (prevSnap.posDvs != curSnap.posDvs &&
+                  !samePdvContent(prevSnap.posDvs, curSnap.posDvs))))
               throw new IllegalStateException(
                 s"versioned stream at $dir hit a DELETE at v$w; " +
                   "rows already served cannot be unserved. Pass " +

@@ -2020,7 +2020,7 @@ class ExtSpec extends AnyFunSuite {
     Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir)
     Versioned.writeVersion(Seq((2L, "b", 1.5)).toDF("id", "v", "score"), dir, SaveMode.Append)
     // the commit recorded the UNION schema — Delta metaData's role
-    val rec = Versioned.recordedSchema(spark, dir, 1)
+    val rec = Versioned.snapshot(spark, dir, 1).schema
     assert(rec.map(_.fieldNames.toSeq).contains(Seq("id", "v", "score")))
     // job-count harness: the pre-round-8 mergeSchema read launched a
     // footer-merge Spark job at PLAN time on every read (at 100 TB /
@@ -2053,13 +2053,13 @@ class ExtSpec extends AnyFunSuite {
     val v0dir = new java.io.File(dir).listFiles().map(_.getName)
       .find(_.startsWith("v00000000_data")).get
     Versioned.commitManifest(spark, dir, 2, Seq(v0dir))
-    assert(Versioned.recordedSchema(spark, dir, 2).isEmpty)
+    assert(Versioned.snapshot(spark, dir, 2).schema.isEmpty)
     assert(Versioned.readVersion(spark, dir, 2)
       .select("id").as[Long].collect().toSet == Set(1L))
     // the next APPEND onto the legacy manifest derives the union once
     // and records it — the table upgrades in place
     Versioned.writeVersion(Seq((3L, "c")).toDF("id", "v"), dir, SaveMode.Append)
-    assert(Versioned.recordedSchema(spark, dir, 3).nonEmpty)
+    assert(Versioned.snapshot(spark, dir, 3).schema.nonEmpty)
     assert(Versioned.readVersion(spark, dir, 3)
       .select("id").as[Long].collect().toSet == Set(1L, 3L))
     // an append that CHANGES a column's type refuses up front (that
@@ -2140,7 +2140,7 @@ class ExtSpec extends AnyFunSuite {
     // which the impossible predicate plans zero dirs
     val bv = Versioned.backfillStats(spark, dir)
     assert(bv.contains(v3 + 2))
-    assert(Versioned.recordedSchema(spark, dir, v3 + 2).nonEmpty)
+    assert(Versioned.snapshot(spark, dir, v3 + 2).schema.nonEmpty)
     assert(Versioned.planDataDirs(spark, dir, v3 + 2,
       Seq(GreaterThan("id", 1000L))).isEmpty)
     assert(Versioned.readLatest(spark, dir)
@@ -2457,7 +2457,7 @@ class ExtSpec extends AnyFunSuite {
     val v2 = Maintenance.zorderVersioned(spark, dir, "a", "b", nFiles = 8, bits = 6)
     assert(v2 == 2)
     // the optimize read through the mask: dv applied PHYSICALLY, chain dropped
-    assert(Versioned.versionInfo(spark, dir, v2).dvDirs.isEmpty)
+    assert(Versioned.snapshot(spark, dir, v2).dvDirs.isEmpty)
     assert(Versioned.readLatest(spark, dir).count() == 4094)
     // the SAME predicate now prunes most files — and on EITHER column
     // (the multi-dimensional property a single-column sort lacks)
@@ -2507,7 +2507,7 @@ class ExtSpec extends AnyFunSuite {
       .select("_commit_version", "_commit_timestamp").distinct()
       .as[(Long, java.sql.Timestamp)].collect().toMap
     assert((1 to 2).forall(v => tsByV(v.toLong).getTime ==
-      Versioned.commitTimestamp(spark, dirA, v)), tsByV.toString)
+      Versioned.snapshot(spark, dirA, v).commitTimestamp), tsByV.toString)
     // retention: pruning v0/v1 reclaims their dirs — the DERIVE path
     // for (1→2) is gone with them, but the feed recorded in v2's
     // surviving manifest still serves (the whole point of recording)
@@ -2644,7 +2644,7 @@ class ExtSpec extends AnyFunSuite {
     spark.sql(s"DELETE FROM graft_sd.`$dir` WHERE id IN (5, 7, 9)")
     assert(Versioned.latestVersion(spark, dir).contains(1))
     // SQL deletes commit SCOPED masks (statement-time rows only)
-    assert(Versioned.versionInfo(spark, dir, 1).scopedDvs.nonEmpty)
+    assert(Versioned.snapshot(spark, dir, 1).scopedDvs.nonEmpty)
     assert(spark.sql(s"SELECT id FROM graft_sd.`$dir`").as[Long].collect().toSet ==
       (0L until 100L).toSet -- Set(5L, 7L, 9L))
     // time travel still serves the pre-delete state
@@ -2664,7 +2664,7 @@ class ExtSpec extends AnyFunSuite {
     // masks the untouched files
     spark.sql(s"DELETE FROM graft_sd.`$dir` WHERE price > 500.0")
     assert(Versioned.latestVersion(spark, dir).contains(3))
-    assert(Versioned.versionInfo(spark, dir, 3).scopedDvs.nonEmpty,
+    assert(Versioned.snapshot(spark, dir, 3).scopedDvs.nonEmpty,
       "a file-granular rewrite keeps the dv: it still masks the untouched files")
     assert(spark.sql(s"SELECT id FROM graft_sd.`$dir`").as[Long].collect().toSet ==
       (0L to 50L).toSet -- Set(5L, 7L, 9L, 11L))
@@ -2703,7 +2703,7 @@ class ExtSpec extends AnyFunSuite {
     Versioned.deleteByKeys(spark, dir, Seq(99L).toDF("id"), "id")
     spark.sql(s"UPDATE graft_rw.`$dir` SET price = 0.0 WHERE id = 98")
     val vNow = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.versionInfo(spark, dir, vNow).dvDirs.nonEmpty,
+    assert(Versioned.snapshot(spark, dir, vNow).dvDirs.nonEmpty,
       "a file-granular rewrite keeps the dv: it still masks the untouched files")
     val after = spark.sql(s"SELECT id, price FROM graft_rw.`$dir`")
       .as[(Long, Double)].collect().toMap
@@ -2738,7 +2738,7 @@ class ExtSpec extends AnyFunSuite {
     assert(v2 == 2)
     assert(Versioned.readLatest(spark, dir).select("id").as[Long].collect().toSet == Set(1L))
     // the restore carried v0's schema and stats lines with it
-    assert(Versioned.recordedSchema(spark, dir, v2).nonEmpty)
+    assert(Versioned.snapshot(spark, dir, v2).schema.nonEmpty)
     assert(Versioned.planDataDirs(spark, dir, v2,
       Seq(org.apache.spark.sql.sources.EqualTo("id", 5L))).isEmpty)
   }
@@ -2834,14 +2834,14 @@ class ExtSpec extends AnyFunSuite {
     spark.sql(s"CREATE TABLE graft_pd.`$dir` (id BIGINT, cat STRING) PARTITIONED BY (cat)")
     // the chain is partitioned from birth: recorded spec, schema with
     // partition columns last
-    assert(Versioned.versionInfo(spark, dir, 0).partitionCols == Seq("cat"))
+    assert(Versioned.snapshot(spark, dir, 0).partitionCols == Seq("cat"))
     spark.sql(s"INSERT INTO graft_pd.`$dir` VALUES (1, 'a'), (2, 'b')")
     spark.sql(s"INSERT INTO graft_pd.`$dir` VALUES (3, 'a')")
     assert(spark.sql(s"SELECT id FROM graft_pd.`$dir` WHERE cat = 'a'")
       .as[Long].collect().toSet == Set(1L, 3L))
     // INSERT OVERWRITE replaces state, stays partitioned
     spark.sql(s"INSERT OVERWRITE graft_pd.`$dir` VALUES (7, 'c'), (8, 'd')")
-    assert(Versioned.versionInfo(spark, dir,
+    assert(Versioned.snapshot(spark, dir,
       Versioned.latestVersion(spark, dir).get).partitionCols == Seq("cat"))
     assert(spark.sql(s"SELECT id FROM graft_pd.`$dir`").as[Long].collect().toSet ==
       Set(7L, 8L))
@@ -2860,7 +2860,7 @@ class ExtSpec extends AnyFunSuite {
     // replacement re-lands hive-laid-out, partition VALUES intact
     spark.sql(s"UPDATE graft_pd.`$dir` SET id = id + 100 WHERE cat = 'c'")
     val vU = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.versionInfo(spark, dir, vU).partitionCols == Seq("cat"),
+    assert(Versioned.snapshot(spark, dir, vU).partitionCols == Seq("cat"),
       "UPDATE must not downgrade the layout")
     assert(spark.sql(s"SELECT id FROM graft_pd.`$dir` WHERE cat = 'c'")
       .as[Long].collect().toSeq == Seq(107L))
@@ -2868,7 +2868,7 @@ class ExtSpec extends AnyFunSuite {
       .collect().toSet == Set("c", "d"))
     // a NON-KEY delete (multi-column predicate) rewrites, still partitioned
     spark.sql(s"DELETE FROM graft_pd.`$dir` WHERE cat = 'd' AND id >= 0")
-    assert(Versioned.versionInfo(spark, dir,
+    assert(Versioned.snapshot(spark, dir,
       Versioned.latestVersion(spark, dir).get).partitionCols == Seq("cat"))
     assert(spark.sql(s"SELECT cat FROM graft_pd.`$dir`").as[String]
       .collect().toSeq == Seq("c"))
@@ -2876,7 +2876,7 @@ class ExtSpec extends AnyFunSuite {
     // schema AND spec with zero data dirs
     spark.sql(s"DELETE FROM graft_pd.`$dir` WHERE id >= 0 AND note IS NULL")
     assert(spark.sql(s"SELECT * FROM graft_pd.`$dir`").count() == 0)
-    assert(Versioned.versionInfo(spark, dir,
+    assert(Versioned.snapshot(spark, dir,
       Versioned.latestVersion(spark, dir).get).partitionCols == Seq("cat"))
     // and the empty partitioned table still takes inserts
     spark.sql(s"INSERT INTO graft_pd.`$dir` VALUES (1, 'x', 'a')")
@@ -2887,16 +2887,16 @@ class ExtSpec extends AnyFunSuite {
     // layout (the mask tier forwards the partition columns)
     spark.sql(s"INSERT INTO graft_pd.`$dir` VALUES (2, 'y', 'b'), (3, 'z', 'b')")
     spark.sql(s"DELETE FROM graft_pd.`$dir` WHERE id = 3") // scoped dv commit
-    assert(Versioned.versionInfo(spark, dir,
+    assert(Versioned.snapshot(spark, dir,
       Versioned.latestVersion(spark, dir).get).scopedDvs.nonEmpty)
     spark.sql(s"INSERT INTO graft_pd.`$dir` VALUES (4, 'w', 'c')")
     spark.sql(s"UPDATE graft_pd.`$dir` SET note = 'upd' WHERE cat = 'b'")
     val vDv = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.versionInfo(spark, dir, vDv).partitionCols == Seq("cat"),
+    assert(Versioned.snapshot(spark, dir, vDv).partitionCols == Seq("cat"),
       "a rewrite through the dv tier must not downgrade the layout")
     // the FILE-GRANULAR rewrite applies the mask physically within its
     // candidate files and KEEPS the dv (it still masks untouched files)
-    assert(Versioned.versionInfo(spark, dir, vDv).scopedDvs.nonEmpty,
+    assert(Versioned.snapshot(spark, dir, vDv).scopedDvs.nonEmpty,
       "a file-granular rewrite keeps the dv for the files it never touched")
     assert(spark.sql(s"SELECT id, note, cat FROM graft_pd.`$dir` ORDER BY id")
       .as[(Long, String, String)].collect().toSeq ==
@@ -2908,7 +2908,7 @@ class ExtSpec extends AnyFunSuite {
       .createOrReplaceTempView("graft_pd_src")
     spark.sql(s"CREATE TABLE graft_pd.`$dir3` PARTITIONED BY (cat) AS " +
       "SELECT * FROM graft_pd_src")
-    assert(Versioned.versionInfo(spark, dir3, 0).partitionCols == Seq("cat"))
+    assert(Versioned.snapshot(spark, dir3, 0).partitionCols == Seq("cat"))
     assert(spark.sql(s"SELECT id FROM graft_pd.`$dir3` WHERE cat = 'even'")
       .as[Long].collect().toSet == Set(0L, 2L, 4L))
   }
@@ -2924,7 +2924,7 @@ class ExtSpec extends AnyFunSuite {
     assert(Versioned.latestVersion(spark, dir).contains(0))
     // a satisfiable one commits metadata-only
     val v1 = Versioned.addCheckConstraint(spark, dir, "price_pos", "price > 0.0")
-    assert(v1 == 1 && Versioned.checkConstraints(spark, dir, 1) ==
+    assert(v1 == 1 && Versioned.snapshot(spark, dir, 1).constraints ==
       Seq(("price_pos", "price > 0.0")))
     // a violating append refuses BEFORE the commit; no version, no orphan visible
     val viol = intercept[IllegalArgumentException] {
@@ -2945,8 +2945,8 @@ class ExtSpec extends AnyFunSuite {
       Versioned.writeVersion(Seq((9L, -5.0)).toDF("id", "price"), dir) }
     assert(ow.getMessage.contains("price_pos"))
     Versioned.writeVersion(Seq((9L, 5.0)).toDF("id", "price"), dir)
-    assert(Versioned.checkConstraints(spark, dir,
-      Versioned.latestVersion(spark, dir).get).map(_._1) == Seq("price_pos"))
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).constraints.map(_._1) == Seq("price_pos"))
     // … and a constrained column cannot be metadata-dropped
     val dc = intercept[IllegalArgumentException] {
       Versioned.dropColumns(spark, dir, Seq("price")) }
@@ -2966,7 +2966,7 @@ class ExtSpec extends AnyFunSuite {
     // catalog chain would silently drop it)
     spark.sql(s"CREATE TABLE graft_ck.`$dir` (id BIGINT, price DOUBLE, " +
       "CONSTRAINT price_pos CHECK (price > 0.0))")
-    assert(Versioned.checkConstraints(spark, dir, 0) == Seq(("price_pos", "price > 0.0")))
+    assert(Versioned.snapshot(spark, dir, 0).constraints == Seq(("price_pos", "price > 0.0")))
     spark.sql(s"INSERT INTO graft_ck.`$dir` VALUES (1, 10.0), (2, 20.0)")
     // violating INSERT refused; table state unchanged
     val viol = intercept[Exception] {
@@ -3001,8 +3001,8 @@ class ExtSpec extends AnyFunSuite {
     // survive into the replaced table
     spark.sql(s"ALTER TABLE graft_ck.`$dir` ADD CONSTRAINT price_pos2 CHECK (price > 0.0)")
     spark.sql(s"CREATE OR REPLACE TABLE graft_ck.`$dir` AS VALUES (1), (2) t(n)")
-    assert(Versioned.checkConstraints(spark, dir,
-      Versioned.latestVersion(spark, dir).get).isEmpty,
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).constraints.isEmpty,
       "REPLACE TABLE must not carry the old constraints")
     assert(spark.sql(s"SELECT n FROM graft_ck.`$dir`").as[Int].collect().toSet == Set(1, 2))
     // NOT ENFORCED refuses (this store enforces every stored constraint)
@@ -3018,8 +3018,8 @@ class ExtSpec extends AnyFunSuite {
     spark.sql(s"ALTER TABLE graft_ck.`$dir` ADD CONSTRAINT n_pos CHECK (n > 0)")
     spark.sql(s"DELETE FROM graft_ck.`$dir` WHERE n >= 0 AND n <= 100") // non-key → positional dv
     assert(spark.sql(s"SELECT * FROM graft_ck.`$dir`").count() == 0)
-    assert(Versioned.checkConstraints(spark, dir,
-      Versioned.latestVersion(spark, dir).get).map(_._1) == Seq("n_pos"),
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).constraints.map(_._1) == Seq("n_pos"),
       "a data rewrite must keep the constraints")
     intercept[Exception] { spark.sql(s"INSERT INTO graft_ck.`$dir` VALUES (-5)") }
     // batched ALTER is refuse-first: a bad second column leaves the
@@ -3061,6 +3061,54 @@ class ExtSpec extends AnyFunSuite {
     intercept[Exception] { Versioned.readVersion(spark, dir, 0).collect() }
   }
 
+  test("a loaded table keeps its snapshot: properties() and constraints() resolve no manifest") {
+    import graft.ext.Versioned
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    val dir = java.nio.file.Files.createTempDirectory("graft_snapload").toString + "/t"
+    spark.conf.set("spark.sql.catalog.graft_sl", "graft.sql.VersionedCatalog")
+    Versioned.createTable(spark, dir,
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING"),
+      constraints = Seq("id_nonneg" -> "id >= 0"), props = Map("team.owner" -> "ingest"))
+    val table = spark.table(s"graft_sl.`$dir`").queryExecution.analyzed.collectFirst {
+      case r: DataSourceV2Relation => r.table }.get
+    def lookups = {
+      val s = Versioned.cacheStats.toMap.apply("manifest")
+      s.hits + s.misses
+    }
+    val before = lookups
+    assert(table.properties().get("team.owner") == "ingest")
+    assert(table.constraints().map(_.name()).toSeq == Seq("id_nonneg"))
+    assert(lookups == before, "a loaded table must not re-resolve its version")
+  }
+
+  test("changeFeed carries the commit clock as data: a second version pair of one shape compiles no class") {
+    import graft.ext.Versioned
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.types.{LongType, TimestampType}
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdfclock").toString + "/t"
+    def commit(i: Int): Int = Versioned.writeVersion(
+      spark.range(0, 50).toDF("id").withColumn("v", $"id" * i), dir)
+    def feed(v: Int) = {
+      val df = Versioned.changeFeed(spark, dir, v - 1, v, Seq("id"))
+      assert(df.schema("_commit_version").dataType == LongType &&
+        !df.schema("_commit_version").nullable)
+      assert(df.schema("_commit_timestamp").dataType == TimestampType &&
+        !df.schema("_commit_timestamp").nullable)
+      val meta = df.select("_commit_version", "_commit_timestamp")
+        .as[(Long, java.sql.Timestamp)].collect().distinct.toSeq
+      assert(meta == Seq((v.toLong,
+        new java.sql.Timestamp(Versioned.snapshot(spark, dir, v).commitTimestamp))))
+      assert(df.count() == 98) // ids 1..49 update: pre- and post-image each
+    }
+    commit(1); commit(2)
+    feed(1)
+    commit(3)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    feed(2)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the second version's feed compiled $compiled classes")
+  }
+
   test("prune reclaims a crashed sidecar write's aged tmp file and keeps live and young sidecar files") {
     import graft.ext.Versioned
     val dir = java.nio.file.Files.createTempDirectory("graft_sctmp").toString + "/t"
@@ -3089,18 +3137,18 @@ class ExtSpec extends AnyFunSuite {
     // three deletes → three dv dirs; CALL compact_dv merges to one
     Seq(1L, 2L, 3L).foreach(k =>
       Versioned.deleteByKeys(spark, dir, Seq(k).toDF("id"), "id"))
-    assert(Versioned.versionInfo(spark, dir,
+    assert(Versioned.snapshot(spark, dir,
       Versioned.latestVersion(spark, dir).get).dvDirs.head._2.length == 3)
     val cv = spark.sql(s"CALL graft_pr.system.compact_dv(table => '$dir')")
     assert(cv.columns.toSeq == Seq("version") && cv.as[Int].head() == 4)
-    assert(Versioned.versionInfo(spark, dir, 4).dvDirs.head._2.length == 1)
+    assert(Versioned.snapshot(spark, dir, 4).dvDirs.head._2.length == 1)
     // idempotent second call returns NULL (nothing to merge)
     assert(spark.sql(s"CALL graft_pr.system.compact_dv('$dir')")
       .as[Option[Int]].head().isEmpty)
     // zorder commits a rewrite; the mask applied physically on the way
     val zv = spark.sql(
       s"CALL graft_pr.system.zorder('$dir', 'id', 'k', 2)").as[Int].head()
-    assert(Versioned.versionInfo(spark, dir, zv).dvDirs.isEmpty)
+    assert(Versioned.snapshot(spark, dir, zv).dvDirs.isEmpty)
     assert(Versioned.readLatest(spark, dir).count() == 97)
     // restore: back to the pre-delete state as a NEW version
     val rv = spark.sql(s"CALL graft_pr.system.restore('$dir', 0)").as[Int].head()
@@ -3163,11 +3211,11 @@ class ExtSpec extends AnyFunSuite {
       .as[Int].head()
     assert(zp == 1)
     // the spec survives and the state is intact
-    assert(Versioned.versionInfo(spark, pdir, zp).partitionCols == Seq("cat"))
+    assert(Versioned.snapshot(spark, pdir, zp).partitionCols == Seq("cat"))
     assert(Versioned.readLatest(spark, pdir).count() == 100)
     val cp = spark.sql(s"CALL graft_pr.system.compact_files('$pdir')").collect().head
     val vAfter = Versioned.latestVersion(spark, pdir).get
-    assert(Versioned.versionInfo(spark, pdir, vAfter).partitionCols == Seq("cat"))
+    assert(Versioned.snapshot(spark, pdir, vAfter).partitionCols == Seq("cat"))
     assert(cp.getInt(1) <= cp.getInt(0), cp.toString)
     assert(Versioned.readLatest(spark, pdir)
       .groupBy("cat").count().orderBy("cat").as[(String, Long)].collect().toSeq ==
@@ -3206,7 +3254,7 @@ class ExtSpec extends AnyFunSuite {
       s"table => '$dir', cols => 'a,b', n_files => 1)").collect().head
     assert(inc.getInt(0) == 2 && inc.getLong(1) > 0L, inc.toString)
     assert(inc.getInt(2) == Versioned.latestVersion(spark, dir).get)
-    assert(Versioned.isRearrange(spark, dir, inc.getInt(2)))
+    assert(Versioned.snapshot(spark, dir, inc.getInt(2)).isRearrange)
     assert(Versioned.readLatest(spark, dir).count() == 2500)
     // enable_row_tracking returns the backfill version; ids are live
     val rtv = spark.sql(
@@ -3268,15 +3316,15 @@ class ExtSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO graft_pt.`$dir` VALUES (1, 'a'), (2, 'b')")
     spark.sql(s"DELETE FROM graft_pt.`$dir`") // bare truncate
     val v = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.versionInfo(spark, dir, v).partitionCols == Seq("cat"),
+    assert(Versioned.snapshot(spark, dir, v).partitionCols == Seq("cat"),
       "truncate dropped the partition spec — the layout downgrade the fix guards")
-    assert(Versioned.checkConstraints(spark, dir, v).map(_._1) == Seq("pos"),
+    assert(Versioned.snapshot(spark, dir, v).constraints.map(_._1) == Seq("pos"),
       "truncate is a DATA change; the table's contract survives it")
     assert(spark.sql(s"SELECT * FROM graft_pt.`$dir`").count() == 0)
     // the next insert lands hive-laid-out and partition-prunes
     spark.sql(s"INSERT INTO graft_pt.`$dir` VALUES (3, 'c'), (4, 'd')")
     val v2 = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.versionInfo(spark, dir, v2).partitionCols == Seq("cat"))
+    assert(Versioned.snapshot(spark, dir, v2).partitionCols == Seq("cat"))
     assert(spark.sql(s"SELECT id FROM graft_pt.`$dir` WHERE cat = 'c'")
       .as[Long].collect().toSeq == Seq(3L))
     // and the constraint still refuses plan-side
@@ -3317,8 +3365,8 @@ class ExtSpec extends AnyFunSuite {
     assert(Versioned.alterTableAtomic(spark, dir, Versioned.AlterSpec(
       dropCols = Seq("x"), dropChecks = Seq(("xpos", false)))).nonEmpty)
     assert(!Versioned.readLatest(spark, dir).columns.contains("x"))
-    assert(Versioned.checkConstraints(spark, dir,
-      Versioned.latestVersion(spark, dir).get).isEmpty)
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).constraints.isEmpty)
   }
 
   test("manifests are O(delta): appends write increments, checkpoints bound the chain, prune snaps to a checkpoint") {
@@ -3328,6 +3376,32 @@ class ExtSpec extends AnyFunSuite {
       java.nio.file.Files.size(java.nio.file.Paths.get(f"$dir/_versions/$v%08d.manifest"))
     def firstLine(v: Int): String =
       scala.io.Source.fromFile(f"$dir/_versions/$v%08d.manifest").getLines().next()
+    // checkpoint and fold agree on WHOLE snapshots: every version with
+    // a checkpoint sidecar resolves, field by field, to the snapshot
+    // its delta fold resolves to. Returns the versions compared.
+    def checkpointsAgreeWithFold(): Seq[Int] = {
+      def fields(s: graft.ext.Snapshot): Seq[(String, Any)] = Seq(
+        "schema" -> s.schema, "colMap" -> s.colMap, "logicalSchema" -> s.logicalSchema,
+        "partitionCols" -> s.partitionCols, "dataDirs" -> s.dataDirs,
+        "stats" -> s.stats.values.map(st => (st.name, st.rows, st.cols, st.files)).toSet,
+        "fileListed" -> s.fileListed, "sizeStats" -> s.sizeStats, "dvDirs" -> s.dvDirs,
+        "scopedDvs" -> s.scopedDvs, "posDvs" -> s.posDvs, "dvSnapshot" -> s.dvSnapshot.toSet,
+        "liveDirNames" -> s.liveDirNames, "notNull" -> s.notNull,
+        "constraints" -> s.constraints, "properties" -> s.properties,
+        "features" -> s.features, "bloomColumns" -> s.bloomColumns,
+        "blooms" -> s.blooms.map { case (k, m) => k -> m.map { case (f, b) => f -> b.toSeq } },
+        "txns" -> s.txns, "ingested" -> s.ingested, "changes" -> s.changes,
+        "recordedTimestamp" -> s.recordedTimestamp, "commitTimestamp" -> s.commitTimestamp,
+        "isRearrange" -> s.isRearrange)
+      Versioned.versions(spark, dir).flatMap { v =>
+        val (viaCheckpoint, viaFold) = graft.ext.Snapshot.resolveEachWay(spark, dir, v)
+        viaCheckpoint.map { cp =>
+          fields(cp).zip(fields(viaFold)).foreach { case ((name, a), (_, b)) =>
+            assert(a == b, s"v$v $name: checkpoint $a vs fold $b") }
+          v
+        }
+      }
+    }
     // v0: an 8-file base commit (full manifest, 8 stats entries)
     Versioned.writeVersion(spark.range(0, 200).toDF("id").repartition(8), dir)
     assert(!firstLine(0).startsWith("parent:"))
@@ -3353,7 +3427,7 @@ class ExtSpec extends AnyFunSuite {
     assert(Versioned.readVersion(spark, dir, 0).count() == 200)
     assert(Versioned.readVersion(spark, dir, 5).count() == 205)
     assert(Versioned.readLatest(spark, dir).count() == 210)
-    assert(Versioned.recordedSchema(spark, dir, 9).nonEmpty,
+    assert(Versioned.snapshot(spark, dir, 9).schema.nonEmpty,
       "delta resolution must inherit the parent's schema line")
     // deletes and schema changes are increments too
     Versioned.deleteByKeys(spark, dir, Seq(1001L).toDF("id"), "id") // v11
@@ -3364,6 +3438,7 @@ class ExtSpec extends AnyFunSuite {
     assert(firstLine(12) == "parent:11")
     assert(Versioned.readLatest(spark, dir).count() == 209)
     assert(Versioned.readLatest(spark, dir).columns.contains("extra"))
+    assert(checkpointsAgreeWithFold() == Seq(10))
     // prune keeps its EXACT keepLast contract: the boundary version
     // (v12, a delta) gets its checkpoint sidecar materialized BEFORE
     // its parents are reclaimed, so it stays resolvable alone
@@ -3380,6 +3455,21 @@ class ExtSpec extends AnyFunSuite {
     assert(!firstLine(rv).startsWith("parent:"))
     Versioned.pruneVersions(spark, dir, keepLast = 1, orphanMinAgeMs = 0)
     assert(Versioned.versions(spark, dir) == Seq(rv))
+    assert(Versioned.readLatest(spark, dir).count() == 209)
+    // the chain grows by the line kinds it does not carry yet — a
+    // property, a constraint, a rename, a bloom column and a rearrange
+    // — each checkpointed at its own commit, from the commit path's
+    // own line set; each must match its fold
+    spark.conf.set("spark.graft.manifest.checkpointInterval", "1")
+    try {
+      Versioned.setTableProperties(spark, dir, Map("team.owner" -> "ingest"))
+      Versioned.addCheckConstraint(spark, dir, "id_nonneg", "id >= 0")
+      Versioned.renameColumns(spark, dir, Seq("extra" -> "note"))
+      Versioned.declareBloomColumn(spark, dir, "id")
+      assert(Versioned.compactSmallDirs(spark, dir, minDirs = 2).nonEmpty)
+    } finally spark.conf.unset("spark.graft.manifest.checkpointInterval")
+    assert(Versioned.snapshot(spark, dir, rv + 5).isRearrange)
+    assert(checkpointsAgreeWithFold() == (rv + 1 to rv + 5))
     assert(Versioned.readLatest(spark, dir).count() == 209)
   }
 
@@ -3428,11 +3518,11 @@ class ExtSpec extends AnyFunSuite {
     // commits (file-granular commits commute where the old whole-table
     // overwrite surfaced a lost race)
     val v = Versioned.latestVersion(spark, dir).get
-    val cand = Versioned.rowLevelCandidateFiles(spark, dir, v,
+    val cand = Versioned.rowLevelCandidateFiles(spark, Versioned.snapshot(spark, dir, v),
       Seq(EqualTo("id", 10L))).get
     assert(cand.values.map(_.size).sum == 1)
     // the snapshot carries the positional dv the DELETE just landed
-    val dvSnap = Versioned.versionInfo(spark, dir, v).posDvs
+    val dvSnap = Versioned.snapshot(spark, dir, v).posDvs
       .map(d => (Versioned.PdvSnapshotKey, d))
     Versioned.writeVersion(spark.range(1000, 1100).toDF("id")
       .withColumn("price", lit(0.0)), dir, org.apache.spark.sql.SaveMode.Append)
@@ -3442,7 +3532,7 @@ class ExtSpec extends AnyFunSuite {
     assert(n == 300 + 100 - 100, s"rewrite dropped its candidate file's rows, appends kept: $n")
     // conflicts SURFACE: (a) a candidate file rewritten concurrently
     val v2 = Versioned.latestVersion(spark, dir).get
-    val stale = Versioned.rowLevelCandidateFiles(spark, dir, v2,
+    val stale = Versioned.rowLevelCandidateFiles(spark, Versioned.snapshot(spark, dir, v2),
       Seq(GreaterThanOrEqual("id", 1000L))).get
     Versioned.commitFileRewrite(spark, dir, stale, None, Seq.empty, dvSnap) // someone else wins
     val exA = intercept[IllegalStateException] {
@@ -3450,7 +3540,7 @@ class ExtSpec extends AnyFunSuite {
     assert(exA.getMessage.contains("stale"), exA.getMessage)
     // (b) the deletion-vector set changed since the scan
     val v3 = Versioned.latestVersion(spark, dir).get
-    val cand3 = Versioned.rowLevelCandidateFiles(spark, dir, v3,
+    val cand3 = Versioned.rowLevelCandidateFiles(spark, Versioned.snapshot(spark, dir, v3),
       Seq(EqualTo("id", 150L))).get
     Versioned.deleteByKeys(spark, dir, Seq(151L).toDF("id"), "id")
     val exB = intercept[IllegalStateException] {
@@ -3484,7 +3574,7 @@ class ExtSpec extends AnyFunSuite {
       "partition a's files must all be replaced")
     assert(after.exists(f => !before.contains(f) && f.contains("cat=a")),
       "the replacement must re-land hive-laid-out under cat=a")
-    assert(Versioned.versionInfo(spark, dir, v1).partitionCols == Seq("cat"))
+    assert(Versioned.snapshot(spark, dir, v1).partitionCols == Seq("cat"))
     val got = spark.sql(s"SELECT id, price FROM graft_fgp.`$dir`")
       .as[(Long, Double)].collect().toMap
     assert(got.size == 100 && got(2L) == -1.0 && got(3L) == 3.0)
@@ -3530,8 +3620,8 @@ class ExtSpec extends AnyFunSuite {
     // a physical rewrite (zorder) applies BOTH masks and drops them
     graft.ext.Maintenance.zorderVersioned(spark, dir, "id", "id", 2)
     val vz = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.versionInfo(spark, dir, vz).dvDirs.isEmpty &&
-      Versioned.versionInfo(spark, dir, vz).scopedDvs.isEmpty)
+    assert(Versioned.snapshot(spark, dir, vz).dvDirs.isEmpty &&
+      Versioned.snapshot(spark, dir, vz).scopedDvs.isEmpty)
     assert(Versioned.readLatest(spark, dir).select("id").as[Long].collect().toSet ==
       (0L until 20L).toSet - 7L)
   }
@@ -3558,7 +3648,7 @@ class ExtSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_notnull").toString + "/t"
     spark.conf.set("spark.sql.catalog.graft_nn", "graft.sql.VersionedCatalog")
     spark.sql(s"CREATE TABLE graft_nn.`$dir` (id BIGINT NOT NULL, v STRING)")
-    assert(Versioned.notNullColumns(spark, dir, 0) == Seq("id"))
+    assert(Versioned.snapshot(spark, dir, 0).logicalNotNull == Seq("id"))
     // the catalog serves the real contract: id reports non-nullable
     assert(!spark.table(s"graft_nn.`$dir`").schema("id").nullable)
     // plan-side: a violating SQL INSERT refuses (ANSI store assignment
@@ -3593,7 +3683,7 @@ class ExtSpec extends AnyFunSuite {
     spark.sql(s"UPDATE graft_nn.`$dir` SET v = 'fixed' WHERE v IS NULL")
     spark.sql(s"CALL graft_nn.system.set_not_null('$dir', 'v')")
     val vSet = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.notNullColumns(spark, dir, vSet).sorted == Seq("id", "v"))
+    assert(Versioned.snapshot(spark, dir, vSet).logicalNotNull.sorted == Seq("id", "v"))
     val vNull = intercept[Exception] {
       spark.sql(s"INSERT INTO graft_nn.`$dir` VALUES (4, CAST(NULL AS STRING))") }
     assert(Iterator.iterate(vNull: Throwable)(_.getCause).takeWhile(_ != null)
@@ -3601,8 +3691,8 @@ class ExtSpec extends AnyFunSuite {
         || t.getMessage.contains("null"))), vNull.getMessage)
     // an overwrite carries the contract (table definition, not data)
     spark.sql(s"INSERT OVERWRITE graft_nn.`$dir` VALUES (10, 'z')")
-    assert(Versioned.notNullColumns(spark, dir,
-      Versioned.latestVersion(spark, dir).get).sorted == Seq("id", "v"))
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).logicalNotNull.sorted == Seq("id", "v"))
     // DROP NOT NULL re-opens the column; the insert that refused lands
     spark.sql(s"ALTER TABLE graft_nn.`$dir` ALTER COLUMN v DROP NOT NULL")
     spark.sql(s"INSERT INTO graft_nn.`$dir` VALUES (4, CAST(NULL AS STRING))")
@@ -3614,9 +3704,9 @@ class ExtSpec extends AnyFunSuite {
     assert(libDrop.getMessage.contains("NOT NULL"), libDrop.getMessage)
     spark.sql(s"ALTER TABLE graft_nn.`$dir` DROP COLUMN id")
     val vDropped = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.notNullColumns(spark, dir, vDropped).isEmpty)
+    assert(Versioned.snapshot(spark, dir, vDropped).logicalNotNull.isEmpty)
     // time travel: the pre-ALTER version still carries the contract
-    assert(Versioned.notNullColumns(spark, dir, vSet).sorted == Seq("id", "v"))
+    assert(Versioned.snapshot(spark, dir, vSet).logicalNotNull.sorted == Seq("id", "v"))
   }
 
   test("SQL MERGE WITH SCHEMA EVOLUTION: a new source column widens the target as one metadata commit; plain MERGE stays strict") {
@@ -3648,9 +3738,9 @@ class ExtSpec extends AnyFunSuite {
     // to the pre-merge schema still serves two columns
     val vs = Versioned.versions(spark, dir)
     assert(vs.length == 3, vs.toString)
-    assert(Versioned.recordedSchema(spark, dir, 0).get.fieldNames.toSeq ==
+    assert(Versioned.snapshot(spark, dir, 0).schema.get.fieldNames.toSeq ==
       Seq("id", "price"))
-    assert(Versioned.recordedSchema(spark, dir, 1).get.fieldNames.toSeq ==
+    assert(Versioned.snapshot(spark, dir, 1).schema.get.fieldNames.toSeq ==
       Seq("id", "price", "note"))
   }
 
@@ -3687,7 +3777,7 @@ class ExtSpec extends AnyFunSuite {
     assert(planned(2, EqualTo("p", "x"), LessThan("a", 8L)).length < 4)
     // content preserved exactly: the two deleted ids (0 in x, 1 in y)
     // stay gone — physically in x, by the carried mask in y
-    assert(Versioned.versionInfo(spark, dir, 2).dvDirs.nonEmpty)
+    assert(Versioned.snapshot(spark, dir, 2).dvDirs.nonEmpty)
     assert(Versioned.readLatest(spark, dir).count() == 8190)
     assert(Versioned.readLatest(spark, dir)
       .groupBy("p").count().orderBy("p").as[(String, Long)].collect().toSeq ==
@@ -3974,7 +4064,7 @@ class ExtSpec extends AnyFunSuite {
       // idempotent: the compacted shape declines a second pass
       assert(Versioned.compactDeletionVectors(spark, dir).isEmpty, s"seed $seed idempotence")
       // and the compacted scopes PARTITION the covered dirs
-      val scoped = Versioned.versionInfo(spark, dir,
+      val scoped = Versioned.snapshot(spark, dir,
         Versioned.latestVersion(spark, dir).get).scopedDvs
       val scopes = scoped.map(_._3)
       assert(scopes.map(_.size).sum == scopes.flatten.toSet.size, s"seed $seed partition")
@@ -4003,13 +4093,13 @@ class ExtSpec extends AnyFunSuite {
         u.children.length }.sum.max(1)
     }
     assert(ids() == expect)
-    assert(Versioned.versionInfo(spark, dir, pre).scopedDvs.length == 5)
+    assert(Versioned.snapshot(spark, dir, pre).scopedDvs.length == 5)
     // coverage groups: d1←{dv1..dv5}, d2←{dv2..dv5}, d3←{dv3,dv4,dv5}
     // — three distinct coverages, which is what the read already plans
     assert(unionBranches() == 3)
     val cv = Versioned.compactDeletionVectors(spark, dir)
     assert(cv.contains(pre + 1))
-    val post = Versioned.versionInfo(spark, dir, pre + 1)
+    val post = Versioned.snapshot(spark, dir, pre + 1)
     // 5 scoped dvs → 3 (one per coverage group), scopes PARTITION the dirs
     assert(post.scopedDvs.length == 3, post.scopedDvs.toString)
     val scopes = post.scopedDvs.map(_._3)
@@ -4040,15 +4130,15 @@ class ExtSpec extends AnyFunSuite {
     assert(vr == v0 + 1)
     // METADATA-ONLY: not one data dir changed
     assert(Versioned.liveDataDirs(spark, dir).toSet == dirsBefore)
-    assert(Versioned.columnMapping(spark, dir, vr) == Map("rating" -> "score"))
+    assert(Versioned.snapshot(spark, dir, vr).colMap == Map("rating" -> "score"))
     // reads serve the LOGICAL name
     val latest = Versioned.readLatest(spark, dir)
     assert(latest.columns.toSeq == Seq("id", "name", "rating"))
     assert(latest.filter($"rating" === 20.0).select("id").as[Long].head() == 10L)
     // logicalSchema vs recordedSchema (physical) disagree exactly on the rename
-    assert(Versioned.logicalSchema(spark, dir, vr).get.fieldNames.toSeq ==
+    assert(Versioned.snapshot(spark, dir, vr).logicalSchema.get.fieldNames.toSeq ==
       Seq("id", "name", "rating"))
-    assert(Versioned.recordedSchema(spark, dir, vr).get.fieldNames.toSeq ==
+    assert(Versioned.snapshot(spark, dir, vr).schema.get.fieldNames.toSeq ==
       Seq("id", "name", "score"))
     // TIME TRAVEL to the pre-rename version serves the old name
     assert(Versioned.readVersion(spark, dir, v0).columns.toSeq ==
@@ -4088,16 +4178,16 @@ class ExtSpec extends AnyFunSuite {
 
     // chained rename folds (rating -> r2), rename BACK drops the map line
     val v2 = Versioned.renameColumns(spark, dir, Seq("rating" -> "r2"))
-    assert(Versioned.columnMapping(spark, dir, v2) == Map("r2" -> "score"))
+    assert(Versioned.snapshot(spark, dir, v2).colMap == Map("r2" -> "score"))
     val v3 = Versioned.renameColumns(spark, dir, Seq("r2" -> "score"))
-    assert(Versioned.columnMapping(spark, dir, v3).isEmpty)
+    assert(Versioned.snapshot(spark, dir, v3).colMap.isEmpty)
     assert(Versioned.readLatest(spark, dir).columns.toSeq == Seq("id", "name", "score"))
 
     // an OVERWRITE resets the physical layout and drops the mapping
     val v4 = Versioned.renameColumns(spark, dir, Seq("score" -> "points"))
     val v5 = Versioned.writeVersion(
       Versioned.readLatest(spark, dir), dir) // e.g. a compaction rewrite
-    assert(Versioned.columnMapping(spark, dir, v5).isEmpty)
+    assert(Versioned.snapshot(spark, dir, v5).colMap.isEmpty)
     assert(Versioned.readLatest(spark, dir).columns.toSeq == Seq("id", "name", "points"))
     assert(v4 + 1 == v5)
   }
@@ -4125,8 +4215,8 @@ class ExtSpec extends AnyFunSuite {
     // name — both on the library write path and after renaming BACK
     Versioned.addCheckConstraint(spark, dir, "pos", "price > 0")
     Versioned.renameColumns(spark, dir, Seq("price" -> "cost"))
-    val rewritten = Versioned.checkConstraints(spark, dir,
-      Versioned.latestVersion(spark, dir).get)
+    val rewritten = Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).constraints
     assert(rewritten.exists { case (n, sql) => n == "pos" && sql.contains("cost") },
       rewritten.toString)
     val ecv = intercept[Exception] {
@@ -4150,10 +4240,10 @@ class ExtSpec extends AnyFunSuite {
     // rename BACK to the physical name: the mapping drops, the
     // constraint text follows again
     Versioned.renameColumns(spark, dir, Seq("cost" -> "price"))
-    assert(Versioned.columnMapping(spark, dir,
-      Versioned.latestVersion(spark, dir).get).isEmpty)
-    assert(Versioned.checkConstraints(spark, dir,
-      Versioned.latestVersion(spark, dir).get)
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).colMap.isEmpty)
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).constraints
       .exists { case (n, sql) => n == "pos" && sql.contains("price") })
     Versioned.renameColumns(spark, dir, Seq("price" -> "cost"))
     Versioned.dropCheckConstraint(spark, dir, "pos")
@@ -4164,7 +4254,7 @@ class ExtSpec extends AnyFunSuite {
       Versioned.AlterSpec(setNotNull = Seq("price")))
     Versioned.renameColumns(spark, dir, Seq("price" -> "cost"))
     val vNow = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.notNullColumns(spark, dir, vNow) == Seq("cost"))
+    assert(Versioned.snapshot(spark, dir, vNow).logicalNotNull == Seq("cost"))
     val en = intercept[Exception] {
       Versioned.writeVersion(
         Seq((11L, null.asInstanceOf[java.lang.Double]))
@@ -4174,8 +4264,8 @@ class ExtSpec extends AnyFunSuite {
     // dropping it back through the LOGICAL name works
     Versioned.alterTableAtomic(spark, dir,
       Versioned.AlterSpec(dropNotNull = Seq("cost")))
-    assert(Versioned.notNullColumns(spark, dir,
-      Versioned.latestVersion(spark, dir).get).isEmpty)
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).logicalNotNull.isEmpty)
 
     // target name collisions refuse: existing logical, and occupied physical
     val e1 = intercept[IllegalArgumentException] {
@@ -4205,7 +4295,7 @@ class ExtSpec extends AnyFunSuite {
     Versioned.writeVersion(Seq((12L, 3.0)).toDF("id", "cost"), dir, SaveMode.Append)
     Versioned.dropColumns(spark, dir, Seq("cost"))
     val vD = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.columnMapping(spark, dir, vD).isEmpty)
+    assert(Versioned.snapshot(spark, dir, vD).colMap.isEmpty)
     assert(Versioned.readLatest(spark, dir).columns.toSeq == Seq("id"))
     // with the mapping gone, the physical name is free again
     Versioned.addColumns(spark, dir, Seq(
@@ -4223,7 +4313,7 @@ class ExtSpec extends AnyFunSuite {
 
     spark.sql(s"ALTER TABLE graft_cm.`$dir` RENAME COLUMN score TO rating")
     val vR = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.columnMapping(spark, dir, vR) == Map("rating" -> "score"))
+    assert(Versioned.snapshot(spark, dir, vR).colMap == Map("rating" -> "score"))
     // the catalog serves the LOGICAL schema
     assert(spark.table(s"graft_cm.`$dir`").columns.toSeq == Seq("id", "name", "rating"))
     // reads + pushed filters on the renamed column
@@ -4246,7 +4336,7 @@ class ExtSpec extends AnyFunSuite {
     spark.sql(s"UPDATE graft_cm.`$dir` SET rating = rating + 1.0 WHERE id = 2")
     assert(spark.sql(s"SELECT rating FROM graft_cm.`$dir` WHERE id = 2").as[Double].head() == 21.0)
     val vU = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.columnMapping(spark, dir, vU) == Map("rating" -> "score"),
+    assert(Versioned.snapshot(spark, dir, vU).colMap == Map("rating" -> "score"),
       "the mapping must survive a copy-on-write UPDATE")
     // the delta-path UPDATE commits a position-mask sidecar beside its
     // appended rows — only the DATA dirs must carry the physical name
@@ -4275,8 +4365,8 @@ class ExtSpec extends AnyFunSuite {
       "WHEN NOT MATCHED THEN INSERT *")
     assert(spark.sql(s"SELECT doc_id, rating FROM graft_cm.`$dir` ORDER BY doc_id")
       .as[(Long, Double)].collect().toSeq == Seq((2L, 99.0), (4L, 40.0), (5L, 50.0)))
-    assert(Versioned.columnMapping(spark, dir,
-      Versioned.latestVersion(spark, dir).get).nonEmpty)
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).colMap.nonEmpty)
 
     // DESCRIBE-equivalent: SHOW COLUMNS serves logical names
     assert(spark.sql(s"SHOW COLUMNS IN graft_cm.`$dir`").as[String].collect().toSet ==
@@ -4293,8 +4383,8 @@ class ExtSpec extends AnyFunSuite {
     // reads the table's reported constraints) under the NEW name
     spark.sql(s"ALTER TABLE graft_cm.`$dir` ADD CONSTRAINT pos CHECK (rating > 0)")
     spark.sql(s"ALTER TABLE graft_cm.`$dir` RENAME COLUMN rating TO stars")
-    assert(Versioned.checkConstraints(spark, dir,
-      Versioned.latestVersion(spark, dir).get)
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).constraints
       .exists { case (n, sql) => n == "pos" && sql.contains("stars") })
     val ev = intercept[Exception] {
       spark.sql(s"INSERT INTO graft_cm.`$dir` VALUES (9, 'z', -1.0)")
@@ -4323,7 +4413,7 @@ class ExtSpec extends AnyFunSuite {
     assert(allFiles.length == 4, allFiles.toString)
 
     val vB = Versioned.declareBloomColumn(spark, dir, "id")
-    assert(Versioned.bloomColumn(spark, dir, vB).map(_._1).contains("id"))
+    assert(Versioned.snapshot(spark, dir, vB).bloomColumns.headOption.map(_._1).contains("id"))
     // the declaration backfilled: an EVEN key now plans only even files
     val planned = Versioned.planDataFiles(spark, dir, vB, Seq(EqualTo("id", 42L)))
     assert(planned.length < 4 && planned.nonEmpty,
@@ -4352,7 +4442,7 @@ class ExtSpec extends AnyFunSuite {
     val v3 = Versioned.latestVersion(spark, dir).get
     val renamed = Versioned.planDataFiles(spark, dir, v3, Seq(EqualTo("doc_id", 42L)))
     assert(renamed.length == planned.length, s"$renamed vs $planned")
-    assert(Versioned.bloomColumn(spark, dir, v3).map(_._1).contains("doc_id"))
+    assert(Versioned.snapshot(spark, dir, v3).bloomColumns.headOption.map(_._1).contains("doc_id"))
     assert(Versioned.readLatest(spark, dir).filter($"doc_id" === 42L).count() == 1)
 
     // SQL surface: the catalog's manifest index consults the blooms
@@ -4362,7 +4452,7 @@ class ExtSpec extends AnyFunSuite {
     // …and set_bloom/drop_bloom round-trip through CALL
     spark.sql(s"CALL graft_bl.system.drop_bloom('$dir')")
     val v4 = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.bloomColumn(spark, dir, v4).isEmpty)
+    assert(Versioned.snapshot(spark, dir, v4).bloomColumns.headOption.isEmpty)
     // bounds still prune the single-key 5001 file; the 4 interleaved
     // files all come back without their blooms
     assert(Versioned.planDataFiles(spark, dir, v4, Seq(EqualTo("doc_id", 42L))).length == 4)
@@ -4387,7 +4477,7 @@ class ExtSpec extends AnyFunSuite {
     // an OVERWRITE keeps the declaration and re-blooms the fresh state
     Versioned.writeVersion(Versioned.readLatest(spark, dir), dir)
     val v7 = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.bloomColumn(spark, dir, v7).map(_._1).contains("doc_id"),
+    assert(Versioned.snapshot(spark, dir, v7).bloomColumns.headOption.map(_._1).contains("doc_id"),
       "the declaration is table definition: an overwrite carries it")
     assert(Versioned.readLatest(spark, dir).filter($"doc_id" === 43L).count() == 1)
 
@@ -4532,7 +4622,7 @@ class ExtSpec extends AnyFunSuite {
     // same rows, dv mask included; the bloom declaration cloned too
     assert(Versioned.readLatest(spark, tgt).count() == 100)
     assert(Versioned.readLatest(spark, tgt).filter($"id" === 7L).isEmpty)
-    assert(Versioned.bloomColumn(spark, tgt, 0).map(_._1).contains("id"))
+    assert(Versioned.snapshot(spark, tgt, 0).bloomColumns.headOption.map(_._1).contains("id"))
     import org.apache.spark.sql.sources.EqualTo
     assert(Versioned.planDataFiles(spark, tgt, 0, Seq(EqualTo("id", 101L))).length == 1,
       "cloned blooms and stats keep pruning")
@@ -4573,7 +4663,7 @@ class ExtSpec extends AnyFunSuite {
     graft.ext.Maintenance.compact(spark, tgt,
       store = graft.ext.ManifestStore.conditionalPut)
     val vL = Versioned.latestVersion(spark, tgt).get
-    assert(Versioned.versionInfo(spark, tgt, vL).dataDirs.forall(_.startsWith(tgt)),
+    assert(Versioned.snapshot(spark, tgt, vL).dataDirs.forall(_.startsWith(tgt)),
       "compacting a clone must localize every data ref")
     assert(Versioned.readLatest(spark, tgt).count() == 99)
     assert(parquetUnder(tgt).nonEmpty)
@@ -4644,7 +4734,7 @@ class ExtSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT status FROM graft_df.`$dir` WHERE id = 7")
       .as[String].head() == "new")
     // … and time travel serves the schema AS DECLARED THEN
-    val v0md = Versioned.recordedSchema(spark, dir, 0).get("status").metadata
+    val v0md = Versioned.snapshot(spark, dir, 0).schema.get("status").metadata
     assert(v0md.contains("CURRENT_DEFAULT") && v0md.getString("CURRENT_DEFAULT") == "'new'")
     spark.sql(s"DROP TABLE graft_df.`$dir`")
   }
@@ -4666,7 +4756,7 @@ class ExtSpec extends AnyFunSuite {
     }.getMessage.contains("bloom"))
     spark.sql(s"ALTER TABLE graft_fx.`$bdir` DROP COLUMN id")
     val vD = Versioned.latestVersion(spark, bdir).get
-    assert(Versioned.bloomColumn(spark, bdir, vD).isEmpty,
+    assert(Versioned.snapshot(spark, bdir, vD).bloomColumns.headOption.isEmpty,
       "dropping the indexed column must retire the declaration")
     Versioned.writeVersion(Seq("z").toDF("v"), bdir, SaveMode.Append)
     assert(Versioned.readLatest(spark, bdir).count() == 3)
@@ -4675,8 +4765,8 @@ class ExtSpec extends AnyFunSuite {
     Versioned.writeVersion(Seq((1L, "x")).toDF("id", "v"), odir)
     Versioned.declareBloomColumn(spark, odir, "id")
     Versioned.writeVersion(Seq("only-v").toDF("v"), odir)
-    assert(Versioned.bloomColumn(spark, odir,
-      Versioned.latestVersion(spark, odir).get).isEmpty)
+    assert(Versioned.snapshot(spark, odir,
+      Versioned.latestVersion(spark, odir).get).bloomColumns.headOption.isEmpty)
     Versioned.writeVersion(Seq("w").toDF("v"), odir, SaveMode.Append) // must not crash
 
     // 2) EXISTS_DEFAULT folds to the ADD-time constant (not the raw sql)
@@ -4684,8 +4774,8 @@ class ExtSpec extends AnyFunSuite {
     spark.sql(s"CREATE TABLE graft_fx.`$ddir` (id BIGINT)")
     spark.sql(s"INSERT INTO graft_fx.`$ddir` VALUES (1)")
     spark.sql(s"ALTER TABLE graft_fx.`$ddir` ADD COLUMN n INT DEFAULT 2 + 3")
-    val md = Versioned.recordedSchema(spark, ddir,
-      Versioned.latestVersion(spark, ddir).get).get("n").metadata
+    val md = Versioned.snapshot(spark, ddir,
+      Versioned.latestVersion(spark, ddir).get).schema.get("n").metadata
     assert(md.getString("EXISTS_DEFAULT") == "5",
       s"EXISTS_DEFAULT must be the folded constant, got ${md.getString("EXISTS_DEFAULT")}")
     assert(spark.sql(s"SELECT n FROM graft_fx.`$ddir` WHERE id = 1").as[Int].head() == 5)
@@ -4870,10 +4960,10 @@ class ExtSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.bloom.backfillFilesPerCommit", "1")
     val vRe = try Versioned.declareBloomColumn(spark, dir, "payload")
               finally spark.conf.unset("spark.graft.bloom.backfillFilesPerCommit")
-    assert(Versioned.bloomColumns(spark, dir, vRe).map(_._1).toSet
+    assert(Versioned.snapshot(spark, dir, vRe).bloomColumns.map(_._1).toSet
       == Set("id", "payload"), "declarations must be per-column additive")
     val vMid = Versioned.versions(spark, dir)
-      .filter(v => Versioned.bloomColumns(spark, dir, v).exists(_._1 == "payload")).min
+      .filter(v => Versioned.snapshot(spark, dir, v).bloomColumns.exists(_._1 == "payload")).min
     for (p <- Seq("p0", "p3", "p998", "p1999"))
       assert(Versioned.readVersion(spark, dir, vMid).filter($"payload" === p).count() == 1,
         s"payload $p lost mid-backfill — a stale old-column bitset is being consulted")
@@ -4920,7 +5010,7 @@ class ExtSpec extends AnyFunSuite {
     assert(spark.read.format("graft").load(dir).count() == 3)
     assert(spark.read.format("graft").option("versionAsOf", "0").load(dir)
       .as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
-    val t0 = Versioned.commitTimestamp(spark, dir, 0)
+    val t0 = Versioned.snapshot(spark, dir, 0).commitTimestamp
     assert(spark.read.format("graft")
       .option("timestampAsOf", t0.toString).load(dir).count() == 2)
     // a DELETE's mask applies through the provider like any other read
@@ -5145,7 +5235,7 @@ class ExtSpec extends AnyFunSuite {
     // FULL optimize establishes the clustered base (a rearrange commit)
     Maintenance.zorderVersionedCols(spark, dir, Seq("a", "b"), nFiles = 8)
     val vBase = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.isRearrange(spark, dir, vBase))
+    assert(Versioned.snapshot(spark, dir, vBase).isRearrange)
     val baseFiles = Versioned.planDataFiles(spark, dir, vBase, Seq.empty).toSet
     // nothing unclustered right after: the incremental call is a no-op
     assert(Maintenance.zorderVersionedIncremental(spark, dir, Seq("a", "b")).isEmpty)
@@ -5166,7 +5256,7 @@ class ExtSpec extends AnyFunSuite {
       "the clustered base must carry verbatim through an incremental OPTIMIZE")
     assert((after -- baseFiles).size == 2, s"increment re-landed as 2 files: $after")
     // content preserved; the commit is a rearrange streams skip
-    assert(Versioned.isRearrange(spark, dir, vInc))
+    assert(Versioned.snapshot(spark, dir, vInc).isRearrange)
     assert(Versioned.readLatest(spark, dir).count() == 9000)
     assert(Versioned.readVersion(spark, dir, vApp).count() == 9000)
     // per-file pruning is tight inside BOTH clustered batches: a point
@@ -5194,8 +5284,8 @@ class ExtSpec extends AnyFunSuite {
     // re-landed hive-laid-out as a rearrange
     val (n0, _, v0) =
       Maintenance.zorderVersionedIncremental(spark, zdir, Seq("a", "b")).get
-    assert(n0 > 0 && Versioned.isRearrange(spark, zdir, v0))
-    assert(Versioned.versionInfo(spark, zdir, v0).partitionCols == Seq("bucket"))
+    assert(n0 > 0 && Versioned.snapshot(spark, zdir, v0).isRearrange)
+    assert(Versioned.snapshot(spark, zdir, v0).partitionCols == Seq("bucket"))
     val base = Versioned.planDataFiles(spark, zdir, v0, Seq.empty).toSet
     assert(base.forall(_.contains("bucket=")),
       s"the replacement must re-land hive-laid-out: $base")
@@ -5223,8 +5313,8 @@ class ExtSpec extends AnyFunSuite {
       spark.range(0, 900).select($"id", ($"id" % 3).as("cat")), rdir, Seq("cat"))
     val rv = Versioned.enableRowTracking(spark, rdir)
     assert(rv == Versioned.latestVersion(spark, rdir).get)
-    assert(Versioned.isRearrange(spark, rdir, rv), "the backfill is a rearrange")
-    assert(Versioned.versionInfo(spark, rdir, rv).partitionCols == Seq("cat"))
+    assert(Versioned.snapshot(spark, rdir, rv).isRearrange, "the backfill is a rearrange")
+    assert(Versioned.snapshot(spark, rdir, rv).partitionCols == Seq("cat"))
     val ids0 = Versioned.readLatest(spark, rdir)
       .select(Versioned.RowIdCol).as[Long].collect()
     assert(ids0.length == 900 && ids0.toSet.size == 900, "backfilled ids distinct")
@@ -5250,7 +5340,7 @@ class ExtSpec extends AnyFunSuite {
       "'graft.autoCluster.columns'='a,b', 'graft.autoCluster.minBytes'='1')")
     Versioned.writeVersion(aslice(500, 1000), adir, SaveMode.Append)
     val av = Versioned.latestVersion(spark, adir).get
-    assert(Versioned.isRearrange(spark, adir, av),
+    assert(Versioned.snapshot(spark, adir, av).isRearrange,
       "the post-commit tick must have clustered the increment")
     assert(Versioned.unclusteredLiveFiles(spark, adir, av)
       .valuesIterator.forall(_.isEmpty), "everything live is clustered base")
@@ -5260,13 +5350,13 @@ class ExtSpec extends AnyFunSuite {
     try {
       Versioned.writeVersion(aslice(1000, 1100), adir, SaveMode.Append)
       val av2 = Versioned.latestVersion(spark, adir).get
-      assert(!Versioned.isRearrange(spark, adir, av2),
+      assert(!Versioned.snapshot(spark, adir, av2).isRearrange,
         "an empty session override must silence the property-driven tick")
     } finally spark.conf.unset("spark.graft.autoCluster.columns")
     // next committed write re-probes and picks the leftover up
     Versioned.writeVersion(aslice(1100, 1200), adir, SaveMode.Append)
     val av3 = Versioned.latestVersion(spark, adir).get
-    assert(Versioned.isRearrange(spark, adir, av3) &&
+    assert(Versioned.snapshot(spark, adir, av3).isRearrange &&
       Versioned.unclusteredLiveFiles(spark, adir, av3)
         .valuesIterator.forall(_.isEmpty),
       "the re-probe must cluster the accumulated increment")
@@ -5371,8 +5461,8 @@ class ExtSpec extends AnyFunSuite {
       "an overwrite must not forget which files were ingested")
     // feature lifecycle: stamped optional; drop refuses while the
     // ledger is live, names the remedy; forget + drop succeed
-    assert(Versioned.tableFeatures(spark, dir,
-      Versioned.latestVersion(spark, dir).get).contains(("ingest", false)))
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).features.contains(("ingest", false)))
     val eLive = intercept[IllegalArgumentException] {
       spark.sql(s"CALL graft_ci.system.drop_feature('$dir', 'ingest')") }
     assert(eLive.getMessage.contains("forgetIngestHistory"), eLive.getMessage)
@@ -5401,7 +5491,7 @@ class ExtSpec extends AnyFunSuite {
       "PARTITIONED BY (bucket)")
     val Some((pn, pr, pv)) = Versioned.copyInto(spark, pdir, psrc)
     assert(pn == 1 && pr == 90L)
-    assert(Versioned.versionInfo(spark, pdir, pv).partitionCols == Seq("bucket"))
+    assert(Versioned.snapshot(spark, pdir, pv).partitionCols == Seq("bucket"))
     assert(spark.sql(s"SELECT count(*) AS c FROM graft_ci.`$pdir` WHERE bucket = 1")
       .as[Long].head() == 30)
     // idempotent there too
@@ -5489,17 +5579,17 @@ class ExtSpec extends AnyFunSuite {
     // the first positional delete stamps the feature; reads by THIS
     // build keep working (it supports pdv)
     val v1 = Versioned.deleteWhere(spark, dir, "price < 3.0 AND id >= 5").get
-    assert(Versioned.tableFeatures(spark, dir, v1) == Seq(("pdv", true)))
-    assert(Versioned.tableFeatures(spark, dir, 0).isEmpty,
+    assert(Versioned.snapshot(spark, dir, v1).features == Seq(("pdv", true)))
+    assert(Versioned.snapshot(spark, dir, 0).features.isEmpty,
       "features are versioned: the pre-delete manifest declares nothing")
     // a second pdv delete does NOT re-stamp
     Versioned.deleteWhere(spark, dir, "id = 19")
-    assert(Versioned.tableFeatures(spark, dir,
-      Versioned.latestVersion(spark, dir).get).count(_._1 == "pdv") == 1)
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).features.count(_._1 == "pdv") == 1)
     // the feature rides appends with the masks it gates
     Versioned.writeVersion(Seq((100L, 0.0)).toDF("id", "price"), dir, SaveMode.Append)
-    assert(Versioned.tableFeatures(spark, dir,
-      Versioned.latestVersion(spark, dir).get) == Seq(("pdv", true)))
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).features == Seq(("pdv", true)))
     // DROP FEATURE refuses while positional masks are live…
     val eIn = intercept[IllegalArgumentException] {
       Versioned.dropTableFeature(spark, dir, "pdv") }
@@ -5509,15 +5599,15 @@ class ExtSpec extends AnyFunSuite {
       targetFileBytes = Long.MaxValue,
       store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
     assert(Versioned.dropTableFeature(spark, dir, "pdv").nonEmpty)
-    assert(Versioned.tableFeatures(spark, dir,
-      Versioned.latestVersion(spark, dir).get).isEmpty)
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).features.isEmpty)
     assert(Versioned.dropTableFeature(spark, dir, "pdv").isEmpty, "idempotent")
     // an unknown REQUIRED feature refuses BY NAME; optional is ignored.
     // A FUTURE writer's manifests are emulated as full line sets: the
     // live data dirs plus the new declaration (no schema line — the
     // mergeSchema fallback serves)
     val v = Versioned.latestVersion(spark, dir).get
-    val dirNames = Versioned.versionInfo(spark, dir, v).dataDirs
+    val dirNames = Versioned.snapshot(spark, dir, v).dataDirs
       .map(d => d.substring(d.lastIndexOf('/') + 1))
     Versioned.commitManifest(spark, dir, v + 1,
       dirNames :+ "feature:quantum_masks:required")
@@ -5533,7 +5623,7 @@ class ExtSpec extends AnyFunSuite {
     assert(Versioned.readVersion(spark, dir, v + 2).count() ==
       Versioned.readVersion(spark, dir, v).count(),
       "an unsupported OPTIONAL feature must be ignored")
-    assert(Versioned.tableFeatures(spark, dir, v + 2) == Seq(("hints_v2", false)),
+    assert(Versioned.snapshot(spark, dir, v + 2).features == Seq(("hints_v2", false)),
       "the optional declaration itself carries verbatim")
   }
 
@@ -5553,7 +5643,7 @@ class ExtSpec extends AnyFunSuite {
     assert(rows.length == 160)
     // every row uniquely addressed; files spelled as the manifest does
     assert(rows.map(r => (r._2, r._3)).toSet.size == 160, "addresses must be unique")
-    val dirNames = Versioned.versionInfo(spark, dir, 1).dataDirs
+    val dirNames = Versioned.snapshot(spark, dir, 1).dataDirs
       .map(d => d.substring(d.lastIndexOf('/') + 1))
     assert(rows.forall(r => dirNames.exists(d => r._2.startsWith(d + "/"))),
       s"_file must be manifest-relative; got ${rows.head._2}")
@@ -5563,7 +5653,7 @@ class ExtSpec extends AnyFunSuite {
     // served for id=7
     val addr7 = rows.find(_._1 == 7L).get
     spark.sql(s"DELETE FROM graft_mc.`$dir` WHERE id = 7 AND price > -1")
-    val pdvDirs = Versioned.versionInfo(spark, dir,
+    val pdvDirs = Versioned.snapshot(spark, dir,
       Versioned.latestVersion(spark, dir).get).posDvs
     assert(pdvDirs.nonEmpty, "the two-column predicate must route positionally")
     val sidecar = spark.read.parquet(pdvDirs: _*).as[(String, Long)].collect().toSet
@@ -5618,7 +5708,7 @@ class ExtSpec extends AnyFunSuite {
     val v = Versioned.latestVersion(spark, dir).get
     val after = Versioned.planDataFiles(spark, dir, v, Seq.empty).toSet
     assert(before.subsetOf(after), "UPDATE must not rewrite any pre-existing file")
-    val info = Versioned.versionInfo(spark, dir, v)
+    val info = Versioned.snapshot(spark, dir, v)
     assert(info.posDvs.length == 1, s"expected one position mask, got $info")
     // served content: exactly the UPDATE semantics
     val got = spark.sql(s"SELECT id, price FROM graft_du.`$dir`")
@@ -5635,7 +5725,7 @@ class ExtSpec extends AnyFunSuite {
     graft.ext.Maintenance.compact(spark, dir, targetFileBytes = Long.MaxValue,
       store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
     val vc = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.versionInfo(spark, dir, vc).posDvs.isEmpty)
+    assert(Versioned.snapshot(spark, dir, vc).posDvs.isEmpty)
     assert(spark.sql(s"SELECT id, price FROM graft_du.`$dir`")
       .as[(Long, Double)].collect().toMap == got)
     // cow fallback: same statement under rowops.mode=cow rewrites
@@ -5644,7 +5734,7 @@ class ExtSpec extends AnyFunSuite {
     try {
       spark.sql(s"UPDATE graft_du.`$dir` SET price = 0.0 WHERE id = 7")
       val v2 = Versioned.latestVersion(spark, dir).get
-      assert(Versioned.versionInfo(spark, dir, v2).posDvs.isEmpty,
+      assert(Versioned.snapshot(spark, dir, v2).posDvs.isEmpty,
         "cow mode must not commit position masks")
       assert(spark.sql(s"SELECT price FROM graft_du.`$dir` WHERE id = 7")
         .as[Double].head() == 0.0)
@@ -5670,7 +5760,7 @@ class ExtSpec extends AnyFunSuite {
     val v1 = Versioned.latestVersion(spark, dir).get
     assert(before.subsetOf(Versioned.planDataFiles(spark, dir, v1, Seq.empty).toSet),
       "MERGE must not rewrite any pre-existing file")
-    assert(Versioned.versionInfo(spark, dir, v1).posDvs.length == 1)
+    assert(Versioned.snapshot(spark, dir, v1).posDvs.length == 1)
     val got1 = spark.sql(s"SELECT id, price FROM graft_dm.`$dir`")
       .as[(Long, Double)].collect().toMap
     assert(got1.size == 110 && (95L until 110L).forall(got1(_) == 555.0) &&
@@ -5698,7 +5788,7 @@ class ExtSpec extends AnyFunSuite {
     spark.sql(s"UPDATE graft_dm.`$pdir` SET w = 9.0 WHERE id >= 80")
     val pv = Versioned.latestVersion(spark, pdir).get
     assert(pBefore.subsetOf(Versioned.planDataFiles(spark, pdir, pv, Seq.empty).toSet))
-    assert(Versioned.versionInfo(spark, pdir, pv).posDvs.length == 1)
+    assert(Versioned.snapshot(spark, pdir, pv).posDvs.length == 1)
     val pg = spark.sql(s"SELECT id, bucket, w FROM graft_dm.`$pdir`")
       .as[(Long, Long, Double)].collect()
     assert(pg.length == 90 && pg.forall { case (i, b, w) =>
@@ -5713,7 +5803,7 @@ class ExtSpec extends AnyFunSuite {
       .select($"id", ($"id" % 5).cast("double").as("score")), rdir)
     Versioned.renameColumns(spark, rdir, Seq("score" -> "rating"))
     spark.sql(s"UPDATE graft_dm.`$rdir` SET rating = 50.0 WHERE rating < 2 AND id >= 20")
-    assert(Versioned.versionInfo(spark, rdir,
+    assert(Versioned.snapshot(spark, rdir,
       Versioned.latestVersion(spark, rdir).get).posDvs.length == 1)
     val rg = spark.sql(s"SELECT id, rating FROM graft_dm.`$rdir`")
       .as[(Long, Double)].collect().toMap
@@ -6449,7 +6539,7 @@ class ExtSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO graft_gc.`$src2` VALUES " +
       "(1, TIMESTAMP'2026-01-02 03:04:05', DATE'2026-01-02')")
     Versioned.writeVersion(Versioned.readLatest(spark, src2), cleanDir)
-    assert(Versioned.recordedSchema(spark, cleanDir, 0).get
+    assert(Versioned.snapshot(spark, cleanDir, 0).schema.get
       .fields.forall(!_.metadata.contains("GENERATION_EXPRESSION")),
       "generation metadata must not ride footer round-trips into fresh chains")
     // …so a 'wrong' d on the fresh chain is just data
@@ -6466,8 +6556,8 @@ class ExtSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO graft_gc.`$rdir` VALUES " +
       "(1, TIMESTAMP'2026-01-02 03:04:05', DATE'2026-01-02')")
     Versioned.writeVersion(Seq(Tuple1(5L)).toDF("id"), rdir, SaveMode.Overwrite)
-    assert(Versioned.recordedSchema(spark, rdir,
-      Versioned.latestVersion(spark, rdir).get).get
+    assert(Versioned.snapshot(spark, rdir,
+      Versioned.latestVersion(spark, rdir).get).schema.get
       .fields.forall(!_.metadata.contains("GENERATION_EXPRESSION")))
     // a combined library drop of dependency + generated column works
     // in ONE call (the atomic-ALTER parity)
@@ -6717,8 +6807,8 @@ class ExtSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("cannot be column-mapped"), e.getMessage)
     // nothing committed; plain-named columns on the same chain rename fine
-    assert(Versioned.columnMapping(spark, dir,
-      Versioned.latestVersion(spark, dir).get).isEmpty)
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).colMap.isEmpty)
     Versioned.renameColumns(spark, dir, Seq("v" -> "w"))
     assert(Versioned.readLatest(spark, dir).columns.toSeq == Seq("a,b", "w"))
   }
@@ -6867,7 +6957,7 @@ class ExtSpec extends AnyFunSuite {
       Seq((i.toLong, "a")).toDF("id", "v"), dir, SaveMode.Append))
     val latest = Versioned.latestVersion(spark, dir).get
     assert(latest == 11)
-    val ts = (0 to latest).map(v => Versioned.commitTimestamp(spark, dir, v))
+    val ts = (0 to latest).map(v => Versioned.snapshot(spark, dir, v).commitTimestamp)
     assert(ts == ts.sorted && ts.distinct == ts,
       s"in-commit clocks must be strictly monotone, got $ts")
 
@@ -6905,7 +6995,7 @@ class ExtSpec extends AnyFunSuite {
     // restored state does not time-travel the clock backwards
     Versioned.restoreVersion(spark, dir, 0)
     val vr = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.commitTimestamp(spark, dir, vr) > ts.last,
+    assert(Versioned.snapshot(spark, dir, vr).commitTimestamp > ts.last,
       "a restore commit must carry its own (newer) clock")
   }
 
@@ -6975,7 +7065,7 @@ class ExtSpec extends AnyFunSuite {
     Versioned.writeVersion(mk(1L until 1000L by 2).repartition(2), dir, SaveMode.Append)
     Versioned.declareBloomColumn(spark, dir, "id")
     val v1 = Versioned.declareBloomColumn(spark, dir, "user")
-    assert(Versioned.bloomColumns(spark, dir, v1).map(_._1) == Seq("id", "user"))
+    assert(Versioned.snapshot(spark, dir, v1).bloomColumns.map(_._1) == Seq("id", "user"))
 
     val all = Versioned.planDataFiles(spark, dir, v1, Seq.empty)
     assert(all.length == 4)
@@ -6996,7 +7086,7 @@ class ExtSpec extends AnyFunSuite {
 
     // per-column DROP: id's index retires, user's stays live
     val v3 = Versioned.dropBloomColumn(spark, dir, Some("id")).get
-    assert(Versioned.bloomColumns(spark, dir, v3).map(_._1) == Seq("user"))
+    assert(Versioned.snapshot(spark, dir, v3).bloomColumns.map(_._1) == Seq("user"))
     assert(Versioned.planDataFiles(spark, dir, v3, Seq(EqualTo("id", 42L))).length == 4,
       "dropping the id index must stop id pruning: all 4 interleaved files return " +
         "(bounds still exclude the 5000-key file)")
@@ -7007,7 +7097,7 @@ class ExtSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.catalog.versioned", "graft.sql.VersionedCatalog")
     spark.sql(s"CALL versioned.system.drop_bloom('$dir', 'user')")
     val v4 = Versioned.latestVersion(spark, dir).get
-    assert(Versioned.bloomColumns(spark, dir, v4).isEmpty)
+    assert(Versioned.snapshot(spark, dir, v4).bloomColumns.isEmpty)
   }
 
   test("DEEP CLONE: a fully independent fork — the copy runs as a Spark job, scoped delete masks carry, absolute refs localize, and the clone survives dropping the source entirely") {
@@ -7154,7 +7244,7 @@ class ExtSpec extends AnyFunSuite {
     val dir = s"$base/t"
     def dirsOf(d: String): Seq[String] = {
       val v = Versioned.latestVersion(spark, d).get
-      Versioned.versionInfo(spark, d, v).dataDirs
+      Versioned.snapshot(spark, d, v).dataDirs
     }
     // ten tiny commits + one BIG dir that must NOT be rewritten
     Versioned.writeVersion(spark.range(0, 200000)
@@ -7225,31 +7315,31 @@ class ExtSpec extends AnyFunSuite {
     spark.sql(s"ALTER TABLE graft_tp.`$dir` SET TBLPROPERTIES(" +
       "'owner.team'='curation', 'graft.autoCompact.minDirs'='4')")
     assert(Versioned.latestVersion(spark, dir).contains(1))
-    assert(Versioned.tableProperties(spark, dir, 1) ==
+    assert(Versioned.snapshot(spark, dir, 1).properties ==
       Map("owner.team" -> "curation", "graft.autoCompact.minDirs" -> "4"))
     // SHOW TBLPROPERTIES serves them (the DSv2 properties() seam)
     val shown = spark.sql(s"SHOW TBLPROPERTIES graft_tp.`$dir`")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(shown.get("owner.team").contains("curation"), shown.toString)
     // versioned like everything else: v0 has none, v1 has them
-    assert(Versioned.tableProperties(spark, dir, 0).isEmpty)
+    assert(Versioned.snapshot(spark, dir, 0).properties.isEmpty)
     // replace-by-key, UNSET drops, missing key is a no-op
     spark.sql(s"ALTER TABLE graft_tp.`$dir` SET TBLPROPERTIES('owner.team'='data')")
-    assert(Versioned.tableProperties(spark, dir,
-      Versioned.latestVersion(spark, dir).get)("owner.team") == "data")
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).properties("owner.team") == "data")
     spark.sql(s"ALTER TABLE graft_tp.`$dir` UNSET TBLPROPERTIES('owner.team')")
-    assert(!Versioned.tableProperties(spark, dir,
-      Versioned.latestVersion(spark, dir).get).contains("owner.team"))
+    assert(!Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).properties.contains("owner.team"))
     assert(Versioned.unsetTableProperties(spark, dir, Seq("never.there")).isEmpty)
     // a data OVERWRITE keeps properties (definition, not data);
     // REPLACE TABLE resets them
     Versioned.writeVersion(Seq((9L, "z")).toDF("id", "v"), dir, SaveMode.Overwrite)
-    assert(Versioned.tableProperties(spark, dir,
-      Versioned.latestVersion(spark, dir).get)
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).properties
       .get("graft.autoCompact.minDirs").contains("4"))
     spark.sql(s"REPLACE TABLE graft_tp.`$dir` (id BIGINT, v STRING)")
-    assert(Versioned.tableProperties(spark, dir,
-      Versioned.latestVersion(spark, dir).get).isEmpty)
+    assert(Versioned.snapshot(spark, dir,
+      Versioned.latestVersion(spark, dir).get).properties.isEmpty)
 
     // ── the PROPERTY-driven autoCompact tick: no session conf at all
     val dir2 = s"$base/auto"
@@ -7258,7 +7348,7 @@ class ExtSpec extends AnyFunSuite {
       "graft.autoCompact.enabled" -> "true", "graft.autoCompact.minDirs" -> "4"))
     (1 until 10).foreach(i => Versioned.writeVersion(
       Seq((i.toLong, s"x$i")).toDF("id", "v").coalesce(1), dir2, SaveMode.Append))
-    def dirsOf(d: String) = Versioned.versionInfo(spark, d,
+    def dirsOf(d: String) = Versioned.snapshot(spark, d,
       Versioned.latestVersion(spark, d).get).dataDirs
     assert(dirsOf(dir2).length < 4,
       s"the table property alone must drive the tick: ${dirsOf(dir2)}")
@@ -7281,7 +7371,7 @@ class ExtSpec extends AnyFunSuite {
     val dir3 = s"$base/created"
     spark.sql(s"CREATE TABLE graft_tp.`$dir3` (id BIGINT, v STRING) " +
       "TBLPROPERTIES('graft.autoCompact.enabled'='true', 'pii.scrubbed'='false')")
-    assert(Versioned.tableProperties(spark, dir3, 0) == Map(
+    assert(Versioned.snapshot(spark, dir3, 0).properties == Map(
       "graft.autoCompact.enabled" -> "true", "pii.scrubbed" -> "false"))
     // CTAS refuses properties with the ALTER path named (no silent drop)
     val dir4 = s"$base/ctas"
@@ -7326,7 +7416,7 @@ class ExtSpec extends AnyFunSuite {
       Set((0L, "x0"), (2L, "x2")))
     assert(Versioned.fsck(spark, dir).isEmpty)
     // the loss is auditable: the pre-repair version still names the file
-    assert(Versioned.versionInfo(spark, dir, vClean).dataDirs.contains(v1dir))
+    assert(Versioned.snapshot(spark, dir, vClean).dataDirs.contains(v1dir))
   }
 
   test("idempotent batch writes: txnAppId/txnVersion dedupes retried format(\"graft\") writes; new versions land; half the pair refuses") {
@@ -7385,18 +7475,18 @@ class ExtSpec extends AnyFunSuite {
       (0 until 5).foreach(i => Versioned.writeVersion(
         Seq((i.toLong, s"x$i")).toDF("id", "v").coalesce(1), dir,
         if (i == 0) SaveMode.Overwrite else SaveMode.Append))
-      assert(!Versioned.isRearrange(spark, dir, 4))
+      assert(!Versioned.snapshot(spark, dir, 4).isRearrange)
       val cv = Versioned.compactSmallDirs(spark, dir, minDirs = 2).get
-      assert(Versioned.isRearrange(spark, dir, cv),
+      assert(Versioned.snapshot(spark, dir, cv).isRearrange,
         "the compaction commit must carry the dataChange=false flag")
       // version-scoped: the NEXT commit clears it
       Versioned.writeVersion(Seq((50L, "y")).toDF("id", "v"), dir, SaveMode.Append)
       val after = Versioned.latestVersion(spark, dir).get
-      assert(after == cv + 1 && !Versioned.isRearrange(spark, dir, after))
+      assert(after == cv + 1 && !Versioned.snapshot(spark, dir, after).isRearrange)
       // a RESTORE to the flagged version is NOT itself a rearrange —
       // it genuinely drops dirs, and streams must fail on it
       val rv = Versioned.restoreVersion(spark, dir, cv)
-      assert(!Versioned.isRearrange(spark, dir, rv))
+      assert(!Versioned.snapshot(spark, dir, rv).isRearrange)
       // partition-scoped manual compaction flags too
       val dirP = s"$base/p"
       (0 until 4).foreach(i => Versioned.writeVersionPartitioned(
@@ -7404,12 +7494,12 @@ class ExtSpec extends AnyFunSuite {
         Seq("k"), if (i == 0) SaveMode.Overwrite else SaveMode.Append))
       val Some((_, _, pv)) = Maintenance.compactVersionedWhere(
         spark, dirP, "k = '0'", 128L * 1024 * 1024)
-      assert(Versioned.isRearrange(spark, dirP, pv),
+      assert(Versioned.snapshot(spark, dirP, pv).isRearrange,
         "partition-scoped compaction preserves content — it must flag")
       // row-level DML is a DATA change: replaceWhere must not flag
       val rw = Versioned.replaceWhere(
         Seq((0L, "0")).toDF("id", "k"), dirP, "k = '0'").get
-      assert(!Versioned.isRearrange(spark, dirP, rw))
+      assert(!Versioned.snapshot(spark, dirP, rw).isRearrange)
       // flat whole-table Z-ORDER and compact_files flag too, commute
       // with the chain (no overwrite serialization), and RETIRE the
       // dv lines they applied physically
@@ -7418,15 +7508,15 @@ class ExtSpec extends AnyFunSuite {
         .withColumn("k", $"id" % 7).repartition(4), dirF)
       Versioned.deleteByKeys(spark, dirF, Seq(5L).toDF("id"), "id")
       val zv = Maintenance.zorderVersionedCols(spark, dirF, Seq("id", "k"), 1)
-      assert(Versioned.isRearrange(spark, dirF, zv))
-      assert(Versioned.versionInfo(spark, dirF, zv).dvDirs.isEmpty,
+      assert(Versioned.snapshot(spark, dirF, zv).isRearrange)
+      assert(Versioned.snapshot(spark, dirF, zv).dvDirs.isEmpty,
         "a whole-table rewrite applies the mask physically and retires the dv")
       assert(Versioned.readLatest(spark, dirF).count() == 99)
       Versioned.writeVersion(Seq((200L, 0L)).toDF("id", "k").coalesce(1),
         dirF, SaveMode.Append)
       Maintenance.compact(spark, dirF, store = graft.ext.ManifestStore.conditionalPut)
       val cvF = Versioned.latestVersion(spark, dirF).get
-      assert(Versioned.isRearrange(spark, dirF, cvF))
+      assert(Versioned.snapshot(spark, dirF, cvF).isRearrange)
       assert(Versioned.readLatest(spark, dirF).count() == 100)
     } finally spark.conf.unset("spark.graft.manifest.checkpointInterval")
   }

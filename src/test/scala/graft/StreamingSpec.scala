@@ -539,7 +539,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     // first batch CREATES the partitioned chain
     run()
-    assert(Versioned.versionInfo(spark, dst,
+    assert(Versioned.snapshot(spark, dst,
       Versioned.latestVersion(spark, dst).get).partitionCols == Seq("cat"))
     assert(Versioned.readLatest(spark, dst).select("id", "cat")
       .as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
@@ -565,7 +565,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq.empty[(Long, String)].toDF("id", "cat"), dst, ckpt, batchId = 100L,
       mode = SaveMode.Overwrite, partCols = Seq("cat")).nonEmpty)
     assert(Versioned.readLatest(spark, dst).count() == 0)
-    assert(Versioned.versionInfo(spark, dst,
+    assert(Versioned.snapshot(spark, dst,
       Versioned.latestVersion(spark, dst).get).partitionCols == Seq("cat"))
     assert(Versioned.lastCommittedBatch(spark, dst, ckpt).contains(100L))
     // and the truncated partitioned chain takes the next epoch
@@ -1076,7 +1076,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     // serve the full table (snapshot), then compact it mid-history
     assert(drain(ckpt) == (0 until 5).map(i => (i.toLong, s"x$i")).toSet)
-    val preDirs = Versioned.versionInfo(spark, dir,
+    val preDirs = Versioned.snapshot(spark, dir,
       Versioned.latestVersion(spark, dir).get).dataDirs
     val cv = Versioned.compactSmallDirs(spark, dir, minDirs = 2)
     assert(cv.nonEmpty, "fixture: the compaction must fire")
