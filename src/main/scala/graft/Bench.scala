@@ -87,6 +87,9 @@ object Bench {
       val (b0, s0) = jiffies()
       val passT0 = System.nanoTime()
       for ((name, fn) <- names) {
+      // untimed: a timed query must not reuse what the warm-up or an
+      // earlier query cached (perfbench clears before each op too)
+      spark.catalog.clearCache()
       val t0 = System.nanoTime()
       // noop write consumes every output column, so Catalyst cannot
       // prune away the expressions being timed — a plain count() would

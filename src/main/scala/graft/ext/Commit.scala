@@ -8,106 +8,47 @@ import java.util.Comparator
 /** The commit seam: every crash-safe publish in this library reduces
   * to ONE primitive — make a small control file (a manifest, a version
   * claim) visible at a destination all-or-nothing, failing cleanly if
-  * the destination already exists. Which implementation of that
-  * primitive is SAFE depends on the storage:
+  * the destination already exists. The path's scheme picks the
+  * implementation, in [[Commit.putIfAbsent]] only — Delta's LogStore
+  * split (public design: HDFSLogStore renames, S3DynamoDBLogStore /
+  * conditional-put stores create):
   *
-  *   - HDFS / local POSIX: `rename` is atomic, so stage-and-rename
-  *     ([[RenameCommit]]) is the classic commit point.
+  *   - `file://` (or no scheme): content goes to a uniquely-named
+  *     sibling that is hard-linked into place — `link(2)` is atomic and
+  *     fails on an existing destination, so the link IS the claim.
   *   - Object stores (S3/MinIO — the substrate the reference actually
   *     runs on, ref: mnt/spark-conf/spark-defaults.conf:4-10): rename
-  *     is COPY+DELETE, not atomic, and a crash mid-"rename" leaves
-  *     both or neither path. The safe primitive there is a
-  *     conditional put — create-if-absent of the whole object
-  *     ([[PutIfAbsentCommit]]), which S3 exposes as
-  *     `If-None-Match: *` and HDFS as create-no-overwrite. This is
-  *     the same storage split Delta's LogStore abstraction exists to
-  *     solve (public design: HDFSLogStore renames, S3DynamoDBLogStore
-  *     / conditional-put stores create).
+  *     is COPY+DELETE, not atomic, so the commit is a conditional put —
+  *     create-if-absent of the whole object, which S3 exposes as
+  *     `If-None-Match: *`.
+  *   - Every other scheme (HDFS above all): stage-and-rename. There
+  *     rename is atomic AND fails on an existing destination, so it
+  *     doubles as the claim check. Rename is never used where it would
+  *     replace the destination (POSIX) or copy (object stores).
   *
-  * Data files never need either primitive: they are written ONCE into
+  * Data files never need the primitive: they are written ONCE into
   * uniquely-named immutable locations and become visible only when a
   * control file referencing them commits ([[graft.ext.Versioned]]'s
   * layout). Only the pointer flip must be atomic.
   */
-sealed trait CommitProtocol {
-  def name: String
-
-  /** Publish `content` at `dst` all-or-nothing iff `dst` is absent.
-    * Returns true when this call committed; false when the claim was
-    * lost (dst already exists — a concurrent writer won). Readers
-    * must never observe a partial `dst`. */
-  def putIfAbsent(fs: FileSystem, dst: Path, content: Array[Byte]): Boolean
-}
-
-/** Stage-and-rename: write the content to a staging name beside the
-  * destination, then rename into place. The rename IS the commit —
-  * atomic on HDFS semantics, where rename-to-existing also FAILS and
-  * so doubles as the claim check. POSIX rename silently REPLACES an
-  * existing destination, so the local-FS path adds an explicit
-  * pre-check — best-effort (check→rename is two steps), the
-  * single-writer caveat the swap protocol has always carried. NOT
-  * safe on object stores, where rename is copy+delete. */
-object RenameCommit extends CommitProtocol {
-  val name = "rename"
-
-  def putIfAbsent(fs: FileSystem, dst: Path, content: Array[Byte]): Boolean = {
-    // staging name must NOT share dst's extension: a directory lister
-    // keyed on the suffix (Versioned.versions() matches *.manifest)
-    // would otherwise see the in-flight stage — or, after a crash
-    // mid-commit, a permanent stray — as a (malformed) committed name.
-    // And it must be unique PER ATTEMPT: two writers racing the same
-    // destination with a shared staging name would truncate each
-    // other's half-written stage (measured: the racing-appender spec
-    // failed on exactly this before the nonce).
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val tmp = new Path(dst.getParent, s".tmp-${dst.getName}.$nonce.staging")
-    val out = fs.create(tmp, true)
-    try out.write(content)
-    finally out.close()
-    if (fs.exists(dst) || !fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      false
-    } else true
-  }
-}
-
-/** Conditional put: create the destination object itself, failing if
-  * it exists — no rename anywhere. This is the object-store-safe
-  * commit: S3 conditional PUT (`If-None-Match: *`) publishes the
-  * whole object atomically with the existence check; HDFS
-  * create-no-overwrite claims the name atomically at create time.
-  *
-  * On a known object-store scheme the direct
-  * `fs.create(dst, overwrite = false)` + close maps to a single
-  * whole-object PUT (an object store has no partial-file state for
-  * readers to observe). On every OTHER remote scheme — HDFS above
-  * all — that create would claim the name atomically but stream the
-  * content afterwards, so a crash mid-write leaves a visible partial
-  * manifest; those delegate to [[RenameCommit]], whose rename is
-  * atomic AND claim-checking on HDFS semantics. On `file://` we
-  * emulate the conditional put EXACTLY — content is written to a
-  * uniquely-named sibling and then hard-linked into place
-  * (`link(2)` is atomic and fails on an existing destination), so a
-  * reader sees either no manifest or the complete manifest, never a
-  * half-written one, and two racing writers cannot both win. */
-object PutIfAbsentCommit extends CommitProtocol {
-  val name = "put-if-absent"
+private[graft] object Commit {
 
   /** Schemes where create/close maps to ONE whole-object PUT, so the
     * name claim and the content publish are the same atomic step. On
     * anything else (HDFS above all), create-no-overwrite claims the
     * NAME atomically but the content streams afterwards — a crash
-    * between create and close would leave a visible partial manifest,
-    * violating the trait contract — so those fall back to
-    * stage-and-rename, which on HDFS semantics is both atomic and
-    * claim-checking. */
+    * between create and close would leave a visible partial manifest —
+    * so those stage and rename instead. */
   private val wholeObjectPutSchemes =
     Set("s3a", "s3n", "s3", "gs", "abfs", "abfss", "wasb", "wasbs", "oss", "cos")
 
+  /** Publish `content` at `dst` all-or-nothing iff `dst` is absent.
+    * Returns true when this call committed; false when the claim was
+    * lost (dst already exists — a concurrent writer won). Readers
+    * never observe a partial `dst`. */
   def putIfAbsent(fs: FileSystem, dst: Path, content: Array[Byte]): Boolean = {
-    val scheme = Option(dst.toUri.getScheme).getOrElse(
-      fs.getUri.getScheme)
-    if (scheme == "file" || scheme == null) putIfAbsentLocal(dst, content)
+    val scheme = Option(dst.toUri.getScheme).getOrElse(fs.getUri.getScheme)
+    if (scheme == "file" || scheme == null) linkIntoPlace(dst, content)
     else if (wholeObjectPutSchemes.contains(scheme)) {
       val out =
         try fs.create(dst, false)
@@ -121,10 +62,13 @@ object PutIfAbsentCommit extends CommitProtocol {
       try out.write(content)
       finally out.close()
       true
-    } else RenameCommit.putIfAbsent(fs, dst, content)
+    } else stageAndRename(fs, dst, content)
   }
 
-  private def putIfAbsentLocal(dst: Path, content: Array[Byte]): Boolean = {
+  /** The local branch: write a uniquely-named sibling, hard-link it
+    * into place (a reader sees no manifest or the complete one, and
+    * two racers cannot both win), drop the sibling. */
+  private def linkIntoPlace(dst: Path, content: Array[Byte]): Boolean = {
     val target = Paths.get(dst.toUri.getPath)
     Files.createDirectories(target.getParent)
     val tmp = Files.createTempFile(target.getParent, s".put-${dst.getName}", ".tmp")
@@ -134,12 +78,34 @@ object PutIfAbsentCommit extends CommitProtocol {
       catch {
         case _: java.nio.file.FileAlreadyExistsException => false
         case _: UnsupportedOperationException =>
-          // no hardlinks on this FS: degrade to claim-then-move (the
-          // RenameCommit caveat applies)
+          // no hardlinks on this FS: degrade to claim-then-move
+          // (check→move is two steps — the single-writer caveat)
           if (Files.exists(target)) false
           else { Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE); true }
       }
     } finally Files.deleteIfExists(tmp)
+  }
+
+  /** The rename branch: write a staging name beside the destination,
+    * then rename into place — the rename IS the commit, and on HDFS
+    * semantics rename-to-existing fails, so it is the claim check too.
+    * The staging name must NOT share dst's extension: a directory
+    * lister keyed on the suffix (Versioned.versions() matches
+    * *.manifest) would otherwise see the in-flight stage — or, after a
+    * crash mid-commit, a permanent stray — as a committed name. And it
+    * must be unique PER ATTEMPT: two writers racing the same
+    * destination with a shared staging name would truncate each
+    * other's half-written stage. */
+  private def stageAndRename(fs: FileSystem, dst: Path, content: Array[Byte]): Boolean = {
+    val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    val tmp = new Path(dst.getParent, s".tmp-${dst.getName}.$nonce.staging")
+    val out = fs.create(tmp, true)
+    try out.write(content)
+    finally out.close()
+    if (fs.exists(dst) || !fs.rename(tmp, dst)) {
+      fs.delete(tmp, false)
+      false
+    } else true
   }
 }
 
@@ -154,15 +120,14 @@ object PutIfAbsentCommit extends CommitProtocol {
   *     (HDFS/POSIX). The default, matching every existing call site.
   *   - [[ManifestStore]]: the table is a POINTER — immutable
   *     uniquely-named data dirs published by a single manifest-file
-  *     commit through a [[CommitProtocol]]
-  *     ([[graft.ext.Versioned]]'s layout). With
-  *     [[PutIfAbsentCommit]] this is the object-store-safe story:
-  *     no rename on any path, a crash before the manifest commit
-  *     leaves only an invisible orphan dir (reclaimed by
-  *     [[Versioned.pruneVersions]]), and there is NO window in which
-  *     the live table is missing or partial. Reads resolve the
-  *     newest manifest — one small-file read of indirection, the
-  *     price Delta's log pays too.
+  *     commit through [[Commit.putIfAbsent]]
+  *     ([[graft.ext.Versioned]]'s layout). On an object store that is
+  *     a conditional put with no rename on any path; everywhere, a
+  *     crash before the manifest commit leaves only an invisible
+  *     orphan dir (reclaimed by [[Versioned.pruneVersions]]), and
+  *     there is NO window in which the live table is missing or
+  *     partial. Reads resolve the newest manifest — one small-file
+  *     read of indirection, the price Delta's log pays too.
   */
 sealed trait TableStore {
   def name: String
@@ -252,8 +217,8 @@ object SwapStore extends TableStore {
       Files.walk(p).sorted(Comparator.reverseOrder[JPath]()).forEach(f => Files.delete(f))
 }
 
-final class ManifestStore(val protocol: CommitProtocol) extends TableStore {
-  val name = s"manifest(${protocol.name})"
+object ManifestStore extends TableStore {
+  val name = "manifest"
 
   def exists(spark: SparkSession, path: String): Boolean =
     Versioned.latestVersion(spark, path).nonEmpty
@@ -268,16 +233,10 @@ final class ManifestStore(val protocol: CommitProtocol) extends TableStore {
   def recover(spark: SparkSession, path: String): Unit = ()
 
   def rewrite(spark: SparkSession, path: String)(write: String => Unit): Unit = {
-    Versioned.writeVersionWith(spark, path, protocol)(write)
+    Versioned.writeVersionWith(spark, path)(write)
     ()
   }
 
   def liveFiles(spark: SparkSession, path: String): Seq[(String, Long)] =
     Versioned.liveFiles(spark, path)
-}
-
-object ManifestStore {
-  /** The object-store-safe default. */
-  val conditionalPut: ManifestStore = new ManifestStore(PutIfAbsentCommit)
-  val renaming: ManifestStore = new ManifestStore(RenameCommit)
 }

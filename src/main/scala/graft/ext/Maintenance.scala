@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions.col
   * so the size accounting works on any supported storage; the rewrite
   * publishes through a [[TableStore]] — [[SwapStore]]'s crash-safe
   * dir swap by default (holds where rename is atomic: HDFS/POSIX), or
-  * [[ManifestStore]] + [[PutIfAbsentCommit]] on object stores, where
-  * the commit is a conditional manifest create with no rename on the
-  * path.
+  * [[ManifestStore]], where the commit is one manifest publish through
+  * the primitive the path's scheme picks (a conditional create with no
+  * rename on object stores).
   */
 object Maintenance {
 
@@ -40,8 +40,8 @@ object Maintenance {
     * preserved exactly (one repartition, no ordering contract —
     * parquet tables carry none). `store` picks the publish protocol:
     * [[SwapStore]] (default — dir swap, holds on HDFS/POSIX rename)
-    * or [[ManifestStore.conditionalPut]] for object stores, where
-    * the compacted state lands as a new immutable version and old
+    * or [[ManifestStore]] for object stores, where the compacted
+    * state lands as a new immutable version and old
     * files are reclaimed by [[Versioned.pruneVersions]] — Delta
     * OPTIMIZE's own shape. */
   def compact(spark: SparkSession, path: String,
@@ -52,7 +52,7 @@ object Maintenance {
     // commit) instead of the flat overwrite below, which would
     // silently drop the spec
     store match {
-      case ms: ManifestStore =>
+      case ManifestStore =>
       val partCols = Versioned.latestVersion(spark, path)
         .map(v => Versioned.snapshot(spark, path, v).partitionCols)
         .getOrElse(Seq.empty)
@@ -61,10 +61,7 @@ object Maintenance {
           Versioned.allLiveFilesMap(spark, path, v)).get
         val bytes = Versioned.fileBytesOf(spark, path,
           Versioned.latestVersion(spark, path).get, before)
-        // the caller's store names the commit protocol for a reason
-        // (rename where rename is the atomic primitive) — the
-        // partition-shaped branch must honor it, not substitute its own
-        compactPartitionShaped(spark, path, None, targetFileBytes, ms.protocol)
+        compactPartitionShaped(spark, path, None, targetFileBytes)
         val afterV = Versioned.latestVersion(spark, path).get
         return CompactStats(before.valuesIterator.map(_.size).sum,
           Versioned.allLiveFilesMap(spark, path, afterV).valuesIterator.map(_.size).sum,
@@ -77,7 +74,7 @@ object Maintenance {
       val beforeFlat = store.liveFiles(spark, path)
       val bytesFlat = beforeFlat.map(_._2).sum
       val nOutFlat = math.max(1, math.ceil(bytesFlat.toDouble / targetFileBytes).toInt)
-      Versioned.rewriteAllAsRearrange(spark, path, ms.protocol)(
+      Versioned.rewriteAllAsRearrange(spark, path)(
           _.repartition(nOutFlat)) match {
         case Some(_) => return CompactStats(beforeFlat.length,
           store.liveFiles(spark, path).length, bytesFlat)
@@ -118,13 +115,12 @@ object Maintenance {
     * commutative commit). */
   def maintainVersioned(spark: SparkSession, path: String, keepLast: Int,
                         orphanMinAgeMs: Long = 15 * 60 * 1000L,
-                        protocol: CommitProtocol = PutIfAbsentCommit,
                         backfillStats: Boolean = false,
                         compactTargetBytes: Long = 0L): VersionedMaintStats = {
     // opt-in because the footer sweep of un-statted dirs, while
     // one-time, is real IO a routine maintenance tick shouldn't imply
-    if (backfillStats) Versioned.backfillStats(spark, path, protocol)
-    val compacted = Versioned.compactDeletionVectors(spark, path, protocol)
+    if (backfillStats) Versioned.backfillStats(spark, path)
+    val compacted = Versioned.compactDeletionVectors(spark, path)
     // the try covers ONLY the fragmentation PROBE: a legacy
     // pre-file-list chain can't answer it — skip just the gate
     // (backfill_stats upgrades the chain) so dv compaction and
@@ -145,7 +141,7 @@ object Maintenance {
         case _: IllegalArgumentException => None
       }
     val compactStats = gate.map(_ =>
-      compact(spark, path, compactTargetBytes, store = new ManifestStore(protocol)))
+      compact(spark, path, compactTargetBytes, store = ManifestStore))
     VersionedMaintStats(compacted,
       Versioned.pruneVersions(spark, path, keepLast, orphanMinAgeMs),
       compactStats)
@@ -376,16 +372,14 @@ object Maintenance {
     * old files are reclaimed when their versions are pruned — the
     * same lifecycle as every overwrite. Returns the new version. */
   def zorderVersioned(spark: SparkSession, dir: String, colA: String, colB: String,
-                      nFiles: Int, bits: Int = 16,
-                      protocol: CommitProtocol = PutIfAbsentCommit): Int =
-    zorderVersionedCols(spark, dir, Seq(colA, colB), nFiles, bits, protocol)
+                      nFiles: Int, bits: Int = 16): Int =
+    zorderVersionedCols(spark, dir, Seq(colA, colB), nFiles, bits)
 
   /** [[zorderVersioned]] over N columns ([[zKeyN]]). `nFiles <= 0`
     * derives the count from the rewritten bytes at the standard
     * 128 MiB target — OPTIMIZE without guessing a file count. */
   def zorderVersionedCols(spark: SparkSession, dir: String, zCols: Seq[String],
-                          nFiles: Int, bits: Int = 16,
-                          protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                          nFiles: Int, bits: Int = 16): Int = {
     // a PARTITIONED chain z-orders through the spec-keeping
     // partition-shaped rewrite: range-clustered on (partition cols,
     // Morton key) and re-landed hive-laid-out, so files are compact
@@ -396,7 +390,7 @@ object Maintenance {
       .map(v => Versioned.snapshot(spark, dir, v).partitionCols)
       .getOrElse(Seq.empty)
     if (partCols.nonEmpty)
-      return zorderPartitionShaped(spark, dir, None, zCols, nFiles, bits, protocol)
+      return zorderPartitionShaped(spark, dir, None, zCols, nFiles, bits)
         .getOrElse(Versioned.latestVersion(spark, dir).get) // empty table: no-op
     val nOut =
       if (nFiles > 0) nFiles
@@ -411,9 +405,9 @@ object Maintenance {
     // dataChange=false flag — concurrent appends commute (bounded OCC
     // retry, not a lost overwrite race) and downstream streams skip
     // it. Legacy pre-file-list manifests fall back to the overwrite.
-    Versioned.rewriteAllAsRearrange(spark, dir, protocol)(shape).getOrElse {
+    Versioned.rewriteAllAsRearrange(spark, dir)(shape).getOrElse {
       val current = Versioned.readLatest(spark, dir)
-      Versioned.writeVersionWith(spark, dir, protocol)(tmp =>
+      Versioned.writeVersionWith(spark, dir)(tmp =>
         shape(current).write.mode(SaveMode.ErrorIfExists).parquet(tmp))
     }
   }
@@ -441,8 +435,7 @@ object Maintenance {
     * (filesRewritten, bytesRewritten, version); None when everything
     * live is already clustered base. */
   def zorderVersionedIncremental(spark: SparkSession, dir: String, zCols: Seq[String],
-                                 nFiles: Int = 0, bits: Int = 16,
-                                 protocol: CommitProtocol = PutIfAbsentCommit)
+                                 nFiles: Int = 0, bits: Int = 16)
       : Option[(Int, Long, Int)] = {
     val v = Versioned.latestVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $dir"))
@@ -474,7 +467,7 @@ object Maintenance {
      else shaped.write.partitionBy(partCols: _*))
       .mode(SaveMode.ErrorIfExists).parquet(stagedPath.toString)
     Versioned.commitFileRewrite(spark, dir, victims, Some(staged), partCols,
-      snap.dvSnapshot, protocol, dataChange = false)
+      snap.dvSnapshot, dataChange = false)
       .map(cv => (victims.valuesIterator.map(_.size).sum, selectedBytes, cv))
   }
 
@@ -494,21 +487,18 @@ object Maintenance {
     * disjoint files. Returns the committed version, None when the
     * predicate selects no files. */
   def zorderVersionedWhere(spark: SparkSession, dir: String, where: String,
-                           colA: String, colB: String, nFiles: Int, bits: Int = 16,
-                           protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] =
-    zorderPartitionShaped(spark, dir, Some(where), Seq(colA, colB), nFiles, bits, protocol)
+                           colA: String, colB: String, nFiles: Int, bits: Int = 16): Option[Int] =
+    zorderPartitionShaped(spark, dir, Some(where), Seq(colA, colB), nFiles, bits)
 
   /** [[zorderVersionedWhere]] over N columns ([[zKeyN]]). */
   def zorderVersionedColsWhere(spark: SparkSession, dir: String, where: String,
-                               zCols: Seq[String], nFiles: Int, bits: Int = 16,
-                               protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] =
-    zorderPartitionShaped(spark, dir, Some(where), zCols, nFiles, bits, protocol)
+                               zCols: Seq[String], nFiles: Int, bits: Int = 16): Option[Int] =
+    zorderPartitionShaped(spark, dir, Some(where), zCols, nFiles, bits)
 
   private def zorderPartitionShaped(spark: SparkSession, dir: String,
                                     where: Option[String], zCols: Seq[String],
-                                    nFiles: Int, bits: Int,
-                                    protocol: CommitProtocol): Option[Int] =
-    rewritePartitionScoped(spark, dir, where, protocol) { (subset, partCols, selectedBytes) =>
+                                    nFiles: Int, bits: Int): Option[Int] =
+    rewritePartitionScoped(spark, dir, where) { (subset, partCols, selectedBytes) =>
       val nOut =
         if (nFiles > 0) nFiles
         else math.max(1, math.ceil(selectedBytes / (128.0 * 1024 * 1024)).toInt)
@@ -526,14 +516,13 @@ object Maintenance {
     * (filesSelected, selectedBytes, committedVersion) — None when
     * nothing matched. */
   def compactVersionedWhere(spark: SparkSession, dir: String, where: String,
-                            targetFileBytes: Long = 128L * 1024 * 1024,
-                            protocol: CommitProtocol = PutIfAbsentCommit): Option[(Int, Long, Int)] =
-    compactPartitionShaped(spark, dir, Some(where), targetFileBytes, protocol)
+                            targetFileBytes: Long = 128L * 1024 * 1024): Option[(Int, Long, Int)] =
+    compactPartitionShaped(spark, dir, Some(where), targetFileBytes)
 
   private def compactPartitionShaped(spark: SparkSession, dir: String,
-                                     where: Option[String], targetFileBytes: Long,
-                                     protocol: CommitProtocol): Option[(Int, Long, Int)] =
-    rewritePartitionScoped(spark, dir, where, protocol) { (subset, partCols, selectedBytes) =>
+                                     where: Option[String],
+                                     targetFileBytes: Long): Option[(Int, Long, Int)] =
+    rewritePartitionScoped(spark, dir, where) { (subset, partCols, selectedBytes) =>
       val nOut = math.max(1, math.ceil(selectedBytes.toDouble / targetFileBytes).toInt)
       subset.repartitionByRange(nOut, partCols.map(col): _*)
     }
@@ -547,8 +536,7 @@ object Maintenance {
     * file-granular copy-on-write commit. Returns
     * (filesSelected, selectedBytes, version). */
   private def rewritePartitionScoped(spark: SparkSession, dir: String,
-                                     where: Option[String],
-                                     protocol: CommitProtocol)
+                                     where: Option[String])
                                     (shape: (org.apache.spark.sql.DataFrame, Seq[String], Long)
                                       => org.apache.spark.sql.DataFrame): Option[(Int, Long, Int)] = {
     val v = Versioned.latestVersion(spark, dir).getOrElse(
@@ -579,7 +567,7 @@ object Maintenance {
     // instead of dying on the dropped dirs (Delta's OPTIMIZE contract);
     // its conflict guard pins the dv set the rewrite's read applied
     Versioned.commitFileRewrite(spark, dir, files, Some(staged), partCols,
-      snap.dvSnapshot, protocol, dataChange = false)
+      snap.dvSnapshot, dataChange = false)
       .map(cv => (files.valuesIterator.map(_.size).sum, selectedBytes, cv))
   }
 }

@@ -314,7 +314,7 @@ private[graft] object Snapshot {
                                           rows: Option[Long],
                                           cols: Map[String, ColStats])
 
-  private[ext] def parseLine(line: String): Line =
+  private[ext] def parseLine(line: String, loadSidecars: Boolean = true): Line =
     if (line.startsWith("schema:"))
       SchemaEntry(org.apache.spark.sql.types.DataType
         .fromJson(line.drop(7)).asInstanceOf[StructType])
@@ -331,7 +331,9 @@ private[graft] object Snapshot {
       val i = rest.indexOf(':')
       require(i > 0 && i < rest.length - 1,
         s"malformed stats-sidecar manifest line: $line")
-      val (rows, cols, files) = loadStatsSidecar(rest.substring(i + 1))
+      val (rows, cols, files) =
+        if (loadSidecars) loadStatsSidecar(rest.substring(i + 1))
+        else (0L, Map.empty[String, ColStats], Seq.empty[FileStats])
       StatsEntry(rest.substring(0, i), rows, cols, files,
         Some(rest.substring(i + 1)))
     } else if (line.startsWith("changes:")) {
@@ -413,7 +415,8 @@ private[graft] object Snapshot {
       val parts = line.drop(9).split(":", 3)
       require(parts.length == 3 && parts.forall(_.nonEmpty),
         s"malformed bloom-sidecar manifest line: $line")
-      BloomEntry(parts(0), parts(1), loadBloomSidecar(parts(2)), Some(parts(2)))
+      BloomEntry(parts(0), parts(1),
+        if (loadSidecars) loadBloomSidecar(parts(2)) else Map.empty, Some(parts(2)))
     } else if (line.startsWith("colmap:")) {
       ColMapEntry(line.drop(7).split(',').map(_.trim).filter(_.nonEmpty).toSeq.map { e =>
         val i = e.indexOf('=')
@@ -544,10 +547,14 @@ private[graft] object Snapshot {
   /** Fold one delta manifest's ops over the parent's resolved lines.
     * The parent's rearrange flag strips FIRST — it describes the
     * parent's own commit, never this one's; a rearrange commit
-    * re-adds it through its `+rearrange:1` op. */
-  private def applyOps(base: Seq[Line], ops: Seq[String]): Seq[Line] =
+    * re-adds it through its `+rearrange:1` op. With `loadSidecars`
+    * off, added sidecar refs keep their refs but not their payloads —
+    * enough to render the result, which is all a commit folding its
+    * own checkpoint does with it. */
+  private[ext] def applyOps(base: Seq[Line], ops: Seq[String],
+                            loadSidecars: Boolean = true): Seq[Line] =
     ops.foldLeft(base.filterNot(_.isInstanceOf[RearrangeEntry])) { (acc, op) =>
-      if (op.startsWith("+")) parseLine(op.drop(1)) match {
+      if (op.startsWith("+")) parseLine(op.drop(1), loadSidecars) match {
         case s: SchemaEntry    => s +: acc.filterNot(_.isInstanceOf[SchemaEntry])
         case p: PartitionEntry => p +: acc.filterNot(_.isInstanceOf[PartitionEntry])
         case t: TxnEntry       => acc.filterNot {
@@ -643,12 +650,12 @@ private[graft] object Snapshot {
     if (useCheckpoint && fs.exists(cp)) {
       val in = fs.open(cp)
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).map(parseLine).toList
+        .map(_.trim).filter(_.nonEmpty).map(parseLine(_)).toList
       finally in.close()
     } else {
       val raw = readManifest(spark, dir, v)
       raw.headOption.filter(_.startsWith("parent:")) match {
-        case None => raw.map(parseLine)
+        case None => raw.map(parseLine(_))
         case Some(head) =>
           val parent = head.drop(7).trim.toInt
           applyOps(resolve(spark, dir, parent).lines, raw.tail)

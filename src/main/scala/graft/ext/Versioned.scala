@@ -50,19 +50,16 @@ import graft.Tables.{parquetSchemaDriver, readParquetNoInfer}
   *     data-skipping role). [[readVersionSkipping]] consults them.
   *
   * Each write lands its rows in a fresh `v<N>_data` directory, then
-  * commits by publishing `_versions/<N>.manifest` through a
-  * [[CommitProtocol]] — the manifest's appearance IS the commit
-  * point. [[PutIfAbsentCommit]] (the default) publishes by a
-  * conditional create: atomic on object stores (S3 `If-None-Match: *`
-  * — the reference's own substrate, S3A/MinIO,
-  * ref: mnt/spark-conf/spark-defaults.conf:4-10), emulated exactly on
-  * local POSIX via hardlink, and delegating to stage-and-rename on
-  * HDFS where that is the atomic primitive. [[RenameCommit]] remains
-  * the explicit opt-in for pure-HDFS deployments; it is no longer the
-  * default because POSIX rename silently replaces an existing
-  * destination, so two local racers could both "win" — a lost update
-  * the racing spec MEASURES. Safety is the default; the faster
-  * single-writer rename is the documented choice.
+  * commits by publishing `_versions/<N>.manifest` through
+  * [[Commit.putIfAbsent]] — the manifest's appearance IS the commit
+  * point. The path's scheme picks the primitive, in that one place: a
+  * hardlink on local POSIX, a conditional create on object stores (S3
+  * `If-None-Match: *` — the reference's own substrate, S3A/MinIO,
+  * ref: mnt/spark-conf/spark-defaults.conf:4-10), and stage-and-rename
+  * on HDFS-like schemes. Rename is used only where it is atomic and
+  * fails on an existing destination; POSIX rename silently replaces
+  * one, so two local racers could both "win" — a lost update the
+  * racing spec measures.
   *
   * An overwrite manifest lists only its own data dir; an
   * append manifest lists the previous version's dirs plus its own —
@@ -74,11 +71,10 @@ import graft.Tables.{parquetSchemaDriver, readParquetNoInfer}
   * along with expired versions.
   *
   * Concurrency: version numbers are claimed by the manifest commit —
-  * put-if-absent fails on an existing destination under BOTH
-  * protocols, surfacing concurrent writers instead of silently
-  * dropping one (single-writer is the
-  * expectation, as in the reference's Airflow `max_active_runs=1`,
-  * `mnt/airflow/dags/yelp_pipeline.py:21`).
+  * the claim fails on an existing destination on every scheme,
+  * surfacing concurrent writers instead of silently dropping one
+  * (single-writer is the expectation, as in the reference's Airflow
+  * `max_active_runs=1`, `mnt/airflow/dags/yelp_pipeline.py:21`).
   *
   * Scale shape: manifests are line lists of directories plus one
   * schema and per-dir stats (bytes per version); reads plan ONE
@@ -152,7 +148,7 @@ object Versioned {
     * dirs whose inline lines are individually cheap but collectively
     * tens of MB re-rendered every checkpoint). */
   private def writeCheckpoint(spark: SparkSession, dir: String, v: Int,
-                              fullLines: Seq[Line], protocol: CommitProtocol): Unit = {
+                              fullLines: Seq[Line]): Unit = {
     val (fs, _) = fsFor(spark, dir)
     def render(ls: Seq[Line]) =
       (ls.map(renderLine).mkString("\n") + "\n").getBytes("UTF-8")
@@ -186,7 +182,7 @@ object Versioned {
         bytes = render(out)
       }
     }
-    protocol.putIfAbsent(fs, checkpointPath(dir, v), bytes)
+    Commit.putIfAbsent(fs, checkpointPath(dir, v), bytes)
     ()
   }
 
@@ -203,32 +199,24 @@ object Versioned {
     } finally in.close()
   }
 
-  /** Commit a non-overwrite child version as a DELTA manifest (parent
-    * + ops), and land the periodic checkpoint sidecar when due. The
-    * manifest commit is the atomic claim; a crash before the sidecar
-    * lands costs nothing (resolution folds the chain). */
-  private def commitChild(spark: SparkSession, dir: String, v: Int, parent: Int,
-                          fullLines: => Seq[Line], ops: => Seq[String],
-                          protocol: CommitProtocol): Unit = {
-    val opsV = ops
-    val ts = commitManifest(spark, dir, v, s"parent:$parent" +: opsV, protocol)
-    // the sidecar must carry the same in-commit clock (and protocol
-    // stamp) the manifest was stamped with — a checkpoint-resolved
-    // read and a fold-resolved read of the same version answer
-    // TIMESTAMP AS OF alike and gate alike. The rearrange flag is
-    // version-scoped: the checkpoint carries it iff THIS commit's ops
-    // declared it — an inherited one (the parent was the rearrange)
-    // strips, matching the fold resolution.
-    if (checkpointDue(spark, v)) {
-      val rearr: Seq[Line] =
-        if (opsV.exists(_.startsWith("+rearrange:"))) Seq(RearrangeEntry())
-        else Seq.empty
+  /** Commit the child of `parent` as a DELTA manifest (parent + ops),
+    * and land the periodic checkpoint sidecar when due. Returns the
+    * committed version, `parent.version + 1`. The manifest commit is
+    * the atomic claim; a crash before the sidecar lands costs nothing
+    * (resolution folds the chain). The checkpoint is the fold readers
+    * use — the parent's lines under the exact ops the manifest
+    * carries, its `+ts`/`+protocol` stamps included — so a
+    * checkpointed read and a folded read of a version cannot differ.
+    * The checkpoint renders sidecar refs, never their payloads, so the
+    * fold does not read back the sidecars this commit just wrote. */
+  private def commitChild(spark: SparkSession, dir: String, parent: Snapshot,
+                          ops: Seq[String]): Int = {
+    val v = parent.version + 1
+    val stamped = commitManifest(spark, dir, v, s"parent:${parent.version}" +: ops)
+    if (checkpointDue(spark, v))
       writeCheckpoint(spark, dir, v,
-        TsEntry(ts) +: ProtocolEntry(SupportedProtocol) +:
-          (rearr ++ fullLines.filterNot(l =>
-            l.isInstanceOf[TsEntry] || l.isInstanceOf[ProtocolEntry] ||
-              l.isInstanceOf[RearrangeEntry])), protocol)
-    }
+        applyOps(parent.lines, stamped.tail, loadSidecars = false))
+    v
   }
 
   private def addOp(l: Line): String = "+" + renderLine(l)
@@ -528,12 +516,9 @@ object Versioned {
     * already exists — as a logical column OR as another column's
     * physical storage name (the resurrect-collision guard). */
   def renameColumns(spark: SparkSession, dir: String,
-                    renames: Seq[(String, String)],
-                    protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                    renames: Seq[(String, String)]): Int = {
     require(renames.nonEmpty, "no columns to rename")
-    val prev = requireLatest(spark, dir)
-    val snap = snapshot(spark, dir, prev)
-    val ls = snap.lines
+    val snap = snapshot(spark, dir, requireLatest(spark, dir))
     val physical = snap.schema.getOrElse(
       throw new IllegalArgumentException(
         s"cannot rename columns of a pre-schema manifest at $dir — commit once to record the schema"))
@@ -602,24 +587,11 @@ object Versioned {
           "(REPLACE TABLE … AS SELECT) to a plain name instead")
       m = (m - resolved) ++ (if (to == phys) Map.empty[String, String] else Map(to -> phys))
     }
-    val v = prev + 1
-    val constraintByName = constraints.map(c => c.name -> c).toMap
-    val (newLines0, ops0) =
-      if (m.isEmpty) (ls.filterNot(_.isInstanceOf[ColMapEntry]), Seq("-colmap"))
-      else {
-        val cm = ColMapEntry(m.toSeq.sortBy(_._1))
-        (ls.filterNot(_.isInstanceOf[ColMapEntry]) :+ cm, Seq(addOp(cm)))
-      }
-    val newLines = newLines0.map {
-      case c: ConstraintEntry => constraintByName(c.name)
-      case s: SchemaEntry if genRewritten => SchemaEntry(physSchema)
-      case other => other
-    }
-    val ops = ops0 ++
-      constraints.filter(c => rewrittenConstraints.contains(c.name)).map(addOp) ++
-      (if (genRewritten) Seq(addOp(SchemaEntry(physSchema))) else Seq.empty)
-    commitChild(spark, dir, v, prev, newLines, ops, protocol)
-    v
+    val colMapOp =
+      if (m.isEmpty) "-colmap" else addOp(ColMapEntry(m.toSeq.sortBy(_._1)))
+    commitChild(spark, dir, snap, colMapOp +:
+      (constraints.filter(c => rewrittenConstraints.contains(c.name)).map(addOp) ++
+        (if (genRewritten) Seq(addOp(SchemaEntry(physSchema))) else Seq.empty)))
   }
 
   // ───────────── bloom-filter file skipping (see [[Bloom]]) ─────────────
@@ -645,12 +617,10 @@ object Versioned {
     * a write racing between batches builds its own blooms at commit
     * time as usual. Returns the final committed version. */
   def declareBloomColumn(spark: SparkSession, dir: String, col: String,
-                         bits: Int = Bloom.defaultBits,
-                         protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                         bits: Int = Bloom.defaultBits): Int = {
     require(bits >= 64 && bits % 8 == 0,
       s"bloom bits must be a positive multiple of 8, got $bits")
-    val prev = requireLatest(spark, dir)
-    val snap = snapshot(spark, dir, prev)
+    val snap = snapshot(spark, dir, requireLatest(spark, dir))
     val physical = snap.schema.getOrElse(
       throw new IllegalArgumentException(s"no recorded schema at $dir"))
     val cmap = snap.colMap
@@ -706,31 +676,15 @@ object Versioned {
     // blooms stay untouched — bloom indexes are per-column, and a
     // table may declare several (Delta's per-column bloom indexes).
     val first: Seq[Line] = decl +: batches.headOption.map(buildEntries).getOrElse(Seq.empty)
-    def notThisCol(l: Line): Boolean = l match {
-      case e: BloomColEntry => !e.col.equalsIgnoreCase(phys)
-      case e: BloomEntry    => !e.col.equalsIgnoreCase(phys)
-      case _ => true
-    }
-    var v = prev + 1
-    commitChild(spark, dir, v, prev,
-      snap.lines.filter(notThisCol) ++ first,
-      s"-bloomcol:$phys" +: first.map(addOp), protocol)
+    val v = commitChild(spark, dir, snap, s"-bloomcol:$phys" +: first.map(addOp))
     // remaining batches: one bounded build + commit each; each commit
     // is a child of the CURRENT latest, so a concurrent append between
     // batches keeps its own (write-time) blooms
-    batches.drop(1).foreach { batch =>
+    batches.drop(1).foldLeft(v) { (_, batch) =>
       val entries = buildEntries(batch)
-      val base = latestVersion(spark, dir).get
-      val cur = snapshot(spark, dir, base).lines
-      val names = batch.toSet
-      commitChild(spark, dir, base + 1, base,
-        cur.filterNot { case b: BloomEntry =>
-          names.contains(b.dir) && b.col.equalsIgnoreCase(phys); case _ => false } ++
-          entries,
-        entries.map(addOp), protocol)
-      v = base + 1
+      commitChild(spark, dir, snapshot(spark, dir, requireLatest(spark, dir)),
+        entries.map(addOp))
     }
-    v
   }
 
   /** Drop a bloom declaration (and its blobs) — metadata-only.
@@ -738,10 +692,8 @@ object Versioned {
     * whole-index undeclare); a named column drops only its own
     * declaration and blooms, other columns stay live. */
   def dropBloomColumn(spark: SparkSession, dir: String,
-                      col: Option[String] = None,
-                      protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
-    val prev = requireLatest(spark, dir)
-    val snap = snapshot(spark, dir, prev)
+                      col: Option[String] = None): Option[Int] = {
+    val snap = snapshot(spark, dir, requireLatest(spark, dir))
     val phys = col.map { c =>
       val cmap = snap.colMap
       cmap.getOrElse(
@@ -756,13 +708,7 @@ object Versioned {
       }
     }
     if (!snap.bloomDecls.exists(victim)) None
-    else {
-      val v = prev + 1
-      commitChild(spark, dir, v, prev,
-        snap.lines.filterNot(victim),
-        Seq(phys.fold("-bloomcol")(p => s"-bloomcol:$p")), protocol)
-      Some(v)
-    }
+    else Some(commitChild(spark, dir, snap, Seq(phys.fold("-bloomcol")(p => s"-bloomcol:$p"))))
   }
 
   // ───────────── shallow CLONE (zero-copy table fork) ─────────────
@@ -792,8 +738,7 @@ object Versioned {
     * recorded change feeds do not clone (they speak the source's
     * writer ids and version numbers). */
   def cloneTable(spark: SparkSession, sourceDir: String, targetDir: String,
-                 version: Option[Int] = None,
-                 protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                 version: Option[Int] = None): Int = {
     val srcV = version.getOrElse(latestVersion(spark, sourceDir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $sourceDir")))
     require(versions(spark, sourceDir).contains(srcV),
@@ -851,7 +796,7 @@ object Versioned {
       case _: ChangesEntry   => None // speaks the source's version numbers
       case other             => Some(other) // schema/partition/colmap/notnull/constraint/bloomcol
     }
-    commitManifest(spark, targetDir, 0, cloned.map(renderLine), protocol)
+    commitManifest(spark, targetDir, 0, cloned.map(renderLine))
     0
   }
 
@@ -889,8 +834,7 @@ object Versioned {
   @volatile private[graft] var lastDeepCloneCounts: (Long, Long) = (0L, 0L)
 
   def cloneTableDeep(spark: SparkSession, sourceDir: String, targetDir: String,
-                     version: Option[Int] = None,
-                     protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                     version: Option[Int] = None): Int = {
     val srcV = version.getOrElse(latestVersion(spark, sourceDir).getOrElse(
       throw new IllegalArgumentException(s"no versions at $sourceDir")))
     require(versions(spark, sourceDir).contains(srcV),
@@ -1030,7 +974,7 @@ object Versioned {
       case _: ChangesEntry    => None // speaks the source's version numbers
       case other              => Some(other)
     }
-    commitManifest(spark, targetDir, 0, cloned.map(renderLine), protocol)
+    commitManifest(spark, targetDir, 0, cloned.map(renderLine))
     0
   }
 
@@ -1062,8 +1006,7 @@ object Versioned {
     * `_temporary` leftovers would silently join the table — clean
     * first). */
   def convertParquetDir(spark: SparkSession, dir: String,
-                        partCols: Seq[String] = Seq.empty,
-                        protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                        partCols: Seq[String] = Seq.empty): Int = {
     val (fs, root) = fsFor(spark, dir)
     require(fs.exists(root), s"no directory at $dir")
     require(latestVersion(spark, dir).isEmpty,
@@ -1125,7 +1068,7 @@ object Versioned {
       (if (partCols.nonEmpty) Seq(PartitionEntry(partCols)) else Seq.empty) ++
       (DataEntry(rootAbs) +:
         externalizeStats(spark, dir, Seq(StatsEntry(rootAbs, rows, cols, files))))
-    commitManifest(spark, dir, 0, v0.map(renderLine), protocol)
+    commitManifest(spark, dir, 0, v0.map(renderLine))
     0
   }
 
@@ -1159,9 +1102,7 @@ object Versioned {
   def copyInto(spark: SparkSession, dir: String, source: String,
                format: String = "parquet",
                schema: Option[StructType] = None,
-               options: Map[String, String] = Map.empty,
-               protocol: CommitProtocol = PutIfAbsentCommit,
-               maxAttempts: Int = 16): Option[(Int, Long, Int)] = {
+               options: Map[String, String] = Map.empty): Option[(Int, Long, Int)] = {
     val fmt = format.trim.toLowerCase(java.util.Locale.ROOT)
     val exts = fmt match {
       case "parquet" => Seq(".parquet")
@@ -1188,7 +1129,7 @@ object Versioned {
     }
     walk(srcRoot)
     if (found.isEmpty) return None
-    withCommitRetry(maxAttempts) { () =>
+    withCommitRetry { () =>
       val prev = latestVersion(spark, dir).getOrElse(
         throw new IllegalArgumentException(
           s"COPY INTO needs an existing table at $dir — CREATE it first " +
@@ -1230,7 +1171,7 @@ object Versioned {
         // withCommitRetry), and the retry re-reads the ledger — two
         // racing copyInto runs can never both load a file
         val basis = idFilled.orElse(Some(prev))
-        val v = writeVersionCore(spark, dir, protocol, SaveMode.Append,
+        val v = writeVersionCore(spark, dir, SaveMode.Append,
           txn = None,
           partitionBy = if (partCols.isEmpty) None
             else Some(StructType(partCols.map(c => logical(c)))),
@@ -1239,7 +1180,7 @@ object Versioned {
             .mode(SaveMode.ErrorIfExists)
           (if (partCols.isEmpty) w else w.partitionBy(partCols: _*)).parquet(tmp)
         }.get
-        maintenanceTick(spark, dir, protocol)
+        maintenanceTick(spark, dir)
         val added = addedDataDirs(spark, dir, v)
           .map(a => a.substring(a.lastIndexOf('/') + 1)).toSet
         val rows = snapshot(spark, dir, v).stats.valuesIterator
@@ -1255,40 +1196,30 @@ object Versioned {
     * source file, so forget only once a source prefix is itself
     * retired or re-loading is intended. Returns the committed
     * version; None when the ledger is already empty. */
-  def forgetIngestHistory(spark: SparkSession, dir: String,
-                          protocol: CommitProtocol = PutIfAbsentCommit,
-                          maxAttempts: Int = 16): Option[Int] =
-    withCommitRetry(maxAttempts) { () =>
-      val prev = requireLatest(spark, dir)
-      val snap = snapshot(spark, dir, prev)
+  def forgetIngestHistory(spark: SparkSession, dir: String): Option[Int] =
+    withCommitRetry { () =>
+      val snap = snapshot(spark, dir, requireLatest(spark, dir))
       if (snap.ingested.isEmpty) None
-      else {
-        val v = prev + 1
-        commitChild(spark, dir, v, prev,
-          snap.lines.filterNot(_.isInstanceOf[IngestEntry]), Seq("-ingest"), protocol)
-        Some(v)
-      }
+      else Some(commitChild(spark, dir, snap, Seq("-ingest")))
     }
 
   /** Commit `df` as the next version. `SaveMode.Overwrite` starts the
     * table state from this write alone; `SaveMode.Append` extends the
-    * previous version's file set. Returns the committed version.
-    * `protocol` picks the commit primitive for the storage:
-    * [[PutIfAbsentCommit]] (the safe-everywhere default) or
-    * [[RenameCommit]] (opt-in for HDFS deployments). */
+    * previous version's file set. Returns the committed version. The
+    * manifest publishes through [[Commit.putIfAbsent]], so `dir`'s
+    * scheme picks the commit primitive. */
   def writeVersion(df: DataFrame, dir: String,
-                   mode: SaveMode = SaveMode.Overwrite,
-                   protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                   mode: SaveMode = SaveMode.Overwrite): Int = {
     // omitted GENERATED columns fill, and a renamed chain's APPEND
     // lands PHYSICAL column names (an overwrite resets the physical
     // layout from its own files and needs no translation —
     // writeVersionCore drops the mapping): one manifest resolve
     val (out, idFilled) = prepareWrite(df, dir, translate = mode == SaveMode.Append)
-    val v = writeVersionCore(df.sparkSession, dir, protocol, mode, txn = None,
+    val v = writeVersionCore(df.sparkSession, dir, mode, txn = None,
       identityBasis = idFilled)(tmp =>
       optimizeWriteShape(out, dir, Seq.empty).write
         .mode(SaveMode.ErrorIfExists).parquet(tmp)).get
-    maintenanceTick(df.sparkSession, dir, protocol)
+    maintenanceTick(df.sparkSession, dir)
     v
   }
 
@@ -1296,7 +1227,7 @@ object Versioned {
     * [[ManifestStore]] rewrite hook: `write` receives the immutable
     * data-dir path for the new version and must produce the complete
     * parquet state there; the version becomes visible only when the
-    * manifest commits through `protocol` afterwards.
+    * manifest commits afterwards.
     *
     * The commit also records (a) the version's union schema and (b)
     * the new dir's column min/max/null stats, both harvested from the
@@ -1304,10 +1235,9 @@ object Versioned {
     * commit), never O(table) — so reads plan with zero footer access
     * and selective reads can skip whole dirs. */
   def writeVersionWith(spark: SparkSession, dir: String,
-                       protocol: CommitProtocol = PutIfAbsentCommit,
                        mode: SaveMode = SaveMode.Overwrite)
                       (write: String => Unit): Int =
-    writeVersionCore(spark, dir, protocol, mode, txn = None)(write).get
+    writeVersionCore(spark, dir, mode, txn = None)(write).get
 
   /** Exactly-once STREAMING sink commit (Delta's (appId, batchId)
     * idempotent-txn design, public in the Delta paper/docs): commit
@@ -1323,8 +1253,6 @@ object Versioned {
     * a skipped replay. */
   def writeVersionStreamBatch(df: DataFrame, dir: String, appId: String,
                               batchId: Long, mode: SaveMode = SaveMode.Append,
-                              protocol: CommitProtocol = PutIfAbsentCommit,
-                              maxAttempts: Int = 16,
                               partCols: Seq[String] = Seq.empty): Option[Int] = {
     require(appId.nonEmpty, "appId must be non-empty")
     val attempt: () => Option[Int] =
@@ -1333,7 +1261,7 @@ object Versioned {
         // columns) PER ATTEMPT: a concurrent rename between OCC
         // retries must not leave this batch's files under stale names
         val (out, idFilled) = prepareWrite(df, dir, translate = mode == SaveMode.Append)
-        writeVersionCore(df.sparkSession, dir, protocol, mode,
+        writeVersionCore(df.sparkSession, dir, mode,
           txn = Some((appId, batchId)), identityBasis = idFilled)(tmp =>
           optimizeWriteShape(out, dir, Seq.empty).write
             .mode(SaveMode.ErrorIfExists).parquet(tmp))
@@ -1363,9 +1291,9 @@ object Versioned {
         if (out.isEmpty) {
           if (mode == SaveMode.Append) None
           else emptyPartitionedStreamCommit(df.sparkSession, dir, appId, batchId,
-            schema, partCols, protocol)
+            schema, partCols)
         } else {
-          writeVersionCore(df.sparkSession, dir, protocol, mode,
+          writeVersionCore(df.sparkSession, dir, mode,
             txn = Some((appId, batchId)),
             partitionBy = Some(StructType(partCols.map(c => schema(c)))),
             identityBasis = idFilled)(tmp =>
@@ -1374,11 +1302,11 @@ object Versioned {
         }
       }
     val r =
-      if (mode == SaveMode.Append) withCommitRetry(maxAttempts)(attempt)
+      if (mode == SaveMode.Append) withCommitRetry(attempt)
       else attempt()
     // the epoch stream is THE small-file generator autoCompact exists
     // for — tick after every committed (not replayed/empty) epoch
-    if (r.nonEmpty) maintenanceTick(df.sparkSession, dir, protocol)
+    if (r.nonEmpty) maintenanceTick(df.sparkSession, dir)
     r
   }
 
@@ -1387,8 +1315,8 @@ object Versioned {
     * carried, txn watermark, zero data dirs. */
   private def emptyPartitionedStreamCommit(spark: SparkSession, dir: String,
                                            appId: String, batchId: Long,
-                                           schema: StructType, partCols: Seq[String],
-                                           protocol: CommitProtocol): Option[Int] = {
+                                           schema: StructType,
+                                           partCols: Seq[String]): Option[Int] = {
     val prev = latestVersion(spark, dir)
     val prevSnap = prev.map(snapshot(spark, dir, _))
     if (prevSnap.exists(_.txns.get(appId).exists(batchId <= _))) return None
@@ -1404,7 +1332,7 @@ object Versioned {
     commitManifest(spark, dir, v,
       (SchemaEntry(asNullable(ordered)) +:
         (Seq[Line](PartitionEntry(partCols)) ++ carried :+
-          TxnEntry(batchId, appId))).map(renderLine), protocol)
+          TxnEntry(batchId, appId))).map(renderLine))
     Some(v)
   }
 
@@ -1424,9 +1352,8 @@ object Versioned {
     * + atomic manifest commit — the post-write half of writeVersion.
     * A lost version race surfaces (overwrite semantics). */
   private[graft] def commitStagedOverwrite(spark: SparkSession, dir: String,
-                                           dataDir: String,
-                                           protocol: CommitProtocol = PutIfAbsentCommit): Int =
-    writeVersionCore(spark, dir, protocol, SaveMode.Overwrite, txn = None,
+                                           dataDir: String): Int =
+    writeVersionCore(spark, dir, SaveMode.Overwrite, txn = None,
       preWritten = Some(dataDir))(_ => ()).get
 
   /** FILE-GRANULAR copy-on-write commit (Delta's rewrite-touched-files
@@ -1461,8 +1388,6 @@ object Versioned {
                                        replacementDir: Option[String],
                                        partCols: Seq[String],
                                        dvSnapshot: Seq[(String, String)],
-                                       protocol: CommitProtocol = PutIfAbsentCommit,
-                                       maxAttempts: Int = 16,
                                        exclusivePartitions: Set[Seq[Option[String]]] =
                                          Set.empty,
                                        preHarvested: Option[(Long, Map[String, ColStats], Seq[FileStats])] =
@@ -1619,10 +1544,9 @@ object Versioned {
     }
     def conflict(msg: String) = throw new IllegalStateException(
       s"file rewrite at $dir $msg — the rewrite's snapshot is stale; re-run the statement")
-    withCommitRetry(maxAttempts) { () =>
+    withCommitRetry { () =>
       val prev = latestVersion(spark, dir).get
       val snap = snapshot(spark, dir, prev)
-      val ls = snap.lines
       val stats = snap.stats
       // every file being replaced must still be live, byte-identical
       removedNonEmpty.foreach { case (d, files) =>
@@ -1680,7 +1604,6 @@ object Versioned {
           conflict(s"saw ${foreign.size} file(s) land concurrently in a partition " +
             "this statement overwrites")
       }
-      val v = prev + 1
       val ops = Seq.newBuilder[String]
       val bloomByDir = snap.bloomEntries.groupBy(_.dir)
       val replacedStats = removedNonEmpty.flatMap { case (d, files) =>
@@ -1704,16 +1627,14 @@ object Versioned {
       // trim DROPS any sidecar ref (content changed; sidecars are
       // immutable) and re-externalizes if still heavy — the old
       // sidecar orphans and pruneVersions reclaims it
-      val trimmedBlooms = replacedStats.keySet.flatMap { d =>
-        bloomByDir.getOrElse(d, Seq.empty).map { b =>
-          val keep = replacedStats(d).files.map(_.name).toSet
-          val trimmed = externalizeBlooms(spark, dir, Seq(
+      replacedStats.foreach { case (d, st) =>
+        val keep = st.files.map(_.name).toSet
+        bloomByDir.getOrElse(d, Seq.empty).foreach { b =>
+          ops += addOp(externalizeBlooms(spark, dir, Seq(
             b.copy(files = b.files.filter { case (f, _) => keep.contains(f) },
-              sidecar = None))).head.asInstanceOf[BloomEntry]
-          ops += addOp(trimmed)
-          (d, b.col) -> trimmed
+              sidecar = None))).head)
         }
-      }.toMap
+      }
       newEntries.foreach(l => ops += addOp(l))
       // IDENTITY high-water marks advance with the rewrite commit: a
       // MERGE-inserted (or dynamic-overwrite-filled) value above the
@@ -1726,7 +1647,7 @@ object Versioned {
         if (prev != b) conflict(
           s"filled identity values against version $b but the table is at $prev")
       }
-      val hwmRw: Seq[Line] = identityColumnsOf(schema).flatMap { spec =>
+      identityColumnsOf(schema).foreach { spec =>
         val base = snap.hwm(spec.col).getOrElse(spec.start)
         val bounds = newEntries.collectFirst { case s: StatsEntry => s }
           .flatMap(_.cols.get(spec.col)).filter(_.min.nonEmpty)
@@ -1735,44 +1656,20 @@ object Versioned {
           if (spec.step > 0) math.max(base, Math.addExact(mx, spec.step))
           else math.min(base, Math.addExact(mn, spec.step))
         }
-        if (next == base) None else Some(HwmEntry(spec.col, next))
+        if (next != base) ops += addOp(HwmEntry(spec.col, next))
       }
-      hwmRw.foreach(l => ops += addOp(l))
       // the recorded feed speaks THIS commit's version numbers —
       // derived content is basis-exact (the conflict checks above
       // refuse anything that would make it stale)
-      val feedLines: Seq[Line] = changeFeed.toSeq.map { case (ks, nd) =>
-        ChangesEntry(prev, v, ks, nd) }
-      feedLines.foreach(l => ops += addOp(l))
+      changeFeed.foreach { case (ks, nd) => ops += addOp(ChangesEntry(prev, prev + 1, ks, nd)) }
       // the first positional mask on a chain STAMPS the protocol
       // feature, exactly like deleteWhere's sidecar commit
-      val featRw: Seq[Line] =
-        if (pdvEntry.isEmpty || snap.hasFeature("pdv")) Seq.empty
-        else Seq(FeatureEntry("pdv", required = true))
-      featRw.foreach(l => ops += addOp(l))
+      if (pdvEntry.nonEmpty && !snap.hasFeature("pdv"))
+        ops += addOp(FeatureEntry("pdv", required = true))
       pdvEntry.foreach(l => ops += addOp(l))
       if (!dataChange) ops += addOp(RearrangeEntry())
-      val droppedDvNames: Set[String] =
-        if (!dropDvs) Set.empty
-        else snap.dvSnapshot.map(_._2).toSet
-      droppedDvNames.foreach(n => ops += s"-dv:$n")
-      val emptied = removedNonEmpty.keySet -- replacedStats.keySet
-      val fullLines = ls.flatMap {
-        case DataEntry(n) if emptied.contains(n) => None
-        case s: StatsEntry if emptied.contains(s.name) => None
-        case s: StatsEntry if replacedStats.contains(s.name) => Some(replacedStats(s.name))
-        case b: BloomEntry if emptied.contains(b.dir) => None
-        case b: BloomEntry if trimmedBlooms.contains((b.dir, b.col)) =>
-          Some(trimmedBlooms((b.dir, b.col)))
-        case h: HwmEntry if hwmRw.exists {
-          case e: HwmEntry => e.col.equalsIgnoreCase(h.col); case _ => false } => None
-        case DvEntry(_, n) if droppedDvNames.contains(n) => None
-        case ScopedDvEntry(_, n, _) if droppedDvNames.contains(n) => None
-        case PdvEntry(n) if droppedDvNames.contains(n) => None
-        case other => Some(other)
-      } ++ newEntries ++ hwmRw ++ feedLines ++ featRw ++ pdvEntry.toSeq
-      commitChild(spark, dir, v, prev, fullLines, ops.result(), protocol)
-      Some(v)
+      if (dropDvs) snap.dvSnapshot.map(_._2).toSet.foreach((n: String) => ops += s"-dv:$n")
+      Some(commitChild(spark, dir, snap, ops.result()))
     }
   }
 
@@ -1791,7 +1688,6 @@ object Versioned {
   private[graft] def commitDynamicPartitionOverwrite(spark: SparkSession, dir: String,
                                                      stagedHive: String,
                                                      partCols: Seq[String],
-                                                     protocol: CommitProtocol = PutIfAbsentCommit,
                                                      identityBasis: Option[Int] = None)
       : Option[Int] = {
     val (fs, root) = fsFor(spark, dir)
@@ -1814,7 +1710,7 @@ object Versioned {
       d -> snap.stats(d).files.filter(f => touched.contains(tupleOf(f))).map(_.name).toSet
     }.filter(_._2.nonEmpty).toMap
     commitFileRewrite(spark, dir, victims, Some(stagedHive), partCols, snap.dvSnapshot,
-      protocol, exclusivePartitions = touched, preHarvested = Some(harvested),
+      exclusivePartitions = touched, preHarvested = Some(harvested),
       identityBasis = identityBasis)
   }
 
@@ -1822,8 +1718,7 @@ object Versioned {
     * only the partitions present in `df` are replaced; all others
     * carry verbatim. Returns the committed version, None for an
     * empty input. */
-  def writeVersionPartitionedDynamic(df: DataFrame, dir: String, partCols: Seq[String],
-                                     protocol: CommitProtocol = PutIfAbsentCommit)
+  def writeVersionPartitionedDynamic(df: DataFrame, dir: String, partCols: Seq[String])
       : Option[Int] = {
     require(partCols.nonEmpty, "partCols must be non-empty")
     val spark = df.sparkSession
@@ -1835,9 +1730,9 @@ object Versioned {
     optimizeWriteShape(outDyn, dir, partCols).write
       .partitionBy(partCols: _*).mode(SaveMode.ErrorIfExists)
       .parquet(new Path(new Path(dir), staged).toString)
-    val r = commitDynamicPartitionOverwrite(spark, dir, staged, partCols, protocol,
+    val r = commitDynamicPartitionOverwrite(spark, dir, staged, partCols,
       identityBasis = idFilledDyn)
-    if (r.nonEmpty) maintenanceTick(spark, dir, protocol)
+    if (r.nonEmpty) maintenanceTick(spark, dir)
     r
   }
 
@@ -1855,7 +1750,6 @@ object Versioned {
   private[graft] def commitStagedTable(spark: SparkSession, dir: String,
                                        stagedDir: String, declared: StructType,
                                        partCols: Seq[String], fresh: Boolean,
-                                       protocol: CommitProtocol = PutIfAbsentCommit,
                                        replaceDefinition: Boolean = true): Int = {
     val (fs, root) = fsFor(spark, dir)
     val stagedPath = new Path(root, stagedDir)
@@ -1865,7 +1759,7 @@ object Versioned {
       val partitionBy =
         if (partCols.isEmpty) None
         else Some(StructType(partCols.map(c => declared(c))))
-      writeVersionCore(spark, dir, protocol, SaveMode.Overwrite, txn = None,
+      writeVersionCore(spark, dir, SaveMode.Overwrite, txn = None,
         partitionBy = partitionBy, preWritten = Some(stagedDir),
         requireFresh = fresh, replaceDefinition = replaceDefinition)(_ => ()).get
     } else if (fresh) {
@@ -1874,7 +1768,7 @@ object Versioned {
       // non-nullable column is an artifact of the query, not a
       // declared contract — NOT NULL comes from explicit CREATE TABLE
       // column syntax or CALL system.set_not_null)
-      createTable(spark, dir, asNullable(declared), partCols, protocol)
+      createTable(spark, dir, asNullable(declared), partCols)
     } else {
       // empty REPLACE over an existing chain: a metadata-only
       // overwrite version — schema (and spec) kept, zero data dirs.
@@ -1905,7 +1799,7 @@ object Versioned {
         ((if (partCols.isEmpty) Seq.empty[Line] else Seq[Line](PartitionEntry(partCols))) ++
           carried)
       val v = prev + 1
-      commitManifest(spark, dir, v, ls.map(renderLine), protocol)
+      commitManifest(spark, dir, v, ls.map(renderLine))
       v
     }
   }
@@ -1928,8 +1822,7 @@ object Versioned {
     * chain refuses. Partition column types are the hive-path-exact
     * set (string/int/long/short/byte/date/boolean). */
   def writeVersionPartitioned(df: DataFrame, dir: String, partCols: Seq[String],
-                              mode: SaveMode = SaveMode.Overwrite,
-                              protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                              mode: SaveMode = SaveMode.Overwrite): Int = {
     require(partCols.nonEmpty, "partCols must be non-empty — use writeVersion")
     // omitted GENERATED columns fill first (they may BE the partition
     // columns — partition-by-derived-date is the canonical use); a
@@ -1946,11 +1839,11 @@ object Versioned {
     // recorded read order: data columns first, partition columns last
     // (what Spark's partitioned reader emits)
     val partSchema = StructType(partCols.map(c => schema(c)))
-    val v = writeVersionCore(df.sparkSession, dir, protocol, mode, txn = None,
+    val v = writeVersionCore(df.sparkSession, dir, mode, txn = None,
       partitionBy = Some(partSchema), identityBasis = idFilled)(tmp =>
       optimizeWriteShape(out, dir, partCols).write
         .partitionBy(partCols: _*).mode(SaveMode.ErrorIfExists).parquet(tmp)).get
-    maintenanceTick(df.sparkSession, dir, protocol)
+    maintenanceTick(df.sparkSession, dir)
     v
   }
 
@@ -1996,8 +1889,7 @@ object Versioned {
     * the committed version, None when fewer than `minDirs` qualify. */
   def compactSmallDirs(spark: SparkSession, dir: String,
                        targetBytes: Long = 128L * 1024 * 1024,
-                       minDirs: Int = 8, maxDirs: Int = 64,
-                       protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
+                       minDirs: Int = 8, maxDirs: Int = 64): Option[Int] = {
     require(minDirs >= 2, "minDirs must be at least 2 — compacting one dir is a no-op")
     require(targetBytes > 0 && maxDirs >= minDirs,
       s"need targetBytes > 0 and maxDirs >= minDirs, got $targetBytes/$maxDirs/$minDirs")
@@ -2023,7 +1915,7 @@ object Versioned {
     val w = payload.write.mode(SaveMode.ErrorIfExists)
     (if (partCols.isEmpty) w else w.partitionBy(partCols: _*)).parquet(stagedPath.toString)
     try commitFileRewrite(spark, dir, removed, Some(staged), partCols, snap.dvSnapshot,
-      protocol, dataChange = false)
+      dataChange = false)
     catch { case t: Throwable => fs.delete(stagedPath, true); throw t }
   }
 
@@ -2040,8 +1932,7 @@ object Versioned {
     * the mask physically" keeps holding). Returns None when the
     * manifest predates file lists or the table is empty — callers
     * fall back to the legacy overwrite. */
-  private[ext] def rewriteAllAsRearrange(spark: SparkSession, dir: String,
-                                         protocol: CommitProtocol)
+  private[ext] def rewriteAllAsRearrange(spark: SparkSession, dir: String)
                                         (shape: DataFrame => DataFrame): Option[Int] = {
     val v0 = requireLatest(spark, dir)
     val snap = snapshot(spark, dir, v0)
@@ -2059,7 +1950,7 @@ object Versioned {
     val stagedPath = new Path(root, staged)
     payload.write.mode(SaveMode.ErrorIfExists).parquet(stagedPath.toString)
     try commitFileRewrite(spark, dir, removed, Some(staged), Seq.empty, snap.dvSnapshot,
-      protocol, dataChange = false, dropDvs = true)
+      dataChange = false, dropDvs = true)
     catch { case t: Throwable => fs.delete(stagedPath, true); throw t }
   }
 
@@ -2077,8 +1968,7 @@ object Versioned {
     * fails on it (data it may not have served vanished — that is a
     * data change, nothing like a rearrangement). Returns the missing
     * (dirName, fileName) pairs; empty = clean, and nothing commits. */
-  def fsck(spark: SparkSession, dir: String, repair: Boolean = false,
-           protocol: CommitProtocol = PutIfAbsentCommit): Seq[(String, String)] = {
+  def fsck(spark: SparkSession, dir: String, repair: Boolean = false): Seq[(String, String)] = {
     val snap = snapshot(spark, dir, requireLatest(spark, dir))
     val root = new Path(dir)
     val expected = snap.dataDirNames.flatMap { d =>
@@ -2092,8 +1982,7 @@ object Versioned {
     }.flatten.sorted
     if (repair && missing.nonEmpty) {
       val removed = missing.groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).toSet }
-      commitFileRewrite(spark, dir, removed, None, snap.partitionCols, snap.dvSnapshot,
-        protocol)
+      commitFileRewrite(spark, dir, removed, None, snap.partitionCols, snap.dvSnapshot)
     }
     missing
   }
@@ -2103,8 +1992,7 @@ object Versioned {
     * Keys are dotted-word-shaped, values one-line — both embed in the
     * manifest. Returns the committed version. */
   def setTableProperties(spark: SparkSession, dir: String,
-                         props: Map[String, String],
-                         protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                         props: Map[String, String]): Int = {
     require(props.nonEmpty, "SET TBLPROPERTIES needs at least one key")
     props.foreach { case (k, x) =>
       require(k.matches("[A-Za-z0-9_.\\-]+"),
@@ -2112,35 +2000,19 @@ object Versioned {
       require(!x.exists(c => c == '\n' || c == '\r'),
         s"property value for '$k' must be one line")
     }
-    val prev = requireLatest(spark, dir)
-    val entries = props.toSeq.sortBy(_._1).map { case (k, x) => PropEntry(k, x) }
-    val fullLines = snapshot(spark, dir, prev).lines.filterNot {
-      case e: PropEntry => props.keys.exists(_.equalsIgnoreCase(e.key))
-      case _ => false
-    } ++ entries
-    val v = prev + 1
-    commitChild(spark, dir, v, prev, fullLines, entries.map(addOp), protocol)
-    v
+    commitChild(spark, dir, snapshot(spark, dir, requireLatest(spark, dir)),
+      props.toSeq.sortBy(_._1).map { case (k, x) => addOp(PropEntry(k, x)) })
   }
 
   /** `ALTER TABLE … UNSET TBLPROPERTIES`: drop the named keys (missing
     * keys are a no-op — the UNSET IF EXISTS contract). Returns the
     * committed version, None when nothing matched (no empty commit). */
-  def unsetTableProperties(spark: SparkSession, dir: String, keys: Seq[String],
-                           protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
+  def unsetTableProperties(spark: SparkSession, dir: String, keys: Seq[String]): Option[Int] = {
     require(keys.nonEmpty, "UNSET TBLPROPERTIES needs at least one key")
-    val prev = requireLatest(spark, dir)
-    val snap = snapshot(spark, dir, prev)
+    val snap = snapshot(spark, dir, requireLatest(spark, dir))
     val present = keys.filter(k => snap.properties.keys.exists(_.equalsIgnoreCase(k)))
-    if (present.isEmpty) return None
-    val fullLines = snap.lines.filterNot {
-      case e: PropEntry => present.exists(_.equalsIgnoreCase(e.key))
-      case _ => false
-    }
-    val v = prev + 1
-    commitChild(spark, dir, v, prev, fullLines,
-      present.sorted.map(k => s"-prop:$k"), protocol)
-    Some(v)
+    if (present.isEmpty) None
+    else Some(commitChild(spark, dir, snap, present.sorted.map(k => s"-prop:$k")))
   }
 
   /** The latest version's table properties, which back the
@@ -2209,10 +2081,9 @@ object Versioned {
     * clusters the increment — small files included), then auto
     * compaction for tables that only declared that. Each section is
     * independently gated and independently failure-isolated. */
-  private def maintenanceTick(spark: SparkSession, dir: String,
-                              protocol: CommitProtocol): Unit = {
-    autoClusterTick(spark, dir, protocol)
-    autoCompactTick(spark, dir, protocol)
+  private def maintenanceTick(spark: SparkSession, dir: String): Unit = {
+    autoClusterTick(spark, dir)
+    autoCompactTick(spark, dir)
   }
 
   /** Post-commit AUTO CLUSTER tick (Delta liquid clustering's
@@ -2228,8 +2099,7 @@ object Versioned {
     * committed, so a tick failure drops with a warning and the next
     * write re-probes. No recursion: the rearrange commits through
     * commitFileRewrite, which never ticks. */
-  private def autoClusterTick(spark: SparkSession, dir: String,
-                              protocol: CommitProtocol): Unit = {
+  private def autoClusterTick(spark: SparkSession, dir: String): Unit = {
     lazy val props = liveProps(spark, dir)
     val cols = Knobs.autoClusterColumns(spark, props)
     if (cols.isEmpty) return
@@ -2247,7 +2117,7 @@ object Versioned {
         if (bytes >= math.max(1L, minBytes)) {
           Maintenance.zorderVersionedIncremental(spark, dir, cols,
             nFiles = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong).toInt,
-            bits = bits, protocol = protocol)
+            bits = bits)
           ()
         }
       }
@@ -2267,16 +2137,14 @@ object Versioned {
     * tick failure — an OCC loss to a concurrent writer, a legacy
     * manifest — must not fail the write that triggered it: it drops,
     * and the next write re-probes. */
-  private def autoCompactTick(spark: SparkSession, dir: String,
-                              protocol: CommitProtocol): Unit = {
+  private def autoCompactTick(spark: SparkSession, dir: String): Unit = {
     lazy val props = liveProps(spark, dir)
     if (!Knobs.autoCompact(spark, props)) return
     try {
       compactSmallDirs(spark, dir,
         targetBytes = Knobs.autoCompactTargetBytes(spark, props),
         minDirs = Knobs.autoCompactMinDirs(spark, props),
-        maxDirs = Knobs.autoCompactMaxDirs(spark, props),
-        protocol = protocol)
+        maxDirs = Knobs.autoCompactMaxDirs(spark, props))
       ()
     } catch {
       case scala.util.control.NonFatal(t) => log.warn(
@@ -2286,8 +2154,7 @@ object Versioned {
     }
   }
 
-  private def writeVersionCore(spark: SparkSession, dir: String,
-                               protocol: CommitProtocol, mode: SaveMode,
+  private def writeVersionCore(spark: SparkSession, dir: String, mode: SaveMode,
                                txn: Option[(String, Long)],
                                partitionBy: Option[StructType] = None,
                                extraLines: Seq[Line] = Seq.empty,
@@ -2559,7 +2426,7 @@ object Versioned {
     }
     // constraints are table DEFINITION, not data: an overwrite
     // replaces the rows but keeps the contract (appends carry them
-    // inside prevLines below)
+    // from the parent)
     val carriedConstraints = (mode, prev) match {
       case (SaveMode.Overwrite, Some(_)) =>
         // a fresh overwrite drops the column mapping (logical IS the
@@ -2570,13 +2437,13 @@ object Versioned {
       case _ => Seq.empty
     }
     // table PROPERTIES are definition too: a data overwrite keeps
-    // them, REPLACE TABLE resets them, appends carry inside prevLines
+    // them, REPLACE TABLE resets them, appends inherit them
     val carriedProps: Seq[Line] = (mode, prevSnap) match {
       case (SaveMode.Overwrite, Some(p)) if !replaceDefinition =>
         p.lines.filter(_.isInstanceOf[PropEntry])
       case _ => Seq.empty
     }
-    // the mapping itself: appends carry it inside prevLines; a STAGED
+    // the mapping itself: appends inherit it; a STAGED
     // overwrite (catalog CoW rewrite — its files are physical-named)
     // carries it explicitly, restricted to columns still present; a
     // plain overwrite drops it (fresh layout)
@@ -2602,7 +2469,7 @@ object Versioned {
     // the COPY INTO ledger is writer bookkeeping like txn watermarks:
     // a data overwrite keeps it (or a maintenance rewrite would
     // re-open the per-file exactly-once window); REPLACE TABLE resets
-    // it with the definition; appends carry it inside prevLines
+    // it with the definition; appends inherit it
     val carriedIngests: Seq[Line] = (mode, prevSnap) match {
       case (SaveMode.Overwrite, Some(p)) if !replaceDefinition =>
         p.lines.filter(_.isInstanceOf[IngestEntry])
@@ -2658,20 +2525,6 @@ object Versioned {
       }
       HwmEntry(spec.col, next)
     }
-    val prevLines = (mode, prevSnap) match {
-      case (SaveMode.Append, Some(p)) => p.lines.filterNot {
-        case _: SchemaEntry => true
-        case _: PartitionEntry => true // re-added fresh below
-        // this writer's txn watermark is being replaced; other
-        // writers' watermarks ride along
-        case TxnEntry(_, a) => txn.exists(_._1 == a)
-        // re-emitted fresh below (the advanced mark replaces it)
-        case h: HwmEntry => hwmLines.exists {
-          case e: HwmEntry => e.col.equalsIgnoreCase(h.col); case _ => false }
-        case _ => false
-      }
-      case _ => Seq.empty
-    }
     val stats = externalizeStats(spark, dir,
       Seq(StatsEntry(dataDir, rows, colStats, dirFiles))).head.asInstanceOf[StatsEntry]
     // declared bloom columns: build this commit's per-file blooms,
@@ -2692,28 +2545,21 @@ object Versioned {
         externalizeBlooms(spark, dir, bloomDecls.map(b => BloomEntry(dataDir, b.col,
           Bloom.buildDirBlooms(spark, dataPath.toString, newSchema, b.col, b.bits))))
       else Seq.empty
-    // appends carry the declarations inside prevLines; an overwrite
+    // appends inherit the declarations; an overwrite
     // (which resets the line set) re-adds them here
     val carriedBloomDecl: Seq[Line] = (mode, prev) match {
       case (SaveMode.Overwrite, Some(_)) => bloomDecls
       case _ => Seq.empty
     }
-    val newLines = SchemaEntry(newSchema) +:
-      (partitionBy.map(ps => PartitionEntry(ps.fieldNames.toSeq)).toSeq ++
-        prevLines ++ carriedConstraints ++ carriedProps ++ carriedColMap ++
-        carriedBloomDecl ++ carriedTxns ++ carriedIngests ++ carriedFeatures ++
-        hwmLines ++
-        txn.map { case (a, b) => TxnEntry(b, a) } ++ extraLines ++ bloomLines :+
-        DataEntry(dataDir) :+ stats)
     // … then the atomic manifest commit publishes it. An APPEND
     // publishes O(delta) ops — schema only when the union CHANGED,
     // this writer's txn watermark, the new dir + its stats — never a
     // re-serialization of the whole table's file list; an OVERWRITE is
     // a full manifest (it resets the state: the checkpoint is free).
-    (mode, prev) match {
+    (mode, prevSnap) match {
       case (SaveMode.Append, Some(p)) =>
         val ops = Seq.newBuilder[String]
-        if (!prevSnap.get.schema.contains(newSchema))
+        if (!p.schema.contains(newSchema))
           ops += addOp(SchemaEntry(newSchema))
         txn.foreach { case (a, b) => ops += addOp(TxnEntry(b, a)) }
         extraLines.foreach(l => ops += addOp(l))
@@ -2721,9 +2567,16 @@ object Versioned {
         hwmLines.foreach(l => ops += addOp(l)) // replace-by-col semantics
         ops += addOp(DataEntry(dataDir))
         ops += addOp(stats)
-        commitChild(spark, dir, v, p, newLines, ops.result(), protocol)
+        commitChild(spark, dir, p, ops.result())
       case _ =>
-        commitManifest(spark, dir, v, newLines.map(renderLine), protocol)
+        val newLines = SchemaEntry(newSchema) +:
+          (partitionBy.map(ps => PartitionEntry(ps.fieldNames.toSeq)).toSeq ++
+            carriedConstraints ++ carriedProps ++ carriedColMap ++
+            carriedBloomDecl ++ carriedTxns ++ carriedIngests ++ carriedFeatures ++
+            hwmLines ++
+            txn.map { case (a, b) => TxnEntry(b, a) } ++ extraLines ++ bloomLines :+
+            DataEntry(dataDir) :+ stats)
+        commitManifest(spark, dir, v, newLines.map(renderLine))
     }
     Some(v)
   }
@@ -2794,17 +2647,14 @@ object Versioned {
   }
 
   /** The commit point, factored so the conflict guard is directly
-    * testable: publish the manifest through the protocol's atomic
-    * put-if-absent. Losing the claim (an existing manifest for `v`)
-    * surfaces the concurrent writer instead of silently dropping one
-    * — under [[PutIfAbsentCommit]] via the conditional create itself,
-    * under [[RenameCommit]] via the HDFS rename-to-existing failure
-    * (best-effort pre-check on POSIX). */
-  /** Returns the in-commit timestamp stamped on the manifest, so the
-    * delta path's checkpoint sidecar can carry the same clock. */
+    * testable: stamp the manifest lines and publish them at `v`
+    * through [[Commit.putIfAbsent]], whose primitive the path's scheme
+    * picks. Losing the claim (an existing manifest for `v`) surfaces
+    * the concurrent writer as an IllegalStateException instead of
+    * silently dropping one. Returns the lines exactly as written, so a
+    * delta commit folds its checkpoint from the same stamped ops. */
   private[graft] def commitManifest(spark: SparkSession, dir: String, v: Int,
-                                    dirs: Seq[String],
-                                    protocol: CommitProtocol = PutIfAbsentCommit): Long = {
+                                    dirs: Seq[String]): Seq[String] = {
     val (fs, root) = fsFor(spark, dir)
     fs.mkdirs(new Path(root, VDIR))
     // stamp the IN-COMMIT timestamp at the single commit seam, forced
@@ -2832,7 +2682,7 @@ object Versioned {
       case None    => s"ts:$ts" +: s"protocol:$SupportedProtocol" +: body
     }
     val bytes = (stamped.mkString("\n") + "\n").getBytes("UTF-8")
-    if (!protocol.putIfAbsent(fs, manifestPath(dir, v), bytes))
+    if (!Commit.putIfAbsent(fs, manifestPath(dir, v), bytes))
       throw new IllegalStateException(
         s"version $v at $dir was committed concurrently — retry the write")
     // a SUCCESSFUL claim proves any cached parse under this key
@@ -2844,7 +2694,7 @@ object Versioned {
     // and a time-travel read would serve them without touching disk
     if (v == 0) Snapshot.evictDir(spark, dir)
     else Snapshot.evict(spark, dir, Seq(v))
-    ts
+    stamped
   }
 
   /** Absolute paths of every dir the NEWEST version references — data
@@ -2886,9 +2736,8 @@ object Versioned {
     * session via [[Knobs.dvMaxKeys]]. */
   def maxDvKeys(spark: SparkSession): Long = Knobs.dvMaxKeys(spark)
 
-  def deleteByKeys(spark: SparkSession, dir: String, keys: DataFrame, keyCol: String,
-                   protocol: CommitProtocol = PutIfAbsentCommit): Int =
-    deleteByKeysCore(spark, dir, keys, keyCol, protocol, scoped = false)
+  def deleteByKeys(spark: SparkSession, dir: String, keys: DataFrame, keyCol: String): Int =
+    deleteByKeysCore(spark, dir, keys, keyCol, scoped = false)
 
   /** [[deleteByKeys]] with SQL DELETE semantics: the mask is SCOPED to
     * the data dirs present at commit time, so rows appended AFTER the
@@ -2896,20 +2745,16 @@ object Versioned {
     * (the reference's SQL DELETE removes current rows only). The SQL
     * catalog's DELETE routes here; the unscoped form stays the
     * library's key-level erasure contract. */
-  def deleteByKeysScoped(spark: SparkSession, dir: String, keys: DataFrame, keyCol: String,
-                         protocol: CommitProtocol = PutIfAbsentCommit): Int =
-    deleteByKeysCore(spark, dir, keys, keyCol, protocol, scoped = true)
+  def deleteByKeysScoped(spark: SparkSession, dir: String, keys: DataFrame, keyCol: String): Int =
+    deleteByKeysCore(spark, dir, keys, keyCol, scoped = true)
 
   def deleteByKeysScopedWithRetry(spark: SparkSession, dir: String,
-                                  keys: DataFrame, keyCol: String,
-                                  protocol: CommitProtocol = PutIfAbsentCommit,
-                                  maxAttempts: Int = 16): Int =
-    withCommitRetry(maxAttempts)(() =>
-      deleteByKeysCore(spark, dir, keys, keyCol, protocol, scoped = true))
+                                  keys: DataFrame, keyCol: String): Int =
+    withCommitRetry(() =>
+      deleteByKeysCore(spark, dir, keys, keyCol, scoped = true))
 
   private def deleteByKeysCore(spark: SparkSession, dir: String, keys: DataFrame,
-                               keyCol0: String, protocol: CommitProtocol,
-                               scoped: Boolean): Int = {
+                               keyCol0: String, scoped: Boolean): Int = {
     require(keyCol0.matches("[A-Za-z0-9_]+"),
       s"keyCol must be word-shaped (it is embedded in the manifest), got '$keyCol0'")
     val (fs, root) = fsFor(spark, dir)
@@ -2962,8 +2807,7 @@ object Versioned {
     val dv: Line =
       if (scoped) ScopedDvEntry(keyCol, dvDir, snap.dataDirNames)
       else DvEntry(keyCol, dvDir)
-    commitChild(spark, dir, v, prev, snap.lines :+ dv, Seq(addOp(dv)), protocol)
-    v
+    commitChild(spark, dir, snap, Seq(addOp(dv)))
   }
 
   /** Positional-deletion-vector size contract: the ceiling on TOTAL
@@ -2991,21 +2835,18 @@ object Versioned {
     * a copy-on-write rewrite (SQL UPDATE/DELETE's group-based path,
     * or INSERT OVERWRITE of the complement read) and refuses with
     * that remedy. */
-  def deleteWhere(spark: SparkSession, dir: String, predicateSql: String,
-                  protocol: CommitProtocol = PutIfAbsentCommit,
-                  maxAttempts: Int = 16): Option[Int] =
-    withCommitRetry(maxAttempts) { () =>
-      deleteWhereCore(spark, dir, Left(predicateSql), protocol)
+  def deleteWhere(spark: SparkSession, dir: String, predicateSql: String): Option[Int] =
+    withCommitRetry { () =>
+      deleteWhereCore(spark, dir, Left(predicateSql))
     }
 
   /** [[deleteWhere]] over pre-translated V1 filters (LOGICAL names) —
     * the SQL catalog's non-key DELETE routes here. */
   private[graft] def deleteWherePositional(spark: SparkSession, dir: String,
-                                           filters: Seq[org.apache.spark.sql.sources.Filter],
-                                           protocol: CommitProtocol = PutIfAbsentCommit,
-                                           maxAttempts: Int = 16): Option[Int] =
-    withCommitRetry(maxAttempts) { () =>
-      deleteWhereCore(spark, dir, Right(filters), protocol)
+                                           filters: Seq[org.apache.spark.sql.sources.Filter])
+      : Option[Int] =
+    withCommitRetry { () =>
+      deleteWhereCore(spark, dir, Right(filters))
     }
 
   /** A V1 filter as a Column predicate — the mirror of Spark's
@@ -3039,8 +2880,8 @@ object Versioned {
   }
 
   private def deleteWhereCore(spark: SparkSession, dir: String,
-                              predicate: Either[String, Seq[org.apache.spark.sql.sources.Filter]],
-                              protocol: CommitProtocol): Option[Int] = {
+                              predicate: Either[String, Seq[org.apache.spark.sql.sources.Filter]])
+      : Option[Int] = {
     import org.apache.spark.sql.functions.{col, expr, lit, when}
     val (fs, root) = fsFor(spark, dir)
     val prev = requireLatest(spark, dir)
@@ -3136,9 +2977,7 @@ object Versioned {
     val feat: Seq[Line] =
       if (snap.hasFeature("pdv")) Seq.empty
       else Seq(FeatureEntry("pdv", required = true))
-    commitChild(spark, dir, v, prev, (snap.lines ++ feat) :+ pdv,
-      feat.map(addOp) :+ addOp(pdv), protocol)
-    Some(v)
+    Some(commitChild(spark, dir, snap, feat.map(addOp) :+ addOp(pdv)))
   }
 
   /** Delta `ALTER TABLE … DROP FEATURE`'s role: retire a protocol
@@ -3149,12 +2988,9 @@ object Versioned {
     * first: compact, or INSERT OVERWRITE the masked read). One
     * metadata commit. Returns the committed version; None when the
     * feature was never declared. */
-  def dropTableFeature(spark: SparkSession, dir: String, feature: String,
-                       protocol: CommitProtocol = PutIfAbsentCommit,
-                       maxAttempts: Int = 16): Option[Int] =
-    withCommitRetry(maxAttempts) { () =>
-      val prev = requireLatest(spark, dir)
-      val snap = snapshot(spark, dir, prev)
+  def dropTableFeature(spark: SparkSession, dir: String, feature: String): Option[Int] =
+    withCommitRetry { () =>
+      val snap = snapshot(spark, dir, requireLatest(spark, dir))
       if (!snap.hasFeature(feature)) return None
       if (feature.equalsIgnoreCase("pdv"))
         require(snap.posDvs.isEmpty,
@@ -3166,12 +3002,7 @@ object Versioned {
           s"cannot drop feature 'ingest' at $dir: the COPY INTO ledger is " +
             "still live — forgetIngestHistory first (re-runs would then " +
             "re-load every source file), then drop the feature")
-      val v = prev + 1
-      commitChild(spark, dir, v, prev,
-        snap.lines.filterNot { case FeatureEntry(n, _) => n.equalsIgnoreCase(feature)
-                               case _ => false },
-        Seq(s"-feature:$feature"), protocol)
-      Some(v)
+      Some(commitChild(spark, dir, snap, Seq(s"-feature:$feature")))
     }
 
   /** A delete-heavy table accumulates one dv dir per [[deleteByKeys]]
@@ -3196,15 +3027,12 @@ object Versioned {
     * plan's union. Commutes with concurrent appends/deletes, so a lost
     * manifest race retries against the refreshed chain. Returns the
     * new version, or None when nothing would change. */
-  def compactDeletionVectors(spark: SparkSession, dir: String,
-                             protocol: CommitProtocol = PutIfAbsentCommit,
-                             maxAttempts: Int = 16): Option[Int] =
-    withCommitRetry(maxAttempts) { () =>
+  def compactDeletionVectors(spark: SparkSession, dir: String): Option[Int] =
+    withCommitRetry { () =>
       val (fs, root) = fsFor(spark, dir)
-      val prev = requireLatest(spark, dir)
-      val snap = snapshot(spark, dir, prev)
-      val prevLines = snap.lines
-      val dvByKey = prevLines.collect { case e: DvEntry => e }
+      val snap = snapshot(spark, dir, requireLatest(spark, dir))
+      val v = snap.version + 1
+      val dvByKey = snap.lines.collect { case e: DvEntry => e }
         .groupBy(_.keyCol).toSeq.sortBy(_._1)
       val liveDirs = snap.dataDirNames
       val scopedAll = snap.scopedDvEntries
@@ -3230,10 +3058,9 @@ object Versioned {
         coverageGroups.length == scopedAll.length &&
           coverageGroups.forall { case (_, dvs, scope) =>
             dvs.length == 1 && dvs.head.scope == scope }
-      val pdvAll = prevLines.collect { case e: PdvEntry => e }
+      val pdvAll = snap.lines.collect { case e: PdvEntry => e }
       if (!dvByKey.exists(_._2.length > 1) && scopedUnchanged && pdvAll.length <= 1) None
       else {
-        val v = prev + 1
         val ops = Seq.newBuilder[String]
         def mergeDirs(k: String, names: Seq[String]): String = {
           val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
@@ -3244,13 +3071,11 @@ object Versioned {
             .parquet(new Path(root, dvDir).toString)
           dvDir
         }
-        val merged: Seq[Line] = dvByKey.map { case (k, es) =>
-          if (es.length == 1) es.head
-          else {
+        dvByKey.foreach { case (k, es) =>
+          if (es.length > 1) {
             val dvDir = mergeDirs(k, es.map(_.name))
             es.foreach(e => ops += s"-dv:${e.name}")
             ops += addOp(DvEntry(k, dvDir))
-            DvEntry(k, dvDir)
           }
         }
         // verbatim-surviving scoped lines emit no op; everything else
@@ -3271,26 +3096,18 @@ object Versioned {
         scopedOut.collect { case (e, true) => e }.foreach(e => ops += addOp(e))
         // positional dvs merge by (file, pos) union — one sidecar
         // serves every accumulated DELETE's mask verbatim
-        val pdvOut: Seq[Line] =
-          if (pdvAll.length <= 1) pdvAll
-          else {
-            val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-            val pdvDir = f"v$v%08d_pdv_$nonce"
-            spark.read.schema(PdvDirSchema)
-              .parquet(pdvAll.map(e => new Path(root, e.name).toString): _*)
-              .select("_file", "_pos").distinct()
-              .write.mode(SaveMode.ErrorIfExists)
-              .parquet(new Path(root, pdvDir).toString)
-            pdvAll.foreach(e => ops += s"-dv:${e.name}")
-            ops += addOp(PdvEntry(pdvDir))
-            Seq(PdvEntry(pdvDir))
-          }
-        val kept = prevLines.filterNot(l =>
-          l.isInstanceOf[DvEntry] || l.isInstanceOf[ScopedDvEntry] ||
-            l.isInstanceOf[PdvEntry]) ++
-          merged ++ scopedOut.map(_._1) ++ pdvOut
-        commitChild(spark, dir, v, prev, kept, ops.result(), protocol)
-        Some(v)
+        if (pdvAll.length > 1) {
+          val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+          val pdvDir = f"v$v%08d_pdv_$nonce"
+          spark.read.schema(PdvDirSchema)
+            .parquet(pdvAll.map(e => new Path(root, e.name).toString): _*)
+            .select("_file", "_pos").distinct()
+            .write.mode(SaveMode.ErrorIfExists)
+            .parquet(new Path(root, pdvDir).toString)
+          pdvAll.foreach(e => ops += s"-dv:${e.name}")
+          ops += addOp(PdvEntry(pdvDir))
+        }
+        Some(commitChild(spark, dir, snap, ops.result()))
       }
     }
 
@@ -3352,13 +3169,10 @@ object Versioned {
     * which reads plan with zero footer access and selective reads
     * skip. Returns the new version, or None when the manifest already
     * carries schema + full stats. */
-  def backfillStats(spark: SparkSession, dir: String,
-                    protocol: CommitProtocol = PutIfAbsentCommit,
-                    maxAttempts: Int = 16): Option[Int] =
-    withCommitRetry(maxAttempts) { () =>
+  def backfillStats(spark: SparkSession, dir: String): Option[Int] =
+    withCommitRetry { () =>
       val (_, root) = fsFor(spark, dir)
-      val prev = requireLatest(spark, dir)
-      val snap = snapshot(spark, dir, prev)
+      val snap = snapshot(spark, dir, requireLatest(spark, dir))
       val stats = snap.stats
       // candidates: dirs with no stats line at all, a stats line from
       // before the file-list format (empty files), or file lists from
@@ -3390,19 +3204,9 @@ object Versioned {
         .exists(p => (p.rows, p.cols, p.files) == (h.rows, h.cols, h.files)))
       if (!changed && snap.schema.nonEmpty) None
       else {
-        val v = prev + 1
         val schema = schemaOf(spark, snap) // derives once when absent
-        val externalized = externalizeStats(spark, dir, harvested)
-        val replaced = harvested.map(_.name).toSet
-        val kept = snap.lines.filterNot {
-          case _: SchemaEntry => true
-          case st: StatsEntry => replaced.contains(st.name)
-          case _              => false
-        }
-        commitChild(spark, dir, v, prev,
-          SchemaEntry(schema) +: (kept ++ externalized),
-          addOp(SchemaEntry(schema)) +: externalized.map(addOp), protocol)
-        Some(v)
+        Some(commitChild(spark, dir, snap,
+          addOp(SchemaEntry(schema)) +: externalizeStats(spark, dir, harvested).map(addOp)))
       }
     }
 
@@ -3981,9 +3785,7 @@ object Versioned {
     * (the adoption price, same as Delta's backfill); from then on
     * appends assign incrementally. Returns the backfill version (= the
     * declaration version on an empty table). */
-  def enableRowTracking(spark: SparkSession, dir: String,
-                        protocol: CommitProtocol = PutIfAbsentCommit,
-                        maxAttempts: Int = 16): Int = {
+  def enableRowTracking(spark: SparkSession, dir: String): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, monotonically_increasing_id, col => fcol}
     val schema0 = snapshot(spark, dir, requireLatest(spark, dir)).schema.getOrElse(
       throw new IllegalArgumentException(
@@ -3995,9 +3797,9 @@ object Versioned {
     addColumns(spark, dir, Seq(org.apache.spark.sql.types.StructField(
       RowIdCol, org.apache.spark.sql.types.LongType, nullable = true,
       identityMetadata(org.apache.spark.sql.types.Metadata.empty,
-        start = 0L, step = 1L, allowExplicitInsert = true))), protocol)
+        start = 0L, step = 1L, allowExplicitInsert = true))))
     // 2. backfill: every EXISTING row gets its id in one rearrange
-    withCommitRetry(maxAttempts) { () =>
+    withCommitRetry { () =>
       val v = latestVersion(spark, dir).get
       val victims = allLiveFilesMap(spark, dir, v)
       if (victims.valuesIterator.forall(_.isEmpty)) v // empty table: declared is enabled
@@ -4022,7 +3824,7 @@ object Versioned {
         // the staged footers' bounds — the same atomic-claim contract
         // as every identity write
         commitFileRewrite(spark, dir, victims, Some(staged), partCols,
-          snap.dvSnapshot, protocol, dataChange = false).getOrElse(v)
+          snap.dvSnapshot, dataChange = false).getOrElse(v)
       }
     }
   }
@@ -4076,13 +3878,12 @@ object Versioned {
     * in hand; a first commit (no previous version) records nothing
     * (Delta's CDF starts at the second commit too). Overwrite
     * semantics — a lost race surfaces, as for every overwrite. */
-  def writeVersionWithChangeFeed(df: DataFrame, dir: String, keys: Seq[String],
-                                 protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+  def writeVersionWithChangeFeed(df: DataFrame, dir: String, keys: Seq[String]): Int = {
     val spark = df.sparkSession
     keys.foreach(k => require(k.matches("[A-Za-z0-9_]+"),
       s"key column must be word-shaped (it is embedded in the manifest), got '$k'"))
     latestVersion(spark, dir) match {
-      case None => writeVersion(df, dir, SaveMode.Overwrite, protocol)
+      case None => writeVersion(df, dir, SaveMode.Overwrite)
       case Some(p) =>
         val v = p + 1
         val (_, root) = fsFor(spark, dir)
@@ -4092,7 +3893,7 @@ object Versioned {
         // the data dir; a lost commit race leaves it an orphan)
         diffFeedFrames(readVersion(spark, dir, p), df, keys)
           .write.mode(SaveMode.ErrorIfExists).parquet(new Path(root, chDir).toString)
-        writeVersionCore(spark, dir, protocol, SaveMode.Overwrite, txn = None,
+        writeVersionCore(spark, dir, SaveMode.Overwrite, txn = None,
           extraLines = Seq(ChangesEntry(p, v, keys, chDir)))(tmp =>
           df.write.mode(SaveMode.ErrorIfExists).parquet(tmp)).get
     }
@@ -4230,9 +4031,9 @@ object Versioned {
     * number. Safe ONLY for COMMUTATIVE operations — append, delete-
     * by-keys, and dv compaction extend whatever the latest manifest
     * is, so the retried commit means the same thing after the
-    * concurrent write as before it. */
-  private def withCommitRetry[T](maxAttempts: Int)(attempt: () => T): T = {
-    require(maxAttempts >= 1, "need at least one attempt")
+    * concurrent write as before it. Tries one commit at most 16 times. */
+  private def withCommitRetry[T](attempt: () => T): T = {
+    val maxAttempts = 16
     var n = 1
     while (true) {
       try return attempt()
@@ -4257,55 +4058,45 @@ object Versioned {
     * to the caller (who may no longer want the overwrite at all) —
     * the same reason Delta fails conflicting non-commutative commits.
     *
-    * Multi-writer safety holds exactly when the protocol's
-    * putIfAbsent is ATOMIC on the storage: [[PutIfAbsentCommit]]
-    * (the default) everywhere — conditional PUT on object stores,
-    * hardlink on local POSIX — and [[RenameCommit]] only under HDFS
-    * semantics where rename-to-existing FAILS. On POSIX,
-    * RenameCommit's rename silently REPLACES, so two local racers can
-    * both "win" and one commit is lost — measured (the racing spec
-    * fails under local RenameCommit by design of POSIX, passes under
-    * the default); RenameCommit is therefore opt-in, with its
-    * documented single-writer caveat. */
-  def appendVersionWithRetry(df: DataFrame, dir: String,
-                             protocol: CommitProtocol = PutIfAbsentCommit,
-                             maxAttempts: Int = 16): Int =
-    withCommitRetry(maxAttempts)(() =>
-      writeVersion(df, dir, SaveMode.Append, protocol))
+    * Multi-writer safety rests on the manifest claim being ATOMIC on
+    * the storage, which [[Commit.putIfAbsent]] guarantees per scheme:
+    * a hardlink on local POSIX, a conditional PUT on object stores,
+    * and rename only under HDFS-like semantics, where rename-to-existing
+    * FAILS. POSIX rename would silently REPLACE the destination, so
+    * two local racers could both "win" — which is why the local branch
+    * links instead of renaming. */
+  def appendVersionWithRetry(df: DataFrame, dir: String): Int =
+    withCommitRetry(() =>
+      writeVersion(df, dir, SaveMode.Append))
 
   /** Multi-writer [[writeVersionPartitioned]] append — same
     * commutative-append retry contract as [[appendVersionWithRetry]],
     * for the partitioned chains (the SQL INSERT INTO path). */
   def appendVersionPartitionedWithRetry(df: DataFrame, dir: String,
-                                        partCols: Seq[String],
-                                        protocol: CommitProtocol = PutIfAbsentCommit,
-                                        maxAttempts: Int = 16): Int =
-    withCommitRetry(maxAttempts)(() =>
-      writeVersionPartitioned(df, dir, partCols, SaveMode.Append, protocol))
+                                        partCols: Seq[String]): Int =
+    withCommitRetry(() =>
+      writeVersionPartitioned(df, dir, partCols, SaveMode.Append))
 
   /** Multi-writer [[deleteByKeys]] — key-masking commutes with
     * concurrent appends and other key deletes, so the same bounded
     * retry applies. */
   def deleteByKeysWithRetry(spark: SparkSession, dir: String,
-                            keys: DataFrame, keyCol: String,
-                            protocol: CommitProtocol = PutIfAbsentCommit,
-                            maxAttempts: Int = 16): Int =
-    withCommitRetry(maxAttempts)(() =>
-      deleteByKeys(spark, dir, keys, keyCol, protocol))
+                            keys: DataFrame, keyCol: String): Int =
+    withCommitRetry(() =>
+      deleteByKeys(spark, dir, keys, keyCol))
 
   /** Delta `RESTORE TABLE … TO VERSION AS OF v` role: commit version
     * v's manifest — file list, schema, and stats — as the newest
     * version. No data is copied or rewritten (the manifest
     * re-references v's immutable dirs), and the restore itself is a
     * new version, so it is also undoable. Returns the new version id. */
-  def restoreVersion(spark: SparkSession, dir: String, v: Int,
-                     protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+  def restoreVersion(spark: SparkSession, dir: String, v: Int): Int = {
     // RESOLVED state, written FULL: a restored delta would otherwise
     // depend on a parent chain that retention may later reclaim, and
     // the restore's content is v's state, not a delta against latest
     val resolved = snapshot(spark, dir, v) // validates v exists
     val next = latestVersion(spark, dir).get + 1
-    commitManifest(spark, dir, next, resolved.lines.map(renderLine), protocol)
+    commitManifest(spark, dir, next, resolved.lines.map(renderLine))
     next
   }
 
@@ -4327,7 +4118,6 @@ object Versioned {
     * version (always 0). */
   def createTable(spark: SparkSession, dir: String, schema: StructType,
                   partCols: Seq[String] = Seq.empty,
-                  protocol: CommitProtocol = PutIfAbsentCommit,
                   constraints: Seq[(String, String)] = Seq.empty,
                   props: Map[String, String] = Map.empty): Int = {
     require(schema.fields.nonEmpty, "cannot create a table with no columns")
@@ -4384,7 +4174,7 @@ object Versioned {
         notNull ++ constraints.map { case (n, sql) => ConstraintEntry(n, sql) } ++
         idSpecs.map(s => HwmEntry(s.col, s.start)) ++
         props.toSeq.sortBy(_._1).map { case (k, x) => PropEntry(k, x) })
-    commitManifest(spark, dir, 0, ls.map(renderLine), protocol)
+    commitManifest(spark, dir, 0, ls.map(renderLine))
     0
   }
 
@@ -4408,11 +4198,9 @@ object Versioned {
     * spec), commit as the next version — so a schema change is
     * itself history: time travel to the pre-ALTER version serves the
     * pre-ALTER schema. */
-  private def commitSchemaChange(spark: SparkSession, dir: String,
-                                 protocol: CommitProtocol)
+  private def commitSchemaChange(spark: SparkSession, dir: String)
                                 (change: (StructType, Snapshot) => StructType): Int = {
-    val prev = requireLatest(spark, dir)
-    val snap = snapshot(spark, dir, prev)
+    val snap = snapshot(spark, dir, requireLatest(spark, dir))
     // pre-schema manifests: derive the union once — the ALTER commit
     // then records it, upgrading the table in place like any commit
     val prior = schemaOf(spark, snap)
@@ -4426,16 +4214,7 @@ object Versioned {
       if (keptMap == priorMap) Seq.empty
       else if (keptMap.isEmpty) Seq("-colmap")
       else Seq(addOp(ColMapEntry(keptMap.toSeq.sortBy(_._1))))
-    val newLines = SchemaEntry(next) +: {
-      val rest = snap.lines.filterNot(_.isInstanceOf[SchemaEntry])
-      if (keptMap == priorMap) rest
-      else rest.filterNot(_.isInstanceOf[ColMapEntry]) ++
-        (if (keptMap.isEmpty) Seq.empty else Seq(ColMapEntry(keptMap.toSeq.sortBy(_._1))))
-    }
-    val v = prev + 1
-    commitChild(spark, dir, v, prev, newLines,
-      addOp(SchemaEntry(next)) +: mapOps, protocol)
-    v
+    commitChild(spark, dir, snap, addOp(SchemaEntry(next)) +: mapOps)
   }
 
   /** `ALTER TABLE … ADD COLUMNS`'s role: a METADATA-ONLY commit that
@@ -4452,10 +4231,9 @@ object Versioned {
     * files — with the SAME type that is well-defined (the drop was
     * metadata-only too); with a DIFFERENT type the read fails on
     * those files. Add under a fresh name to start clean. */
-  def addColumns(spark: SparkSession, dir: String, cols: Seq[StructField],
-                 protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+  def addColumns(spark: SparkSession, dir: String, cols: Seq[StructField]): Int = {
     require(cols.nonEmpty, "no columns to add")
-    commitSchemaChange(spark, dir, protocol) { (prior, snap) =>
+    commitSchemaChange(spark, dir) { (prior, snap) =>
       val cmap = snap.colMap
       val logicalLower = toLogicalSchema(prior, cmap)
         .fieldNames.map(_.toLowerCase).toSet
@@ -4485,10 +4263,9 @@ object Versioned {
     * (the mask could no longer be evaluated). For ERASURE semantics
     * a metadata drop is not enough — rewrite via
     * `writeVersion(readLatest(dir).drop(col), dir)` and prune. */
-  def dropColumns(spark: SparkSession, dir: String, names: Seq[String],
-                  protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+  def dropColumns(spark: SparkSession, dir: String, names: Seq[String]): Int = {
     require(names.nonEmpty, "no columns to drop")
-    commitSchemaChange(spark, dir, protocol) { (prior, snap) =>
+    commitSchemaChange(spark, dir) { (prior, snap) =>
       val cmap = snap.colMap
       val logical = toLogicalSchema(prior, cmap)
       // callers name LOGICAL columns; the schema line and every guard
@@ -4568,8 +4345,7 @@ object Versioned {
         "with a line break")
 
   def addCheckConstraint(spark: SparkSession, dir: String, name: String,
-                         predicateSql: String,
-                         protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+                         predicateSql: String): Int = {
     require(name.matches("[A-Za-z0-9_]+"),
       s"constraint name must be word-shaped (it is embedded in the manifest), got '$name'")
     requireOneLine(predicateSql, name)
@@ -4583,30 +4359,16 @@ object Versioned {
     require(violating.isEmpty,
       s"cannot add CHECK constraint '$name' ($predicateSql): existing rows violate it " +
         s"— e.g. ${violating.head()}")
-    val v = prev + 1
-    val c = ConstraintEntry(name, predicateSql)
-    commitChild(spark, dir, v, prev, snap.lines :+ c, Seq(addOp(c)), protocol)
-    v
+    commitChild(spark, dir, snap, Seq(addOp(ConstraintEntry(name, predicateSql))))
   }
 
   /** `ALTER TABLE … DROP CONSTRAINT`'s role: metadata-only removal.
     * Returns the new version, or None when no such constraint exists
     * (the caller decides whether that is an error — IF EXISTS). */
-  def dropCheckConstraint(spark: SparkSession, dir: String, name: String,
-                          protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
-    val prev = requireLatest(spark, dir)
-    val snap = snapshot(spark, dir, prev)
+  def dropCheckConstraint(spark: SparkSession, dir: String, name: String): Option[Int] = {
+    val snap = snapshot(spark, dir, requireLatest(spark, dir))
     if (!snap.constraints.exists(_._1.equalsIgnoreCase(name))) None
-    else {
-      val v = prev + 1
-      commitChild(spark, dir, v, prev,
-        snap.lines.filterNot {
-          case ConstraintEntry(n, _) => n.equalsIgnoreCase(name)
-          case _ => false
-        },
-        Seq(s"-constraint:$name"), protocol)
-      Some(v)
-    }
+    else Some(commitChild(spark, dir, snap, Seq(s"-constraint:$name")))
   }
 
   /** The changes of ONE SQL `ALTER TABLE` statement, to be applied as
@@ -4667,12 +4429,10 @@ object Versioned {
     * (partition / dv-key / constraint-referenced columns cannot be
     * dropped unless the referencing constraint is dropped in the SAME
     * statement). */
-  def alterTableAtomic(spark: SparkSession, dir: String, alter: AlterSpec,
-                       protocol: CommitProtocol = PutIfAbsentCommit): Option[Int] = {
+  def alterTableAtomic(spark: SparkSession, dir: String, alter: AlterSpec): Option[Int] = {
     if (alter.isEmpty) return None
     val prev = requireLatest(spark, dir)
     val snap = snapshot(spark, dir, prev)
-    val ls = snap.lines
     val prior = schemaOf(spark, snap)
     val partCols = snap.partitionCols
     val dvKeys = (snap.dvDirs.map(_._1) ++ snap.scopedDvs.map(_._1)).toSet
@@ -4881,40 +4641,21 @@ object Versioned {
     val droppedBloomCols = snap.bloomDecls.map(_.col).filter(c => dropSet.exists(_.equalsIgnoreCase(c)))
     // a dropped identity column takes its high-water mark with it (a
     // stale mark would collide with a later column of the same name)
-    val droppedHwm = ls.collect {
+    val droppedHwm = snap.lines.collect {
       case h: HwmEntry if dropSet.exists(_.equalsIgnoreCase(h.col)) => h.col
     }
-    val kept = ls.filterNot {
-      case _: SchemaEntry => true
-      case c: ConstraintEntry => dropCheckNames.exists(_.equalsIgnoreCase(c.name))
-      case n: NotNullEntry => droppedNn.exists(_.col.equalsIgnoreCase(n.col))
-      case h: HwmEntry => droppedHwm.exists(_.equalsIgnoreCase(h.col))
-      case _: ColMapEntry => mapShrank // re-added below when non-empty
-      case b: BloomColEntry => droppedBloomCols.exists(_.equalsIgnoreCase(b.col))
-      case b: BloomEntry => droppedBloomCols.exists(_.equalsIgnoreCase(b.col))
-      case _ => false
-    }
-    val mapLine =
-      if (!mapShrank || finalMap.isEmpty) Seq.empty
-      else Seq(ColMapEntry(finalMap.toSeq.sortBy(_._1)))
     val mapOps: Seq[String] =
       if (!mapShrank) Seq.empty
       else if (finalMap.isEmpty) Seq("-colmap")
       else Seq(addOp(ColMapEntry(finalMap.toSeq.sortBy(_._1))))
-    val v = prev + 1
-    commitChild(spark, dir, v, prev,
-      SchemaEntry(finalSchema) +: (kept ++ mapLine ++
-        alter.addChecks.map { case (n, sql) => ConstraintEntry(n, sql) } ++
-        resolvedSet.map { case (_, p) => NotNullEntry(p) }),
+    Some(commitChild(spark, dir, snap,
       (addOp(SchemaEntry(finalSchema)) +:
         (dropCheckNames.map(n => s"-constraint:$n") ++
           droppedNn.map(n => s"-notnull:${n.col}") ++
           droppedHwm.map(c => s"-hwm:$c") ++ mapOps ++
           droppedBloomCols.map(c => s"-bloomcol:$c"))) ++
         alter.addChecks.map { case (n, sql) => addOp(ConstraintEntry(n, sql)) } ++
-        resolvedSet.map { case (_, p) => addOp(NotNullEntry(p)) },
-      protocol)
-    Some(v)
+        resolvedSet.map { case (_, p) => addOp(NotNullEntry(p)) }))
   }
 
   /** FLOAT → DOUBLE widening — the ONE step on the type ladder that
@@ -4927,8 +4668,7 @@ object Versioned {
     * schema keeps working), deletion masks apply physically on the
     * way through, and the new files' footer harvest records EXACT
     * double stats. Deliberately a data job, priced like one. */
-  def widenFloatToDoubleRewrite(spark: SparkSession, dir: String, col: String,
-                                protocol: CommitProtocol = PutIfAbsentCommit): Int = {
+  def widenFloatToDoubleRewrite(spark: SparkSession, dir: String, col: String): Int = {
     val prev = requireLatest(spark, dir)
     val snap = snapshot(spark, dir, prev)
     val logical = snap.logicalSchema
@@ -4942,8 +4682,8 @@ object Versioned {
     val partCols = snap.partitionCols
     val df = readVersion(spark, dir, prev)
       .withColumn(l, org.apache.spark.sql.functions.col(l).cast("double"))
-    if (partCols.isEmpty) writeVersion(df, dir, SaveMode.Overwrite, protocol)
-    else writeVersionPartitioned(df, dir, partCols, SaveMode.Overwrite, protocol)
+    if (partCols.isEmpty) writeVersion(df, dir, SaveMode.Overwrite)
+    else writeVersionPartitioned(df, dir, partCols, SaveMode.Overwrite)
   }
 
   /** Delta `replaceWhere` / Spark SQL `INSERT INTO … REPLACE WHERE`'s
@@ -4986,8 +4726,6 @@ object Versioned {
     * Returns the committed version; None when the statement was a
     * complete no-op (no row matched AND `df` was empty). */
   def replaceWhere(df: DataFrame, dir: String, predicateSql: String,
-                   protocol: CommitProtocol = PutIfAbsentCommit,
-                   maxAttempts: Int = 16,
                    // non-empty = RECORD the change feed in the same commit
                    // (writeVersionWithChangeFeed's role for the replace):
                    // the diff is known AT WRITE TIME — pre-image rows are the
@@ -5114,7 +4852,7 @@ object Versioned {
     }
 
     try commitFileRewrite(spark, dir, removed, Some(staged), partCols,
-      snap.dvSnapshot, protocol, maxAttempts, identityBasis = idBasis,
+      snap.dvSnapshot, identityBasis = idBasis,
       replaceConflict = Some((snap.dataDirNames.toSet, pushed, predicateSql)),
       changeFeed = feedDir)
     catch { case t: Throwable =>
@@ -5242,7 +4980,7 @@ object Versioned {
     if (!dryRun && drop.nonEmpty) keep.headOption.foreach { b =>
       if (manifestParent(spark, dir, b).nonEmpty &&
           !fs.exists(checkpointPath(dir, b)))
-        writeCheckpoint(spark, dir, b, snapshot(spark, dir, b).lines, PutIfAbsentCommit)
+        writeCheckpoint(spark, dir, b, snapshot(spark, dir, b).lines)
     }
     // live names span BOTH dir kinds: a deletion-vector dir referenced
     // by a surviving manifest is load-bearing (reclaiming it would
@@ -5285,8 +5023,8 @@ object Versioned {
         new Path(p).getFileSystem(conf).delete(new Path(p), true) }
       // staging files from commits that crashed between create and
       // publish are invisible to readers but never self-clean; both
-      // protocols' staging prefixes are swept (`.tmp-` = RenameCommit,
-      // `.put-` = PutIfAbsentCommit's local emulation)
+      // both commit branches' staging prefixes are swept (`.tmp-` =
+      // stage-and-rename, `.put-` = the local hardlink branch)
       fs.listStatus(new Path(root, VDIR))
         .filter { st =>
           val n = st.getPath.getName

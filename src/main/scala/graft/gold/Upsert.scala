@@ -161,7 +161,7 @@ object Upsert {
     * [[graft.ext.SwapStore.rewrite]]'s crash-safe directory swap,
     * which holds where directory rename is atomic (HDFS/POSIX; for
     * object stores use [[upsertTable]] with
-    * [[graft.ext.ManifestStore.conditionalPut]]). There is no window
+    * [[graft.ext.ManifestStore]]). There is no window
     * in which the table is missing, so the bootstrap branch can never
     * re-create it from one month's rows; an interrupted merge is
     * repaired and simply re-runs on the next call. */
@@ -172,10 +172,10 @@ object Upsert {
     * seam. With [[graft.ext.SwapStore]] (the default entry above)
     * the publish is the directory swap: fast, zero indirection,
     * guaranteed where rename is atomic (HDFS/POSIX). With
-    * [[graft.ext.ManifestStore]] over [[graft.ext.PutIfAbsentCommit]]
-    * the merged state lands in an immutable uniquely-named data dir
-    * and becomes visible via ONE conditional manifest create — no
-    * rename on any commit path, which is what object stores
+    * [[graft.ext.ManifestStore]] the merged state lands in an
+    * immutable uniquely-named data dir and becomes visible via ONE
+    * manifest commit — on an object store a conditional create with
+    * no rename on any commit path, which is what object stores
     * (S3A/MinIO, the reference's actual storage) require for the
     * crash-window guarantees to hold. Same merge semantics either
     * way; read the live state back with `store.readLive`. */

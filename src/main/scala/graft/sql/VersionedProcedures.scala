@@ -268,7 +268,7 @@ private[sql] object VersionedProcedures {
       (spark, args) =>
         if (args.str(2).trim.isEmpty) {
           val st = Maintenance.compact(spark, args.str(0), args.long(1),
-            store = ManifestStore.conditionalPut)
+            store = ManifestStore)
           Seq(row(Int.box(st.filesBefore), Int.box(st.filesAfter), Long.box(st.totalBytes)))
         } else Maintenance.compactVersionedWhere(
             spark, args.str(0), args.str(2), args.long(1)) match {

@@ -295,7 +295,7 @@ object Streams {
     * (HDFS/POSIX); a continuous writer on an object store —
     * the reference's own substrate (S3A/MinIO,
     * ref: mnt/spark-conf/spark-defaults.conf:4-10) — passes
-    * [[graft.ext.ManifestStore.conditionalPut]] so every micro-batch
+    * [[graft.ext.ManifestStore]] so every micro-batch
     * publish is a conditional manifest create with no rename on the
     * commit path. Returns the started query; callers own its
     * lifecycle. */
@@ -375,7 +375,7 @@ object Streams {
     *
     * `store` picks the table's commit primitive: [[graft.ext.SwapStore]]
     * (default, directory-rename publish — HDFS/POSIX) or
-    * [[graft.ext.ManifestStore.conditionalPut]] for object stores,
+    * [[graft.ext.ManifestStore]] for object stores,
     * where the table resolves through manifests and every batch
     * commit is a conditional put (the CDC LOG needs no seam: its
     * dynamic partition overwrite into `batch_id=N` is already

@@ -1585,7 +1585,7 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("versioned: staging residue and malformed names never poison the version listing") {
-    // the r5 regression: RenameCommit staged to `.tmp-<v>.manifest`,
+    // the r5 regression: the rename commit staged to `.tmp-<v>.manifest`,
     // which versions()'s endsWith(".manifest") lister parsed with
     // .toInt → NumberFormatException for any concurrent reader during
     // the commit window, and PERMANENTLY after a crash mid-commit
@@ -1597,7 +1597,7 @@ class ExtSpec extends AnyFunSuite {
     graft.ext.Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // fix 1: the staging file RenameCommit writes must not itself
+    // fix 1: the staging file the rename branch writes must not itself
     // match the manifest pattern (observe the name mid-"commit" by
     // writing it the way putIfAbsent stages)
     for (junk <- Seq(
@@ -1824,19 +1824,22 @@ class ExtSpec extends AnyFunSuite {
     assert(op == manual && op.nonEmpty)
   }
 
-  // ─── commit-protocol seam: every crash-window case under BOTH ───
-  // protocols (rename = HDFS/POSIX semantics; put-if-absent =
-  // object-store conditional-put semantics, no rename on the commit
-  // path)
-  for (proto <- Seq(graft.ext.RenameCommit, graft.ext.PutIfAbsentCommit)) {
+  // ─── commit seam: every crash-window case on BOTH branches of the
+  // commit primitive that a path's scheme picks — "rename" runs on a
+  // `stagefs://` path (stage-and-rename, HDFS rename semantics),
+  // "put-if-absent" on a local path (hardlink, no rename on the
+  // commit path) ───
+  for ((branch, onBranch) <- Seq[(String, String => String)](
+      ("rename", StageFs.qualify(spark, _)), ("put-if-absent", identity))) {
 
-    test(s"commit[${proto.name}]: put-if-absent publishes whole content once; loser keeps winner intact") {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_commit_${proto.name.filter(_.isLetter)}").toString
+    test(s"commit[$branch]: put-if-absent publishes whole content once; loser keeps winner intact") {
+      val local = java.nio.file.Files.createTempDirectory(s"graft_commit_${branch.filter(_.isLetter)}").toString
+      val dir = onBranch(local)
       val p = new org.apache.hadoop.fs.Path(dir, "claim.manifest")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(proto.putIfAbsent(fs, p, "winner\n".getBytes("UTF-8")))
+      assert(graft.ext.Commit.putIfAbsent(fs, p, "winner\n".getBytes("UTF-8")))
       // second writer must LOSE, and the winner's content must survive
-      assert(!proto.putIfAbsent(fs, p, "loser\n".getBytes("UTF-8")))
+      assert(!graft.ext.Commit.putIfAbsent(fs, p, "loser\n".getBytes("UTF-8")))
       val in = fs.open(p)
       val got = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
       assert(got == "winner\n")
@@ -1844,24 +1847,35 @@ class ExtSpec extends AnyFunSuite {
       val residue = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
         .map(_.getPath.getName).filterNot(_ == "claim.manifest")
       assert(residue.isEmpty, s"staging residue: ${residue.mkString(",")}")
+      // the scheme picked the branch: on stagefs:// each manifest
+      // commit is exactly one rename into _versions/; on a local path
+      // none is, and _versions/ holds the manifests and nothing else
+      val before = StageFs.versionRenames.get
+      (0 to 2).foreach(v =>
+        graft.ext.Versioned.commitManifest(spark, dir + "/t", v, Seq(s"v${v}_data")))
+      val renames = StageFs.versionRenames.get - before
+      assert(renames == (if (branch == "rename") 3 else 0), s"$renames renames into _versions/")
+      assert(new java.io.File(local + "/t/_versions").list().toSet ==
+        (0 to 2).map(v => f"$v%08d.manifest").toSet)
     }
 
-    test(s"commit[${proto.name}]: versioned concurrent commit surfaces, never silently drops") {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_vc_${proto.name.filter(_.isLetter)}").toString + "/t"
-      graft.ext.Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir, protocol = proto)
-      val v0name = new java.io.File(dir).listFiles().map(_.getName)
+    test(s"commit[$branch]: versioned concurrent commit surfaces, never silently drops") {
+      val local = java.nio.file.Files.createTempDirectory(s"graft_vc_${branch.filter(_.isLetter)}").toString + "/t"
+      val dir = onBranch(local)
+      graft.ext.Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir)
+      val v0name = new java.io.File(local).listFiles().map(_.getName)
         .find(_.startsWith("v00000000_data")).get
-      graft.ext.Versioned.commitManifest(spark, dir, 1, Seq(v0name), proto)
+      graft.ext.Versioned.commitManifest(spark, dir, 1, Seq(v0name))
       intercept[IllegalStateException] {
-        graft.ext.Versioned.commitManifest(spark, dir, 1, Seq("v_loser_data"), proto)
+        graft.ext.Versioned.commitManifest(spark, dir, 1, Seq("v_loser_data"))
       }
       assert(graft.ext.Versioned.readVersion(spark, dir, 1)
         .select("id").as[Long].collect().toSet == Set(1L))
     }
 
-    test(s"commit[${proto.name}]: manifest-store upsert crash windows — orphan invisible, table never missing, retry clean") {
-      val store = new graft.ext.ManifestStore(proto)
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_ms_${proto.name.filter(_.isLetter)}").toString + "/t"
+    test(s"commit[$branch]: manifest-store upsert crash windows — orphan invisible, table never missing, retry clean") {
+      val store = graft.ext.ManifestStore
+      val dir = onBranch(java.nio.file.Files.createTempDirectory(s"graft_ms_${branch.filter(_.isLetter)}").toString + "/t")
       val t0 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       graft.gold.Upsert.upsertTable(spark, dir, t0, Seq("id"), store)
       assert(store.exists(spark, dir))
@@ -1882,10 +1896,11 @@ class ExtSpec extends AnyFunSuite {
         .select("v").as[String].collect().toSet == Set("a", "b"))
     }
 
-    test(s"commit[${proto.name}]: manifest-store compact shrinks the LIVE file set; history intact; prune reclaims") {
-      val store = new graft.ext.ManifestStore(proto)
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_mc_${proto.name.filter(_.isLetter)}").toString + "/t"
-      graft.ext.Versioned.writeVersionWith(spark, dir, proto)(tmp =>
+    test(s"commit[$branch]: manifest-store compact shrinks the LIVE file set; history intact; prune reclaims") {
+      val store = graft.ext.ManifestStore
+      val local = java.nio.file.Files.createTempDirectory(s"graft_mc_${branch.filter(_.isLetter)}").toString + "/t"
+      val dir = onBranch(local)
+      graft.ext.Versioned.writeVersionWith(spark, dir)(tmp =>
         spark.range(1000).toDF("id").repartition(8)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp))
       val before = store.liveFiles(spark, dir)
@@ -1906,13 +1921,13 @@ class ExtSpec extends AnyFunSuite {
       // then compact applies the mask physically (the compactor reads
       // the masked live view) and drops the dv reference
       graft.ext.Versioned.deleteByKeys(spark, dir,
-        spark.range(500).toDF("id"), "id", proto)
+        spark.range(500).toDF("id"), "id")
       assert(store.readLive(spark, dir).count() == 500)
       graft.ext.Maintenance.compact(spark, dir,
         targetFileBytes = Long.MaxValue, store = store)
       assert(store.readLive(spark, dir).count() == 500)
       graft.ext.Versioned.pruneVersions(spark, dir, keepLast = 1)
-      val leftover = new java.io.File(dir).listFiles().map(_.getName)
+      val leftover = new java.io.File(local).listFiles().map(_.getName)
       assert(!leftover.exists(_.endsWith("_dv")), s"dv survived apply+prune: ${leftover.toSeq}")
       assert(store.readLive(spark, dir).count() == 500)
     }
@@ -1924,18 +1939,16 @@ class ExtSpec extends AnyFunSuite {
     Versioned.writeVersion(Seq((0L, "base")).toDF("id", "v"), dir)
     // 6 concurrent appenders race the version counter; every one must
     // land (unique data dirs + ATOMIC manifest claim + bounded retry).
-    // PutIfAbsentCommit is required for the claim to be atomic on a
-    // local FS: under RenameCommit here, POSIX rename silently
-    // replaces and two racers both "win" — measured, one commit lost
-    // (the documented local-RenameCommit single-writer caveat)
+    // The local path commits by hardlink: a stage-and-rename here
+    // would lose a commit, because POSIX rename silently replaces and
+    // two racers both "win"
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     val writers = (1 to 6).map { i =>
       Future(Versioned.appendVersionWithRetry(
-        Seq((i.toLong, s"w$i")).toDF("id", "v"), dir,
-        protocol = graft.ext.PutIfAbsentCommit))
+        Seq((i.toLong, s"w$i")).toDF("id", "v"), dir))
     }
     val committed = Await.result(Future.sequence(writers), 120.seconds)
     // all six landed at distinct versions 1..6
@@ -1979,7 +1992,7 @@ class ExtSpec extends AnyFunSuite {
       Seq((1L, "a"), (2L, "b")), Seq((2L, "B"), (3L, "c")), Seq((1L, "A"), (4L, "d")))
     val stores: Seq[(String, graft.ext.TableStore)] =
       Seq(("swap", graft.ext.SwapStore),
-          ("manifest", graft.ext.ManifestStore.conditionalPut))
+          ("manifest", graft.ext.ManifestStore))
     val results = stores.map { case (nm, store) =>
       val dir = s"$base/$nm"
       batches.foreach(b =>
@@ -2209,7 +2222,7 @@ class ExtSpec extends AnyFunSuite {
     Versioned.commitManifest(spark, dir, 2, Seq("v00000002_data_deadbeef"))
     assert(Versioned.readVersion(spark, dir, 2)
       .select("id").as[Long].collect().toSet == Set(99L))
-    // a crashed PutIfAbsentCommit staging file (.put-*) is swept once
+    // a crashed local-branch staging file (.put-*) is swept once
     // old enough — the advisor's permanent-debris gap
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2730,11 +2743,9 @@ class ExtSpec extends AnyFunSuite {
   test("versioned: restoreVersion threads the commit protocol (object-store path has no rename)") {
     import graft.ext.Versioned
     val dir = java.nio.file.Files.createTempDirectory("graft_restore_proto").toString + "/t"
-    Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir,
-      protocol = graft.ext.PutIfAbsentCommit)
-    Versioned.writeVersion(Seq((2L, "b")).toDF("id", "v"), dir,
-      protocol = graft.ext.PutIfAbsentCommit)
-    val v2 = Versioned.restoreVersion(spark, dir, 0, graft.ext.PutIfAbsentCommit)
+    Versioned.writeVersion(Seq((1L, "a")).toDF("id", "v"), dir)
+    Versioned.writeVersion(Seq((2L, "b")).toDF("id", "v"), dir)
+    val v2 = Versioned.restoreVersion(spark, dir, 0)
     assert(v2 == 2)
     assert(Versioned.readLatest(spark, dir).select("id").as[Long].collect().toSet == Set(1L))
     // the restore carried v0's schema and stats lines with it
@@ -3272,7 +3283,7 @@ class ExtSpec extends AnyFunSuite {
       spark.sql(s"CALL graft_p16.system.drop_feature('$dir', 'pdv')") }
     assert(eLive.getMessage.contains("still live"), eLive.getMessage)
     Maintenance.compact(spark, dir, targetFileBytes = Long.MaxValue,
-      store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
+      store = graft.ext.ManifestStore)
     val dv = spark.sql(
       s"CALL graft_p16.system.drop_feature('$dir', 'pdv')").as[Int].head()
     assert(dv == Versioned.latestVersion(spark, dir).get)
@@ -3379,7 +3390,7 @@ class ExtSpec extends AnyFunSuite {
     // checkpoint and fold agree on WHOLE snapshots: every version with
     // a checkpoint sidecar resolves, field by field, to the snapshot
     // its delta fold resolves to. Returns the versions compared.
-    def checkpointsAgreeWithFold(): Seq[Int] = {
+    def checkpointsAgreeWithFold(d: String = dir): Seq[Int] = {
       def fields(s: graft.ext.Snapshot): Seq[(String, Any)] = Seq(
         "schema" -> s.schema, "colMap" -> s.colMap, "logicalSchema" -> s.logicalSchema,
         "partitionCols" -> s.partitionCols, "dataDirs" -> s.dataDirs,
@@ -3393,8 +3404,8 @@ class ExtSpec extends AnyFunSuite {
         "txns" -> s.txns, "ingested" -> s.ingested, "changes" -> s.changes,
         "recordedTimestamp" -> s.recordedTimestamp, "commitTimestamp" -> s.commitTimestamp,
         "isRearrange" -> s.isRearrange)
-      Versioned.versions(spark, dir).flatMap { v =>
-        val (viaCheckpoint, viaFold) = graft.ext.Snapshot.resolveEachWay(spark, dir, v)
+      Versioned.versions(spark, d).flatMap { v =>
+        val (viaCheckpoint, viaFold) = graft.ext.Snapshot.resolveEachWay(spark, d, v)
         viaCheckpoint.map { cp =>
           fields(cp).zip(fields(viaFold)).foreach { case ((name, a), (_, b)) =>
             assert(a == b, s"v$v $name: checkpoint $a vs fold $b") }
@@ -3471,6 +3482,52 @@ class ExtSpec extends AnyFunSuite {
     assert(Versioned.snapshot(spark, dir, rv + 5).isRearrange)
     assert(checkpointsAgreeWithFold() == (rv + 1 to rv + 5))
     assert(Versioned.readLatest(spark, dir).count() == 209)
+    // every other delta commit kind, each checkpointed at its own
+    // commit: deletes by key, scoped and by position (which stamps the
+    // pdv feature), dv compaction, property unset, a multi-batch bloom
+    // backfill and its drop, add/drop column, a type widening, a
+    // txn-watermarked append, and the COPY INTO ledger's retirement
+    // with its feature drop — each must match its fold
+    val k = java.nio.file.Files.createTempDirectory("graft_deltakinds").toString + "/k"
+    Versioned.writeVersion(spark.range(0, 100)
+      .selectExpr("id", "cast(id AS int) AS n", "cast(id % 4 AS string) AS tag")
+      .repartition(4), k)
+    spark.conf.set("spark.graft.manifest.checkpointInterval", "1")
+    spark.conf.set("spark.graft.bloom.backfillFilesPerCommit", "1")
+    try {
+      Versioned.deleteByKeys(spark, k, Seq(1L).toDF("id"), "id")
+      Versioned.deleteByKeysScoped(spark, k, Seq(2L).toDF("id"), "id")
+      assert(Versioned.deleteWhere(spark, k, "id >= 90").nonEmpty)
+      assert(Versioned.snapshot(spark, k, Versioned.latestVersion(spark, k).get).hasFeature("pdv"))
+      Versioned.deleteByKeys(spark, k, Seq(3L).toDF("id"), "id")
+      assert(Versioned.compactDeletionVectors(spark, k).nonEmpty)
+      Versioned.setTableProperties(spark, k, Map("team.owner" -> "ingest", "team.tier" -> "1"))
+      assert(Versioned.unsetTableProperties(spark, k, Seq("team.tier")).nonEmpty)
+      Versioned.appendVersionWithRetry(spark.range(100, 101)
+        .selectExpr("id", "cast(id AS int) AS n", "'a' AS tag"), k)
+      val beforeBloom = Versioned.latestVersion(spark, k).get
+      val bloomV = Versioned.declareBloomColumn(spark, k, "id")
+      assert(bloomV > beforeBloom + 1,
+        s"expected a multi-batch backfill, got v$beforeBloom -> v$bloomV")
+      assert(Versioned.dropBloomColumn(spark, k, Some("id")).nonEmpty)
+      Versioned.addColumns(spark, k,
+        Seq(org.apache.spark.sql.types.StructField("extra", org.apache.spark.sql.types.StringType)))
+      Versioned.dropColumns(spark, k, Seq("extra"))
+      assert(Versioned.alterTableAtomic(spark, k, Versioned.AlterSpec(
+        widenCols = Seq("n" -> org.apache.spark.sql.types.LongType))).nonEmpty)
+      assert(Versioned.writeVersionStreamBatch(spark.range(200, 201)
+        .selectExpr("id", "id AS n", "'s' AS tag"), k, "app1", 0L).nonEmpty)
+      val src = java.nio.file.Files.createTempDirectory("graft_deltakinds_src").toString + "/in"
+      spark.range(300, 302).selectExpr("id", "id AS n", "'c' AS tag").write.parquet(src)
+      assert(Versioned.copyInto(spark, k, src).nonEmpty)
+      assert(Versioned.forgetIngestHistory(spark, k).nonEmpty)
+      assert(Versioned.dropTableFeature(spark, k, "ingest").nonEmpty)
+    } finally {
+      spark.conf.unset("spark.graft.manifest.checkpointInterval")
+      spark.conf.unset("spark.graft.bloom.backfillFilesPerCommit")
+    }
+    assert(checkpointsAgreeWithFold(k) == (1 to Versioned.latestVersion(spark, k).get))
+    assert(Versioned.readLatest(spark, k).count() == 100 - 3 - 10 + 1 + 1 + 2)
   }
 
   test("file-granular copy-on-write: selective UPDATE/DELETE rewrite only candidate files; untouched files verbatim; disjoint commits commute") {
@@ -4661,7 +4718,7 @@ class ExtSpec extends AnyFunSuite {
     // foreign ref remains and the clone survives the source's
     // lifecycle (the documented way out of the shared-file caveat)
     graft.ext.Maintenance.compact(spark, tgt,
-      store = graft.ext.ManifestStore.conditionalPut)
+      store = graft.ext.ManifestStore)
     val vL = Versioned.latestVersion(spark, tgt).get
     assert(Versioned.snapshot(spark, tgt, vL).dataDirs.forall(_.startsWith(tgt)),
       "compacting a clone must localize every data ref")
@@ -5148,7 +5205,7 @@ class ExtSpec extends AnyFunSuite {
     // retires the line; history still travels to the masked version
     val stats = graft.ext.Maintenance.compact(spark, dir,
       targetFileBytes = Long.MaxValue,
-      store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
+      store = graft.ext.ManifestStore)
     assert(stats.filesAfter == 1)
     assert(nDv == 0, "physical apply must retire the positional dv line")
     assert(Versioned.readLatest(spark, dir)
@@ -5195,7 +5252,7 @@ class ExtSpec extends AnyFunSuite {
     // ids SURVIVE compaction verbatim (they are columns; the rewrite
     // moves rows with their columns)
     graft.ext.Maintenance.compact(spark, dir, targetFileBytes = Long.MaxValue,
-      store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
+      store = graft.ext.ManifestStore)
     assert(idsByKey() == ids1, "compaction must carry every id verbatim")
     // …and a CoW UPDATE keeps the touched row's id
     spark.sql(s"UPDATE graft_rt.`$dir` SET v = 'updated' WHERE k = 7")
@@ -5597,7 +5654,7 @@ class ExtSpec extends AnyFunSuite {
     // …succeeds after the masks apply physically, as one commit
     graft.ext.Maintenance.compact(spark, dir,
       targetFileBytes = Long.MaxValue,
-      store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
+      store = graft.ext.ManifestStore)
     assert(Versioned.dropTableFeature(spark, dir, "pdv").nonEmpty)
     assert(Versioned.snapshot(spark, dir,
       Versioned.latestVersion(spark, dir).get).features.isEmpty)
@@ -5723,7 +5780,7 @@ class ExtSpec extends AnyFunSuite {
       .as[Double].head() == (0L until 200L).map(_ % 10).sum.toDouble)
     // compaction applies the mask physically and the content holds
     graft.ext.Maintenance.compact(spark, dir, targetFileBytes = Long.MaxValue,
-      store = new graft.ext.ManifestStore(graft.ext.PutIfAbsentCommit))
+      store = graft.ext.ManifestStore)
     val vc = Versioned.latestVersion(spark, dir).get
     assert(Versioned.snapshot(spark, dir, vc).posDvs.isEmpty)
     assert(spark.sql(s"SELECT id, price FROM graft_du.`$dir`")
@@ -6425,18 +6482,16 @@ class ExtSpec extends AnyFunSuite {
 
   test("maintenance seams: protocol-threaded partitioned compact, legacy-gated maintain, 4-col zorder defaults, scoped compact bytes") {
     import org.apache.spark.sql.SaveMode
-    import graft.ext.{Maintenance, ManifestStore, RenameCommit, Versioned}
+    import graft.ext.{Maintenance, ManifestStore, Versioned}
     val root = java.nio.file.Files.createTempDirectory("graft_maint_seams").toString
-    // 1) the partitioned compact branch honors the CALLER's commit
-    // protocol (it used to hard-code put-if-absent; CommitProtocol is
-    // sealed, so the pin is behavioral: the rename-protocol store runs
-    // the whole partition-shaped rewrite end to end)
-    val pdir = root + "/p"
+    // 1) the partitioned compact branch commits through the primitive
+    // its path's scheme picks: on a stagefs:// path (stage-and-rename)
+    // the whole partition-shaped rewrite runs end to end
+    val pdir = StageFs.qualify(spark, root + "/p")
     val rows = (0 until 800).map(i => (i.toLong, i % 4, s"v$i")).toDF("id", "bucket", "payload")
     Versioned.writeVersionPartitioned(rows.repartition(4), pdir, Seq("bucket"))
     Versioned.writeVersionPartitioned(rows.repartition(4), pdir, Seq("bucket"), SaveMode.Append)
-    val st = Maintenance.compact(spark, pdir, 512L * 1024 * 1024,
-      store = new ManifestStore(RenameCommit))
+    val st = Maintenance.compact(spark, pdir, 512L * 1024 * 1024, store = ManifestStore)
     assert(st.filesAfter < st.filesBefore && st.totalBytes > 0, st.toString)
     assert(Versioned.readLatest(spark, pdir).count() == 1600)
     // 2) a LEGACY pre-file-list chain with the fragmentation gate on:
@@ -7514,7 +7569,7 @@ class ExtSpec extends AnyFunSuite {
       assert(Versioned.readLatest(spark, dirF).count() == 99)
       Versioned.writeVersion(Seq((200L, 0L)).toDF("id", "k").coalesce(1),
         dirF, SaveMode.Append)
-      Maintenance.compact(spark, dirF, store = graft.ext.ManifestStore.conditionalPut)
+      Maintenance.compact(spark, dirF, store = graft.ext.ManifestStore)
       val cvF = Versioned.latestVersion(spark, dirF).get
       assert(Versioned.snapshot(spark, dirF, cvF).isRearrange)
       assert(Versioned.readLatest(spark, dirF).count() == 100)
