@@ -122,11 +122,11 @@ object SparkEntry {
   private def partFixture(s: SparkSession, d: String): String =
     builtOnce("versioned_part", d) {
       val path = scratchPath("versioned_part", d)
-      Versioned.writeVersionPartitioned(
+      Versioned.writeVersion(
         Tables.orders(s, d).select(col("o_orderkey"),
           round(col("o_totalprice"), 2).as("price"),
           col("o_orderstatus").as("status")),
-        path, Seq("status"))
+        path, partCols = Seq("status"))
       path
     }
 
@@ -1728,11 +1728,11 @@ object SparkEntry {
         org.apache.spark.sql.functions.round(col("o_totalprice"), 2).as("price"))
       // interleaved keys across two hive-laid-out commits: within every
       // partition, both commits span the full key range
-      Versioned.writeVersionPartitioned(
-        src.filter(col("o_orderkey") % 2 === 0).repartition(1), tbl, Seq("status"))
-      Versioned.writeVersionPartitioned(
-        src.filter(col("o_orderkey") % 2 === 1).repartition(1), tbl, Seq("status"),
-        org.apache.spark.sql.SaveMode.Append)
+      Versioned.writeVersion(
+        src.filter(col("o_orderkey") % 2 === 0).repartition(1), tbl, partCols = Seq("status"))
+      Versioned.writeVersion(
+        src.filter(col("o_orderkey") % 2 === 1).repartition(1), tbl,
+        org.apache.spark.sql.SaveMode.Append, Seq("status"))
       val vPre = Versioned.latestVersion(s, tbl).get
       s.conf.set("spark.graft.bloom.backfillFilesPerCommit", "3")
       val vB = try Versioned.declareBloomColumn(s, tbl, "o_orderkey")
@@ -2262,7 +2262,7 @@ object SparkEntry {
         col("l_returnflag").as("rf"))
         .repartition(16) // the adversarial shape: 16 tasks, tiny data
       s.conf.set("spark.graft.optimizeWrite.enabled", "true")
-      try Versioned.writeVersionPartitioned(li, tbl, Seq("rf"))
+      try Versioned.writeVersion(li, tbl, partCols = Seq("rf"))
       finally s.conf.unset("spark.graft.optimizeWrite.enabled")
       val v = Versioned.latestVersion(s, tbl).get
       val nFiles = Versioned.allLiveFilesMap(s, tbl, v)
@@ -2517,7 +2517,7 @@ object SparkEntry {
       val src = Tables.orders(s, d).select(col("o_orderkey"),
         round(col("o_totalprice"), 2).as("price"),
         col("o_orderstatus").as("status"))
-      Versioned.writeVersionPartitioned(src.repartition(2), tbl, Seq("status"))
+      Versioned.writeVersion(src.repartition(2), tbl, partCols = Seq("status"))
       val v0 = Versioned.latestVersion(s, tbl).get
       val before = Versioned.planDataFiles(s, tbl, v0, Seq.empty)
       // re-land the F slice re-scored — one atomic commit
@@ -2601,8 +2601,8 @@ object SparkEntry {
         col("o_orderdate").cast("date").as("o_orderdate"),
         round(col("o_totalprice"), 2).as("price"))
       // the library append COMPUTES m; one file per month partition
-      Versioned.writeVersionPartitioned(src.repartition(1), tbl, Seq("m"),
-        org.apache.spark.sql.SaveMode.Append)
+      Versioned.writeVersion(src.repartition(1), tbl,
+        org.apache.spark.sql.SaveMode.Append, Seq("m"))
       val probe = src.agg(org.apache.spark.sql.functions.max("o_orderdate"))
         .collect().head.getDate(0)
       val v = Versioned.latestVersion(s, tbl).get
@@ -2953,12 +2953,12 @@ object SparkEntry {
     "q135_sql_optimize_partition" -> { (s, d) =>
       s.conf.set("spark.sql.catalog.versioned", "graft.sql.VersionedCatalog")
       val tbl = scratchPath("sql_opt_part", d)
-      Versioned.writeVersionPartitioned(
+      Versioned.writeVersion(
         Tables.orders(s, d).filter(col("o_orderstatus").isin("F", "P"))
           .select(col("o_orderkey"), col("o_custkey"),
             round(col("o_totalprice"), 2).as("price"),
             col("o_orderstatus").as("status"))
-          .repartition(4), tbl, Seq("status"))
+          .repartition(4), tbl, partCols = Seq("status"))
       s.sql(s"CALL versioned.system.zorder(table => '$tbl', " +
         "col_a => 'o_orderkey', col_b => 'o_custkey', n_files => 4, " +
         "where => 'status = \\'F\\'')")
@@ -3010,10 +3010,10 @@ object SparkEntry {
       val tbl = scratchPath("sql_dyn_overwrite", d)
       Tables.orders(s, d).createOrReplaceTempView("orders_q139")
       // base state resets each pass: both slices, partitioned by status
-      Versioned.writeVersionPartitioned(
+      Versioned.writeVersion(
         Tables.orders(s, d).filter(col("o_orderstatus").isin("F", "P"))
           .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("price"),
-            col("o_orderstatus").as("status")), tbl, Seq("status"))
+            col("o_orderstatus").as("status")), tbl, partCols = Seq("status"))
       val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
       try {
         s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -3033,10 +3033,10 @@ object SparkEntry {
     "q140_sql_show_partitions" -> { (s, d) =>
       s.conf.set("spark.sql.catalog.versioned", "graft.sql.VersionedCatalog")
       val tbl = scratchPath("sql_show_parts", d)
-      Versioned.writeVersionPartitioned(
+      Versioned.writeVersion(
         Tables.orders(s, d)
           .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("price"),
-            col("o_orderstatus").as("status")), tbl, Seq("status"))
+            col("o_orderstatus").as("status")), tbl, partCols = Seq("status"))
       s.sql(s"CALL versioned.system.partitions('$tbl')")
         .select(col("partition").as("part"), col("num_rows"))
         .orderBy("part")

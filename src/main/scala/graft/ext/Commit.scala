@@ -5,6 +5,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import java.nio.file.{Files, Paths, StandardCopyOption, Path => JPath}
 import java.util.Comparator
 
+/** A commit that lost to a version committed since its read: the
+  * manifest claim found the version taken, or the version a write's
+  * inputs were read at is no longer the latest. The one failure a
+  * commutative commit (append, key delete) retries; every other commit
+  * surfaces it. */
+final class CommitConflict(msg: String) extends IllegalStateException(msg)
+
 /** The commit seam: every crash-safe publish in this library reduces
   * to ONE primitive — make a small control file (a manifest, a version
   * claim) visible at a destination all-or-nothing, failing cleanly if
@@ -55,7 +62,7 @@ private[graft] object Commit {
         catch {
           // only a LOST CLAIM maps to false; genuine IO failures
           // (permissions, quota, connectivity) must surface, not be
-          // masked as "committed concurrently"
+          // masked as a commit conflict
           case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
           case _: java.nio.file.FileAlreadyExistsException        => return false
         }

@@ -70,11 +70,25 @@ import graft.Tables.{parquetSchemaDriver, readParquetNoInfer}
   * data dir no reader references; [[pruneVersions]] reclaims those
   * along with expired versions.
   *
+  * Write path: a DataFrame enters through ONE entry point,
+  * [[writeVersion]]`(df, dir, mode, partCols)` — append or overwrite,
+  * partitioned or not — and every new data version, DataFrame-written,
+  * staged by an external writer, or metadata-only (a truncate, an empty
+  * streaming epoch, an empty REPLACE), commits through one function,
+  * [[writeVersionCore]]. What an overwrite keeps of its parent is one
+  * function too, [[carriedDefinition]], so an empty version keeps
+  * exactly what a data-bearing one keeps.
+  *
   * Concurrency: version numbers are claimed by the manifest commit —
   * the claim fails on an existing destination on every scheme,
-  * surfacing concurrent writers instead of silently dropping one
-  * (single-writer is the expectation, as in the reference's Airflow
-  * `max_active_runs=1`, `mnt/airflow/dags/yelp_pipeline.py:21`).
+  * surfacing concurrent writers as a [[CommitConflict]] instead of
+  * silently dropping one (single-writer is the expectation, as in the
+  * reference's Airflow `max_active_runs=1`,
+  * `mnt/airflow/dags/yelp_pipeline.py:21`). The operation decides the
+  * retry, not the caller: appends and key deletes commute with
+  * concurrent commits and retry a lost race at the next version;
+  * overwrites and file rewrites replace state they have not seen and
+  * surface it.
   *
   * Scale shape: manifests are line lists of directories plus one
   * schema and per-dir stats (bytes per version); reads plan ONE
@@ -441,8 +455,9 @@ object Versioned {
       // assignment expression (raise_error fires inside the single
       // write pass — no validation job); BY DEFAULT keeps them.
       // Uniqueness against concurrent writers: the commit refuses
-      // when its parent is not the version this assignment read
-      // (identityBasis below), and the retry wrappers re-fill.
+      // when its parent is not the version this assignment read (the
+      // read basis [[writeVersionCore]] checks), and an append's retry
+      // re-fills.
       var idBasis: Option[Int] = None
       val withIds = logical.fold(filled) { s =>
         identityColumnsOf(s).foldLeft(filled) { (d, spec) =>
@@ -1048,18 +1063,7 @@ object Versioned {
       s"$dir holds parquet in NESTED subdirectories without a hive layout — " +
         "CONVERT adopts flat or hive-partitioned tables only; flatten or " +
         "declare the partition columns")
-    val inferred = asNullable(spark.read.parquet(dir).schema)
-    partCols.foreach { c =>
-      require(inferred.fieldNames.contains(c),
-        s"partition column '$c' not in inferred schema ${inferred.fieldNames.mkString(",")}")
-      require(Skipping.partitionableType(inferred(c).dataType),
-        s"partition column '$c' has type ${inferred(c).dataType} — hive-path-exact " +
-          "types only (string/int/long/short/byte/date/boolean)")
-    }
-    // recorded read order: data columns first, partition columns last
-    val schema = StructType(
-      inferred.fields.filterNot(f => partCols.contains(f.name)) ++
-        partCols.map(c => inferred(c)))
+    val schema = partitionedReadOrder(asNullable(spark.read.parquet(dir).schema), partCols)
     val (rows, cols, files) =
       if (partCols.isEmpty) Skipping.collectDirStats(spark, root, schema)
       else Skipping.collectDirStatsPartitioned(spark, root, schema,
@@ -1129,7 +1133,12 @@ object Versioned {
     }
     walk(srcRoot)
     if (found.isEmpty) return None
-    withCommitRetry { () =>
+    var loaded = 0
+    // an append: each attempt re-reads the ledger, and its read version
+    // pins the commit — anything committed between the skip-set read
+    // and the claim refuses and retries, so two racing copyInto runs
+    // can never both load a file
+    commitFrame(spark, dir, SaveMode.Append) { () =>
       val prev = latestVersion(spark, dir).getOrElse(
         throw new IllegalArgumentException(
           s"COPY INTO needs an existing table at $dir — CREATE it first " +
@@ -1164,29 +1173,16 @@ object Versioned {
         val feat: Seq[Line] =
           if (snap.hasFeature("ingest")) Seq.empty
           else Seq(FeatureEntry("ingest", required = false))
-        val extra = feat ++ fresh.map(IngestEntry)
-        val (out, idFilled) = prepareWrite(aligned, dir, translate = true)
-        // the basis pins the LEDGER read: anything committed between
-        // the skip-set read and the claim refuses (phrase-matched by
-        // withCommitRetry), and the retry re-reads the ledger — two
-        // racing copyInto runs can never both load a file
-        val basis = idFilled.orElse(Some(prev))
-        val v = writeVersionCore(spark, dir, SaveMode.Append,
-          txn = None,
-          partitionBy = if (partCols.isEmpty) None
-            else Some(StructType(partCols.map(c => logical(c)))),
-          extraLines = extra, identityBasis = basis) { tmp =>
-          val w = optimizeWriteShape(out, dir, partCols).write
-            .mode(SaveMode.ErrorIfExists)
-          (if (partCols.isEmpty) w else w.partitionBy(partCols: _*)).parquet(tmp)
-        }.get
-        maintenanceTick(spark, dir)
-        val added = addedDataDirs(spark, dir, v)
-          .map(a => a.substring(a.lastIndexOf('/') + 1)).toSet
-        val rows = snapshot(spark, dir, v).stats.valuesIterator
-          .filter(s => added.contains(s.name)).map(_.rows).sum
-        Some((fresh.length, rows, v))
+        loaded = fresh.length
+        Some(Frame(aligned, partCols, readAt = Some(prev),
+          extra = _ => feat ++ fresh.map(IngestEntry)))
       }
+    }.map { v =>
+      val added = addedDataDirs(spark, dir, v)
+        .map(a => a.substring(a.lastIndexOf('/') + 1)).toSet
+      val rows = snapshot(spark, dir, v).stats.valuesIterator
+        .filter(s => added.contains(s.name)).map(_.rows).sum
+      (loaded, rows, v)
     }
   }
 
@@ -1203,25 +1199,35 @@ object Versioned {
       else Some(commitChild(spark, dir, snap, Seq("-ingest")))
     }
 
-  /** Commit `df` as the next version. `SaveMode.Overwrite` starts the
-    * table state from this write alone; `SaveMode.Append` extends the
-    * previous version's file set. Returns the committed version. The
-    * manifest publishes through [[Commit.putIfAbsent]], so `dir`'s
-    * scheme picks the commit primitive. */
+  /** Commit `df` as the next version — the one DataFrame entry point.
+    * `SaveMode.Overwrite` starts the table state from this write alone
+    * (keeping the table's definition, [[carriedDefinition]]);
+    * `SaveMode.Append` extends the previous version's file set.
+    * `partCols` lay the rows out hive-style
+    * (`dataDir/col=value/part-*.parquet`) inside the commit's single
+    * data dir: the manifest records the partition spec and each file's
+    * partition values as exact per-file bounds, so a filter on a
+    * partition column prunes from manifest bytes at plan time. Appends
+    * must use the table's partition columns; partition column types
+    * are the hive-path-exact set (string/int/long/short/byte/date/
+    * boolean).
+    *
+    * Retry contract: an APPEND commutes with concurrent appends and
+    * deletes, so a lost version race retries at the next version —
+    * each attempt re-reads the table and writes a fresh uniquely-named
+    * data dir, and losers' dirs stay invisible until pruned. An
+    * OVERWRITE replaces state it has not seen, so a lost race surfaces
+    * as a [[CommitConflict]] to the caller, who may no longer want the
+    * overwrite at all — the same reason Delta fails conflicting
+    * non-commutative commits. The manifest publishes through
+    * [[Commit.putIfAbsent]], so `dir`'s scheme picks the commit
+    * primitive. Returns the committed version — the latest one when a
+    * partitioned append lands no rows (nothing commits). */
   def writeVersion(df: DataFrame, dir: String,
-                   mode: SaveMode = SaveMode.Overwrite): Int = {
-    // omitted GENERATED columns fill, and a renamed chain's APPEND
-    // lands PHYSICAL column names (an overwrite resets the physical
-    // layout from its own files and needs no translation —
-    // writeVersionCore drops the mapping): one manifest resolve
-    val (out, idFilled) = prepareWrite(df, dir, translate = mode == SaveMode.Append)
-    val v = writeVersionCore(df.sparkSession, dir, mode, txn = None,
-      identityBasis = idFilled)(tmp =>
-      optimizeWriteShape(out, dir, Seq.empty).write
-        .mode(SaveMode.ErrorIfExists).parquet(tmp)).get
-    maintenanceTick(df.sparkSession, dir)
-    v
-  }
+                   mode: SaveMode = SaveMode.Overwrite,
+                   partCols: Seq[String] = Seq.empty): Int =
+    commitFrame(df.sparkSession, dir, mode)(() => Some(Frame(df, partCols)))
+      .getOrElse(requireLatest(df.sparkSession, dir))
 
   /** [[writeVersion]] with a caller-supplied data writer — the
     * [[ManifestStore]] rewrite hook: `write` receives the immutable
@@ -1237,7 +1243,7 @@ object Versioned {
   def writeVersionWith(spark: SparkSession, dir: String,
                        mode: SaveMode = SaveMode.Overwrite)
                       (write: String => Unit): Int =
-    writeVersionCore(spark, dir, mode, txn = None)(write).get
+    writeVersionCore(spark, dir, mode, txn = None, WriteNow(write, None)).get
 
   /** Exactly-once STREAMING sink commit (Delta's (appId, batchId)
     * idempotent-txn design, public in the Delta paper/docs): commit
@@ -1247,94 +1253,92 @@ object Versioned {
     * from the manifest (same appId, batchId ≤ recorded) and skipped
     * BEFORE any data is written; the check re-runs inside every OCC
     * retry, so a replay can't slip in behind a concurrent commit.
-    * Append-mode batches commute with concurrent appends/deletes
-    * (bounded retry); Complete-mode overwrites surface a lost race
-    * like every overwrite. Returns the committed version, or None for
-    * a skipped replay. */
+    * [[writeVersion]]'s retry contract: Append-mode batches retry a
+    * lost race, Complete-mode overwrites surface it. An empty
+    * partitioned batch lands no file: Append skips it, Complete commits
+    * the empty state metadata-only. Returns the committed version, or
+    * None for a skipped replay or empty append. */
   def writeVersionStreamBatch(df: DataFrame, dir: String, appId: String,
                               batchId: Long, mode: SaveMode = SaveMode.Append,
                               partCols: Seq[String] = Seq.empty): Option[Int] = {
     require(appId.nonEmpty, "appId must be non-empty")
-    val attempt: () => Option[Int] =
-      if (partCols.isEmpty) { () =>
-        // re-resolve the column mapping (and fill omitted GENERATED
-        // columns) PER ATTEMPT: a concurrent rename between OCC
-        // retries must not leave this batch's files under stale names
-        val (out, idFilled) = prepareWrite(df, dir, translate = mode == SaveMode.Append)
-        writeVersionCore(df.sparkSession, dir, mode,
-          txn = Some((appId, batchId)), identityBasis = idFilled)(tmp =>
-          optimizeWriteShape(out, dir, Seq.empty).write
-            .mode(SaveMode.ErrorIfExists).parquet(tmp))
-      } else { () =>
-        // PARTITIONED sink (`writeStream.partitionBy(...)`): each
-        // batch lands hive-laid-out inside its commit's data dir —
-        // the first batch may CREATE the partitioned chain, appends
-        // must match the recorded spec as for any partitioned write.
-        // An EMPTY batch needs care: a partitionBy write of zero rows
-        // produces no files at all (no partition values to name the
-        // dirs), so Append skips it outright (nothing to land —
-        // exactly-once holds by vacuity) and Complete commits the
-        // empty state METADATA-ONLY, schema + spec + txn watermark.
-        // fill omitted GENERATED columns + translate PER ATTEMPT, same
-        // boundary as every append entry point (the partition column
-        // may itself be generated); the TRANSLATED schema names equal
-        // the logical ones for partition columns (never renamed)
-        val (out, idFilled) = prepareWrite(df, dir, translate = mode == SaveMode.Append)
-        val schema = out.schema
-        partCols.foreach { c =>
-          require(schema.fieldNames.contains(c),
-            s"partition column '$c' not in ${schema.fieldNames.mkString(",")}")
-          require(Skipping.partitionableType(schema(c).dataType),
-            s"partition column '$c' has type ${schema(c).dataType} — hive-path-exact " +
-              "types only (string/int/long/short/byte/date/boolean)")
-        }
-        if (out.isEmpty) {
-          if (mode == SaveMode.Append) None
-          else emptyPartitionedStreamCommit(df.sparkSession, dir, appId, batchId,
-            schema, partCols)
-        } else {
-          writeVersionCore(df.sparkSession, dir, mode,
-            txn = Some((appId, batchId)),
-            partitionBy = Some(StructType(partCols.map(c => schema(c)))),
-            identityBasis = idFilled)(tmp =>
-            optimizeWriteShape(out, dir, partCols).write
-              .partitionBy(partCols: _*).mode(SaveMode.ErrorIfExists).parquet(tmp))
-        }
-      }
-    val r =
-      if (mode == SaveMode.Append) withCommitRetry(attempt)
-      else attempt()
-    // the epoch stream is THE small-file generator autoCompact exists
-    // for — tick after every committed (not replayed/empty) epoch
-    if (r.nonEmpty) maintenanceTick(df.sparkSession, dir)
-    r
+    commitFrame(df.sparkSession, dir, mode, txn = Some((appId, batchId)))(() =>
+      Some(Frame(df, partCols)))
   }
 
-  /** Complete-mode empty epoch on a partitioned sink: the overwrite
-    * that truncates — recorded schema, partition spec, constraints
-    * carried, txn watermark, zero data dirs. */
-  private def emptyPartitionedStreamCommit(spark: SparkSession, dir: String,
-                                           appId: String, batchId: Long,
-                                           schema: StructType,
-                                           partCols: Seq[String]): Option[Int] = {
-    val prev = latestVersion(spark, dir)
-    val prevSnap = prev.map(snapshot(spark, dir, _))
-    if (prevSnap.exists(_.txns.get(appId).exists(batchId <= _))) return None
-    val ordered = StructType(
-      schema.fields.filterNot(f => partCols.contains(f.name)) ++
-        partCols.map(c => schema(c)))
-    val carried = prevSnap.toSeq.flatMap(_.lines.collect {
-      case c: ConstraintEntry => c
-      // other writers' replay guards ride through this overwrite too
-      case t: TxnEntry if t.appId != appId => t
-    })
-    val v = prev.map(_ + 1).getOrElse(0)
-    commitManifest(spark, dir, v,
-      (SchemaEntry(asNullable(ordered)) +:
-        (Seq[Line](PartitionEntry(partCols)) ++ carried :+
-          TxnEntry(batchId, appId))).map(renderLine))
-    Some(v)
+  /** One attempt's input to [[commitFrame]]: the rows to land, their
+    * partition columns, the version the attempt's inputs were read at
+    * (the commit refuses as a [[CommitConflict]] when anything landed
+    * since), and the lines the version records beside the rows, given
+    * the prepared frame. */
+  private final case class Frame(df: DataFrame, partCols: Seq[String] = Seq.empty,
+                                 readAt: Option[Int] = None,
+                                 extra: DataFrame => Seq[Line] = _ => Seq.empty)
+
+  /** A DataFrame made ready to land at `dir`: omitted GENERATED and
+    * IDENTITY columns filled (and translated to the chain's physical
+    * names when `translate`), the partition columns checked, the
+    * writer that lands it — reshaped by optimize-write, hive-laid-out
+    * by `partCols` — in the dir it is handed, and the version the
+    * identity fill read. */
+  private final case class Prepared(out: DataFrame, rows: WriteNow,
+                                    partitionBy: Option[StructType], idBasis: Option[Int])
+
+  private def prepare(df: DataFrame, dir: String, partCols: Seq[String],
+                      translate: Boolean): Prepared = {
+    val (out, idBasis) = prepareWrite(df, dir, translate)
+    val schema = partitionedReadOrder(out.schema, partCols)
+    Prepared(out, WriteNow({ path =>
+      val w = optimizeWriteShape(out, dir, partCols).write.mode(SaveMode.ErrorIfExists)
+      (if (partCols.isEmpty) w else w.partitionBy(partCols: _*)).parquet(path)
+    }, Some(schema)), partitionSchema(schema, partCols), idBasis)
   }
+
+  /** The one body from DataFrame to version: each attempt takes its
+    * [[Frame]] from `next` (None = nothing to commit), prepares it —
+    * an APPEND's rows translate to the chain's physical names, an
+    * overwrite resets the layout and needs none — and commits it
+    * through [[writeVersionCore]]. An append retries a lost race
+    * ([[withCommitRetry]]: every attempt re-resolves the table, so a
+    * concurrent rename or identity advance is seen); an overwrite
+    * surfaces it. The post-commit maintenance tick runs once, after
+    * the commit and outside the retry. */
+  private def commitFrame(spark: SparkSession, dir: String, mode: SaveMode,
+                          txn: Option[(String, Long)] = None)
+                         (next: () => Option[Frame]): Option[Int] = {
+    def attempt(): Option[Int] = next().flatMap { f =>
+      val p = prepare(f.df, dir, f.partCols, translate = mode == SaveMode.Append)
+      writeVersionCore(spark, dir, mode, txn, p.rows, partitionBy = p.partitionBy,
+        extraLines = f.extra(p.out), readAt = f.readAt.orElse(p.idBasis))
+    }
+    val v = if (mode == SaveMode.Append) withCommitRetry(() => attempt()) else attempt()
+    // the epoch stream is THE small-file generator autoCompact exists
+    // for — tick after every committed (not replayed/empty) write
+    if (v.nonEmpty) maintenanceTick(spark, dir)
+    v
+  }
+
+  /** `schema` in the recorded read order — data columns first,
+    * partition columns last, what Spark's partitioned reader emits —
+    * after checking each partition column exists with a
+    * hive-path-exact type. */
+  private def partitionedReadOrder(schema: StructType, partCols: Seq[String]): StructType = {
+    partCols.foreach { c =>
+      require(schema.fieldNames.contains(c),
+        s"partition column '$c' not in ${schema.fieldNames.mkString(",")}")
+      require(Skipping.partitionableType(schema(c).dataType),
+        s"partition column '$c' has type ${schema(c).dataType} — hive-path-exact " +
+          "types only (string/int/long/short/byte/date/boolean)")
+    }
+    if (partCols.isEmpty) schema
+    else StructType(schema.fields.filterNot(f => partCols.contains(f.name)) ++
+      partCols.map(schema(_)))
+  }
+
+  /** The partition columns' fields of `schema`; None for an
+    * unpartitioned write. */
+  private def partitionSchema(schema: StructType, partCols: Seq[String]): Option[StructType] =
+    if (partCols.isEmpty) None else Some(StructType(partCols.map(schema(_))))
 
   /** Claim a data-dir NAME for a write whose bytes an external engine
     * will produce (the DSv2 row-level ReplaceData write): nonce'd and
@@ -1353,8 +1357,24 @@ object Versioned {
     * A lost version race surfaces (overwrite semantics). */
   private[graft] def commitStagedOverwrite(spark: SparkSession, dir: String,
                                            dataDir: String): Int =
+    writeVersionCore(spark, dir, SaveMode.Overwrite, txn = None, Staged(dataDir)).get
+
+  /** SQL `DELETE FROM t` with no WHERE — and a copy-on-write rewrite
+    * that removed every row: the next version is the table's own
+    * (logical) schema and partition spec with zero data dirs, and it
+    * keeps everything a data overwrite keeps ([[carriedDefinition]]).
+    * A lost version race surfaces (overwrite semantics). */
+  private[graft] def truncate(spark: SparkSession, dir: String): Int = {
+    val v = requireLatest(spark, dir)
+    val snap = snapshot(spark, dir, v)
+    val schema = toLogicalSchema(schemaOf(spark, snap), snap.colMap)
+    val partCols = snap.partitionCols
+    // the schema and spec were read at v: a commit since (an ALTER)
+    // surfaces instead of being overwritten by the stale definition
     writeVersionCore(spark, dir, SaveMode.Overwrite, txn = None,
-      preWritten = Some(dataDir))(_ => ()).get
+      NoRows(partitionedReadOrder(schema, partCols)),
+      partitionBy = partitionSchema(schema, partCols), readAt = Some(v)).get
+  }
 
   /** FILE-GRANULAR copy-on-write commit (Delta's rewrite-touched-files
     * role): publish a new version that removes exactly the `removed`
@@ -1714,24 +1734,21 @@ object Versioned {
       identityBasis = identityBasis)
   }
 
-  /** [[writeVersionPartitioned]] with DYNAMIC overwrite semantics:
-    * only the partitions present in `df` are replaced; all others
-    * carry verbatim. Returns the committed version, None for an
+  /** [[writeVersion]] of a partitioned table with DYNAMIC overwrite
+    * semantics: only the partitions present in `df` are replaced; all
+    * others carry verbatim. Returns the committed version, None for an
     * empty input. */
   def writeVersionPartitionedDynamic(df: DataFrame, dir: String, partCols: Seq[String])
       : Option[Int] = {
     require(partCols.nonEmpty, "partCols must be non-empty")
     val spark = df.sparkSession
     val staged = stageDataDir(spark, dir)
-    // omitted GENERATED columns (identity included) fill first;
     // staged files land BESIDE the chain's existing files — a renamed
     // chain needs them in PHYSICAL names like any append
-    val (outDyn, idFilledDyn) = prepareWrite(df, dir, translate = true)
-    optimizeWriteShape(outDyn, dir, partCols).write
-      .partitionBy(partCols: _*).mode(SaveMode.ErrorIfExists)
-      .parquet(new Path(new Path(dir), staged).toString)
+    val p = prepare(df, dir, partCols, translate = true)
+    p.rows.write(new Path(new Path(dir), staged).toString)
     val r = commitDynamicPartitionOverwrite(spark, dir, staged, partCols,
-      identityBasis = idFilledDyn)
+      identityBasis = p.idBasis)
     if (r.nonEmpty) maintenanceTick(spark, dir)
     r
   }
@@ -1746,61 +1763,28 @@ object Versioned {
     * dir with no parquet content (empty CTAS result, REPLACE TABLE
     * without a select) commits METADATA-ONLY: the declared schema and
     * partition spec with zero data dirs — the same empty-table shape
-    * [[createTable]] commits. */
+    * [[createTable]] commits. A REPLACE starts a new definition: of
+    * the old version it keeps only the txn watermarks (they guard a
+    * writer's replay, not the table), empty or not. */
   private[graft] def commitStagedTable(spark: SparkSession, dir: String,
                                        stagedDir: String, declared: StructType,
-                                       partCols: Seq[String], fresh: Boolean,
-                                       replaceDefinition: Boolean = true): Int = {
+                                       partCols: Seq[String], fresh: Boolean): Int = {
     val (fs, root) = fsFor(spark, dir)
     val stagedPath = new Path(root, stagedDir)
     val hasContent = fs.exists(stagedPath) &&
       CommitFiles.parquetUnder(spark, Seq(stagedPath.toString)).nonEmpty
-    if (hasContent) {
-      val partitionBy =
-        if (partCols.isEmpty) None
-        else Some(StructType(partCols.map(c => declared(c))))
+    // CTAS nullability follows the file-source convention: the
+    // query's schema lands fully-nullable (a literal-derived
+    // non-nullable column is an artifact of the query, not a declared
+    // contract — NOT NULL comes from explicit CREATE TABLE column
+    // syntax or CALL system.set_not_null)
+    if (!hasContent && fresh) createTable(spark, dir, asNullable(declared), partCols)
+    else {
+      val ordered = partitionedReadOrder(declared, partCols)
       writeVersionCore(spark, dir, SaveMode.Overwrite, txn = None,
-        partitionBy = partitionBy, preWritten = Some(stagedDir),
-        requireFresh = fresh, replaceDefinition = replaceDefinition)(_ => ()).get
-    } else if (fresh) {
-      // CTAS nullability follows the file-source convention: the
-      // query's schema lands fully-nullable (a literal-derived
-      // non-nullable column is an artifact of the query, not a
-      // declared contract — NOT NULL comes from explicit CREATE TABLE
-      // column syntax or CALL system.set_not_null)
-      createTable(spark, dir, asNullable(declared), partCols)
-    } else {
-      // empty REPLACE over an existing chain: a metadata-only
-      // overwrite version — schema (and spec) kept, zero data dirs.
-      // RTAS (`replaceDefinition`) starts the new table without the
-      // old constraints; a DATA rewrite that removed every row keeps
-      // them — the table's contract survives its own truncation
-      val prev = latestVersion(spark, dir).getOrElse(
-        throw new IllegalArgumentException(s"no versions at $dir to replace"))
-      // txn watermarks survive even an RTAS: they guard a WRITER's
-      // replay, not the table's definition — a stream whose epoch was
-      // committed before the replace must still skip its re-delivery
-      // the empty state records the LOGICAL schema and no mapping
-      // (there are no files left to name), so carried NOT NULL lines
-      // (physical-keyed) rename to logical with it
-      val prevSnap = snapshot(spark, dir, prev)
-      val prevInv = prevSnap.colMap.map(_.swap)
-      val carried = prevSnap.lines.collect {
-        case t: TxnEntry => t
-        case c: ConstraintEntry if !replaceDefinition => c
-        case n: NotNullEntry if !replaceDefinition => NotNullEntry(prevInv.getOrElse(n.col, n.col))
-        case p: PropEntry if !replaceDefinition => p
-      }
-      val ordered =
-        if (partCols.isEmpty) declared
-        else StructType(declared.fields.filterNot(f => partCols.contains(f.name)) ++
-          partCols.map(c => declared(c)))
-      val ls: Seq[Line] = SchemaEntry(asNullable(ordered)) +:
-        ((if (partCols.isEmpty) Seq.empty[Line] else Seq[Line](PartitionEntry(partCols))) ++
-          carried)
-      val v = prev + 1
-      commitManifest(spark, dir, v, ls.map(renderLine))
-      v
+        if (hasContent) Staged(stagedDir) else NoRows(ordered),
+        partitionBy = partitionSchema(ordered, partCols),
+        requireFresh = fresh, replaceDefinition = true).get
     }
   }
 
@@ -1808,44 +1792,6 @@ object Versioned {
     * bytes (None for a writer the table has never seen). */
   def lastCommittedBatch(spark: SparkSession, dir: String, appId: String): Option[Long] =
     latestVersion(spark, dir).flatMap(v => snapshot(spark, dir, v).txns.get(appId))
-
-  /** [[writeVersion]] with PARTITION COLUMNS: rows land hive-laid-out
-    * (`dataDir/col=value/part-*.parquet`) inside the commit's single
-    * immutable data dir, the manifest records the partition spec and
-    * each file's partition values as exact per-file bounds, and reads
-    * serve through the partition-aware [[ManifestFileIndex]] — a
-    * filter on a partition column prunes as `PartitionFilters` at
-    * plan time from manifest bytes, composed with time travel, dv
-    * masks, and the value-stats skipping (one evaluator: a partition
-    * value IS a min=max stat). Appends must use the same partition
-    * columns; mixing partitioned and unpartitioned commits in one
-    * chain refuses. Partition column types are the hive-path-exact
-    * set (string/int/long/short/byte/date/boolean). */
-  def writeVersionPartitioned(df: DataFrame, dir: String, partCols: Seq[String],
-                              mode: SaveMode = SaveMode.Overwrite): Int = {
-    require(partCols.nonEmpty, "partCols must be non-empty — use writeVersion")
-    // omitted GENERATED columns fill first (they may BE the partition
-    // columns — partition-by-derived-date is the canonical use); a
-    // renamed chain's APPEND lands PHYSICAL column names (partition
-    // columns are never renamed, so partCols needs no translation)
-    val (out, idFilled) = prepareWrite(df, dir, translate = mode == SaveMode.Append)
-    val schema = out.schema
-    partCols.foreach { c =>
-      require(schema.fieldNames.contains(c), s"partition column '$c' not in ${schema.fieldNames.mkString(",")}")
-      require(Skipping.partitionableType(schema(c).dataType),
-        s"partition column '$c' has type ${schema(c).dataType} — hive-path-exact " +
-          "types only (string/int/long/short/byte/date/boolean)")
-    }
-    // recorded read order: data columns first, partition columns last
-    // (what Spark's partitioned reader emits)
-    val partSchema = StructType(partCols.map(c => schema(c)))
-    val v = writeVersionCore(df.sparkSession, dir, mode, txn = None,
-      partitionBy = Some(partSchema), identityBasis = idFilled)(tmp =>
-      optimizeWriteShape(out, dir, partCols).write
-        .partitionBy(partCols: _*).mode(SaveMode.ErrorIfExists).parquet(tmp)).get
-    maintenanceTick(df.sparkSession, dir)
-    v
-  }
 
   /** Delta OPTIMIZE WRITE's role — reshape a batch about to land so
     * its file count tracks the AQE advisory size instead of the
@@ -2154,15 +2100,37 @@ object Versioned {
     }
   }
 
+  /** The data of a new version, as [[writeVersionCore]] commits it. */
+  private sealed trait VersionData
+  /** Rows written now: `write` lands them in the fresh data dir it is
+    * handed. A partitioned write that lands no file (zero rows name no
+    * partition dir) commits `schema` metadata-only; None refuses it. */
+  private final case class WriteNow(write: String => Unit,
+                                    schema: Option[StructType]) extends VersionData
+  /** Rows an external writer already staged in `dataDir`, a dir name
+    * under the table root ([[stageDataDir]]). */
+  private final case class Staged(dataDir: String) extends VersionData
+  /** No rows: a metadata-only version of the declared `schema`, in
+    * read order. */
+  private final case class NoRows(schema: StructType) extends VersionData
+
+  /** The one version commit behind every DataFrame write, staged
+    * publish and metadata-only overwrite: harvest the new data dir's
+    * footers (schema + stats), validate its rows against the table's
+    * CHECK, GENERATED and NOT NULL declarations, then publish — an
+    * APPEND as O(delta) ops over its parent, an OVERWRITE as a full
+    * manifest holding what [[carriedDefinition]] keeps of the parent.
+    * `readAt` is the version the write's inputs were read at (an
+    * identity fill's high-water mark, a COPY INTO ledger, a change
+    * feed's pre-image). Returns None for a replayed streaming batch and
+    * for an append that lands no rows. */
   private def writeVersionCore(spark: SparkSession, dir: String, mode: SaveMode,
-                               txn: Option[(String, Long)],
+                               txn: Option[(String, Long)], data: VersionData,
                                partitionBy: Option[StructType] = None,
                                extraLines: Seq[Line] = Seq.empty,
-                               preWritten: Option[String] = None,
                                requireFresh: Boolean = false,
                                replaceDefinition: Boolean = false,
-                               identityBasis: Option[Int] = None)
-                              (write: String => Unit): Option[Int] = {
+                               readAt: Option[Int] = None): Option[Int] = {
     require(mode == SaveMode.Overwrite || mode == SaveMode.Append,
       s"versioned writes are Overwrite or Append, got $mode")
     val (fs, root) = fsFor(spark, dir)
@@ -2174,16 +2142,16 @@ object Versioned {
     // put-if-absent itself fail
     if (requireFresh) require(prev.isEmpty,
       s"table $dir was created concurrently — retry as REPLACE, or drop it")
-    // IDENTITY assignment basis: the fill read the high-water mark of
-    // a specific version; if anything committed since, the assigned
-    // values may collide with the interloper's — refuse BEFORE any
-    // byte is written and let the retry wrappers re-fill. (The
-    // version claim below closes the remaining window: a commit that
-    // lands after this check makes the put-if-absent itself fail.)
-    identityBasis.foreach { b =>
-      if (!prev.contains(b)) throw new IllegalStateException(
-        s"identity assignment at $dir was based on version $b but the table is " +
-          s"now at ${prev.getOrElse(-1)} — committed concurrently — retry the write")
+    // the read basis: if anything committed since, the assigned
+    // identity values (or the skipped ledger files, or the recorded
+    // feed) may collide with the interloper's — refuse BEFORE any byte
+    // is written and let a commutative caller retry. (The version claim
+    // below closes the remaining window: a commit that lands after
+    // this check makes the put-if-absent itself fail.)
+    readAt.foreach { b =>
+      if (!prev.contains(b)) throw new CommitConflict(
+        s"write at $dir was based on version $b but the table is now at " +
+          s"${prev.getOrElse(-1)} — committed concurrently — retry the write")
     }
     val v = prev.map(_ + 1).getOrElse(0)
     // a streaming sink's first batch may CREATE the table; a plain
@@ -2198,14 +2166,6 @@ object Versioned {
       prevSnap.exists(_.txns.get(appId).exists(batchId <= _))
     }
     if (replay) return None
-    // the nonce makes the data dir unique PER ATTEMPT (Delta writes
-    // uniquely-named files for the same reason): two writers racing
-    // the same version number each write their own dir, the manifest
-    // claim picks the winner, and the loser's dir is an invisible
-    // orphan for [[pruneVersions]] — without it the loser would
-    // clobber the winner's in-flight data. A crashed attempt's dir is
-    // equally invisible (no manifest references it) and needs no
-    // clearing for the retry, which gets a fresh nonce.
     // a partitioned chain stays partitioned the same way: appends with
     // a different (or no) spec would mix layouts one read can't serve
     val prevPart = prevSnap.map(_.partitionCols).filter(_.nonEmpty)
@@ -2215,30 +2175,60 @@ object Versioned {
         s"append partitioning ${want.getOrElse("none")} does not match the table's " +
           s"${prevPart.getOrElse("none")} — overwrite to change the layout")
     }
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    val dataDir = preWritten.getOrElse(f"v$v%08d_data_$nonce")
-    val dataPath = new Path(root, dataDir)
-    // data first (invisible until the manifest lands) — already on
-    // disk for a staged (ReplaceData) commit …
-    if (preWritten.isEmpty) write(dataPath.toString)
+    // the data first (invisible until the manifest lands). The nonce
+    // makes a written dir unique PER ATTEMPT (Delta writes
+    // uniquely-named files for the same reason): two writers racing
+    // the same version number each write their own dir, the manifest
+    // claim picks the winner, and the loser's dir is an invisible
+    // orphan for [[pruneVersions]] — without it the loser would
+    // clobber the winner's in-flight data. A crashed attempt's dir is
+    // equally invisible and needs no clearing for the retry.
+    val (dataDir, declared) = data match {
+      case Staged(d)  => (Some(d), None)
+      case NoRows(sc) => (None, Some(sc))
+      case WriteNow(write, sc) =>
+        val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+        val d = f"v$v%08d_data_$nonce"
+        val p = new Path(root, d)
+        write(p.toString)
+        val landed = partitionBy.isEmpty || fs.exists(p) && fs.listStatus(p).exists { st =>
+          val n = st.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".")
+        }
+        if (landed) (Some(d), None)
+        else {
+          fs.delete(p, true)
+          (None, Some(sc.getOrElse(throw new IllegalArgumentException(
+            s"write to $dir landed no parquet file"))))
+        }
+    }
+    // nothing to land: an append commits nothing (exactly-once holds
+    // by vacuity), an overwrite commits the empty state metadata-only
+    if (dataDir.isEmpty && mode == SaveMode.Append) return None
+    val dataPath = dataDir.map(new Path(root, _))
+    def refuse(msg: String): Nothing = {
+      if (data.isInstanceOf[WriteNow]) dataPath.foreach(fs.delete(_, true))
+      throw new IllegalArgumentException(msg)
+    }
     // footer harvest of the new dir only: schema + stats
-    val (dirSchema, harvested) = partitionBy match {
-      case Some(ps) =>
+    val (dirSchema, (rows, colStats, dirFiles)) = (dataPath, partitionBy) match {
+      case (None, _) =>
+        (asNullable(declared.get), (0L, Map.empty[String, ColStats], Seq.empty[FileStats]))
+      case (Some(p), Some(ps)) =>
         // read-back infers partition columns (appended last); their
         // TYPES are pinned to the caller's declaration, not to what
         // the path values happen to parse as
         // driver-side footer read — no schema-inference job per
         // commit; hive layout strips partition values into paths so
         // only data columns come back, partition fields append below
-        val inferred = parquetSchemaDriver(spark, Seq(dataPath.toString))
+        val inferred = parquetSchemaDriver(spark, Seq(p.toString))
         val s = asNullable(StructType(
           inferred.fields.filterNot(f => ps.fieldNames.contains(f.name)) ++ ps.fields))
-        (s, Skipping.collectDirStatsPartitioned(spark, dataPath, s, asNullable(ps)))
-      case None =>
-        val s = asNullable(parquetSchemaDriver(spark, Seq(dataPath.toString)))
-        (s, Skipping.collectDirStats(spark, dataPath, s))
+        (s, Skipping.collectDirStatsPartitioned(spark, p, s, asNullable(ps)))
+      case (Some(p), None) =>
+        val s = asNullable(parquetSchemaDriver(spark, Seq(p.toString)))
+        (s, Skipping.collectDirStats(spark, p, s))
     }
-    val (rows, colStats, dirFiles) = harvested
     // the chain's column mapping (logical→physical), empty when never
     // renamed. An APPEND's staged files must carry PHYSICAL names —
     // the df entry points translate ([[toPhysical]]); a raw
@@ -2248,88 +2238,41 @@ object Versioned {
     val chainMap = prevSnap.map(_.colMap).getOrElse(Map.empty)
     if (mode == SaveMode.Append && chainMap.nonEmpty) {
       dirSchema.fieldNames.find(n => chainMap.get(n).exists(_ != n)).foreach { n =>
-        if (preWritten.isEmpty) fs.delete(dataPath, true)
-        throw new IllegalArgumentException(
-          s"append to $dir staged column '$n', which is a RENAMED logical name — " +
-            s"files must carry the physical name '${chainMap(n)}'; write through " +
-            "writeVersion/appendVersionWithRetry (they translate) instead of a raw callback")
+        refuse(s"append to $dir staged column '$n', which is a RENAMED logical name — " +
+          s"files must carry the physical name '${chainMap(n)}'; write through " +
+          "writeVersion (it translates) instead of a raw callback")
       }
     }
     // parquet footers round-trip Spark field metadata, so a df read
     // FROM a generated table and written elsewhere would smuggle its
     // GENERATION_EXPRESSION into the new chain and silently turn on
-    // enforcement the user never declared — generation is DDL, so the
-    // footer-derived schema is STRIPPED of it here and the definition
+    // enforcement the user never declared — generation is DDL, so a
+    // written schema is STRIPPED of it here and the definition
     // re-enters only through the legitimate carriers (an append's
-    // union keeps the prior fields; an overwrite's re-attach below)
-    val dirSchemaClean = StructType(dirSchema.fields.map { f =>
-      if (!f.metadata.contains(GenerationKey) && !f.metadata.contains(IdStartKey)) f
-      else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).remove(GenerationKey)
-        .remove(IdStartKey).remove(IdStepKey).remove(IdAllowKey).build())
-    })
-    val newSchema0 = (mode, prevSnap) match {
-      case (SaveMode.Append, Some(p)) => unionSchema(schemaOf(spark, p), dirSchemaClean)
-      case _                          => dirSchemaClean
-    }
-    // do the STAGED files carry the chain's physical names? Appends do
-    // (translated entry points + the guard above); a staged
-    // (preWritten) overwrite does too — its bytes come from the
-    // catalog's physical-named writer; a PLAIN overwrite starts the
-    // physical layout fresh from its own files, so the mapping is
-    // dropped and its carried NOT NULL lines rename to logical below
-    val stagedPhysical = mode == SaveMode.Append || preWritten.nonEmpty
+    // union keeps the prior fields; an overwrite's carried
+    // definition; a metadata-only version's DECLARED schema)
+    val dirSchemaClean =
+      if (data.isInstanceOf[NoRows]) dirSchema
+      else StructType(dirSchema.fields.map { f =>
+        if (!f.metadata.contains(GenerationKey) && !f.metadata.contains(IdStartKey)) f
+        else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(f.metadata).remove(GenerationKey)
+          .remove(IdStartKey).remove(IdStepKey).remove(IdAllowKey).build())
+      })
+    // do the new files carry the chain's physical names? Appends do
+    // (translated entry points + the guard above); a staged overwrite
+    // does too — its bytes come from the catalog's physical-named
+    // writer; an overwrite written here (or with no files) starts the
+    // physical layout fresh, so the mapping drops and the carried
+    // physical-keyed lines rename to logical
+    val stagedPhysical = mode == SaveMode.Append || data.isInstanceOf[Staged]
     val stagedMap = if (stagedPhysical) chainMap else Map.empty[String, String]
     val invChain = chainMap.map(_.swap)
-    // column DEFAULTs are table definition carried as FIELD METADATA
-    // (CURRENT_DEFAULT / EXISTS_DEFAULT): an append's union keeps the
-    // prior fields (metadata included); a DATA overwrite re-attaches
-    // them to its footer-derived fields here — only REPLACE TABLE
-    // (replaceDefinition) starts without them
-    val newSchema = (mode, prevSnap) match {
-      case (SaveMode.Overwrite, Some(p)) if !replaceDefinition =>
-        val priorMd = schemaOf(spark, p).fields.map { f =>
-          (if (stagedPhysical) f.name else invChain.getOrElse(f.name, f.name)) -> f.metadata
-        }.toMap
-        StructType(newSchema0.fields.map { f =>
-          priorMd.get(f.name) match {
-            case Some(md) if md.contains("CURRENT_DEFAULT") || md.contains("EXISTS_DEFAULT") ||
-                md.contains(GenerationKey) || md.contains(IdStartKey) =>
-              val mb = new org.apache.spark.sql.types.MetadataBuilder()
-                .withMetadata(f.metadata)
-              if (md.contains("CURRENT_DEFAULT"))
-                mb.putString("CURRENT_DEFAULT", md.getString("CURRENT_DEFAULT"))
-              if (md.contains("EXISTS_DEFAULT"))
-                mb.putString("EXISTS_DEFAULT", md.getString("EXISTS_DEFAULT"))
-              // IDENTITY is table definition like DEFAULTs: a data
-              // overwrite keeps the declaration (and its hwm line
-              // rides the definition-carry below) — REPLACE TABLE
-              // starts clean
-              if (md.contains(IdStartKey)) {
-                mb.putLong(IdStartKey, md.getLong(IdStartKey))
-                mb.putLong(IdStepKey, md.getLong(IdStepKey))
-                if (md.contains(IdAllowKey))
-                  mb.putBoolean(IdAllowKey, md.getBoolean(IdAllowKey))
-              }
-              // GENERATED ALWAYS AS is table definition like DEFAULTs:
-              // a data overwrite re-attaches it to its footer-derived
-              // fields (REPLACE TABLE starts clean). An overwrite
-              // whose data OMITS a dependency column retires the
-              // declaration with it (the bloom-declaration precedent)
-              // — the expression could never evaluate again
-              if (md.contains(GenerationKey) &&
-                  constraintRefCols(spark, md.getString(GenerationKey)).forall(r =>
-                    // the expression text is LOGICAL; staged-physical
-                    // overwrites carry physical field names
-                    newSchema0.fieldNames.exists(n =>
-                      (if (stagedPhysical) invChain.getOrElse(n, n) else n)
-                        .equalsIgnoreCase(r))))
-                mb.putString(GenerationKey, md.getString(GenerationKey))
-              f.copy(metadata = mb.build())
-            case _ => f
-          }
-        })
-      case _ => newSchema0
+    val (newSchema, carried) = (mode, prevSnap) match {
+      case (SaveMode.Append, Some(p)) => (unionSchema(schemaOf(spark, p), dirSchemaClean), Seq.empty)
+      case (_, Some(p)) =>
+        carriedDefinition(spark, p, dirSchemaClean, stagedPhysical, replaceDefinition, txn)
+      case _ => (dirSchemaClean, Seq.empty)
     }
     // enforced CHECK constraints: validate the JUST-WRITTEN dir before
     // the commit — O(delta), one combined job in the passing case; a
@@ -2349,21 +2292,19 @@ object Versioned {
     val activeConstraints =
       if (replaceDefinition) Seq.empty
       else prevSnap.toSeq.flatMap(_.constraints.map(ConstraintEntry.tupled))
-    if (activeConstraints.nonEmpty) {
+    if (activeConstraints.nonEmpty && rows > 0) {
       import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
       def violates(c: ConstraintEntry) =
         not(coalesce(expr(c.predicateSql), lit(true)))
       // constraint predicates are LOGICAL sql text; the staged files
       // are physical — validate under the logical names
       val staged = toLogicalDf(
-        spark.read.schema(newSchema).parquet(dataPath.toString), stagedMap)
+        spark.read.schema(newSchema).parquet(dataPath.get.toString), stagedMap)
       if (!staged.filter(activeConstraints.map(violates).reduce(_ || _)).isEmpty) {
         val culprit = activeConstraints.find(c =>
           !staged.filter(violates(c)).isEmpty).get
-        if (preWritten.isEmpty) fs.delete(dataPath, true)
-        throw new IllegalArgumentException(
-          s"write to $dir violates CHECK constraint '${culprit.name}' " +
-            s"(${culprit.predicateSql}); nothing was committed")
+        refuse(s"write to $dir violates CHECK constraint '${culprit.name}' " +
+          s"(${culprit.predicateSql}); nothing was committed")
       }
     }
     // GENERATED columns: value <=> expr on every committed row — the
@@ -2378,7 +2319,7 @@ object Versioned {
     if (genCols.nonEmpty && rows > 0) {
       import org.apache.spark.sql.functions.{expr, not, col => fcol}
       val stagedG = toLogicalDf(
-        spark.read.schema(newSchema).parquet(dataPath.toString), stagedMap)
+        spark.read.schema(newSchema).parquet(dataPath.get.toString), stagedMap)
       def logicalName(n: String) = if (stagedPhysical) invChain.getOrElse(n, n) else n
       def violatesGen(n: String, sql: String) =
         not(fcol(logicalName(n)) <=> expr(sql))
@@ -2387,11 +2328,9 @@ object Versioned {
       if (!stagedG.filter(genCols.map((violatesGen _).tupled).reduce(_ || _)).isEmpty) {
         val (n, sql) = genCols.find { case (cn, csql) =>
           !stagedG.filter(violatesGen(cn, csql)).isEmpty }.get
-        if (preWritten.isEmpty) fs.delete(dataPath, true)
-        throw new IllegalArgumentException(
-          s"write to $dir violates GENERATED column '${logicalName(n)}' = ($sql) — " +
-            "provide the computed value, or omit the column on a library write " +
-            "(it fills itself); nothing was committed")
+        refuse(s"write to $dir violates GENERATED column '${logicalName(n)}' = ($sql) — " +
+          "provide the computed value, or omit the column on a library write " +
+          "(it fills itself); nothing was committed")
       }
     }
     // NOT NULL columns: validate the JUST-WRITTEN dir from its footer
@@ -2401,86 +2340,23 @@ object Versioned {
     // untrusted footer (no null count) pays a scan of the new dir.
     val activeNotNull =
       if (replaceDefinition) Seq.empty
-      else prevSnap.toSeq.flatMap(_.notNull.map(NotNullEntry))
-    if (activeNotNull.nonEmpty && rows > 0) {
-      activeNotNull.foreach { nn =>
-        // notnull lines are keyed PHYSICAL; a fresh overwrite's staged
-        // files (and harvested stats) use the logical names
-        val effCol = if (stagedPhysical) nn.col else invChain.getOrElse(nn.col, nn.col)
-        val violated = colStats.get(effCol) match {
-          case None                          => true // column absent from the dir
-          case Some(cs) => cs.nulls match {
-            case Some(n)                     => n > 0
-            case None =>
-              !spark.read.schema(newSchema).parquet(dataPath.toString)
-                .filter(org.apache.spark.sql.functions.col(effCol).isNull).isEmpty
-          }
-        }
-        if (violated) {
-          if (preWritten.isEmpty) fs.delete(dataPath, true)
-          throw new IllegalArgumentException(
-            s"write to $dir violates NOT NULL constraint on '$effCol'; " +
-              "nothing was committed")
+      else prevSnap.toSeq.flatMap(_.notNull)
+    if (rows > 0) activeNotNull.foreach { nn =>
+      // notnull lines are keyed PHYSICAL; a fresh overwrite's staged
+      // files (and harvested stats) use the logical names
+      val effCol = if (stagedPhysical) nn else invChain.getOrElse(nn, nn)
+      val violated = colStats.get(effCol) match {
+        case None                          => true // column absent from the dir
+        case Some(cs) => cs.nulls match {
+          case Some(n)                     => n > 0
+          case None =>
+            !spark.read.schema(newSchema).parquet(dataPath.get.toString)
+              .filter(org.apache.spark.sql.functions.col(effCol).isNull).isEmpty
         }
       }
-    }
-    // constraints are table DEFINITION, not data: an overwrite
-    // replaces the rows but keeps the contract (appends carry them
-    // from the parent)
-    val carriedConstraints = (mode, prev) match {
-      case (SaveMode.Overwrite, Some(_)) =>
-        // a fresh overwrite drops the column mapping (logical IS the
-        // new physical), so its carried NOT NULL lines rename with it
-        val nn = if (stagedPhysical) activeNotNull
-                 else activeNotNull.map(n => NotNullEntry(invChain.getOrElse(n.col, n.col)))
-        nn ++ activeConstraints
-      case _ => Seq.empty
-    }
-    // table PROPERTIES are definition too: a data overwrite keeps
-    // them, REPLACE TABLE resets them, appends inherit them
-    val carriedProps: Seq[Line] = (mode, prevSnap) match {
-      case (SaveMode.Overwrite, Some(p)) if !replaceDefinition =>
-        p.lines.filter(_.isInstanceOf[PropEntry])
-      case _ => Seq.empty
-    }
-    // the mapping itself: appends inherit it; a STAGED
-    // overwrite (catalog CoW rewrite — its files are physical-named)
-    // carries it explicitly, restricted to columns still present; a
-    // plain overwrite drops it (fresh layout)
-    val carriedColMap: Seq[Line] = (mode, preWritten) match {
-      case (SaveMode.Overwrite, Some(_)) if !replaceDefinition && chainMap.nonEmpty =>
-        val kept = chainMap.toSeq.sortBy(_._1)
-          .filter { case (_, phys) => newSchema.fieldNames.contains(phys) }
-        if (kept.isEmpty) Seq.empty else Seq(ColMapEntry(kept))
-      case _ => Seq.empty
-    }
-    // txn watermarks are WRITER bookkeeping, not data: an overwrite
-    // (INSERT OVERWRITE, UPDATE/MERGE rewrite, zorder, compact) must
-    // not erase another writer's (appId, batchId) replay guard, or a
-    // checkpoint-recovery replay after the maintenance commit would
-    // re-commit an already-committed epoch and duplicate rows — the
-    // reason Delta retains SetTransaction app versions across commits.
-    // Only the committing writer's own watermark is replaced (below).
-    val carriedTxns = (mode, prevSnap) match {
-      case (SaveMode.Overwrite, Some(p)) =>
-        p.lines.collect { case t: TxnEntry if !txn.exists(_._1 == t.appId) => t }
-      case _ => Seq.empty
-    }
-    // the COPY INTO ledger is writer bookkeeping like txn watermarks:
-    // a data overwrite keeps it (or a maintenance rewrite would
-    // re-open the per-file exactly-once window); REPLACE TABLE resets
-    // it with the definition; appends inherit it
-    val carriedIngests: Seq[Line] = (mode, prevSnap) match {
-      case (SaveMode.Overwrite, Some(p)) if !replaceDefinition =>
-        p.lines.filter(_.isInstanceOf[IngestEntry])
-      case _ => Seq.empty
-    }
-    // … and its protocol stamp rides with it (a feature flag carries
-    // through a data overwrite exactly when its subject lines do)
-    val carriedFeatures: Seq[Line] = (mode, prevSnap) match {
-      case (SaveMode.Overwrite, Some(p)) if carriedIngests.nonEmpty =>
-        p.features.filter(_._1.equalsIgnoreCase("ingest")).map(FeatureEntry.tupled)
-      case _ => Seq.empty
+      if (violated)
+        refuse(s"write to $dir violates NOT NULL constraint on '$effCol'; " +
+          "nothing was committed")
     }
     // IDENTITY high-water marks: advance in the SAME atomic claim as
     // the data (the version's put-if-absent IS the OCC — the basis
@@ -2494,18 +2370,16 @@ object Versioned {
     // table) holds to the same BIGINT-only contract as createTable;
     // legacy chains that declared INT before the refusal keep working
     // through prepareWrite's in-pass range guard
+    val hwmBasis = if (replaceDefinition) None else prevSnap
     idSpecsCore.foreach { spec =>
-      val preDeclared =
-        (if (replaceDefinition) None else prevSnap).exists(_.hwm(spec.col).nonEmpty)
-      require(preDeclared ||
+      require(hwmBasis.exists(_.hwm(spec.col).nonEmpty) ||
           newSchema(spec.col).dataType == org.apache.spark.sql.types.LongType,
         s"identity column '${spec.col}' must be BIGINT, got " +
           s"${newSchema(spec.col).dataType} — a narrower cast collapses the " +
           "distributed assignment's partition offsets mod 2³² into duplicate ids")
     }
     val hwmLines: Seq[Line] = idSpecsCore.map { spec =>
-      val base = (if (replaceDefinition) None else prevSnap).flatMap(_.hwm(spec.col))
-        .getOrElse(spec.start)
+      val base = hwmBasis.flatMap(_.hwm(spec.col)).getOrElse(spec.start)
       val bounds: Option[(Long, Long)] =
         if (rows == 0) None
         else colStats.get(spec.col) match {
@@ -2514,7 +2388,7 @@ object Versioned {
           case Some(cs) if cs.nulls.isDefined => None // trusted all-null dir
           case None => None // column absent from this commit's files
           case Some(_) => // untrusted footer: one bounded agg over the new dir
-            val r = spark.read.schema(newSchema).parquet(dataPath.toString)
+            val r = spark.read.schema(newSchema).parquet(dataPath.get.toString)
               .agg(org.apache.spark.sql.functions.min(spec.col).cast("long"),
                 org.apache.spark.sql.functions.max(spec.col).cast("long")).head()
             if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
@@ -2525,32 +2399,23 @@ object Versioned {
       }
       HwmEntry(spec.col, next)
     }
-    val stats = externalizeStats(spark, dir,
-      Seq(StatsEntry(dataDir, rows, colStats, dirFiles))).head.asInstanceOf[StatsEntry]
     // declared bloom columns: build this commit's per-file blooms,
     // one column-pruned scan of the NEW dir per declaration —
-    // O(delta), only when the table opted in. A fresh overwrite
-    // re-keys each declaration to the logical name like the NOT NULL
-    // lines (the mapping drops).
-    val prevBloomDecls = prevSnap.toSeq.flatMap(_.bloomDecls).filter(_ => !replaceDefinition)
-    val bloomDecls = prevBloomDecls.map { b =>
-      if (stagedPhysical) b else BloomColEntry(invChain.getOrElse(b.col, b.col), b.bits)
-    }.filter(b => newSchema.fieldNames.contains(b.col))
-      // an overwrite whose data omits a declared column retires that
-      // declaration with the column (building a bloom over a missing
-      // column would fail every later write); appends keep it — the
-      // union schema always carries the prior columns
+    // O(delta), only when the table opted in. Appends inherit the
+    // declarations; an overwrite carries them (re-keyed and filtered
+    // by [[carriedDefinition]])
+    val bloomDecls = mode match {
+      case SaveMode.Append => prevSnap.toSeq.flatMap(_.bloomDecls)
+        .filter(b => newSchema.fieldNames.contains(b.col))
+      case _ => carried.collect { case b: BloomColEntry => b }
+    }
     val bloomLines: Seq[Line] =
       if (rows > 0 && bloomDecls.nonEmpty)
-        externalizeBlooms(spark, dir, bloomDecls.map(b => BloomEntry(dataDir, b.col,
-          Bloom.buildDirBlooms(spark, dataPath.toString, newSchema, b.col, b.bits))))
+        externalizeBlooms(spark, dir, bloomDecls.map(b => BloomEntry(dataDir.get, b.col,
+          Bloom.buildDirBlooms(spark, dataPath.get.toString, newSchema, b.col, b.bits))))
       else Seq.empty
-    // appends inherit the declarations; an overwrite
-    // (which resets the line set) re-adds them here
-    val carriedBloomDecl: Seq[Line] = (mode, prev) match {
-      case (SaveMode.Overwrite, Some(_)) => bloomDecls
-      case _ => Seq.empty
-    }
+    val dataLines: Seq[Line] = dataDir.toSeq.flatMap(d => Seq(DataEntry(d),
+      externalizeStats(spark, dir, Seq(StatsEntry(d, rows, colStats, dirFiles))).head))
     // … then the atomic manifest commit publishes it. An APPEND
     // publishes O(delta) ops — schema only when the union CHANGED,
     // this writer's txn watermark, the new dir + its stats — never a
@@ -2565,20 +2430,116 @@ object Versioned {
         extraLines.foreach(l => ops += addOp(l))
         bloomLines.foreach(l => ops += addOp(l))
         hwmLines.foreach(l => ops += addOp(l)) // replace-by-col semantics
-        ops += addOp(DataEntry(dataDir))
-        ops += addOp(stats)
+        dataLines.foreach(l => ops += addOp(l))
         commitChild(spark, dir, p, ops.result())
       case _ =>
         val newLines = SchemaEntry(newSchema) +:
           (partitionBy.map(ps => PartitionEntry(ps.fieldNames.toSeq)).toSeq ++
-            carriedConstraints ++ carriedProps ++ carriedColMap ++
-            carriedBloomDecl ++ carriedTxns ++ carriedIngests ++ carriedFeatures ++
-            hwmLines ++
-            txn.map { case (a, b) => TxnEntry(b, a) } ++ extraLines ++ bloomLines :+
-            DataEntry(dataDir) :+ stats)
+            carried ++ hwmLines ++
+            txn.map { case (a, b) => TxnEntry(b, a) } ++ extraLines ++ bloomLines ++
+            dataLines)
         commitManifest(spark, dir, v, newLines.map(renderLine))
     }
     Some(v)
+  }
+
+  /** What an OVERWRITE version keeps of its parent `p` — the one
+    * answer every overwrite shares, so a zero-row or metadata-only
+    * version keeps exactly what a data-bearing one keeps. Returns
+    * `schema0` with the parent's column definitions re-attached, and
+    * the carried lines in manifest order:
+    *
+    *   - table DEFINITION — NOT NULL and CHECK constraints, table
+    *     properties, the column mapping (staged physical-named files
+    *     only), bloom declarations whose column survives, and column
+    *     DEFAULT / IDENTITY / GENERATED metadata. REPLACE TABLE
+    *     (`replaceDefinition`) starts without all of it;
+    *   - WRITER bookkeeping — other writers' txn watermarks (always:
+    *     they guard a writer's replay, not the definition), and the
+    *     COPY INTO ledger with its `ingest` feature (reset with the
+    *     definition).
+    *
+    * Files written fresh (`stagedPhysical` false) start the physical
+    * layout from their own names: the mapping drops, and the
+    * physical-keyed NOT NULL and bloom lines rename to logical. The
+    * identity high-water marks ride [[writeVersionCore]], which
+    * advances them by the new rows. */
+  private def carriedDefinition(spark: SparkSession, p: Snapshot, schema0: StructType,
+                                stagedPhysical: Boolean, replaceDefinition: Boolean,
+                                txn: Option[(String, Long)]): (StructType, Seq[Line]) = {
+    val chainMap = p.colMap
+    val invChain = chainMap.map(_.swap)
+    def named(physical: String) =
+      if (stagedPhysical) physical else invChain.getOrElse(physical, physical)
+    // txn watermarks are WRITER bookkeeping, not data: an overwrite
+    // (INSERT OVERWRITE, UPDATE/MERGE rewrite, zorder, compact,
+    // truncate) must not erase another writer's (appId, batchId)
+    // replay guard, or a checkpoint-recovery replay after the
+    // maintenance commit would re-commit an already-committed epoch
+    // and duplicate rows — the reason Delta retains SetTransaction app
+    // versions across commits. Only the committing writer's own
+    // watermark is replaced (by the commit).
+    val txns = p.lines.collect { case t: TxnEntry if !txn.exists(_._1 == t.appId) => t }
+    if (replaceDefinition) return (schema0, txns)
+    // column DEFAULTs, IDENTITY and GENERATED ALWAYS AS are table
+    // definition carried as FIELD METADATA: re-attach them to the new
+    // version's fields. A generated column whose dependency the new
+    // data OMITS retires its declaration (the bloom-declaration
+    // precedent) — the expression could never evaluate again
+    val priorMd = schemaOf(spark, p).fields.map(f => named(f.name) -> f.metadata).toMap
+    val schema = StructType(schema0.fields.map { f =>
+      priorMd.get(f.name) match {
+        case Some(md) if md.contains("CURRENT_DEFAULT") || md.contains("EXISTS_DEFAULT") ||
+            md.contains(GenerationKey) || md.contains(IdStartKey) =>
+          val mb = new org.apache.spark.sql.types.MetadataBuilder().withMetadata(f.metadata)
+          if (md.contains("CURRENT_DEFAULT"))
+            mb.putString("CURRENT_DEFAULT", md.getString("CURRENT_DEFAULT"))
+          if (md.contains("EXISTS_DEFAULT"))
+            mb.putString("EXISTS_DEFAULT", md.getString("EXISTS_DEFAULT"))
+          if (md.contains(IdStartKey)) {
+            mb.putLong(IdStartKey, md.getLong(IdStartKey))
+            mb.putLong(IdStepKey, md.getLong(IdStepKey))
+            if (md.contains(IdAllowKey))
+              mb.putBoolean(IdAllowKey, md.getBoolean(IdAllowKey))
+          }
+          // the expression text is LOGICAL; staged-physical files
+          // carry physical field names
+          if (md.contains(GenerationKey) &&
+              constraintRefCols(spark, md.getString(GenerationKey)).forall(r =>
+                schema0.fieldNames.exists(n =>
+                  (if (stagedPhysical) invChain.getOrElse(n, n) else n).equalsIgnoreCase(r))))
+            mb.putString(GenerationKey, md.getString(GenerationKey))
+          f.copy(metadata = mb.build())
+        case _ => f
+      }
+    })
+    // the mapping itself: a STAGED overwrite (catalog CoW rewrite —
+    // its files are physical-named) carries it, restricted to columns
+    // still present; fresh files drop it
+    val colMap: Seq[Line] =
+      if (!stagedPhysical || chainMap.isEmpty) Seq.empty
+      else {
+        val kept = chainMap.toSeq.sortBy(_._1)
+          .filter { case (_, phys) => schema.fieldNames.contains(phys) }
+        if (kept.isEmpty) Seq.empty else Seq(ColMapEntry(kept))
+      }
+    // an overwrite whose data omits a declared bloom column retires
+    // that declaration with the column (building a bloom over a
+    // missing column would fail every later write)
+    val blooms = p.bloomDecls.map(b => BloomColEntry(named(b.col), b.bits))
+      .filter(b => schema.fieldNames.contains(b.col))
+    // the COPY INTO ledger is writer bookkeeping like txn watermarks
+    // (a maintenance rewrite or a truncate must not re-open the
+    // per-file exactly-once window), and its protocol stamp rides
+    // with it — a feature flag carries exactly when its subject lines do
+    val ingests = p.lines.filter(_.isInstanceOf[IngestEntry])
+    val features =
+      if (ingests.isEmpty) Seq.empty
+      else p.features.filter(_._1.equalsIgnoreCase("ingest")).map(FeatureEntry.tupled)
+    (schema, p.notNull.map(c => NotNullEntry(named(c))) ++
+      p.constraints.map(ConstraintEntry.tupled) ++
+      p.lines.filter(_.isInstanceOf[PropEntry]) ++ colMap ++ blooms ++ txns ++
+      ingests ++ features)
   }
 
   /** A version's schema: the recorded one where present, else derived
@@ -2650,7 +2611,7 @@ object Versioned {
     * testable: stamp the manifest lines and publish them at `v`
     * through [[Commit.putIfAbsent]], whose primitive the path's scheme
     * picks. Losing the claim (an existing manifest for `v`) surfaces
-    * the concurrent writer as an IllegalStateException instead of
+    * the concurrent writer as a [[CommitConflict]] instead of
     * silently dropping one. Returns the lines exactly as written, so a
     * delta commit folds its checkpoint from the same stamped ops. */
   private[graft] def commitManifest(spark: SparkSession, dir: String, v: Int,
@@ -2683,7 +2644,7 @@ object Versioned {
     }
     val bytes = (stamped.mkString("\n") + "\n").getBytes("UTF-8")
     if (!Commit.putIfAbsent(fs, manifestPath(dir, v), bytes))
-      throw new IllegalStateException(
+      throw new CommitConflict(
         s"version $v at $dir was committed concurrently — retry the write")
     // a SUCCESSFUL claim proves any cached parse under this key
     // described a DELETED file (a raw `rm -r` of a chain followed by
@@ -2706,6 +2667,19 @@ object Versioned {
       .map(n => new Path(new Path(dir), n).toString)
   }
 
+  /** The deletion-vector size contract, ENFORCED (not just documented):
+    * every dv reader — the library anti-join's broadcast plan, the
+    * DSv2 in-reader mask, the stream source's content compare — pulls
+    * the key set to the driver or broadcasts it, so a mask is only
+    * sound while the key set is small next to the table. This cap
+    * turns the silent scale cliff (a 10⁸-key delete OOMing a reader
+    * with no pointer at the contract) into a refusal AT DELETE TIME
+    * that names the alternative: apply the delete physically via an
+    * overwrite commit (`writeVersion(readLatest().join(keys,
+    * "left_anti"), dir)` — one rewrite, no mask). Configurable per
+    * session via [[Knobs.dvMaxKeys]]. */
+  def maxDvKeys(spark: SparkSession): Long = Knobs.dvMaxKeys(spark)
+
   /** Delta deletion vectors' role (public design: DELETE marks rows
     * dead in a sidecar instead of rewriting data files): commit a new
     * version that references the SAME immutable data dirs plus a
@@ -2721,23 +2695,11 @@ object Versioned {
     * choice. The next Overwrite version (upsert, compaction) applies
     * the mask physically — its writer reads through [[readVersion]],
     * which already subtracts the keys — and drops the dv references;
-    * [[pruneVersions]] then reclaims the dv dirs. Returns the new
-    * version id. */
-  /** The deletion-vector size contract, ENFORCED (not just documented):
-    * every dv reader — the library anti-join's broadcast plan, the
-    * DSv2 in-reader mask, the stream source's content compare — pulls
-    * the key set to the driver or broadcasts it, so a mask is only
-    * sound while the key set is small next to the table. This cap
-    * turns the silent scale cliff (a 10⁸-key delete OOMing a reader
-    * with no pointer at the contract) into a refusal AT DELETE TIME
-    * that names the alternative: apply the delete physically via an
-    * overwrite commit (`writeVersion(readLatest().join(keys,
-    * "left_anti"), dir)` — one rewrite, no mask). Configurable per
-    * session via [[Knobs.dvMaxKeys]]. */
-  def maxDvKeys(spark: SparkSession): Long = Knobs.dvMaxKeys(spark)
-
+    * [[pruneVersions]] then reclaims the dv dirs. A key mask commutes
+    * with appends and other key deletes, so a lost version race
+    * retries at the next version. Returns the new version id. */
   def deleteByKeys(spark: SparkSession, dir: String, keys: DataFrame, keyCol: String): Int =
-    deleteByKeysCore(spark, dir, keys, keyCol, scoped = false)
+    withCommitRetry(() => deleteByKeysCore(spark, dir, keys, keyCol, scoped = false))
 
   /** [[deleteByKeys]] with SQL DELETE semantics: the mask is SCOPED to
     * the data dirs present at commit time, so rows appended AFTER the
@@ -2746,12 +2708,7 @@ object Versioned {
     * catalog's DELETE routes here; the unscoped form stays the
     * library's key-level erasure contract. */
   def deleteByKeysScoped(spark: SparkSession, dir: String, keys: DataFrame, keyCol: String): Int =
-    deleteByKeysCore(spark, dir, keys, keyCol, scoped = true)
-
-  def deleteByKeysScopedWithRetry(spark: SparkSession, dir: String,
-                                  keys: DataFrame, keyCol: String): Int =
-    withCommitRetry(() =>
-      deleteByKeysCore(spark, dir, keys, keyCol, scoped = true))
+    withCommitRetry(() => deleteByKeysCore(spark, dir, keys, keyCol, scoped = true))
 
   private def deleteByKeysCore(spark: SparkSession, dir: String, keys: DataFrame,
                                keyCol0: String, scoped: Boolean): Int = {
@@ -3876,27 +3833,29 @@ object Versioned {
     * step from an O(both versions) derive into an O(feed) read. The
     * diff is computed once, at the only moment both states are already
     * in hand; a first commit (no previous version) records nothing
-    * (Delta's CDF starts at the second commit too). Overwrite
-    * semantics — a lost race surfaces, as for every overwrite. */
+    * (Delta's CDF starts at the second commit too). Either commit is
+    * a [[writeVersion]] overwrite — GENERATED/IDENTITY filling,
+    * optimize-write, the maintenance tick — and a lost race surfaces,
+    * as for every overwrite. */
   def writeVersionWithChangeFeed(df: DataFrame, dir: String, keys: Seq[String]): Int = {
     val spark = df.sparkSession
     keys.foreach(k => require(k.matches("[A-Za-z0-9_]+"),
       s"key column must be word-shaped (it is embedded in the manifest), got '$k'"))
-    latestVersion(spark, dir) match {
-      case None => writeVersion(df, dir, SaveMode.Overwrite)
-      case Some(p) =>
-        val v = p + 1
-        val (_, root) = fsFor(spark, dir)
-        val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-        val chDir = f"v$v%08d_changes_$nonce"
-        // feed first (invisible until the manifest lands, exactly like
-        // the data dir; a lost commit race leaves it an orphan)
-        diffFeedFrames(readVersion(spark, dir, p), df, keys)
-          .write.mode(SaveMode.ErrorIfExists).parquet(new Path(root, chDir).toString)
-        writeVersionCore(spark, dir, SaveMode.Overwrite, txn = None,
-          extraLines = Seq(ChangesEntry(p, v, keys, chDir)))(tmp =>
-          df.write.mode(SaveMode.ErrorIfExists).parquet(tmp)).get
-    }
+    commitFrame(spark, dir, SaveMode.Overwrite) { () =>
+      Some(latestVersion(spark, dir).fold(Frame(df)) { p =>
+        Frame(df, readAt = Some(p), extra = { filled =>
+          val (_, root) = fsFor(spark, dir)
+          val nonce = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+          val chDir = f"v${p + 1}%08d_changes_$nonce"
+          // feed first (invisible until the manifest lands, exactly
+          // like the data dir; a lost commit race leaves it an orphan),
+          // diffed against the rows as they land — filled columns too
+          diffFeedFrames(readVersion(spark, dir, p), filled, keys)
+            .write.mode(SaveMode.ErrorIfExists).parquet(new Path(root, chDir).toString)
+          Seq(ChangesEntry(p, p + 1, keys, chDir))
+        })
+      })
+    }.get
   }
 
   /** Write-time CDF capture for a DELTA-BASED row-level commit
@@ -4031,32 +3990,8 @@ object Versioned {
     * number. Safe ONLY for COMMUTATIVE operations — append, delete-
     * by-keys, and dv compaction extend whatever the latest manifest
     * is, so the retried commit means the same thing after the
-    * concurrent write as before it. Tries one commit at most 16 times. */
-  private def withCommitRetry[T](attempt: () => T): T = {
-    val maxAttempts = 16
-    var n = 1
-    while (true) {
-      try return attempt()
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("committed concurrently") &&
-              n < maxAttempts =>
-          n += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Multi-writer APPEND (Delta's optimistic-concurrency role,
-    * simplified honestly): appends commute with concurrent appends
-    * and deletes, so a lost manifest race retries at the next version
-    * — each attempt writes a fresh uniquely-named data dir, losers'
-    * dirs stay invisible until pruned, and no writer can clobber
-    * another's files. OVERWRITE deliberately has no retrying twin:
-    * it replaces state it has not seen, so a lost race must surface
-    * to the caller (who may no longer want the overwrite at all) —
-    * the same reason Delta fails conflicting non-commutative commits.
+    * concurrent write as before it. Retries a [[CommitConflict]] and
+    * nothing else; tries one commit at most 16 times.
     *
     * Multi-writer safety rests on the manifest claim being ATOMIC on
     * the storage, which [[Commit.putIfAbsent]] guarantees per scheme:
@@ -4065,25 +4000,15 @@ object Versioned {
     * FAILS. POSIX rename would silently REPLACE the destination, so
     * two local racers could both "win" — which is why the local branch
     * links instead of renaming. */
-  def appendVersionWithRetry(df: DataFrame, dir: String): Int =
-    withCommitRetry(() =>
-      writeVersion(df, dir, SaveMode.Append))
-
-  /** Multi-writer [[writeVersionPartitioned]] append — same
-    * commutative-append retry contract as [[appendVersionWithRetry]],
-    * for the partitioned chains (the SQL INSERT INTO path). */
-  def appendVersionPartitionedWithRetry(df: DataFrame, dir: String,
-                                        partCols: Seq[String]): Int =
-    withCommitRetry(() =>
-      writeVersionPartitioned(df, dir, partCols, SaveMode.Append))
-
-  /** Multi-writer [[deleteByKeys]] — key-masking commutes with
-    * concurrent appends and other key deletes, so the same bounded
-    * retry applies. */
-  def deleteByKeysWithRetry(spark: SparkSession, dir: String,
-                            keys: DataFrame, keyCol: String): Int =
-    withCommitRetry(() =>
-      deleteByKeys(spark, dir, keys, keyCol))
+  private def withCommitRetry[T](attempt: () => T): T = {
+    val maxAttempts = 16
+    var n = 1
+    while (true) {
+      try return attempt()
+      catch { case _: CommitConflict if n < maxAttempts => n += 1 }
+    }
+    throw new IllegalStateException("unreachable")
+  }
 
   /** Delta `RESTORE TABLE … TO VERSION AS OF v` role: commit version
     * v's manifest — file list, schema, and stats — as the newest
@@ -4134,19 +4059,9 @@ object Versioned {
         s"constraint name must be word-shaped, got '$n'")
       requireOneLine(sql, n)
     }
-    partCols.foreach { c =>
-      require(schema.fieldNames.contains(c),
-        s"partition column '$c' not in ${schema.fieldNames.mkString(",")}")
-      require(Skipping.partitionableType(schema(c).dataType),
-        s"partition column '$c' has type ${schema(c).dataType} — hive-path-exact " +
-          "types only (string/int/long/short/byte/date/boolean)")
-    }
+    val ordered = partitionedReadOrder(schema, partCols)
     require(partCols.isEmpty || partCols.length < schema.fields.length,
       "a table cannot be partitioned by every column")
-    val ordered =
-      if (partCols.isEmpty) schema
-      else StructType(schema.fields.filterNot(f => partCols.contains(f.name)) ++
-        partCols.map(c => schema(c)))
     // non-nullable declared fields become enforced NOT NULL lines (the
     // recorded schema itself stays fully-nullable — append chains
     // null-backfill, and the constraint is what enforces)
@@ -4682,8 +4597,7 @@ object Versioned {
     val partCols = snap.partitionCols
     val df = readVersion(spark, dir, prev)
       .withColumn(l, org.apache.spark.sql.functions.col(l).cast("double"))
-    if (partCols.isEmpty) writeVersion(df, dir, SaveMode.Overwrite)
-    else writeVersionPartitioned(df, dir, partCols, SaveMode.Overwrite)
+    writeVersion(df, dir, SaveMode.Overwrite, partCols)
   }
 
   /** Delta `replaceWhere` / Spark SQL `INSERT INTO … REPLACE WHERE`'s

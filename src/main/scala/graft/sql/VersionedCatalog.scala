@@ -894,7 +894,7 @@ private[sql] object VersionedSqlUtil {
 
 /** `DELETE FROM versioned.&#96;path&#96; WHERE k = … / k IN (…)` — SQL
   * row-level deletes routed to the store's deletion-vector commit
-  * ([[Versioned.deleteByKeysWithRetry]]): no data file is touched, the
+  * ([[Versioned.deleteByKeysScoped]]): no data file is touched, the
   * delete is one key-set write + one manifest commit, and time travel
   * to pre-delete versions still serves the rows — the Delta SQL
   * surface (`DELETE FROM`) over this store's own mechanism.
@@ -931,18 +931,13 @@ private[sql] trait VersionedDeletes extends org.apache.spark.sql.connector.catal
   override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit =
     VersionedDeletes.plan(vdSchema, filters) match {
       case Some(VersionedDeletes.Truncate) => // DELETE FROM t (no WHERE): truncate commit.
-        // METADATA-ONLY empty overwrite through the staged-table empty
-        // path: keeps the recorded schema, the PARTITION SPEC (a plain
-        // unpartitioned writeVersion here would silently downgrade a
-        // partitioned chain's layout and later inserts would land
-        // flat), the CHECK constraints (a truncate is a DATA change,
-        // not a definition change), and other writers' txn watermarks.
-        val partCols = Versioned.latestVersion(vdSpark, vdDir)
-          .map(v => Versioned.snapshot(vdSpark, vdDir, v).partitionCols)
-          .getOrElse(Seq.empty)
-        Versioned.commitStagedTable(vdSpark, vdDir,
-          Versioned.stageDataDir(vdSpark, vdDir), // never written: routes to the empty commit
-          vdSchema, partCols, fresh = false, replaceDefinition = false)
+        // METADATA-ONLY empty overwrite: keeps the recorded schema, the
+        // PARTITION SPEC (a plain unpartitioned writeVersion here would
+        // silently downgrade a partitioned chain's layout and later
+        // inserts would land flat), and everything else a data
+        // overwrite keeps — a truncate is a DATA change, not a
+        // definition change
+        Versioned.truncate(vdSpark, vdDir)
         ()
       case Some(VersionedDeletes.KeyMask(keyCol, values)) =>
         if (values.nonEmpty) {
@@ -961,7 +956,7 @@ private[sql] trait VersionedDeletes extends org.apache.spark.sql.connector.catal
           val keys = vdSpark.createDataFrame(rows,
               StructType(Seq(org.apache.spark.sql.types.StructField(keyCol, litType))))
             .select(col(keyCol).cast(dt).as(keyCol))
-          Versioned.deleteByKeysScopedWithRetry(vdSpark, vdDir, keys, keyCol)
+          Versioned.deleteByKeysScoped(vdSpark, vdDir, keys, keyCol)
         }
         ()
       case Some(VersionedDeletes.Positional(fs)) =>
@@ -1367,40 +1362,25 @@ private[sql] class ReplaceVersionWriteBuilder(spark: SparkSession, dir: String,
               return
             case None => // whole-table group: full overwrite below
           }
-          if (partCols.nonEmpty) {
+          // all rows removed (no file staged): a metadata-only
+          // overwrite keeps the schema, the partition spec and the
+          // table's contract with zero data dirs — a DATA rewrite, the
+          // definition survives its own truncation
+          if (!hasContent) { fs.delete(stagingPath, true); Versioned.truncate(spark, dir) }
+          else if (partCols.isEmpty) Versioned.commitStagedOverwrite(spark, dir, staged)
+          else {
             // PARTITIONED chain: the rewrite wrote the replacement
             // FLAT (partition values as ordinary columns in the
             // staged files); re-land it hive-laid-out through the
-            // partitioned overwrite commit so a rewrite never
-            // downgrades the layout. The flat dir is deleted after
-            // the commit — a crash in between leaves it as an
-            // invisible nonce'd orphan for pruneVersions.
-            val replacement =
-              if (hasContent)
-                Some(spark.read.schema(info.schema()).parquet(stagingPath.toString))
-                  .filterNot(_.isEmpty) // a 0-ROW staged file partition-writes nothing
-              else None
-            replacement match {
-              case Some(df) =>
-                Versioned.writeVersionPartitioned(df, dir, partCols)
-                fs.delete(stagingPath, true)
-              case None =>
-                // all rows removed: a metadata-only overwrite keeps the
-                // schema AND the partition spec with zero data dirs —
-                // and the CHECK constraints: this is a DATA rewrite,
-                // the table's contract survives its own truncation
-                fs.delete(stagingPath, true) // clear any 0-row flat debris
-                Versioned.commitStagedTable(spark, dir, staged, info.schema(),
-                  partCols, fresh = false, replaceDefinition = false)
-            }
-          } else {
-            // an all-rows-removed replacement writes no file: land the
-            // schema as one empty parquet so the harvest/read have it
-            if (!hasContent)
-              spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], info.schema())
-                .repartition(1).write.mode("overwrite").parquet(stagingPath.toString)
-            Versioned.commitStagedOverwrite(spark, dir, staged)
+            // partitioned overwrite so a rewrite never downgrades the
+            // layout (a 0-row staged file lands no partition: the
+            // overwrite commits metadata-only). The flat dir is
+            // deleted after the commit — a crash in between leaves it
+            // as an invisible nonce'd orphan for pruneVersions.
+            Versioned.writeVersion(
+              spark.read.schema(info.schema()).parquet(stagingPath.toString), dir,
+              org.apache.spark.sql.SaveMode.Overwrite, partCols)
+            fs.delete(stagingPath, true)
           }
           ()
         }
@@ -1921,15 +1901,10 @@ private[sql] class VersionedWriteBuilder(spark: SparkSession, dir: String,
                     org.apache.spark.sql.SaveMode.Overwrite
                   else org.apache.spark.sql.SaveMode.Append,
                   partCols = partCols)
-              case (None, None) => (overwrite || overwriteFlag, partCols.isEmpty) match {
-                case (true, true)   =>
-                  Versioned.writeVersion(data, dir, org.apache.spark.sql.SaveMode.Overwrite)
-                case (false, true)  => Versioned.appendVersionWithRetry(data, dir)
-                case (true, false)  =>
-                  Versioned.writeVersionPartitioned(data, dir, partCols)
-                case (false, false) =>
-                  Versioned.appendVersionPartitionedWithRetry(data, dir, partCols)
-              }
+              case (None, None) =>
+                Versioned.writeVersion(data, dir,
+                  if (overwrite || overwriteFlag) org.apache.spark.sql.SaveMode.Overwrite
+                  else org.apache.spark.sql.SaveMode.Append, partCols)
             }
             ()
           }

@@ -108,9 +108,9 @@ object ClusterSmoke {
     // 6) partitioned chain: ManifestFileIndex partition pruning with
     // hive-laid-out dirs, planned on the driver, scanned on executors
     val pdir = s"$root/p"
-    Versioned.writeVersionPartitioned(
+    Versioned.writeVersion(
       spark.range(0, 4000).select($"id", ($"id" % 4).cast("int").as("bucket")),
-      pdir, Seq("bucket"))
+      pdir, partCols = Seq("bucket"))
     check(spark.sql(s"SELECT count(*) FROM graft_cs.`$pdir` WHERE bucket = 2")
       .as[Long].head() == 1000, "partition-pruned count wrong")
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, Multimodal, Packing, Sampling, Scrub, Similarity, TextStats}
@@ -1947,15 +1947,32 @@ class ExtSpec extends AnyFunSuite {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     val writers = (1 to 6).map { i =>
-      Future(Versioned.appendVersionWithRetry(
-        Seq((i.toLong, s"w$i")).toDF("id", "v"), dir))
+      Future(Versioned.writeVersion(
+        Seq((i.toLong, s"w$i")).toDF("id", "v"), dir, SaveMode.Append))
     }
+    // the same race on a PARTITIONED chain, with a scoped key delete
+    // (SQL DELETE's mask) racing the appends: key masks commute with
+    // appends, so the delete retries like they do
+    val pdir = dir + "_p"
+    Versioned.writeVersion(Seq((0L, "a"), (100L, "b")).toDF("id", "p"), pdir,
+      SaveMode.Overwrite, Seq("p"))
+    val pwriters = (1 to 6).map { i =>
+      Future(Versioned.writeVersion(Seq((i.toLong, if (i % 2 == 0) "a" else "b"))
+        .toDF("id", "p"), pdir, SaveMode.Append, Seq("p")))
+    } :+ Future(Versioned.deleteByKeysScoped(spark, pdir, Seq(100L).toDF("id"), "id"))
     val committed = Await.result(Future.sequence(writers), 120.seconds)
+    val pcommitted = Await.result(Future.sequence(pwriters), 120.seconds)
     // all six landed at distinct versions 1..6
     assert(committed.toSet == (1 to 6).toSet, s"got versions $committed")
     assert(Versioned.versions(spark, dir) == (0 to 6))
     // no data loss: the latest version unions every writer's rows
     assert(Versioned.readLatest(spark, dir).select("id").as[Long].collect().toSet ==
+      (0L to 6L).toSet)
+    // every partitioned commit landed too, and the delete masked
+    // exactly the key it named
+    assert(pcommitted.toSet == (1 to 7).toSet, s"got versions $pcommitted")
+    assert(Versioned.versions(spark, pdir) == (0 to 7))
+    assert(Versioned.readLatest(spark, pdir).select("id").as[Long].collect().toSet ==
       (0L to 6L).toSet)
     // losers' orphan dirs (failed attempts) are reclaimed by prune
     // without touching any referenced dir
@@ -1968,6 +1985,7 @@ class ExtSpec extends AnyFunSuite {
         Versioned.latestVersion(spark, dir).get, Seq("vx_data"))
     }
     assert(e.getMessage.contains("committed concurrently"))
+    assert(e.isInstanceOf[graft.ext.CommitConflict])
   }
 
   test("versioned: RESTORE to a pre-delete version resurrects the rows (and is itself undoable)") {
@@ -2573,7 +2591,7 @@ class ExtSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_vpart").toString + "/t"
     val v0df = Seq((1L, 10.0, "a"), (2L, 20.0, "b"), (3L, 30.0, "b"), (4L, 40.0, null))
       .toDF("id", "price", "status")
-    Versioned.writeVersionPartitioned(v0df, dir, Seq("status"))
+    Versioned.writeVersion(v0df, dir, partCols = Seq("status"))
     // read back: partition values re-attached from the manifest (the
     // data files do NOT hold the column), null partition included
     val got = Versioned.readLatest(spark, dir)
@@ -2598,9 +2616,9 @@ class ExtSpec extends AnyFunSuite {
       .select("id").as[Long].collect().toSet == Set(3L, 4L))
     // appends: same spec extends the chain; a different or missing
     // spec refuses (mixed layouts would be unreadable)
-    Versioned.writeVersionPartitioned(
-      Seq((5L, 50.0, "a")).toDF("id", "price", "status"), dir, Seq("status"),
-      SaveMode.Append)
+    Versioned.writeVersion(
+      Seq((5L, 50.0, "a")).toDF("id", "price", "status"), dir,
+      SaveMode.Append, Seq("status"))
     assert(Versioned.readLatest(spark, dir).count() == 5)
     assert(Versioned.readLatest(spark, dir).filter($"status" === "a")
       .select("id").as[Long].collect().toSet == Set(1L, 5L))
@@ -2609,8 +2627,8 @@ class ExtSpec extends AnyFunSuite {
         dir, SaveMode.Append)
     }
     intercept[IllegalArgumentException] {
-      Versioned.writeVersionPartitioned(Seq((9L, 90.0, "z"))
-        .toDF("id", "price", "status"), dir, Seq("id"), SaveMode.Append)
+      Versioned.writeVersion(Seq((9L, 90.0, "z"))
+        .toDF("id", "price", "status"), dir, SaveMode.Append, Seq("id"))
     }
     // deletion vectors compose with the partitioned read
     Versioned.deleteByKeys(spark, dir, Seq(2L).toDF("id"), "id")
@@ -2622,7 +2640,7 @@ class ExtSpec extends AnyFunSuite {
     val dDir = java.nio.file.Files.createTempDirectory("graft_vpart_date").toString + "/t"
     val dts = Seq((1L, java.sql.Date.valueOf("2024-01-01")),
       (2L, java.sql.Date.valueOf("2024-02-01"))).toDF("id", "day")
-    Versioned.writeVersionPartitioned(dts, dDir, Seq("day"))
+    Versioned.writeVersion(dts, dDir, partCols = Seq("day"))
     assert(Versioned.readLatest(spark, dDir)
       .filter($"day" === java.sql.Date.valueOf("2024-02-01"))
       .select("id").as[Long].collect().toSeq == Seq(2L))
@@ -3213,10 +3231,10 @@ class ExtSpec extends AnyFunSuite {
     // spec-keeping partition-shaped rewrite (Delta's OPTIMIZE works on
     // partitioned tables; until round 11 this refused)
     val pdir = java.nio.file.Files.createTempDirectory("graft_callpart").toString + "/t"
-    Versioned.writeVersionPartitioned(
+    Versioned.writeVersion(
       spark.range(0, 100).toDF("id")
         .withColumn("cat", when($"id" % 2 === 0, "a").otherwise("b"))
-        .repartition(4), pdir, Seq("cat"))
+        .repartition(4), pdir, partCols = Seq("cat"))
     assert(Versioned.allLiveFilesMap(spark, pdir, 0).valuesIterator.map(_.size).sum == 8)
     val zp = spark.sql(s"CALL graft_pr.system.zorder('$pdir', 'id', 'id', 2)")
       .as[Int].head()
@@ -3418,8 +3436,8 @@ class ExtSpec extends AnyFunSuite {
     assert(!firstLine(0).startsWith("parent:"))
     // v1..v9: single-row appends — each manifest is an INCREMENT
     (1 to 9).foreach(i =>
-      Versioned.appendVersionWithRetry(
-        spark.range(1000L + i, 1001L + i).toDF("id").repartition(1), dir))
+      Versioned.writeVersion(
+        spark.range(1000L + i, 1001L + i).toDF("id").repartition(1), dir, SaveMode.Append))
     assert(firstLine(1) == "parent:0" && firstLine(9) == "parent:8")
     // the commit's metadata write does NOT grow with the table: the
     // 9th append (table now 16 files) writes no more than the 1st
@@ -3430,7 +3448,7 @@ class ExtSpec extends AnyFunSuite {
     // v10: the manifest stays a tiny delta, and the PERIODIC
     // CHECKPOINT SIDECAR (interval 10) lands beside it — the
     // resolution chain is bounded without ever writing a big manifest
-    Versioned.appendVersionWithRetry(spark.range(2000, 2001).toDF("id"), dir)
+    Versioned.writeVersion(spark.range(2000, 2001).toDF("id"), dir, SaveMode.Append)
     assert(firstLine(10) == "parent:9")
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$dir/_versions/00000010.checkpoint")))
@@ -3503,8 +3521,8 @@ class ExtSpec extends AnyFunSuite {
       assert(Versioned.compactDeletionVectors(spark, k).nonEmpty)
       Versioned.setTableProperties(spark, k, Map("team.owner" -> "ingest", "team.tier" -> "1"))
       assert(Versioned.unsetTableProperties(spark, k, Seq("team.tier")).nonEmpty)
-      Versioned.appendVersionWithRetry(spark.range(100, 101)
-        .selectExpr("id", "cast(id AS int) AS n", "'a' AS tag"), k)
+      Versioned.writeVersion(spark.range(100, 101)
+        .selectExpr("id", "cast(id AS int) AS n", "'a' AS tag"), k, SaveMode.Append)
       val beforeBloom = Versioned.latestVersion(spark, k).get
       val bloomV = Versioned.declareBloomColumn(spark, k, "id")
       assert(bloomV > beforeBloom + 1,
@@ -3812,7 +3830,7 @@ class ExtSpec extends AnyFunSuite {
       .withColumn("p", when($"id" % 2 === 0, "x").otherwise("y"))
       .withColumn("a", ($"id" / 2) % 64)
       .withColumn("b", ($"id" / 2) / 64)
-    Versioned.writeVersionPartitioned(df.repartition(4), dir, Seq("p"))
+    Versioned.writeVersion(df.repartition(4), dir, partCols = Seq("p"))
     def filesOf(v: Int, part: String) =
       Versioned.partitionScopedFiles(spark, dir, v, s"p = '$part'")
     def planned(v: Int, fs: Filter*) = Versioned.planDataFiles(spark, dir, v, fs.toSeq)
@@ -3873,10 +3891,10 @@ class ExtSpec extends AnyFunSuite {
     import graft.ext.Versioned
     val dir = java.nio.file.Files.createTempDirectory("graft_partmove").toString + "/t"
     spark.conf.set("spark.sql.catalog.graft_pm", "graft.sql.VersionedCatalog")
-    Versioned.writeVersionPartitioned(
+    Versioned.writeVersion(
       spark.range(0, 100).toDF("id")
         .withColumn("p", when($"id" % 2 === 0, "x").otherwise("y"))
-        .repartition(2), dir, Seq("p"))
+        .repartition(2), dir, partCols = Seq("p"))
     // move a slice of x into partition z: the CoW rewrite reads the
     // candidate files and the replacement re-lands hive-laid-out, so
     // the moved rows live under p=z both logically AND physically
@@ -3961,11 +3979,11 @@ class ExtSpec extends AnyFunSuite {
     import graft.ext.Versioned
     val dir = java.nio.file.Files.createTempDirectory("graft_dynover").toString + "/t"
     spark.conf.set("spark.sql.catalog.graft_dy", "graft.sql.VersionedCatalog")
-    Versioned.writeVersionPartitioned(
+    Versioned.writeVersion(
       spark.range(0, 100).toDF("id")
         .withColumn("v", lit("orig"))
         .withColumn("p", when($"id" % 2 === 0, "x").otherwise("y"))
-        .repartition(2), dir, Seq("p"))
+        .repartition(2), dir, partCols = Seq("p"))
     def filesOf(v: Int, part: String) =
       Versioned.partitionScopedFiles(spark, dir, v, s"p = '$part'")
     val yBefore = filesOf(0, "y")
@@ -4009,9 +4027,9 @@ class ExtSpec extends AnyFunSuite {
     spark.range(100, 105).toDF("id").withColumn("v", lit("race")).withColumn("p", lit("x"))
       .write.partitionBy("p").parquet(new org.apache.hadoop.fs.Path(
         new org.apache.hadoop.fs.Path(dir), staged).toString)
-    Versioned.appendVersionPartitionedWithRetry( // the concurrent write
+    Versioned.writeVersion( // the concurrent write
       spark.range(200, 205).toDF("id").withColumn("v", lit("intruder")).withColumn("p", lit("x")),
-      dir, Seq("p"))
+      dir, SaveMode.Append, Seq("p"))
     val ex = intercept[IllegalStateException] {
       Versioned.commitFileRewrite(spark, dir, victims, Some(staged), Seq("p"),
         Seq.empty, exclusivePartitions = touched) }
@@ -4023,9 +4041,9 @@ class ExtSpec extends AnyFunSuite {
     spark.range(300, 303).toDF("id").withColumn("v", lit("y2")).withColumn("p", lit("y"))
       .write.partitionBy("p").parquet(new org.apache.hadoop.fs.Path(
         new org.apache.hadoop.fs.Path(dir), staged2).toString)
-    Versioned.appendVersionPartitionedWithRetry(
+    Versioned.writeVersion(
       spark.range(400, 402).toDF("id").withColumn("v", lit("x2")).withColumn("p", lit("x")),
-      dir, Seq("p"))
+      dir, SaveMode.Append, Seq("p"))
     assert(Versioned.commitFileRewrite(spark, dir, victims2, Some(staged2), Seq("p"),
       Seq.empty, exclusivePartitions = Set(Seq(Option("y")))).nonEmpty)
     assert(Versioned.readLatest(spark, dir).filter($"p" === "y").count() == 3)
@@ -4256,8 +4274,8 @@ class ExtSpec extends AnyFunSuite {
     // the PARTITION column refuses (its name IS the hive layout);
     // data columns of the same chain rename fine
     val pdir = root + "/p"
-    Versioned.writeVersionPartitioned(
-      Seq((1L, "x"), (2L, "y")).toDF("id", "p"), pdir, Seq("p"))
+    Versioned.writeVersion(
+      Seq((1L, "x"), (2L, "y")).toDF("id", "p"), pdir, partCols = Seq("p"))
     val ep = intercept[IllegalArgumentException] {
       Versioned.renameColumns(spark, pdir, Seq("p" -> "part"))
     }
@@ -4542,7 +4560,7 @@ class ExtSpec extends AnyFunSuite {
     // already — a data column of the same chain declares fine, see the
     // partitioned-bloom test), unsupported type
     val pdir = java.nio.file.Files.createTempDirectory("graft_bloom_p").toString + "/p"
-    Versioned.writeVersionPartitioned(Seq((1L, "x")).toDF("id", "p"), pdir, Seq("p"))
+    Versioned.writeVersion(Seq((1L, "x")).toDF("id", "p"), pdir, partCols = Seq("p"))
     assert(intercept[IllegalArgumentException] {
       Versioned.declareBloomColumn(spark, pdir, "p")
     }.getMessage.contains("PARTITION column"))
@@ -4622,8 +4640,8 @@ class ExtSpec extends AnyFunSuite {
     // the PARTITIONED twin keeps its hive layout and pruning through
     // the rewrite; a second call refuses (the column is double now)
     val pfdir = java.nio.file.Files.createTempDirectory("graft_widen_pf").toString + "/pf"
-    Versioned.writeVersionPartitioned(
-      Seq((1.5f, 0), (2.5f, 1)).toDF("score", "b"), pfdir, Seq("b"))
+    Versioned.writeVersion(
+      Seq((1.5f, 0), (2.5f, 1)).toDF("score", "b"), pfdir, partCols = Seq("b"))
     Versioned.widenFloatToDoubleRewrite(spark, pfdir, "score")
     assert(Versioned.readLatest(spark, pfdir).schema("score").dataType == DoubleType)
     val vPf = Versioned.latestVersion(spark, pfdir).get
@@ -4730,8 +4748,8 @@ class ExtSpec extends AnyFunSuite {
 
     // clone of a PARTITIONED chain carries the spec and prunes partitions
     val psrc = root + "/psrc"; val ptgt = root + "/ptgt"
-    Versioned.writeVersionPartitioned(
-      Seq((1L, "x"), (2L, "y"), (3L, "y")).toDF("id", "p"), psrc, Seq("p"))
+    Versioned.writeVersion(
+      Seq((1L, "x"), (2L, "y"), (3L, "y")).toDF("id", "p"), psrc, partCols = Seq("p"))
     Versioned.cloneTable(spark, psrc, ptgt)
     assert(Versioned.readLatest(spark, ptgt).filter($"p" === "y").count() == 2)
     assert(spark.sql(s"SELECT id FROM graft_cl.`$ptgt` WHERE p = 'x'").as[Long].head() == 1L)
@@ -4886,7 +4904,7 @@ class ExtSpec extends AnyFunSuite {
     import graft.ext.{Maintenance, Versioned}
     val dir = java.nio.file.Files.createTempDirectory("graft_cmpart").toString + "/t"
     val rows = (0 until 1000).map(i => (i.toLong, i % 4, s"v$i"))
-    Versioned.writeVersionPartitioned(rows.toDF("id", "bucket", "payload"), dir, Seq("bucket"))
+    Versioned.writeVersion(rows.toDF("id", "bucket", "payload"), dir, partCols = Seq("bucket"))
     val dirsBefore = Versioned.liveDataDirs(spark, dir).toSet
     Versioned.renameColumns(spark, dir, Seq("payload" -> "text"))
     assert(Versioned.liveDataDirs(spark, dir).toSet == dirsBefore, "rename must be metadata-only")
@@ -4896,9 +4914,9 @@ class ExtSpec extends AnyFunSuite {
       Versioned.renameColumns(spark, dir, Seq("bucket" -> "b"))
     }.getMessage.contains("PARTITION column"))
     // append through the logical name: files land physical, read is one union
-    Versioned.writeVersionPartitioned(
+    Versioned.writeVersion(
       (1000 until 1100).map(i => (i.toLong, i % 4, s"v$i")).toDF("id", "bucket", "text"),
-      dir, Seq("bucket"), SaveMode.Append)
+      dir, SaveMode.Append, Seq("bucket"))
     assert(Versioned.readLatest(spark, dir).count() == 1100)
     assert(Versioned.readLatest(spark, dir).filter($"text" === "v1050").count() == 1)
     val appended = Versioned.liveDataDirs(spark, dir).filterNot(dirsBefore)
@@ -4959,8 +4977,8 @@ class ExtSpec extends AnyFunSuite {
     def batch(mod: Long) = (0L until 2000L).filter(i => (i / 2) % 2 == mod)
       .map(i => (i, (i % 2).toInt, s"p$i")).toDF("id", "bucket", "payload")
       .repartition(1)
-    Versioned.writeVersionPartitioned(batch(0), dir, Seq("bucket"))
-    Versioned.writeVersionPartitioned(batch(1), dir, Seq("bucket"), SaveMode.Append)
+    Versioned.writeVersion(batch(0), dir, partCols = Seq("bucket"))
+    Versioned.writeVersion(batch(1), dir, SaveMode.Append, Seq("bucket"))
     val vPre = Versioned.latestVersion(spark, dir).get
     // chunk limit below any dir's file count → one backfill commit PER DIR
     spark.conf.set("spark.graft.bloom.backfillFilesPerCommit", "1")
@@ -4988,8 +5006,8 @@ class ExtSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT payload FROM graft_blp.`$dir` WHERE bucket = 0 AND id = 4")
       .as[String].head() == "p4")
     // a write-time bloom rides the next partitioned append
-    Versioned.writeVersionPartitioned(Seq((5001L, 1, "new")).toDF("id", "bucket", "payload"),
-      dir, Seq("bucket"), SaveMode.Append)
+    Versioned.writeVersion(Seq((5001L, 1, "new")).toDF("id", "bucket", "payload"),
+      dir, SaveMode.Append, Seq("bucket"))
     val v2 = Versioned.latestVersion(spark, dir).get
     val nf = Versioned.planDataFiles(spark, dir, v2, Seq(EqualTo("id", 5001L)))
     assert(nf.length == 1, s"bounds + bloom should isolate the new file: $nf")
@@ -5336,7 +5354,7 @@ class ExtSpec extends AnyFunSuite {
       spark.range(from, until).select($"id".as("a"),
         (($"id" * 7919) % 1000).as("b"), ($"id" % 3).as("bucket"))
         .repartition(parts)
-    Versioned.writeVersionPartitioned(zslice(0, 3000, 4), zdir, Seq("bucket"))
+    Versioned.writeVersion(zslice(0, 3000, 4), zdir, partCols = Seq("bucket"))
     // first incremental run clusters EVERYTHING live (no base yet),
     // re-landed hive-laid-out as a rearrange
     val (n0, _, v0) =
@@ -5347,8 +5365,8 @@ class ExtSpec extends AnyFunSuite {
     assert(base.forall(_.contains("bucket=")),
       s"the replacement must re-land hive-laid-out: $base")
     // append an increment; the second run rewrites exactly it
-    Versioned.writeVersionPartitioned(zslice(3000, 3600, 2), zdir, Seq("bucket"),
-      SaveMode.Append)
+    Versioned.writeVersion(zslice(3000, 3600, 2), zdir,
+      SaveMode.Append, Seq("bucket"))
     val vApp = Versioned.latestVersion(spark, zdir).get
     val appendedBytes = Versioned.fileBytesOf(spark, zdir, vApp,
       Versioned.unclusteredLiveFiles(spark, zdir, vApp))
@@ -5366,8 +5384,8 @@ class ExtSpec extends AnyFunSuite {
 
     // ── row tracking on a PARTITIONED chain
     val rdir = root + "/r"
-    Versioned.writeVersionPartitioned(
-      spark.range(0, 900).select($"id", ($"id" % 3).as("cat")), rdir, Seq("cat"))
+    Versioned.writeVersion(
+      spark.range(0, 900).select($"id", ($"id" % 3).as("cat")), rdir, partCols = Seq("cat"))
     val rv = Versioned.enableRowTracking(spark, rdir)
     assert(rv == Versioned.latestVersion(spark, rdir).get)
     assert(Versioned.snapshot(spark, rdir, rv).isRearrange, "the backfill is a rearrange")
@@ -5376,9 +5394,9 @@ class ExtSpec extends AnyFunSuite {
       .select(Versioned.RowIdCol).as[Long].collect()
     assert(ids0.length == 900 && ids0.toSet.size == 900, "backfilled ids distinct")
     // appends keep assigning ABOVE the mark, hive-laid-out
-    Versioned.writeVersionPartitioned(
-      spark.range(900, 1000).select($"id", ($"id" % 3).as("cat")), rdir, Seq("cat"),
-      SaveMode.Append)
+    Versioned.writeVersion(
+      spark.range(900, 1000).select($"id", ($"id" % 3).as("cat")), rdir,
+      SaveMode.Append, Seq("cat"))
     val ids1 = Versioned.readLatest(spark, rdir)
       .select(Versioned.RowIdCol).as[Long].collect()
     assert(ids1.length == 1000 && ids1.toSet.size == 1000,
@@ -5727,8 +5745,8 @@ class ExtSpec extends AnyFunSuite {
       .as[Long].head() >= 0)
     // PARTITIONED chain: addresses carry the hive subpath
     val pdir = root + "/p"
-    Versioned.writeVersionPartitioned(
-      spark.range(0, 60).select($"id", ($"id" % 3).as("bucket")), pdir, Seq("bucket"))
+    Versioned.writeVersion(
+      spark.range(0, 60).select($"id", ($"id" % 3).as("bucket")), pdir, partCols = Seq("bucket"))
     val prows = spark.sql(s"SELECT id, _file, _pos FROM graft_mc.`$pdir`")
       .as[(Long, String, Long)].collect()
     assert(prows.length == 60 && prows.forall(_._2.contains("bucket=")))
@@ -5839,8 +5857,8 @@ class ExtSpec extends AnyFunSuite {
     assert((0L until 5L).filter(want2).forall(got3(_) == 77.0))
     // PARTITIONED chain: mask + hive-laid-out appended dir
     val pdir = root + "/p"
-    Versioned.writeVersionPartitioned(spark.range(0, 90)
-      .select($"id", ($"id" % 3).as("bucket"), lit(1.0).as("w")), pdir, Seq("bucket"))
+    Versioned.writeVersion(spark.range(0, 90)
+      .select($"id", ($"id" % 3).as("bucket"), lit(1.0).as("w")), pdir, partCols = Seq("bucket"))
     val pBefore = Versioned.planDataFiles(spark, pdir, 0, Seq.empty).toSet
     spark.sql(s"UPDATE graft_dm.`$pdir` SET w = 9.0 WHERE id >= 80")
     val pv = Versioned.latestVersion(spark, pdir).get
@@ -6366,8 +6384,8 @@ class ExtSpec extends AnyFunSuite {
         pool.submit(new java.util.concurrent.Callable[Unit] {
           override def call(): Unit =
             for (i <- 0 until 5)
-              Versioned.appendVersionWithRetry(
-                Seq.tabulate(20)(j => s"w$w-$i-$j").toDF("data"), d3)
+              Versioned.writeVersion(
+                Seq.tabulate(20)(j => s"w$w-$i-$j").toDF("data"), d3, SaveMode.Append)
         })
       }
       tasks.foreach(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
@@ -6489,8 +6507,8 @@ class ExtSpec extends AnyFunSuite {
     // the whole partition-shaped rewrite runs end to end
     val pdir = StageFs.qualify(spark, root + "/p")
     val rows = (0 until 800).map(i => (i.toLong, i % 4, s"v$i")).toDF("id", "bucket", "payload")
-    Versioned.writeVersionPartitioned(rows.repartition(4), pdir, Seq("bucket"))
-    Versioned.writeVersionPartitioned(rows.repartition(4), pdir, Seq("bucket"), SaveMode.Append)
+    Versioned.writeVersion(rows.repartition(4), pdir, partCols = Seq("bucket"))
+    Versioned.writeVersion(rows.repartition(4), pdir, SaveMode.Append, Seq("bucket"))
     val st = Maintenance.compact(spark, pdir, 512L * 1024 * 1024, store = ManifestStore)
     assert(st.filesAfter < st.filesBefore && st.totalBytes > 0, st.toString)
     assert(Versioned.readLatest(spark, pdir).count() == 1600)
@@ -6628,15 +6646,15 @@ class ExtSpec extends AnyFunSuite {
     // layout: the library write computes it, the hive layout and
     // partition pruning ride on the computed values
     val pdir = root + "/p"
-    Versioned.writeVersionPartitioned(
-      (0 until 100).map(i => (i.toLong, i % 5)).toDF("id", "g"), pdir, Seq("g"))
+    Versioned.writeVersion(
+      (0 until 100).map(i => (i.toLong, i % 5)).toDF("id", "g"), pdir, partCols = Seq("g"))
     // (a pre-existing partitioned chain gains nothing here — build a
     // fresh one through SQL with the generated partition column)
     val gdir = root + "/gp"
     spark.sql(s"CREATE TABLE graft_gc.`$gdir` (id BIGINT, " +
       "g INT GENERATED ALWAYS AS (CAST(id % 5 AS INT))) PARTITIONED BY (g)")
-    Versioned.writeVersionPartitioned(
-      (0 until 100).map(i => i.toLong).toDF("id"), gdir, Seq("g"), SaveMode.Append)
+    Versioned.writeVersion(
+      (0 until 100).map(i => i.toLong).toDF("id"), gdir, SaveMode.Append, Seq("g"))
     assert(spark.sql(s"SELECT count(*) FROM graft_gc.`$gdir` WHERE g = 2")
       .as[Long].head() == 20)
     val planned = Versioned.planDataFiles(spark, gdir,
@@ -6663,8 +6681,8 @@ class ExtSpec extends AnyFunSuite {
       "m INT GENERATED ALWAYS AS (MONTH(ts))) PARTITIONED BY (m)")
     val rows = for (y <- Seq(2025, 2026); mo <- 1 to 12) yield
       ((y.toLong * 100 + mo), java.sql.Timestamp.valueOf(f"$y-$mo%02d-10 12:00:00"))
-    Versioned.writeVersionPartitioned(
-      rows.toDF("id", "ts").repartition(1), dir, Seq("m"), SaveMode.Append)
+    Versioned.writeVersion(
+      rows.toDF("id", "ts").repartition(1), dir, SaveMode.Append, Seq("m"))
     val v = Versioned.latestVersion(spark, dir).get
     val all = Versioned.planDataFiles(spark, dir, v, Seq.empty)
     assert(all.length == 12, s"one file per month partition expected: $all")
@@ -6684,9 +6702,9 @@ class ExtSpec extends AnyFunSuite {
     val d2 = root + "/range"
     spark.sql(s"CREATE TABLE graft_gpd.`$d2` (id BIGINT, ts TIMESTAMP, " +
       "d DATE GENERATED ALWAYS AS (CAST(ts AS DATE))) PARTITIONED BY (d)")
-    Versioned.writeVersionPartitioned(
+    Versioned.writeVersion(
       (1 to 5).map(i => (i.toLong, java.sql.Timestamp.valueOf(f"2026-01-0$i 08:00:00")))
-        .toDF("id", "ts").repartition(1), d2, Seq("d"), SaveMode.Append)
+        .toDF("id", "ts").repartition(1), d2, SaveMode.Append, Seq("d"))
     val v2 = Versioned.latestVersion(spark, d2).get
     // ts > Jan 3 noon derives d >= Jan 3: the boundary partition must
     // stay (a later ts the same day would live there), earlier days prune
@@ -6703,8 +6721,8 @@ class ExtSpec extends AnyFunSuite {
     val d3 = root + "/hash"
     spark.sql(s"CREATE TABLE graft_gpd.`$d3` (id BIGINT, " +
       "h INT GENERATED ALWAYS AS (CAST(pmod(hash(id), 4) AS INT))) PARTITIONED BY (h)")
-    Versioned.writeVersionPartitioned(
-      (0 until 40).map(_.toLong).toDF("id").repartition(1), d3, Seq("h"), SaveMode.Append)
+    Versioned.writeVersion(
+      (0 until 40).map(_.toLong).toDF("id").repartition(1), d3, SaveMode.Append, Seq("h"))
     val v3 = Versioned.latestVersion(spark, d3).get
     // id bounds prune per-file, so probe INSIDE every file's range:
     // pruning may only come from id stats, never from a bogus h guess
@@ -6739,9 +6757,9 @@ class ExtSpec extends AnyFunSuite {
     val one = Versioned.planDataFiles(spark, dir, 0, Seq(EqualTo("bucket", 1)))
     assert(one.nonEmpty && one.length < all.length, s"$one of $all")
     // the chain lives its own life: partitioned append + CoW UPDATE
-    Versioned.writeVersionPartitioned(
-      Seq((400L, 0, "new")).toDF("id", "bucket", "payload"), dir, Seq("bucket"),
-      SaveMode.Append)
+    Versioned.writeVersion(
+      Seq((400L, 0, "new")).toDF("id", "bucket", "payload"), dir,
+      SaveMode.Append, Seq("bucket"))
     spark.conf.set("spark.sql.catalog.graft_cv", "graft.sql.VersionedCatalog")
     spark.sql(s"UPDATE graft_cv.`$dir` SET payload = 'upd' WHERE id = 3")
     assert(spark.sql(s"SELECT payload FROM graft_cv.`$dir` WHERE id = 3")
@@ -6874,10 +6892,10 @@ class ExtSpec extends AnyFunSuite {
 
     // ── partitioned chain, partition-only predicate: exact drop+add
     val pdir = Files.createTempDirectory("graft_rw_part").toString + "/t"
-    Versioned.writeVersionPartitioned(
+    Versioned.writeVersion(
       Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "f", 30.0), (4L, "f", 40.0),
         (5L, "p", 50.0)).toDF("id", "status", "price"),
-      pdir, Seq("status"))
+      pdir, partCols = Seq("status"))
     val v0 = Versioned.latestVersion(spark, pdir).get
     val before = Versioned.planDataFiles(spark, pdir, v0, Seq.empty)
     val vNew = Versioned.replaceWhere(
@@ -7279,7 +7297,7 @@ class ExtSpec extends AnyFunSuite {
       assert(Versioned.readLatest(spark, s"$base/on").count() == 4000)
       // PARTITIONED: rebalance BY the partition columns — files track
       // partition values, not tasks × partitions (16×5 without it)
-      Versioned.writeVersionPartitioned(df, s"$base/onp", Seq("k"))
+      Versioned.writeVersion(df, s"$base/onp", partCols = Seq("k"))
       assert(nFiles(s"$base/onp") <= 5, s"got ${nFiles(s"$base/onp")} files")
       assert(Versioned.readLatest(spark, s"$base/onp").count() == 4000)
       // AQE off → the hint would shuffle to spark.sql.shuffle.partitions
@@ -7544,9 +7562,9 @@ class ExtSpec extends AnyFunSuite {
       assert(!Versioned.snapshot(spark, dir, rv).isRearrange)
       // partition-scoped manual compaction flags too
       val dirP = s"$base/p"
-      (0 until 4).foreach(i => Versioned.writeVersionPartitioned(
+      (0 until 4).foreach(i => Versioned.writeVersion(
         Seq((i.toLong, (i % 2).toString)).toDF("id", "k").coalesce(1), dirP,
-        Seq("k"), if (i == 0) SaveMode.Overwrite else SaveMode.Append))
+        if (i == 0) SaveMode.Overwrite else SaveMode.Append, Seq("k")))
       val Some((_, _, pv)) = Maintenance.compactVersionedWhere(
         spark, dirP, "k = '0'", 128L * 1024 * 1024)
       assert(Versioned.snapshot(spark, dirP, pv).isRearrange,
@@ -7574,5 +7592,169 @@ class ExtSpec extends AnyFunSuite {
       assert(Versioned.snapshot(spark, dirF, cvF).isRearrange)
       assert(Versioned.readLatest(spark, dirF).count() == 100)
     } finally spark.conf.unset("spark.graft.manifest.checkpointInterval")
+  }
+
+  // ── one overwrite definition: what a metadata-only or zero-row
+  // version keeps must equal what a data-bearing overwrite keeps ──
+
+  test("DELETE FROM t keeps the COPY INTO ledger: a repeated COPY INTO loads 0 files") {
+    import graft.ext.Versioned
+    spark.conf.set("spark.sql.catalog.graft_tl", "graft.sql.VersionedCatalog")
+    val root = java.nio.file.Files.createTempDirectory("graft_trunc_ledger").toString
+    val src = root + "/src"
+    spark.range(0, 10).selectExpr("id", "CAST(id AS DOUBLE) AS price")
+      .coalesce(1).write.parquet(src)
+    val dir = root + "/t"
+    spark.sql(s"CREATE TABLE graft_tl.`$dir` (id BIGINT, price DOUBLE)")
+    assert(Versioned.copyInto(spark, dir, src).map(_._1).contains(1))
+    spark.sql(s"DELETE FROM graft_tl.`$dir`")
+    assert(Versioned.readLatest(spark, dir).count() == 0)
+    val again = Versioned.copyInto(spark, dir, src).map(_._1).getOrElse(0)
+    assert(again == 0, s"a truncate must not forget the ingested files; reloaded $again")
+    assert(Versioned.readLatest(spark, dir).count() == 0)
+  }
+
+  test("DELETE FROM t keeps the identity high-water mark: a new identity value is above every earlier one") {
+    import graft.ext.Versioned
+    spark.conf.set("spark.sql.catalog.graft_th", "graft.sql.VersionedCatalog")
+    val dir = java.nio.file.Files.createTempDirectory("graft_trunc_hwm").toString + "/t"
+    spark.sql(s"CREATE TABLE graft_th.`$dir` (id BIGINT GENERATED ALWAYS AS IDENTITY, " +
+      "data STRING)")
+    spark.sql(s"INSERT INTO graft_th.`$dir` (data) VALUES ('a'), ('b'), ('c')")
+    val before = spark.sql(s"SELECT id FROM graft_th.`$dir`").as[Long].collect().toSeq
+    spark.sql(s"DELETE FROM graft_th.`$dir`")
+    spark.sql(s"INSERT INTO graft_th.`$dir` (data) VALUES ('d')")
+    val after = spark.sql(s"SELECT id FROM graft_th.`$dir`").as[Long].collect().toSeq
+    assert(after.length == 1 && after.head > before.max,
+      s"identity values never repeat: got $after after $before")
+  }
+
+  test("DELETE FROM t keeps the bloom declaration") {
+    import graft.ext.Versioned
+    spark.conf.set("spark.sql.catalog.graft_tb", "graft.sql.VersionedCatalog")
+    val dir = java.nio.file.Files.createTempDirectory("graft_trunc_bloom").toString + "/t"
+    Versioned.writeVersion(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir)
+    Versioned.declareBloomColumn(spark, dir, "id", bits = 256)
+    spark.sql(s"DELETE FROM graft_tb.`$dir`")
+    val snap = Versioned.snapshot(spark, dir, Versioned.latestVersion(spark, dir).get)
+    assert(snap.dataDirNames.isEmpty)
+    assert(snap.bloomColumns == Seq(("id", 256)), s"got ${snap.bloomColumns}")
+  }
+
+  test("an empty Complete epoch on a partitioned sink keeps the table's properties and NOT NULL lines") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import graft.ext.Versioned
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_epoch").toString + "/t"
+    Versioned.createTable(spark, dir, StructType(Seq(
+        StructField("id", LongType, nullable = false), StructField("cat", StringType))),
+      partCols = Seq("cat"), props = Map("team.owner" -> "ingest"))
+    def epoch(rows: Seq[(Long, String)], batch: Long) =
+      Versioned.writeVersionStreamBatch(rows.toDF("id", "cat"), dir, "sink", batch,
+        mode = SaveMode.Overwrite, partCols = Seq("cat"))
+    assert(epoch(Seq((1L, "a")), 0L).nonEmpty)
+    val full = Versioned.snapshot(spark, dir, Versioned.latestVersion(spark, dir).get)
+    assert(full.properties == Map("team.owner" -> "ingest") && full.notNull == Seq("id"))
+    assert(epoch(Seq.empty, 1L).nonEmpty)
+    val empty = Versioned.snapshot(spark, dir, Versioned.latestVersion(spark, dir).get)
+    assert(empty.dataDirNames.isEmpty && empty.partitionCols == Seq("cat"))
+    assert(empty.properties == full.properties, s"properties: ${empty.properties}")
+    assert(empty.notNull == full.notNull, s"NOT NULL: ${empty.notNull}")
+    assert(Versioned.lastCommittedBatch(spark, dir, "sink").contains(1L))
+  }
+
+  test("a change-feed overwrite that omits a GENERATED column fills it") {
+    import graft.ext.Versioned
+    spark.conf.set("spark.sql.catalog.graft_cg", "graft.sql.VersionedCatalog")
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdf_gen").toString + "/t"
+    spark.sql(s"CREATE TABLE graft_cg.`$dir` (id BIGINT, price DOUBLE, " +
+      "twice DOUBLE GENERATED ALWAYS AS (price * 2))")
+    val v1 = Versioned.writeVersionWithChangeFeed(
+      Seq((1L, 10.0), (2L, 20.0)).toDF("id", "price"), dir, Seq("id"))
+    val v2 = Versioned.writeVersionWithChangeFeed(
+      Seq((1L, 15.0), (2L, 20.0)).toDF("id", "price"), dir, Seq("id"))
+    assert(spark.sql(s"SELECT id, twice FROM graft_cg.`$dir` ORDER BY id")
+      .as[(Long, Double)].collect().toSeq == Seq((1L, 30.0), (2L, 40.0)))
+    assert(Versioned.hasRecordedChanges(spark, dir, v1, v2, Seq("id")))
+    // the recorded feed diffs the rows as they landed: the unchanged
+    // row emits nothing, the changed one its filled images
+    val feed = Versioned.changesBetween(spark, dir, v1, v2, Seq("id"))
+      .select("id", "twice", "_change_type").as[(Long, Double, String)].collect().toSet
+    assert(feed == Set((1L, 20.0, "update_preimage"), (1L, 30.0, "update_postimage")),
+      s"feed: $feed")
+  }
+
+  test("every overwrite carries one definition: a zero-row version keeps what a one-row version keeps") {
+    import org.apache.spark.sql.types.{LongType, Metadata, StringType, StructField, StructType}
+    import graft.ext.Versioned
+    spark.conf.set("spark.sql.catalog.graft_od", "graft.sql.VersionedCatalog")
+    val root = java.nio.file.Files.createTempDirectory("graft_overwrite_def").toString
+    val src = root + "/src"
+    Seq((7L, "a")).toDF("k", "p").coalesce(1).write.parquet(src)
+    // a table whose definition has every carried kind: CHECK, NOT NULL,
+    // a property, a bloom declaration, an identity mark, the COPY INTO
+    // ledger with its feature, and another writer's txn watermark
+    var n = 0
+    def seeded(partitioned: Boolean): String = {
+      n += 1
+      val dir = s"$root/t$n"
+      val partCols = if (partitioned) Seq("p") else Seq.empty
+      Versioned.createTable(spark, dir, StructType(Seq(
+          StructField("id", LongType, nullable = true,
+            Versioned.identityMetadata(Metadata.empty, 1L, 1L, allowExplicitInsert = true)),
+          StructField("k", LongType, nullable = false),
+          StructField("p", StringType))),
+        partCols, constraints = Seq("k_pos" -> "k >= 0"), props = Map("team.owner" -> "ingest"))
+      Versioned.writeVersion(Seq((1L, "a"), (2L, "b")).toDF("k", "p"), dir,
+        SaveMode.Append, partCols)
+      Versioned.declareBloomColumn(spark, dir, "k", bits = 256)
+      assert(Versioned.copyInto(spark, dir, src).nonEmpty)
+      Versioned.writeVersionStreamBatch(Seq((3L, "b")).toDF("k", "p"), dir, "other", 7L,
+        partCols = partCols)
+      dir
+    }
+    // an explicit identity value below the mark leaves it unchanged,
+    // so the one-row version's mark is the carried one
+    def rows(n: Int) = Seq((1L, 9L, "a")).take(n).toDF("id", "k", "p")
+    def libraryOverwrite(dir: String, n: Int): Unit =
+      Versioned.writeVersion(rows(n), dir, SaveMode.Overwrite, Seq("p"))
+    def stagedOverwrite(dir: String, n: Int): Unit = {
+      val staged = Versioned.stageDataDir(spark, dir)
+      rows(n).coalesce(1).write.parquet(s"$dir/$staged")
+      Versioned.commitStagedOverwrite(spark, dir, staged)
+    }
+    def epoch(dir: String, n: Int): Unit =
+      Versioned.writeVersionStreamBatch(rows(n), dir, "sink", 0L,
+        mode = SaveMode.Overwrite, partCols = Seq("p"))
+    def rtas(dir: String, n: Int): Unit =
+      spark.sql(s"REPLACE TABLE graft_od.`$dir` PARTITIONED BY (p) AS " +
+        s"SELECT CAST(9 AS BIGINT) AS k, 'a' AS p LIMIT $n")
+    val cases: Seq[(String, Boolean, (String, Int) => Unit)] = Seq(
+      ("library overwrite", true, libraryOverwrite),
+      ("staged overwrite", false, stagedOverwrite),
+      // DELETE FROM t is the zero-row form; a one-row overwrite the other
+      ("truncate", true, (dir, n) =>
+        if (n == 0) spark.sql(s"DELETE FROM graft_od.`$dir`") else libraryOverwrite(dir, n)),
+      ("empty Complete epoch", true, epoch),
+      ("RTAS", true, rtas))
+    def definition(dir: String) = {
+      val s = Versioned.snapshot(spark, dir, Versioned.latestVersion(spark, dir).get)
+      Map("constraints" -> s.constraints.toSet, "notNull" -> s.notNull.toSet,
+        "properties" -> s.properties, "bloomDecls" -> s.bloomColumns.toSet,
+        "txns" -> s.txns, "ingested" -> s.ingested, "features" -> s.features.toSet,
+        "hwm" -> s.hwm("id"))
+    }
+    val diverged = cases.flatMap { case (name, partitioned, overwrite) =>
+      scala.util.Try {
+        val (zero, one) = (seeded(partitioned), seeded(partitioned))
+        overwrite(zero, 0)
+        overwrite(one, 1)
+        assert(Versioned.readLatest(spark, zero).count() == 0)
+        assert(Versioned.readLatest(spark, one).count() == 1)
+        val (z, o) = (definition(zero), definition(one))
+        o.keys.toSeq.sorted.filter(f => z(f) != o(f))
+          .map(f => s"$name: $f at zero rows ${z(f)} vs one row ${o(f)}")
+      }.fold(t => Seq(s"$name: ${t.getClass.getSimpleName}: ${t.getMessage}"), identity)
+    }
+    assert(diverged.isEmpty, diverged.mkString("\n"))
   }
 }

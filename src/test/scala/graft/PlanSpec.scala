@@ -389,7 +389,7 @@ class PlanSpec extends AnyFunSuite {
     val df = spark.range(0, 300).toDF("id")
       .withColumn("bucket", (col("id") % 3).cast("int"))
       .repartition(2)
-    Versioned.writeVersionPartitioned(df, dir, Seq("bucket"))
+    Versioned.writeVersion(df, dir, partCols = Seq("bucket"))
     // the partition column rides in the plan as a real partitionSchema
     val plan = planOf(Versioned.readLatest(spark, dir).filter(col("bucket") === 1))
     assert(plan.contains("ManifestFileIndex"), s"expected manifest index in:\n$plan")
@@ -863,7 +863,7 @@ class PlanSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_psopt").toString + "/t"
     val df = spark.range(0, 800).toDF("id")
       .withColumn("p", when(col("id") % 2 === 0, "x").otherwise("y"))
-    Versioned.writeVersionPartitioned(df.repartition(4), dir, Seq("p"))
+    Versioned.writeVersion(df.repartition(4), dir, partCols = Seq("p"))
     // 4 files per partition (one per task per value)
     val selected = Versioned.partitionScopedFiles(spark, dir, 0, "p = 'x'")
     assert(selected.valuesIterator.map(_.size).sum == 4, selected.toString)
@@ -937,14 +937,14 @@ class PlanSpec extends AnyFunSuite {
       .withColumn("score", col("id") * 2.0)
       .withColumn("bucket", (col("id") % 3).cast("int"))
       .repartition(2)
-    Versioned.writeVersionPartitioned(df, dir, Seq("bucket"))
+    Versioned.writeVersion(df, dir, partCols = Seq("bucket"))
     Versioned.renameColumns(spark, dir, Seq("score" -> "rating"))
     // append through the LOGICAL name: hive subtrees stage the physical
-    Versioned.writeVersionPartitioned(
+    Versioned.writeVersion(
       spark.range(300, 600).toDF("id")
         .withColumn("rating", col("id") * 2.0)
         .withColumn("bucket", (col("id") % 3).cast("int")).repartition(2),
-      dir, Seq("bucket"), SaveMode.Append)
+      dir, SaveMode.Append, Seq("bucket"))
     spark.conf.set("spark.sql.catalog.graft_cmp2", "graft.sql.VersionedCatalog")
     def scanOf(sql: String) =
       spark.sql(sql).queryExecution.sparkPlan.collect {

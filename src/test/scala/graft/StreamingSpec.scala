@@ -419,8 +419,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.SaveMode
     import graft.ext.Versioned
     val dir = Files.createTempDirectory("graft_vstream_part").toString + "/t"
-    Versioned.writeVersionPartitioned(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "status"), dir, Seq("status"))
+    Versioned.writeVersion(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "status"), dir, partCols = Seq("status"))
     val ckpt = Files.createTempDirectory("graft_vstream_part_ckpt").toString
     val outDir = Files.createTempDirectory("graft_vstream_part_out").toString + "/out"
     def runCk() = {
@@ -439,8 +439,8 @@ class StreamingSpec extends AnyFunSuite {
     // APPEND batch: the incremental path must re-attach partition
     // values too (files don't hold the column — a plain schema'd read
     // would stream it as null)
-    Versioned.writeVersionPartitioned(
-      Seq((3L, "c")).toDF("id", "status"), dir, Seq("status"), SaveMode.Append)
+    Versioned.writeVersion(
+      Seq((3L, "c")).toDF("id", "status"), dir, SaveMode.Append, Seq("status"))
     runCk()
     assert(sunk() == Set((1L, Some("a")), (2L, Some("b")), (3L, Some("c"))),
       sunk().toString)
